@@ -1,85 +1,20 @@
 """Correctness checks: independent expectations for every op result and
 for each workload's final state.
 
-`mql_read` answers come from DuckDB over the source `orders.parquet`;
-`catalog_mutate` and `dedup_ingest` replay the executed schedule on a
-plain-Python model of the catalog / dedup store. Each function returns a
-list of (op index or None, message) failures.
+Both workloads replay the executed schedule on a plain-Python model of
+the catalog / dedup store. Each function returns a list of (op index or
+None, message) failures.
 """
 import hashlib
 import json
 import os
 
-from inputs import MUTATE_FILES, QUERIES
+from inputs import MUTATE_FILES
 
 
 def digest(ids):
     ids = sorted(ids)
     return "%d:%s" % (len(ids), hashlib.md5("\n".join(ids).encode()).hexdigest())
-
-
-# ---- mql_read: DuckDB over the source parquet ----
-
-_FILES = """
-WITH f AS (
-  SELECT o_orderkey AS k,
-         'F' || lpad(CAST(o_orderkey AS VARCHAR), 8, '0') AS fid,
-         o_orderkey % 1000 AS run, o_orderstatus AS status,
-         o_orderkey % 97 = 0 AS retired, o_orderkey % 5 AS shard,
-         o_orderkey * 100 + o_custkey % 100 AS size,
-         CAST(epoch(o_orderdate) AS BIGINT) AS ts,
-         [o_orderkey % 1000, o_orderkey % 1000 + 1000, o_orderkey % 1000 + 2000]
-           [1:(1 + CAST(o_orderkey % 3 AS INT))] AS runs,
-         ['tag' || CAST(o_orderkey % 7 AS VARCHAR), 'tag' || CAST((o_orderkey + 1) % 7 AS VARCHAR),
-          'tag' || CAST((o_orderkey + 2) % 7 AS VARCHAR), 'tag' || CAST((o_orderkey + 3) % 7 AS VARCHAR)]
-           [1:(1 + CAST(o_orderkey % 4 AS INT))] AS tags,
-         'note-' || o_orderstatus || '-' || CAST(o_orderkey % 13 AS VARCHAR) AS note
-  FROM read_parquet('{path}')
-), live AS (SELECT * FROM f WHERE NOT retired)
-"""
-
-_WHERE = {
-    "bfq_where": "SELECT fid FROM live WHERE run > 500 AND status = 'F'",
-    "multi_ds": "SELECT fid FROM live WHERE shard IN (1, 2) AND k % 2 = 0 AND k % 100 = 42",
-    "matching_having": "SELECT fid FROM live WHERE shard IN (0, 1, 2) AND run < 400",
-    "present": "SELECT fid FROM live WHERE k % 5 = 0 AND k % 10 = 0",
-    "regex": "SELECT fid FROM live WHERE k % 7 = 0 AND regexp_matches(note, 'note-F')",
-    "any_range": "SELECT fid FROM live WHERE len(list_filter(runs, x -> x BETWEEN 1500 AND 1700)) > 0",
-    "all_cmp": "SELECT fid FROM live WHERE len(list_filter(runs, x -> x >= 1500)) = 0",
-    "const_in": "SELECT fid FROM live WHERE list_contains(tags, 'tag3')",
-    "datetime": "SELECT fid FROM live WHERE ts >= 852076800 AND ts < 883612800",
-    "union": "SELECT fid FROM live WHERE (shard IN (1, 2) AND run < 300)"
-             " OR (shard = 1 AND run BETWEEN 200 AND 400)",
-    "minus": "SELECT fid FROM live WHERE shard = 0 AND run < 500",
-    "parents": "SELECT p.fid FROM f p JOIN live c ON p.k = (c.k - 1) // 2"
-               " WHERE c.k >= 1 AND c.shard = 2 AND c.run < 100",
-    "children": "SELECT c.fid FROM f c JOIN live p ON p.k = (c.k - 1) // 2"
-                " WHERE c.k >= 1 AND p.shard = 1 AND p.run < 100",
-    "skip_limit": "SELECT fid FROM live ORDER BY fid LIMIT 20 OFFSET 100",
-    "named": "SELECT fid FROM live WHERE shard = 1 AND run < 300",
-    "summary_count": "SELECT count(*), CAST(coalesce(sum(size), 0) AS BIGINT)"
-                     " FROM live WHERE run < 250",
-}
-
-
-def mql_expected(orders_path):
-    import duckdb  # only mql_read needs it
-    con = duckdb.connect()
-    pre = _FILES.replace("{path}", orders_path.replace("'", "''"))
-    out = {}
-    for name, _, mode in QUERIES:
-        rows = con.execute(pre + _WHERE[name]).fetchall()
-        out[name] = ("%d:%d" % rows[0] if mode == "count" else digest(r[0] for r in rows))
-    con.close()
-    return out
-
-
-def check_mql_read(ops, input_dir, plant_wrong=False):
-    want = mql_expected(os.path.join(input_dir, "orders.parquet"))
-    if plant_wrong:
-        want["bfq_where"] = "0:wrong"
-    return [(o["idx"], "%s: got %s, want %s" % (o["args"][0], o["result"], want[o["args"][0]]))
-            for o in ops if o["result"] != want[o["args"][0]]]
 
 
 # ---- catalog_mutate: model replay ----
@@ -95,7 +30,7 @@ class CatalogModel:
         # fid -> [retired, core.run, opt.mark]
         self.files = {fid(k): [k % 97 == 0, k % 1000, ""] for k in range(n)}
         self.members = {(fid(k), "dsns:all") for k in range(n)}
-        self.edges = {(fid((c - 1) // 2), fid(c)) for c in range(1, n)}
+        self.edges = set()
         self.datasets = {"dsns:all": ""}
         self.hierarchy = set()
         self.queries = {}
@@ -195,27 +130,65 @@ def check_catalog_mutate(ops, out_dir, plant_wrong=False):
 
 # ---- dedup_ingest: model replay ----
 
+NUM_HASHES, BANDS, THRESHOLD = 8, 4, 0.5   # DedupLog's defaults
+
+
+def shingles(text):
+    """distinct lower-cased word 3-grams (docs under 3 words have none)"""
+    w = text.lower().split(" ")
+    return frozenset(" ".join(w[i:i + 3]) for i in range(len(w) - 2))
+
+
+def band_keys(sh):
+    """MinHash-LSH band keys as the engine computes them: hash h of a
+    shingle is the first 15 hex digits of md5("h:" + shingle); band b
+    joins the minima of hashes 2b and 2b+1"""
+    mins = [min(int(hashlib.md5(("%d:%s" % (h, x)).encode()).hexdigest()[:15], 16)
+                for x in sh) for h in range(NUM_HASHES)]
+    r = NUM_HASHES // BANDS
+    return {(b, ",".join(str(m) for m in mins[r * b:r * b + r])) for b in range(BANDS)}
+
+
+def jaccard(a, b):
+    return len(a & b) / len(a | b)
+
+
 class DedupModel:
-    """Admission as the store defines it: re-arriving ids drop out; a
-    doc is rejected when a live corpus doc or an earlier doc of the same
-    batch has the same lower-cased word shingles (the planted copies are
-    exact, and unique docs share no shingles)."""
+    """Admission as DedupLog defines it: ids already in the corpus drop
+    out; a remaining doc is rejected when it shares an LSH band key with
+    a live corpus doc, or with an earlier (lower id) doc of the same
+    batch, and their shingle Jaccard is at least the threshold."""
 
     def __init__(self, docs):
         self.docs = docs          # batch -> [(doc_id, text)]
-        self.live = {}            # doc_id -> (stamp, key)
+        self.live = {}            # doc_id -> stamp
+        self.sig = {}             # doc_id -> (shingles, band keys)
+        self.rejected = 0         # fresh docs turned away as near-duplicates
+
+    def _sig(self, d, text):
+        if d not in self.sig:
+            sh = shingles(text)
+            self.sig[d] = (sh, band_keys(sh) if sh else set())
+        return self.sig[d]
 
     def apply(self, name, a):
-        if name == "ingest":
-            keys = {k for _, k in self.live.values()}
-            seen = set()
-            for d, text in sorted(self.docs[int(a[0])]):
-                if d in self.live:
-                    continue
-                k = text.lower()
-                if k not in keys and k not in seen:
-                    self.live[d] = (int(a[1]), k)
-                seen.add(k)
+        if name in ("ingest", "redeliver"):
+            fresh = sorted((d, t) for d, t in self.docs[int(a[0])] if d not in self.live)
+            buckets = {}
+            for d in self.live:
+                for k in self.sig[d][1]:
+                    buckets.setdefault(k, []).append(d)
+            admitted = []
+            for d, text in fresh:
+                sh, keys = self._sig(d, text)
+                cand = {c for k in keys for c in buckets.get(k, ())}
+                if not any(jaccard(sh, self.sig[c][0]) >= THRESHOLD for c in cand):
+                    admitted.append(d)
+                for k in keys:   # later batch docs probe every earlier one
+                    buckets.setdefault(k, []).append(d)
+            for d in admitted:
+                self.live[d] = int(a[1])
+            self.rejected += len(fresh) - len(admitted)
         elif name == "retire":
             for d in a[0].split(","):
                 self.live.pop(int(d), None)
@@ -244,8 +217,10 @@ def check_dedup_ingest(ops, out_dir, input_dir, plant_wrong=False):
                 fails.append((o["idx"], "corpus: got %s, want %s" % (o["result"], want)))
         else:
             m.apply(o["name"], o["args"])
+    if not m.rejected:
+        fails.append((None, "the schedule rejected no near-duplicate: nothing tested the probe"))
     redelivered = [r for r in _dumped(out_dir, "corpus.tsv") if int(r.split("\t")[1]) >= 10000]
     if redelivered:
         fails.append((None, "redelivered batches admitted %d docs" % len(redelivered)))
-    want = {"%d\t%d" % (d, s) for d, (s, _) in m.live.items()}
+    want = {"%d\t%d" % (d, s) for d, s in m.live.items()}
     return fails + _compare_state({"corpus.tsv": want}, out_dir)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """catbench: the graft catalog benchmark.
 
-    python3 catbench/run.py --workload {mql_read,catalog_mutate,dedup_ingest}
+    python3 catbench/run.py --workload {catalog_mutate,dedup_ingest}
                             --seed N --seconds S --trace {0,1} [--plant-wrong 1]
 
 Run from the repository root. It compiles `src/main/scala` plus the
@@ -17,10 +17,12 @@ metrics with `--trace 1`. `--plant-wrong 1` plants one wrong expectation
 Each workload is one client thread in a closed loop over a fixed seeded
 schedule of rounds. Set-up seeds a fresh store SETUP_REPS times (the
 last one is kept) and runs round 0 untimed; the timed phase runs the
-next rounds, as many as `--seconds` allows at the nominal round time
-(at least one), so every run executes the same ops and the store state
-before op i is the same in every run. BENCHMARK.json lists
-catalog_mutate and dedup_ingest; mql_read runs the same way by hand.
+next ROUNDS rounds, so every run executes the same ops and the store
+state before op i is the same in every run. `--seconds` does not change
+the work: the timed phase takes about that long on a 4-core x86 host.
+A traced run runs twice the rounds and traces every other op; the
+per-layer metrics come from the traced ops, the latency classes from
+the others, and the tracing overhead compares the two.
 """
 import argparse
 import glob
@@ -40,15 +42,9 @@ sys.path.insert(0, HERE)
 import check    # noqa: E402
 import inputs   # noqa: E402
 
-WORKLOADS = ("mql_read", "catalog_mutate", "dedup_ingest")
-# The timed phase is a fixed number of schedule rounds, the same in every
-# run: --seconds over the workload's nominal round time on a 4-core x86
-# host, at least one. Each op then sees the same store state in every
-# run, whatever the host's speed; the harness stops early only past
-# TIMED_CAP x --seconds.
-ROUND_SECONDS = {"mql_read": 7.0, "catalog_mutate": 20.0, "dedup_ingest": 17.0}
-TIMED_CAP = 5
-SETUP_REPS = 3
+# timed rounds per run: the same in every run, whatever the host's speed
+ROUNDS = {"catalog_mutate": 1, "dedup_ingest": 1}
+SETUP_REPS = 2
 HEAP = "2g"
 JVM_TIMEOUT_S = 170
 ADD_OPENS = ["java.base/" + p + "=ALL-UNNAMED" for p in (
@@ -121,23 +117,35 @@ def build(root, jars):
 
 # ---- one run ----
 
-def prepare(workload, seed, seconds, run_dir):
-    """seeded inputs + schedule; returns the schedule path"""
+def prepare(workload, seed, trace, run_dir):
+    """Seeded inputs + schedule; returns the schedule path. A traced run
+    has twice the timed rounds, with every other op traced, starting
+    with the first op in odd rounds and the second in even ones: each op
+    type then runs once traced and once not, and the order alternates
+    between types, so the warm-up trend over the rounds cancels out of
+    the tracing overhead."""
     inp = os.path.join(run_dir, "input")
     os.makedirs(inp)
-    rounds = max(1, round(seconds / ROUND_SECONDS[workload]))
+    rounds = ROUNDS[workload] * (2 if trace else 1)
     if workload == "dedup_ingest":
         inputs.write_docs(os.path.join(inp, "docs.parquet"), seed, rounds + 1)
-    elif workload == "mql_read":
-        inputs.write_orders(os.path.join(inp, "orders.parquet"), seed)
-    lines = getattr(inputs, workload)(seed, rounds)
+    else:
+        inputs.write_files(os.path.join(inp, "files.parquet"), seed)
+    lines, pos = [], {}
+    for ln in getattr(inputs, workload)(seed, rounds):
+        f = ln.split("\t")
+        r = int(f[2])
+        j = pos[r] = pos.get(r, -1) + 1
+        if trace and f[0] == "timed" and (j + r) % 2 == 1:
+            f[0] = "traced"
+        lines.append("\t".join(f))
     path = os.path.join(run_dir, "schedule.tsv")
     with open(path, "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines) + "\n")
     return path
 
 
-def launch(classes, jars, args, run_dir, workload, schedule, deadline):
+def launch(classes, jars, run_dir, workload, schedule, deadline):
     global _jvm
     cores = max(1, len(os.sched_getaffinity(0)) - 1)
     tmp = os.path.join(run_dir, "tmp")
@@ -147,7 +155,6 @@ def launch(classes, jars, args, run_dir, workload, schedule, deadline):
            + ["-cp", classes + os.pathsep + os.path.join(jars, "*"), "catbench.Main",
               "--workload", workload, "--schedule", schedule,
               "--input", os.path.join(run_dir, "input"), "--run-dir", run_dir,
-              "--seconds", str(args.seconds * TIMED_CAP), "--trace", str(args.trace),
               "--setup-reps", str(SETUP_REPS), "--cores", str(cores)])
     env = dict(os.environ, SPARK_GRAFT_CATALOG_STORE=os.path.join(run_dir, "catalog-store"))
     with open(os.path.join(run_dir, "jvm.log"), "w") as logf:
@@ -187,35 +194,49 @@ def verify(workload, ops, run_dir, plant_wrong):
     fails = [(o["idx"], "%s raised %s" % (o["name"], o["error"])) for o in ops if o["error"]]
     if fails:
         return fails
-    if workload == "mql_read":
-        return check.check_mql_read(ops, inp, plant_wrong)
     if workload == "catalog_mutate":
         return check.check_catalog_mutate(ops, out, plant_wrong)
     return check.check_dedup_ingest(ops, out, inp, plant_wrong)
 
 
-def pct(xs, q):
-    xs = sorted(xs)
-    return xs[min(len(xs) - 1, int(q * len(xs)))]
+def op_type(o):
+    """an op class's member: the call, or for a query its shape"""
+    return o["args"][0] if o["name"] == "query" else o["name"]
 
 
 def class_latency(ops):
-    """Per latency class: p50, p90 where the class has >= 100 samples,
-    and the geometric mean. A round holds one op of each write type, so
-    the gmean weighs a change in any type alike, where the p50 of six
-    unlike ops follows whichever type sits in the middle."""
+    """Per latency class: the p50, and the geometric mean over the
+    class's op types of each type's median. A round holds one op of each
+    write type, so the gmean weighs a change in any type alike, where
+    the p50 of unlike ops follows whichever type sits in the middle. No
+    p90: no class reaches 100 samples in a run."""
     out = {}
     for cls in ("read", "write", "admin", "maint"):
-        ms = [o["ms"] for o in ops if o["cls"] == cls]
+        by_type = {}
+        for o in ops:
+            if o["cls"] == cls:
+                by_type.setdefault(op_type(o), []).append(o["ms"])
+        ms = [x for xs in by_type.values() for x in xs]
         if ms:
             out["%s_p50_ms" % cls] = (statistics.median(ms), len(ms))
-            out["%s_gmean_ms" % cls] = (statistics.geometric_mean(ms), len(ms))
-            if len(ms) >= 100:
-                out["%s_p90_ms" % cls] = (pct(ms, 0.9), len(ms))
+            out["%s_gmean_ms" % cls] = (statistics.geometric_mean(
+                [statistics.median(xs) for xs in by_type.values()]), len(ms))
     return out
 
 
-# ---- run history: tracing overhead and counter repeatability ----
+def trace_overhead_pct(ops):
+    """traced vs untraced ops of this run: per op type, the median traced
+    latency over the median untraced one; the median of those ratios,
+    minus one, in percent"""
+    ms = {}
+    for o in ops:
+        ms.setdefault((op_type(o), o["phase"]), []).append(o["ms"])
+    ratios = [statistics.median(ms[(t, "traced")]) / statistics.median(ms[(t, "timed")])
+              for (t, ph) in ms if ph == "traced" and (t, "timed") in ms]
+    return 100.0 * (statistics.median(ratios) - 1.0)
+
+
+# ---- run history: counter repeatability ----
 
 def history_path(root):
     return os.path.join(root, ".bench_build", "catbench", "runs.jsonl")
@@ -239,9 +260,9 @@ def version(classes):
     return h.hexdigest()[:16]
 
 
-def record_run(root, args, ver, run_dir, lat, counts):
-    """Append this run's class latencies, store counts and (traced) per-op
-    job/task counts, keyed by schedule position, to the history."""
+def record_run(root, args, ver, run_dir, counts):
+    """Append this run's store counts and (traced) per-op job/task
+    counts, keyed by schedule position, to the history."""
     ops = {}
     cpath = os.path.join(run_dir, "out", "counters.tsv")
     if os.path.exists(cpath):
@@ -250,22 +271,9 @@ def record_run(root, args, ver, run_dir, lat, counts):
                 idx, name, jobs, tasks = line.rstrip("\n").split("\t")
                 ops[idx] = [name, int(jobs), int(tasks)]
     rec = {"version": ver, "workload": args.workload, "seed": args.seed, "trace": args.trace,
-           "p50": {k: v for k, (v, _) in lat.items()}, "counts": counts, "ops": ops}
+           "counts": counts, "ops": ops}
     with open(history_path(root), "a") as fh:
         fh.write(json.dumps(rec) + "\n")
-
-
-def trace_overhead_pct(hist, workload, lat):
-    """traced vs untraced: per class, this traced run's p50 over the
-    median p50 of this workload's recorded untraced runs; the median of
-    those ratios, minus one, in percent (0 until an untraced run exists)"""
-    ratios = []
-    for k, (v, _) in lat.items():
-        base = [r["p50"][k] for r in hist
-                if r["workload"] == workload and not r["trace"] and k in r["p50"]]
-        if base:
-            ratios.append(v / statistics.median(base))
-    return 100.0 * (statistics.median(ratios) - 1.0) if ratios else 0.0
 
 
 def print_repeatability(hist, workload):
@@ -274,13 +282,14 @@ def print_repeatability(hist, workload):
     by_seed = {}
     for r in hist:
         if r["workload"] == workload:
-            by_seed.setdefault((r["workload"], r["seed"]), []).append(r)
+            by_seed.setdefault(r["seed"], []).append(r)
     verdict = {}
-    for (w, _), runs in sorted(by_seed.items()):
-        if len(runs) >= 2:
-            for key in runs[0]["counts"]:
-                vals = {round(r["counts"][key], 9) for r in runs}
-                verdict.setdefault((w, key), []).append(len(vals) == 1)
+    for _, runs in sorted(by_seed.items()):
+        same = [r for r in runs if r["trace"] == runs[-1]["trace"]]
+        if len(same) >= 2:
+            for key in same[0]["counts"]:
+                vals = {round(r["counts"][key], 9) for r in same}
+                verdict.setdefault(key, []).append(len(vals) == 1)
         traced = [r for r in runs if r["ops"]]
         if len(traced) < 2:
             continue
@@ -288,20 +297,30 @@ def print_repeatability(hist, workload):
             name = traced[0]["ops"][i][0]
             for col, label in ((1, "jobs"), (2, "tasks")):
                 vals = {r["ops"][i][col] for r in traced}
-                verdict.setdefault((w, "%s.%s" % (label, name)), []).append(len(vals) == 1)
+                verdict.setdefault("%s.%s" % (label, name), []).append(len(vals) == 1)
     print("counter repeatability across runs of one seed (per-op counts at one schedule position):")
     if not verdict:
         print("  fewer than two runs of one seed so far")
-    for (w, k), ok in sorted(verdict.items()):
+    for k, ok in sorted(verdict.items()):
         print("  %-15s %-28s %-6s (%d seed/position pairs)"
-              % (w, k, "exact" if all(ok) else "VARIES", len(ok)))
+              % (workload, k, "exact" if all(ok) else "VARIES", len(ok)))
 
 
 # ---- main ----
 
+def unit_of(name, units):
+    if name in units:
+        return units[name]
+    for part, unit in (("_ms", "ms"), ("_mb", "MB"), ("ratio", "ratio"), ("amp", "ratio"),
+                       ("pct", "%"), ("_bytes", "bytes")):
+        if part in name:
+            return unit
+    return "s" if name.endswith("_s") else "count"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", choices=WORKLOADS, required=True)
+    ap.add_argument("--workload", choices=sorted(ROUNDS), required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -320,20 +339,25 @@ def main():
     os.makedirs(run_dir)
     try:
         t0 = time.time()
-        schedule = prepare(args.workload, args.seed, args.seconds, run_dir)
+        schedule = prepare(args.workload, args.seed, args.trace, run_dir)
         t1 = time.time()
-        launch(classes, jars, args, run_dir, args.workload, schedule,
-               started + JVM_TIMEOUT_S)
+        launch(classes, jars, run_dir, args.workload, schedule, started + JVM_TIMEOUT_S)
         t2 = time.time()
         log("inputs %.1f s, harness %.1f s" % (t1 - t0, t2 - t1))
         ops = read_ops(run_dir)
         with open(os.path.join(run_dir, "out", "summary.json")) as fh:
             s = json.load(fh)
         fails = verify(args.workload, ops, run_dir, args.plant_wrong)
-        log("checks %.1f s" % (time.time() - t2))
-        timed = [o for o in ops if o["phase"] == "timed"]
+        log("checks %.1f s; in the harness: JVM start %.1f s, session %.1f s, seed %s s, "
+            "warm-up %.1f s, timed %.1f s, final state %.1f s" % (
+                time.time() - t2, s["jvm_start_s"], s["session_s"],
+                "/".join("%.1f" % (x - s["session_s"] - s["setup.warm_s"])
+                         for x in s["setup_reps_s"]),
+                s["setup.warm_s"], s["timed_wall_s"], s["finish_s"]))
+        measured = [o for o in ops if o["phase"] != "warm"]
+        timed = [o for o in measured if o["phase"] == "timed"]
         failed_idx = {i for i, _ in fails if i is not None}
-        failed = len([o for o in timed if o["idx"] in failed_idx])
+        failed = len([o for o in measured if o["idx"] in failed_idx])
         if fails and not failed:
             failed = 1  # a final-state mismatch fails the run
         for i, msg in fails[:10]:
@@ -341,30 +365,29 @@ def main():
 
         lat = class_latency(timed)
         counts = {"space_amp": s["store_bytes"] / max(1.0, s["user_bytes"]),
-                  "metacat.files_on_disk": s["store_files"]}
+                  "store.files_on_disk": s["store_files"]}
         if "offered" in s:
             counts["dedup.admit_ratio"] = s["admitted"] / max(1.0, s["offered"])
-        ver = version(classes)
-        hist = load_history(root, ver)
         layer = {k: v for k, v in s.items() if not isinstance(v, list)}
         layer.update(counts)
-        layer.update({"class." + k: v for k, (v, _) in lat.items()})
+        layer.update({k: v for k, (v, _) in lat.items()})
         if args.trace:
-            layer["trace.overhead_pct"] = trace_overhead_pct(hist, args.workload, lat)
+            layer["trace.overhead_pct"] = trace_overhead_pct(measured)
             trace_dir = os.path.join(root, ".bench_build", "catbench", "traces")
             os.makedirs(trace_dir, exist_ok=True)
             shutil.copy(os.path.join(run_dir, "out", "trace.jsonl"), os.path.join(
                 trace_dir, "%s-seed%d.jsonl" % (args.workload, args.seed)))
         if not fails:
-            record_run(root, args, ver, run_dir, lat, counts)
+            ver = version(classes)
+            record_run(root, args, ver, run_dir, counts)
             print_repeatability(load_history(root, ver), args.workload)
 
         e2e = {"setup_s": (s["setup_s"], len(s["setup_reps_s"])),
-               "ops_per_s": (len(timed) / s["timed_wall_s"], len(timed)),
+               "ops_per_s": (len(measured) / s["timed_wall_s"], len(measured)),
                "space_amp": (counts["space_amp"], 1),
                "retained_heap_mb": (s["retained_heap_mb"], 1)}
         e2e.update(lat)
-        report(args, spec, e2e, layer, len(timed), fails, failed)
+        report(args, spec, e2e, layer, len(measured), fails, failed)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
@@ -374,16 +397,19 @@ def report(args, spec, e2e, layer, attempted, fails, failed):
     units = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
     print("%-36s %14s  %-6s %s" % ("end-to-end metric", "value", "unit", "samples"))
     for k, (v, n) in sorted(e2e.items()):
-        print("%-36s %14.4f  %-6s %d" % (k, v, units.get(k, "ms"), n))
+        print("%-36s %14.4f  %-6s %d" % (k, v, unit_of(k, units), n))
     if args.trace:
-        print("%-36s %14s  %-6s" % ("per-layer metric", "value", "unit"))
+        print("%-36s %14s  %-6s" % ("per-layer metric (traced rounds)", "value", "unit"))
         for k in sorted(layer):
-            print("%-36s %14.4f  %-6s" % (k, layer[k], units.get(k, "")))
+            print("%-36s %14.4f  %-6s" % (k, layer[k], unit_of(k, units)))
         names = [m["name"] for m in spec["per_layer"]]
-        vals = {k: layer.get(k, 0.0) for k in names}
+        vals = layer
     else:
         names = [m["name"] for m in spec["end_to_end"]]
-        vals = {k: e2e[k][0] for k in names}
+        vals = {k: v for k, (v, _) in e2e.items()}
+    missing = [k for k in names if k not in vals]
+    if missing:
+        fail("the run produced no %s" % ", ".join(missing))
     metrics = {k: {"value": vals[k], "unit": units[k]} for k in names}
     print(json.dumps({"correct": not fails, "attempted": max(1, attempted),
                       "failed": failed, "metrics": metrics}))

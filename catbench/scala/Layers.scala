@@ -74,14 +74,16 @@ object Layers {
     // self time: a span's duration minus what its child spans cover
     val childMs = spans.filter(_.parent >= 0).groupBy(_.parent)
       .map { case (p, cs) => p -> cs.map(_.ms).sum }
+    def selfMs(ss: Seq[Span]) =
+      ss.map(s => s.ms - childMs.getOrElse(s.id, 0.0)).sum / math.max(1, traced.size)
     val selfByLayer = spans.groupBy(s => if (s.layer == "op") "client" else s.layer)
-      .map { case (layer, ss) =>
-        s"self_ms_per_op.$layer" ->
-          ss.map(s => s.ms - childMs.getOrElse(s.id, 0.0)).sum / math.max(1, traced.size)
-      }
+      .map { case (layer, ss) => s"self_ms_per_op.$layer" -> selfMs(ss) }
+    // the graft layers together: mql + metacat on catalog_mutate, dedup on dedup_ingest
+    val engine = selfMs(spans.filter(s => Set("mql", "metacat", "dedup")(s.layer)))
 
     spanMetrics ++ perClass ++ selfByLayer ++ Map(
-      "metacat.log_files" -> mean(logFiles.map(_.toDouble)))
+      "self_ms_per_op.engine" -> engine,
+      "store.log_files" -> mean(logFiles.map(_.toDouble)))
   }
 
   /** per-op counters (for the repeatability report) */

@@ -10,16 +10,16 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{
   *   catbench.Main --workload W --schedule F --input DIR --run-dir DIR
-  *                 --seconds S --trace 0|1 --setup-reps N --cores C
+  *                 --setup-reps N --cores C
   * }}}
   *
   * Phases: `setup-reps` fresh seeds (each timed; the last is kept), the
-  * schedule's `warm` ops once, then its `timed` ops (cut short only past
-  * `seconds`). With `--trace 1` every timed op is traced: spans around
-  * each call into a layer, plus jobs and stages from [[JobListener]].
-  * Outputs under `run-dir/out/`: `ops.tsv` (one line per op),
-  * `summary.json`, `trace.jsonl`, `counters.tsv` and the workload's
-  * final-state dump. */
+  * schedule's `warm` ops once, then the rest in order. Ops marked
+  * `traced` (present only in a traced run) get spans around each call
+  * into a layer, plus jobs and stages from [[JobListener]]; the JVM and
+  * OS counters cover the whole phase after the warm-up. Outputs under
+  * `run-dir/out/`: `ops.tsv` (one line per op), `summary.json`,
+  * `trace.jsonl`, `counters.tsv` and the workload's final-state dump. */
 object Main {
   final case class OpRec(op: Op, startMs: Long, endMs: Long, ns: Long,
       traced: Boolean, result: String, error: String)
@@ -27,8 +27,6 @@ object Main {
   def main(args: Array[String]): Unit = {
     val o = args.grouped(2).map(a => a(0).stripPrefix("--") -> a(1)).toMap
     val workload = o("workload")
-    val trace = o("trace") == "1"
-    val seconds = o("seconds").toDouble
     val runDir = o("run-dir")
     val out = s"$runDir/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
@@ -37,7 +35,10 @@ object Main {
         val f = l.split("\t", -1)
         Op(i, f(0), f(1), f(3), f.drop(4).toIndexedSeq)
       }.toIndexedSeq
+    val trace = ops.exists(_.phase == "traced")
 
+    val jvmS = (System.currentTimeMillis() -
+      ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
     val t0 = System.nanoTime()
     val spark = SparkSession.builder()
       .master(s"local[${o("cores")}]")
@@ -56,8 +57,7 @@ object Main {
     val tracer = new Tracer(trace)
     val input = o("input")
     val w: Workload = workload match {
-      case "mql_read" => new MqlRead(spark, tracer, input)
-      case "catalog_mutate" => new CatalogMutate(spark, tracer)
+      case "catalog_mutate" => new CatalogMutate(spark, tracer, input)
       case "dedup_ingest" => new DedupIngest(spark, tracer, input)
     }
 
@@ -93,9 +93,9 @@ object Main {
     ops.filter(_.phase == "warm").foreach(op => recs += run(op, traced = false))
     val warmS = (System.nanoTime() - warmStart) / 1e9
     val setupS = seedS.map(_ + sessionS + warmS)
-    val warmUserBytes = w.userBytes
 
-    // ---- timed phase ----
+    // ---- timed phase: `timed` ops, and in a traced run `traced` ops
+    // between them
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     def gcMs = gcBeans.map(_.getCollectionTime).sum
     def gcCount = gcBeans.map(_.getCollectionCount).sum
@@ -104,29 +104,28 @@ object Main {
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val gc0 = gcMs; val gcn0 = gcCount; val jit0 = jit.getTotalCompilationTime
     val cpu0 = osb.getProcessCpuTime; val io0 = Proc.wchar(); val st0 = Proc.cpuStat()
-    val timed = ops.filter(_.phase == "timed")
-    val budgetNs = (seconds * 1e9).toLong
+    val ub0 = w.userBytes
     val start = System.nanoTime()
-    val it = timed.iterator
-    while (it.hasNext && System.nanoTime() - start < budgetNs) {
-      val op = it.next()
-      recs += run(op, trace)
-      if (trace) logFiles += w.logFiles()
+    ops.filter(_.phase != "warm").foreach { op =>
+      val traced = op.phase == "traced"
+      recs += run(op, traced)
+      if (traced) logFiles += w.logFiles()
       loadMax = math.max(loadMax, Proc.loadavg1())
     }
     val wallS = (System.nanoTime() - start) / 1e9
+    val phaseUserBytes = w.userBytes - ub0
     val gcMsD = gcMs - gc0; val gcnD = gcCount - gcn0
     val jitD = jit.getTotalCompilationTime - jit0
     val cpuMs = (osb.getProcessCpuTime - cpu0) / 1e6
     val ioD = Proc.wchar() - io0
     val st1 = Proc.cpuStat()
-    val timedUserBytes = w.userBytes - warmUserBytes
     // twice, with a pause, so objects the first collection hands to
     // Spark's cleaner threads are gone before the second
     System.gc(); Thread.sleep(500); System.gc()
     val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
 
     // ---- final state, space, trace ----
+    val finish0 = System.nanoTime()
     w.dump(out)
     val storeBytes = w.storeBytes()
     val storeFiles = Workloads.countFiles(w.root)
@@ -137,22 +136,24 @@ object Main {
     }
     if (trace) org.apache.spark.CatbenchBus.drain(sc)
 
-    val timedRecs = recs.filter(_.op.phase == "timed")
+    val measured = recs.filter(_.op.phase != "warm")
     Workloads.writeLines(s"$out/ops.tsv", recs.iterator.map(r =>
       Seq(r.op.idx, r.op.phase, r.op.cls, r.op.name, r.ns / 1e6, r.traced,
         r.result, r.error.replace('\t', ' ').replace('\n', ' ')).mkString("\t")))
-    val layer = if (trace) Layers.summarize(tracer, listener, timedRecs.toSeq, logFiles.toSeq)
-      else Map.empty[String, Double]
+    val layer = if (trace) Layers.summarize(tracer, listener, measured.filter(_.traced).toSeq,
+      logFiles.toSeq) else Map.empty[String, Double]
     if (trace) {
       Layers.writeTrace(s"$out/trace.jsonl", tracer, listener)
-      Workloads.writeLines(s"$out/counters.tsv", Layers.opCounters(listener, timedRecs.toSeq))
+      Workloads.writeLines(s"$out/counters.tsv", Layers.opCounters(listener, measured.toSeq))
     }
     val steal = {
       val d = st1.zip(st0).map { case (a, b) => a - b }
       if (d.isEmpty || d.sum <= 0) 0.0 else 100.0 * d.last / d.sum
     }
-    val nTimed = math.max(1, timedRecs.size)
+    val nMeasured = math.max(1, measured.size)
     val summary = Map(
+      "jvm_start_s" -> jvmS,
+      "finish_s" -> (System.nanoTime() - finish0) / 1e9,
       "session_s" -> sessionS,
       "setup_s" -> setupS.sorted.apply(setupS.size / 2),
       "setup.seed_s" -> seedS.sorted.apply(seedS.size / 2),
@@ -165,8 +166,8 @@ object Main {
       "jvm.gc_ms" -> gcMsD.toDouble,
       "jvm.gc_count" -> gcnD.toDouble,
       "jvm.jit_ms" -> jitD.toDouble,
-      "proc.cpu_ms_per_op" -> cpuMs / nTimed,
-      "os.write_bytes_per_user_byte" -> ioD.toDouble / math.max(1L, timedUserBytes),
+      "proc.cpu_ms_per_op" -> cpuMs / nMeasured,
+      "os.write_bytes_per_user_byte" -> ioD.toDouble / math.max(1L, phaseUserBytes),
       "os.loadavg_max" -> loadMax,
       "os.steal_pct" -> steal) ++ extra ++ layer
     val setupList = setupS.map(s => f"$s%.6f").mkString("[", ",", "]")

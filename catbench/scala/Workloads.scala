@@ -3,7 +3,7 @@ package catbench
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.metacat.{DedupLog, DerivedCatalog, MetacatCatalog, ParquetCatalog}
+import graft.metacat.{DedupLog, MetacatCatalog, ParquetCatalog}
 import graft.mql.{Mql, Planner}
 
 /** One schedule line: `phase cls round name args...` (tab-separated).
@@ -82,44 +82,10 @@ final class Queries(spark: SparkSession, t: Tracer) {
   }
 }
 
-/** `mql_read`: read-only MQL file discovery over [[DerivedCatalog]] —
-  * the catalog the engine's `mql_*` gates run on: files derived from an
-  * `orders` table into a shredded parquet store, its shard and `all`
-  * datasets, dataset DAG, heap provenance edges and named queries. */
-final class MqlRead(spark: SparkSession, t: Tracer, input: String) extends Workload {
-  private val queries = new Queries(spark, t)
-  private var cat: DerivedCatalog = _
-  var root: String = _
-  var userBytes = 0L
-
-  private val store = sys.env.getOrElse("SPARK_GRAFT_CATALOG_STORE", s"$input/store")
-
-  def seed(r: String): Unit = {
-    root = r
-    Dirs.delete(store) // the previous seed's ingest
-    // a private copy of the source per seed: DerivedCatalog caches its
-    // files frame per (session, directory), which would let later seeds
-    // skip the ingest the first one paid for
-    val src = java.nio.file.Paths.get(s"$r/src")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$input/orders.parquet"),
-      src.resolve("orders.parquet"))
-    cat = new DerivedCatalog(spark, src.toString)
-    // the store ingest (JSON → Variant + shred columns, written to parquet)
-    userBytes = cat.files.select(sum(length(to_json(col("metadata"))) +
-      length(col("fid")) + length(col("name")))).head().getLong(0)
-  }
-
-  def exec(op: Op): String = queries.run(cat, op.args(1), op.args(2))
-
-  override def storeBytes(): Long = super.storeBytes() + Workloads.duBytes(store)
-
-  def dump(dir: String): Unit = ()
-}
-
 /** `catalog_mutate`: small merge-on-read mutations, read-your-writes
   * queries and op-count-cadenced checkpoint + vacuum. */
-final class CatalogMutate(spark: SparkSession, t: Tracer) extends Workload {
+final class CatalogMutate(spark: SparkSession, t: Tracer, input: String)
+    extends Workload {
   import Workloads._
   import spark.implicits._
   private val queries = new Queries(spark, t)
@@ -127,29 +93,16 @@ final class CatalogMutate(spark: SparkSession, t: Tracer) extends Workload {
   var root: String = _
   var userBytes = 0L
 
-  /** the seeded catalog: BaseFiles files, all in `dsns:all`, with heap
-    * provenance edges (parent of k is (k-1)/2) */
+  /** the seeded catalog: the files of `files.parquet` (inputs.py), all
+    * in `dsns:all` */
   def seed(r: String): Unit = {
     root = r
     cat = new ParquetCatalog(spark, s"$r/catalog", mergeOnRead = true)
-    val k = col("id")
-    val rows = spark.range(0, CatalogMutate.BaseFiles).select(
-      format_string("F%08d", k).as("fid"),
-      format_string("ns%d", k % 4).as("namespace"),
-      format_string("f_%d.dat", k).as("name"),
-      format_string("{\"core.run\":%d,\"core.status\":\"%s\"}", k % 1000,
-        when(k % 3 === 0, "F").otherwise("O")).as("metadata_json"),
-      lit("bench").as("creator"),
-      to_timestamp(lit("2026-01-01 00:00:00")).as("created_timestamp"),
-      (k * 10).as("size"),
-      (k % 97 === 0).as("retired"))
+    val rows = spark.read.parquet(s"$input/files.parquet")
     userBytes = rows.select(sum(length(concat_ws("\t", col("fid"), col("namespace"),
       col("name"), col("metadata_json"))))).head().getLong(0)
     cat.createDataset("dsns", "all")
     cat.declareFiles(rows, dataset = Some(("dsns", "all")))
-    cat.addProvenance(spark.range(1, CatalogMutate.BaseFiles).select(
-      format_string("F%08d", expr("(id - 1) div 2")).as("parent_fid"),
-      format_string("F%08d", k).as("child_fid")))
   }
 
   private def maintain(): Unit = {
@@ -191,19 +144,16 @@ final class CatalogMutate(spark: SparkSession, t: Tracer) extends Workload {
   private def fids(s: String): Seq[String] = s.split(",").toSeq.filter(_.nonEmpty)
   private def bytes(ss: String*): Unit = userBytes += ss.map(_.length.toLong).sum
 
-  /** rows of a round's declare: keys [k0, k0+n) — the checker derives
-    * the same rows from the same formula */
+  /** rows of a round's declare: keys [k0, k0+n), built on the driver
+    * (the checker derives the same rows from the same formula); their
+    * user bytes are counted as the seed's are */
   private def declareRows(k0: Long, n: Long): DataFrame = {
-    val k = col("id")
-    spark.range(k0, k0 + n).select(
-      format_string("N%08d", k).as("fid"),
-      lit("bench").as("namespace"),
-      format_string("n_%d.dat", k).as("name"),
-      format_string("{\"core.run\":%d,\"core.status\":\"O\",\"data.tags\":[\"tag%d\"]}",
-        k % 1000, k % 7).as("metadata_json"),
-      lit("bench").as("creator"),
-      to_timestamp(lit("2026-01-01 00:00:00")).as("created_timestamp"),
-      (k * 10).as("size"))
+    val rows = (k0 until k0 + n).map(k => (f"N$k%08d", "bench", s"n_$k.dat",
+      s"""{"core.run":${k % 1000},"core.status":"O","data.tags":["tag${k % 7}"]}""", k * 10))
+    bytes(rows.map(r => Seq(r._1, r._2, r._3, r._4).mkString("\t")): _*)
+    rows.toDF("fid", "namespace", "name", "metadata_json", "size")
+      .withColumn("creator", lit("bench"))
+      .withColumn("created_timestamp", to_timestamp(lit("2026-01-01 00:00:00")))
   }
 
   def exec(op: Op): String = {
@@ -216,7 +166,6 @@ final class CatalogMutate(spark: SparkSession, t: Tracer) extends Workload {
         "ok"
       case "declareFiles" =>
         val rows = declareRows(a(2).toLong, a(3).toLong)
-        bytes(rows.collect().map(_.mkString("\t")): _*)
         t.span("declareFiles", "metacat")(
           cat.declareFiles(rows, dataset = Some((a(0), a(1)))))
         "ok"
@@ -259,10 +208,6 @@ final class CatalogMutate(spark: SparkSession, t: Tracer) extends Workload {
   }
 }
 
-object CatalogMutate {
-  val BaseFiles = 2000L
-}
-
 /** `dedup_ingest`: micro-batches of `documents` through [[DedupLog]]. */
 final class DedupIngest(spark: SparkSession, t: Tracer, input: String)
     extends Workload {
@@ -285,7 +230,7 @@ final class DedupIngest(spark: SparkSession, t: Tracer, input: String)
   def exec(op: Op): String = {
     val a = op.args
     op.name match {
-      case "ingest" =>
+      case "ingest" | "redeliver" =>
         val b = a(0).toLong
         val stamp = a(1).toLong
         val batch = docs.filter(col("batch") === b).select("doc_id", "text")
