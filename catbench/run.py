@@ -23,6 +23,14 @@ the work: the timed phase takes about that long on a 4-core x86 host.
 A traced run runs twice the rounds and traces every other op; the
 per-layer metrics come from the traced ops, the latency classes from
 the others, and the tracing overhead compares the two.
+
+Op latencies (and so `ops_per_s`) leave out the time the hypervisor
+stole from this VM: each op's wall time is scaled by the share of the
+guest's CPU time during the op that was not stolen (`/proc/stat`
+steal against user+nice+system+irq+softirq). On an unshared host this
+is the wall time; on a shared one it removes the neighbours' share,
+which otherwise swings the figures by up to 2x from minute to minute.
+The wall-time figures are printed beside them.
 """
 import argparse
 import glob
@@ -181,9 +189,12 @@ def read_ops(run_dir):
     with open(os.path.join(run_dir, "out", "ops.tsv"), encoding="utf-8") as fh:
         for line in fh:
             f = line.rstrip("\n").split("\t")
+            busy, steal = int(f[8]), int(f[9])
+            wall = float(f[4])
             ops.append({"idx": int(f[0]), "phase": f[1], "cls": f[2], "name": f[3],
-                        "ms": float(f[4]), "traced": f[5] == "true", "result": f[6],
-                        "error": f[7], "args": sched[int(f[0])]})
+                        "wall_ms": wall, "ms": wall * (1.0 - steal / max(1, busy + steal)),
+                        "traced": f[5] == "true", "result": f[6], "error": f[7],
+                        "args": sched[int(f[0])]})
     return ops
 
 
@@ -204,22 +215,21 @@ def op_type(o):
     return o["args"][0] if o["name"] == "query" else o["name"]
 
 
-def class_latency(ops):
-    """Per latency class: the p50, and the geometric mean over the
-    class's op types of each type's median. A round holds one op of each
-    write type, so the gmean weighs a change in any type alike, where
-    the p50 of unlike ops follows whichever type sits in the middle. No
+def class_latency(ops, key="ms", suffix=""):
+    """Per latency class: the p50 over its ops, and the geometric mean
+    over the class's op types of each type's median. The p50 follows the
+    types in the middle; the gmean weighs a change in any type alike. No
     p90: no class reaches 100 samples in a run."""
     out = {}
     for cls in ("read", "write", "admin", "maint"):
         by_type = {}
         for o in ops:
             if o["cls"] == cls:
-                by_type.setdefault(op_type(o), []).append(o["ms"])
+                by_type.setdefault(op_type(o), []).append(o[key])
         ms = [x for xs in by_type.values() for x in xs]
         if ms:
-            out["%s_p50_ms" % cls] = (statistics.median(ms), len(ms))
-            out["%s_gmean_ms" % cls] = (statistics.geometric_mean(
+            out["%s_p50%s_ms" % (cls, suffix)] = (statistics.median(ms), len(ms))
+            out["%s_gmean%s_ms" % (cls, suffix)] = (statistics.geometric_mean(
                 [statistics.median(xs) for xs in by_type.values()]), len(ms))
     return out
 
@@ -311,6 +321,8 @@ def print_repeatability(hist, workload):
 def unit_of(name, units):
     if name in units:
         return units[name]
+    if name.startswith("ops_per_"):
+        return "1/s"
     for part, unit in (("_ms", "ms"), ("_mb", "MB"), ("ratio", "ratio"), ("amp", "ratio"),
                        ("pct", "%"), ("_bytes", "bytes")):
         if part in name:
@@ -383,10 +395,13 @@ def main():
             print_repeatability(load_history(root, ver), args.workload)
 
         e2e = {"setup_s": (s["setup_s"], len(s["setup_reps_s"])),
-               "ops_per_s": (len(measured) / s["timed_wall_s"], len(measured)),
+               "ops_per_s": (1000.0 * len(measured) / sum(o["ms"] for o in measured),
+                             len(measured)),
+               "ops_per_wall_s": (len(measured) / s["timed_wall_s"], len(measured)),
                "space_amp": (counts["space_amp"], 1),
                "retained_heap_mb": (s["retained_heap_mb"], 1)}
         e2e.update(lat)
+        e2e.update(class_latency(timed, "wall_ms", "_wall"))
         report(args, spec, e2e, layer, len(measured), fails, failed)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)

@@ -21,8 +21,10 @@ import org.apache.spark.sql.SparkSession
   * `run-dir/out/`: `ops.tsv` (one line per op), `summary.json`,
   * `trace.jsonl`, `counters.tsv` and the workload's final-state dump. */
 object Main {
+  /** `busy` and `steal`: host-wide jiffies the guest ran, and had
+    * stolen by the hypervisor, during the op */
   final case class OpRec(op: Op, startMs: Long, endMs: Long, ns: Long,
-      traced: Boolean, result: String, error: String)
+      traced: Boolean, result: String, error: String, busy: Long, steal: Long)
 
   def main(args: Array[String]): Unit = {
     val o = args.grouped(2).map(a => a(0).stripPrefix("--") -> a(1)).toMap
@@ -67,6 +69,7 @@ object Main {
     def run(op: Op, traced: Boolean): OpRec = {
       if (traced) sc.setLocalProperty(JobListener.OpKey, op.idx.toString)
       tracer.beginOp(if (traced) op.idx else -1)
+      val st0 = Proc.cpuStat()
       val wall0 = System.currentTimeMillis()
       val s = System.nanoTime()
       val (res, err) =
@@ -75,9 +78,10 @@ object Main {
           ("", s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}") }
       val ns = System.nanoTime() - s
       val wall1 = System.currentTimeMillis()
+      val (busy, steal) = Proc.busySteal(st0, Proc.cpuStat())
       tracer.endOp()
       sc.setLocalProperty(JobListener.OpKey, null)
-      OpRec(op, wall0, wall1, ns, traced, res, err)
+      OpRec(op, wall0, wall1, ns, traced, res, err, busy, steal)
     }
 
     // ---- set-up: `reps` fresh seeds (the last one is kept), then the
@@ -139,7 +143,8 @@ object Main {
     val measured = recs.filter(_.op.phase != "warm")
     Workloads.writeLines(s"$out/ops.tsv", recs.iterator.map(r =>
       Seq(r.op.idx, r.op.phase, r.op.cls, r.op.name, r.ns / 1e6, r.traced,
-        r.result, r.error.replace('\t', ' ').replace('\n', ' ')).mkString("\t")))
+        r.result, r.error.replace('\t', ' ').replace('\n', ' '), r.busy, r.steal)
+        .mkString("\t")))
     val layer = if (trace) Layers.summarize(tracer, listener, measured.filter(_.traced).toSeq,
       logFiles.toSeq) else Map.empty[String, Double]
     if (trace) {
@@ -202,4 +207,12 @@ object Proc {
   /** user nice system idle iowait irq softirq steal */
   def cpuStat(): Seq[Long] = read("/proc/stat").find(_.startsWith("cpu "))
     .map(_.split("\\s+").slice(1, 9).map(_.toLong).toSeq).getOrElse(Nil)
+  /** jiffies between two [[cpuStat]]s that the guest's CPUs ran (user,
+    * nice, system, irq, softirq) and that the host stole from them */
+  def busySteal(a: Seq[Long], b: Seq[Long]): (Long, Long) =
+    if (a.size < 8 || b.size < 8) (0L, 0L)
+    else {
+      val d = b.zip(a).map { case (x, y) => x - y }
+      (d(0) + d(1) + d(2) + d(5) + d(6), d(7))
+    }
 }
