@@ -218,6 +218,23 @@ object Bench {
     val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").flatMap(_.toIntOption)
       .filter(_ >= 0).getOrElse(1)
     var failedRuns = 0
+    // Spark jobs of the timed runs, per query family (the module that
+    // registers the query): tagged through a local property, which the
+    // threads a query starts (stream executions) inherit
+    val familyOf: Map[String, String] =
+      Seq("relational" -> graft.queries.RelationalQueries.all,
+        "mql" -> graft.queries.MqlQueries.all,
+        "pipeline" -> graft.queries.PipelineQueries.all,
+        "streaming" -> graft.queries.StreamingQueries.all,
+        "write_path" -> graft.queries.WritePathQueries.all)
+        .flatMap { case (f, qs) => qs.keys.map(_ -> f) }.toMap
+    val FamilyKey = "graft.bench.family"
+    val jobsPerFamily = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(FamilyKey)))
+          .foreach(f => jobsPerFamily.merge(f, 1L, (a: Long, b: Long) => a + b))
+    })
     // per-query loadavg samples: informational forensics (a mid-run
     // contention window shows WHICH queries it hit), never a gate — the
     // bench's own 32-thread bursts keep the 1-min average elevated, so
@@ -227,10 +244,13 @@ object Bench {
       (1 to warmup).foreach { _ =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
-      val runs = (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); secs(t0) } catch { case _: Throwable => -1.0 }
-      }
+      spark.sparkContext.setLocalProperty(FamilyKey, familyOf.getOrElse(name, "other"))
+      val runs =
+        try (1 to n).map { _ =>
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count(); secs(t0) } catch { case _: Throwable => -1.0 }
+        }
+        finally spark.sparkContext.setLocalProperty(FamilyKey, null)
       loadPerQuery(name) = loadAvg()
       val ok = runs.filter(_ >= 0).sorted
       failedRuns += runs.size - ok.size
@@ -261,32 +281,39 @@ object Bench {
     val qsMin = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v._2 }
       .mkString("{", ",", "}")
     val total = math.rint(results.values.map(_._1).filter(_ >= 0).sum * 1e3) / 1e3
-    // full artifact (incl. per-query map) on disk; the stdout line stays
-    // short so a log-tail capture can't clip it
+    def r3(x: Double) = math.rint(x * 1e3) / 1e3
+    // per-family subtotals (median and min-of-runs seconds, query count)
+    // and timed-run job counts: the compact view of the per-query maps
+    val families = results.toSeq.groupBy { case (k, _) => familyOf.getOrElse(k, "other") }
+      .toSeq.sortBy(_._1).map { case (f, rs) =>
+        val ok = rs.map(_._2).filter(_._1 >= 0)
+        s""""$f":{"sec":${r3(ok.map(_._1).sum)},"min_sec":${r3(ok.map(_._2).sum)},""" +
+          s""""n":${rs.size},"failed":${rs.size - ok.size},"jobs":${jobsPerFamily.getOrDefault(f, 0L)}}"""
+      }.mkString("{", ",", "}")
     val loadAfter = loadAvg()
     val contamJson = s""""contaminated":$contaminated,"contaminated_reason":${
       contaminatedReason.map("\"" + _ + "\"").getOrElse("null")},"waited_sec":${math.rint(waitedSec)}"""
     val loadQs = loadPerQuery.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","catalog_init":$catalogInit,"catalog_ingest":$catalogIngest,"runs":$n,"warmup":$warmup,"failed_runs":$failedRuns,"load_before":$loadBefore,"load_after":$loadAfter,"calib_sec":$calibSecFinal,"calib_io_sec":$calibIoSec,"calib_after":$calibAfter,"calib_io_after":$calibIoAfter,$contamJson,"queries":$qs,"queries_min":$qsMin,"load_per_query":$loadQs,"sf":"$sfDir"}"""
+    val head =
+      s"""{"metric":"total","value":$total,"unit":"sec","catalog_init":$catalogInit,"catalog_ingest":$catalogIngest,"runs":$n,"warmup":$warmup,"failed_runs":$failedRuns,"load_before":$loadBefore,"load_after":$loadAfter,"calib_sec":$calibSecFinal,"calib_io_sec":$calibIoSec,"calib_after":$calibAfter,"calib_io_after":$calibIoAfter,$contamJson,"nqueries":${results.size},"families":$families"""
+    // the full artifact, with the per-query maps, goes to disk:
+    // bench_last.json (overwritten per run) and bench_history.jsonl
+    // (append-only, git-retained — r6 postmortem: when the round total
+    // tripled there was no committed per-query map to diff against)
+    val full = s"""$head,"queries":$qs,"queries_min":$qsMin,"load_per_query":$loadQs,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"), full + "\n")
     catch { case _: Throwable => () }
-    // append-only, git-retained history: bench_last.json is overwritten by
-    // every run (r6 postmortem: when the round total tripled there was no
-    // committed per-query map to diff against), so each run also appends
-    // its full per-query record here for cross-round attribution
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_history.jsonl"),
       s"""{"at":"${java.time.Instant.now()}",""" + full.drop(1) + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     catch { case _: Throwable => () }
-    // the stdout line carries the FULL per-query maps: rounds 7-14 the
-    // driver's PERF_*.json had per_query:{} because the maps lived only in
-    // bench_last.json (the short stdout form was a log-tail-clipping
-    // precaution that cost seven rounds of per-query visibility).
-    // load_per_query stays disk-only — it is forensics, not contract.
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","catalog_init":$catalogInit,"catalog_ingest":$catalogIngest,"runs":$n,"warmup":$warmup,"failed_runs":$failedRuns,"load_before":$loadBefore,"load_after":$loadAfter,"calib_sec":$calibSecFinal,"calib_io_sec":$calibIoSec,"calib_after":$calibAfter,"calib_io_after":$calibIoAfter,$contamJson,"nqueries":${results.size},"queries":$qs,"queries_min":$qsMin,"queries_file":"bench_last.json","sf":"$sfDir"}""")
+    // the stdout line is the compact form (total, probes, per-family
+    // subtotals and job counts, well under 1.5 KB): a capture that keeps
+    // only the last 2000 characters of output must still hold all of it.
+    // The per-query maps stay in the files above (tools/bench_diff.py
+    // --history reads them).
+    println(s"""$head,"queries_file":"bench_last.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

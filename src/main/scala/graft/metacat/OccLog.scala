@@ -1,6 +1,6 @@
 package graft.metacat
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
@@ -57,10 +57,14 @@ import org.apache.hadoop.fs.Path
   *                  max `__seq` joins the allocation frontier and they are
   *                  readable until the first vacuum/compaction that covers
   *                  them
+  * @param foldSpec  the driver-side fold [[folded]] maintains: which
+  *                  columns it keeps and the latest-wins key of a record
+  *                  (the same keys `fold` collapses by)
   */
 private[metacat] final class OccLog(
     spark: SparkSession, root: String, name: String, schema: StructType,
-    fold: DataFrame => DataFrame, legacyFlat: Boolean = false) {
+    fold: DataFrame => DataFrame, legacyFlat: Boolean = false,
+    foldSpec: Option[OccLog.FoldSpec] = None) {
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def path(t: String) = s"$root/$t"
@@ -77,11 +81,12 @@ private[metacat] final class OccLog(
   private[metacat] var stuckClaimRecovery: (String, Long) => Boolean =
     (_, _) => false
 
-  /** Test seam: fires in [[records]] between the pinned segment listing
-    * (already re-validated against the checkpoint pointer) and the EAGER
-    * `spark.read` file-index resolution — the exact window where a
-    * concurrent checkpoint+vacuum deletes just-listed segments and the
-    * read throws PATH_NOT_FOUND out of plan CONSTRUCTION. */
+  /** Test seam: fires in [[records]] and [[folded]] between the pinned
+    * segment listing (already re-validated against the checkpoint
+    * pointer) and the EAGER `spark.read` file-index resolution — the
+    * exact window where a concurrent checkpoint+vacuum deletes
+    * just-listed segments and the read throws PATH_NOT_FOUND out of plan
+    * CONSTRUCTION. */
   private[metacat] var onRecordsPinned: () => Unit = () => ()
 
   private def align(df: DataFrame): DataFrame =
@@ -158,19 +163,16 @@ private[metacat] final class OccLog(
     *     Pinned paths turn that race into FileNotFoundException, which
     *     every materializing caller ([[stageRows]], [[checkpoint]],
     *     retryOnVanish sites) already retries with a fresh plan. */
-  def records(): DataFrame = {
-    var guard = 0
-    while (true) {
-      val c = ckptSeq()
-      if (legacyFlatSeq() > c) {
-        // pre-OCC flat part files live directly under the log dir — only
-        // the recursive listing sees them; flat files are immutable and
-        // only vacuumed once a covering checkpoint exists (c >= flat max)
-        return readRaw()
-      }
-      val above = listSeqNames(name).filter(_ > c).sorted
-        .map(s => s"${path(name)}/${seqDirName(s)}")
-      if (ckptSeq() == c) {
+  def records(): DataFrame = stableRead { c =>
+    if (legacyFlatSeq() > c) {
+      // pre-OCC flat part files live directly under the log dir — only
+      // the recursive listing sees them; flat files are immutable and
+      // only vacuumed once a covering checkpoint exists (c >= flat max)
+      Some(readRaw())
+    } else {
+      val above = listSeqNames(name).filter(_ > c).sorted.map(segPath)
+      if (ckptSeq() != c) None
+      else {
         onRecordsPinned()
         // spark.read.parquet resolves its file index EAGERLY, so a vacuum
         // deleting a just-listed segment (or a superseded checkpoint)
@@ -179,33 +181,135 @@ private[metacat] final class OccLog(
         // see it (observed: an ingest stream's very first mkBatch() in
         // declareFiles, built outside the pin-retry loop, died against an
         // admin loop's vacuum cadence). A fresh listing is always correct
-        // (the covering checkpoint carries the vacuumed segments), so the
-        // race is absorbed here, inside the existing guard loop.
-        try {
-          val aboveDf =
-            if (above.isEmpty) None
-            else Some(spark.read.schema(schema).parquet(above: _*))
-          val ckptDf =
-            if (c <= 0L) None
-            else Some(spark.read.schema(schema)
-              .parquet(s"${path(ckptT)}/${seqDirName(c)}"))
-          return (ckptDf, aboveDf) match {
-            case (Some(k), Some(a)) => k.unionByName(a)
-            case (Some(k), None)    => k
-            case (None, Some(a))    => a
-            case (None, None)       => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        // (the covering checkpoint carries the vacuumed segments), so
+        // [[stableRead]] absorbs the race.
+        val ckptDf =
+          if (c <= 0L) None else Some(spark.read.schema(schema).parquet(ckptPath(c)))
+        val aboveDf =
+          if (above.isEmpty) None else Some(spark.read.schema(schema).parquet(above: _*))
+        Some((ckptDf ++ aboveDf).reduceOption(_.unionByName(_)).getOrElse(
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)))
+      }
+    }
+  }
+
+  private def segPath(s: Long): String = s"${path(name)}/${seqDirName(s)}"
+  private def ckptPath(c: Long): String = s"${path(ckptT)}/${seqDirName(c)}"
+
+  /** The guard [[records]] and [[folded]] share: run `body` against the
+    * current checkpoint pointer until it returns a read. `body` returns
+    * None when the pointer moved under its listing; a read that finds a
+    * listed segment or checkpoint gone (a vacuum in between) is retried
+    * with a fresh listing. Running out of attempts throws with the last
+    * such failure as the cause: a segment that vanishes on every attempt
+    * is vacuum churn or a segment deleted outside the protocol, not a
+    * transient race. */
+  private def stableRead[T](body: Long => Option[T]): T = {
+    var lastVanished: Throwable = null
+    var attempt = 0
+    while (attempt < OccLog.MaxReadAttempts) {
+      attempt += 1
+      try body(ckptSeq()) match {
+        case Some(t) => return t
+        case None => () // a checkpoint landed mid-listing — recompute
+      } catch {
+        case e: Throwable if OccLog.fileVanished(e) => lastVanished = e
+      }
+    }
+    val why =
+      if (lastVanished == null) "the checkpoint pointer moved under every listing"
+      else "a listed segment or checkpoint was missing when read — a vacuum " +
+        "racing every attempt, or a segment deleted outside the commit " +
+        s"protocol (last failure: ${lastVanished.getMessage})"
+    throw new IllegalStateException(
+      s"reading $root/$name found no stable view after $attempt attempts: $why",
+      lastVanished)
+  }
+
+  /** Parquet data files of one segment or checkpoint directory, sorted.
+    * Spark names part files uniquely per write, so this list identifies
+    * the directory's CONTENT: a segment re-published under the same seq
+    * after another instance compacted the log lists differently. */
+  private def dataFiles(dir: String): Seq[String] = {
+    val p = new Path(dir)
+    fsOf(p).listStatus(p).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .map(_.getPath.toString).sorted
+  }
+
+  private var foldCache: OccLog.FoldCache = null
+
+  /** The driver-resident fold of this log: the latest record per
+    * `foldSpec` key over the checkpoint and every segment above it,
+    * projected to `foldSpec.cols` — the collected equivalent of
+    * latest-per-key over [[records]].
+    *
+    * Incremental: each call lists the log once (under the same
+    * [[stableRead]] guard as [[records]]) and reads only the segments it
+    * has not folded yet — at most one Spark job, none when nothing was
+    * published since the last call. Published segments are immutable, so
+    * a folded segment never needs re-reading. The cache is dropped when
+    * the checkpoint pointer moves, when the checkpoint's data files differ
+    * from the cached ones, or when any cached segment is gone or lists
+    * different data files: a compaction by another instance (after which
+    * seqs restart at 1, see [[truncate]]) can never pass for the segments
+    * it replaced. A legacy flat layout above the checkpoint is folded from
+    * a full raw read on every call (it exists only until the first
+    * covering vacuum). */
+  private[metacat] def folded(): OccLog.Folded = synchronized {
+    val spec = foldSpec.getOrElse(throw new IllegalStateException(
+      s"log $name has no driver fold spec"))
+    val cols = spec.cols.map(col)
+    def foldRows(into: Map[Any, Row], rows: Iterator[Row]) =
+      OccLog.foldInto(spec, into, rows)
+    stableRead { c =>
+      if (legacyFlatSeq() > c) {
+        foldCache = null
+        val rows = readRaw().select(cols: _*).collect()
+        Some(new OccLog.Folded(OccLog.versions.incrementAndGet(),
+          foldRows(Map.empty, rows.iterator), _ => readRaw()))
+      } else {
+        val above = listSeqNames(name).filter(_ > c).sorted
+        if (ckptSeq() != c) None
+        else {
+          val ckptFiles = if (c > 0L) dataFiles(ckptPath(c)) else Nil
+          val segs = above.map(s => s -> dataFiles(segPath(s))).toMap
+          val cached = Option(foldCache).filter { k =>
+            k.ckpt == c && k.ckptFiles == ckptFiles &&
+            k.segs.forall { case (s, fs) => segs.get(s).contains(fs) }
           }
-        } catch {
-          case e: Throwable if OccLog.fileVanished(e) => () // recompute
+          val fresh = cached.isEmpty
+          val newSegs = segs.filter { case (s, _) => fresh || !cached.get.segs.contains(s) }
+          val toRead = (if (fresh) ckptFiles else Nil) ++ newSegs.values.flatten
+          onRecordsPinned()
+          val rows =
+            if (toRead.isEmpty) Array.empty[Row]
+            else spark.read.schema(schema).parquet(toRead: _*).select(cols: _*).collect()
+          val next = cached match {
+            case Some(k) if rows.isEmpty => k.copy(segs = segs)
+            case _ => OccLog.FoldCache(c, ckptFiles, segs,
+              foldRows(cached.map(_.latest).getOrElse(Map.empty), rows.iterator),
+              OccLog.versions.incrementAndGet())
+          }
+          foldCache = next
+          // the payload of a folded record lives in its segment's files,
+          // or in the checkpoint's for seqs it covers
+          def filesOf(seqs: Set[Long]): Seq[String] =
+            (if (seqs.exists(_ <= c)) ckptFiles else Nil) ++
+              seqs.toSeq.sorted.flatMap(s => segs.getOrElse(s, Nil))
+          Some(new OccLog.Folded(next.version, next.latest, seqs => {
+            val files = filesOf(seqs)
+            if (files.isEmpty) spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row], schema)
+            else spark.read.schema(schema).parquet(files: _*)
+          }))
         }
       }
-      guard += 1 // a checkpoint/vacuum moved mid-listing — recompute
-      if (guard > 50) throw new IllegalStateException(
-        s"records() of $root/$name could not take a stable listing after " +
-        s"$guard attempts (checkpoint pointer kept moving)")
     }
-    sys.error("unreachable")
   }
 
   /** Highest seq of the pre-OCC flat layout (parquet part files directly
@@ -276,9 +380,21 @@ private[metacat] final class OccLog(
       case Some(ks) => ks.distinct.sorted.mkString("\n")
       case None => "*"
     }
-    val out = fs.create(p, true)
+    // written under a hidden name and renamed into place: a created file
+    // is visible before its bytes are, and a successor reading it empty
+    // or truncated takes the key sets as DISJOINT and computes
+    // concurrently with a conflicting predecessor (observed: both writers
+    // of a DedupLogSpec clone storm admitted every clone, seqs 1 and 2
+    // publishing together, their sidecars stamped in the same ms)
+    val tmp = new Path(path(claimsT),
+      s".${seqDirName(s)}.keys.${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    if (!fs.rename(tmp, p)) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"cannot publish key sidecar $p")
+    }
   }
 
   /** the declared key set of claimed seq `s`: Some(keys), or None for
@@ -831,10 +947,21 @@ private[graft] object OccLog {
       .toLong
     // upper-bound estimate (filters keep their child's size without CBO);
     // only the order of magnitude matters for a file-count choice
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val parts = (bytes / BigInt(math.max(target, 1L))).toLong + 1L
-    df.coalesce(math.max(1L, math.min(parts, 1L << 20)).toInt)
+    df.coalesce(foldParts(df.queryExecution.optimizedPlan.stats.sizeInBytes, target))
   }
+
+  /** cap on [[foldSized]]'s part count */
+  private[graft] val MaxFoldParts = 1 << 20
+
+  /** ceil-ish(`bytes` / `target`) clamped to [1, [[MaxFoldParts]]],
+    * computed in BigInt: a plan estimate can exceed Long.MaxValue (Spark
+    * reports unknown sizes as huge BigInts), and converting before the
+    * clamp wrapped such estimates negative — to a single-part write of
+    * the largest folds. */
+  private[graft] def foldParts(bytes: BigInt, target: Long): Int =
+    (bytes / BigInt(math.max(target, 1L)) + 1)
+      .max(BigInt(1)).min(BigInt(MaxFoldParts)).toInt
+
   /** true when any cause in the chain is a missing-file read failure —
     * the signature of a snapshot listing racing [[OccLog.vacuum]] */
   def fileVanished(e: Throwable): Boolean = {
@@ -855,6 +982,52 @@ private[graft] object OccLog {
     }
     false
   }
+
+  /** attempts [[OccLog.records]] and [[OccLog.folded]] make before failing */
+  private[metacat] val MaxReadAttempts = 51
+
+  /** source of [[Folded.version]]s: process-wide, so a version is never
+    * reused, not even across a dropped and rebuilt fold */
+  private val versions = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** what [[OccLog.folded]] keeps between calls: the latest record per
+    * fold key over checkpoint `ckpt` (its data files `ckptFiles`) plus
+    * the segments in `segs` (seq -> data files) */
+  private final case class FoldCache(ckpt: Long, ckptFiles: Seq[String],
+      segs: Map[Long, Seq[String]], latest: Map[Any, Row], version: Long)
+
+  /** What a log's driver fold keeps: `cols` (must include `__seq`) of
+    * each record, latest per `key`. */
+  private[metacat] final case class FoldSpec(cols: Seq[String], key: Row => Any)
+
+  /** One call's view of a log's driver fold. `latest` maps each fold key
+    * to its latest record, projected to the spec's columns. `version`
+    * changes whenever the folded content may have changed, so driver
+    * state derived from the fold can be memoized on it. `payload(seqs)`
+    * scans the full at-rest records of the given seqs from exactly the
+    * files this view was folded from (pinned: a later vacuum fails it
+    * loudly, never silently). */
+  private[metacat] final class Folded(val version: Long,
+      val latest: Map[Any, Row], val payload: Set[Long] => DataFrame)
+
+  /** fold `rows` into `into`, latest `__seq` per `spec` key winning (an
+    * equal seq keeps the record already there) */
+  private[metacat] def foldInto(spec: FoldSpec, into: Map[Any, Row],
+      rows: Iterator[Row]): Map[Any, Row] =
+    rows.foldLeft(into) { (m, r) =>
+      val k = spec.key(r)
+      m.get(k) match {
+        case Some(old) if old.getAs[Long]("__seq") >= r.getAs[Long]("__seq") => m
+        case _ => m.updated(k, r)
+      }
+    }
+
+  /** A one-off [[Folded]] over `source` (no cache): collects `spec`'s
+    * columns and folds them on the driver; `payload` re-reads `source`. */
+  private[metacat] def foldOf(spec: FoldSpec, source: DataFrame): Folded =
+    new Folded(versions.incrementAndGet(),
+      foldInto(spec, Map.empty, source.select(spec.cols.map(col): _*).collect().iterator),
+      _ => source)
 
   /** the standard checkpoint fold: latest record per key, original
     * `__seq`/`__op` preserved */

@@ -42,12 +42,14 @@ import org.apache.spark.sql.types._
   *    a one-file retire still costs a whole-partition rewrite.
   *  - merge-on-read (`mergeOnRead = true`): each mutation APPENDS the new
   *    row versions (or tombstones) to a `files_log/` delta log keyed by
-  *    `(fid, __seq)`; reads overlay latest-log-wins on the base via a
-  *    broadcast anti-join. A mutation's write cost is O(rows touched)
-  *    regardless of table or partition size — the posture of a lakehouse
-  *    MERGE with deletion vectors. [[compactFilesLog]] folds the log back
-  *    into the base (partition-scoped) and truncates it; at 100 TB a
-  *    deployment compacts on a schedule so the log stays broadcast-sized.
+  *    `(fid, __seq)`; reads overlay latest-log-wins on the base from the
+  *    log's driver-side fold ([[storedFiles]], [[LogFolds]]): an `InSet`
+  *    filter on the base scan, no join. A mutation's write cost is
+  *    O(rows touched) regardless of table or partition size — the posture
+  *    of a lakehouse MERGE with deletion vectors. [[compactFilesLog]]
+  *    folds the log back into the base (partition-scoped) and truncates
+  *    it; at 100 TB a deployment compacts on a schedule so the log's key
+  *    set stays driver-sized.
   *
   * Concurrency contract (the reference serializes concurrent clients
   * through Postgres transactions; see the OCC protocol notes at
@@ -149,43 +151,22 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * with the membership delta log — a pair with any logged record
     * resolves to its latest add/remove, and a dataset-wide `remove_all`
     * wildcard (from [[removeDataset]]) kills base rows plus every pair
-    * record below its seq. Scale shape: all windows run over the
-    * mutation-sized log; the base scan joins only against broadcastable
-    * log-derived key sets — never a corpus-wide shuffle. */
+    * record below its seq.
+    *
+    * Scale shape: the overlay comes from the members log's driver fold
+    * ([[OccLog.folded]], see [[LogFolds]]) — the base scan filtered by
+    * `InSet` on the logged pair, dataset-wildcard and fid-wildcard keys,
+    * unioned with a `LocalRelation` of the pairs live in the log. The fold
+    * is cached per catalog instance, keyed by the checkpoint and the
+    * data-file names of every folded segment, and advanced by reading
+    * only segments it has not seen (at most one Spark job per call, none
+    * when nothing was published). The driver holds the log's keys — what
+    * the Spark-side overlay used to broadcast — plus the live log adds
+    * (membership adds base-append unless shadowed, so those stay
+    * mutation-sized). */
   override def filesDatasets: DataFrame = {
     val base = readOr("files_datasets", FilesDatasetsSchema)
-    if (!mergeOnRead || !membersLog.nonEmpty()) base
-    else foldMembers(base, membersLog.records())
-  }
-
-  /** base ⊕ membership-log overlay (see [[filesDatasets]]) */
-  private def foldMembers(base: DataFrame, recs: DataFrame): DataFrame = {
-    val pairLatest = OccLog.latestPerKey(
-      Seq("fid", "dataset_namespace", "dataset_name"))(
-      recs.filter(col("__op") =!= MemberRemoveAll &&
-        col("__op") =!= MemberRemoveFid))
-    val wild = recs.filter(col("__op") === MemberRemoveAll)
-      .groupBy("dataset_namespace", "dataset_name")
-      .agg(max(col("__seq")).as("__wseq"))
-    val fidWild = recs.filter(col("__op") === MemberRemoveFid)
-      .groupBy("fid").agg(max(col("__seq")).as("__fwseq"))
-    // base rows lose to ANY pair record (the log re-supplies live pairs
-    // below) and to any wildcard of either kind (base rows carry
-    // implicit seq 0)
-    val baseLive = base
-      .join(broadcast(pairLatest
-          .select("fid", "dataset_namespace", "dataset_name")),
-        Seq("fid", "dataset_namespace", "dataset_name"), "left_anti")
-      .join(broadcast(wild.select("dataset_namespace", "dataset_name")),
-        Seq("dataset_namespace", "dataset_name"), "left_anti")
-      .join(broadcast(fidWild.select("fid")), Seq("fid"), "left_anti")
-    val logLive = pairLatest.filter(col("__op") === MemberAdd)
-      .join(wild, Seq("dataset_namespace", "dataset_name"), "left")
-      .join(fidWild, Seq("fid"), "left")
-      .filter((col("__wseq").isNull || col("__seq") > col("__wseq")) &&
-        (col("__fwseq").isNull || col("__seq") > col("__fwseq")))
-      .select("fid", "dataset_namespace", "dataset_name")
-    baseLive.unionByName(logLive)
+    if (!mergeOnRead) base else membersFold().overlay(spark, base)
   }
 
   /** current membership-log version, for naming [[filesDatasetsAsOf]]
@@ -212,14 +193,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         "is gone (vacuumMembersLog bounds time travel the way VACUUM " +
         "bounds VERSION AS OF in a Delta table)")
     if (!membersLog.nonEmpty() || seq <= 0L) base
-    else {
-      // below the checkpoint (but above any vacuum horizon) the raw
-      // segments are authoritative — the checkpoint's latest-wins
-      // collapse would leak mutations in (seq, ckpt] into the snapshot
-      val source =
-        if (horizon > 0L) membersLog.records() else membersLog.readRaw()
-      foldMembers(base, source.filter(col("__seq") <= seq))
-    }
+    else new LogFolds.MembersFold(asOf(membersLog, LogFolds.MembersSpec, seq))
+      .overlay(spark, base)
   }
 
   override def datasets: DataFrame =
@@ -232,33 +207,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * wildcards kill base rows and pair records BELOW them. An add at the
     * SAME seq as a wildcard survives it (`>=`): the two are one mutation
     * (replace = wildcard + new edges), ordered remove-then-add within
-    * the commit. Windows run over the mutation-sized log only. */
+    * the commit. Same driver-fold shape as [[filesDatasets]]. */
   override def parentChild: DataFrame = {
     val base = readOr("parent_child", ParentChildSchema)
-    if (!mergeOnRead || !edgesLog.nonEmpty()) base
-    else foldEdges(base, edgesLog.records())
-  }
-
-  /** base ⊕ edge-log overlay (see [[parentChild]]) */
-  private def foldEdges(base: DataFrame, recs: DataFrame): DataFrame = {
-    val pairLatest = OccLog.latestPerKey(Seq("parent_fid", "child_fid"))(
-      recs.filter(col("parent_fid").isNotNull && col("child_fid").isNotNull))
-    val wildP = recs.filter(col("child_fid").isNull)
-      .groupBy("parent_fid").agg(max(col("__seq")).as("__wp"))
-    val wildC = recs.filter(col("parent_fid").isNull)
-      .groupBy("child_fid").agg(max(col("__seq")).as("__wc"))
-    val baseLive = base
-      .join(broadcast(pairLatest.select("parent_fid", "child_fid")),
-        Seq("parent_fid", "child_fid"), "left_anti")
-      .join(broadcast(wildP.select("parent_fid")), Seq("parent_fid"), "left_anti")
-      .join(broadcast(wildC.select("child_fid")), Seq("child_fid"), "left_anti")
-    val logLive = pairLatest.filter(col("__op") === EdgeAdd)
-      .join(wildP, Seq("parent_fid"), "left")
-      .join(wildC, Seq("child_fid"), "left")
-      .filter((col("__wp").isNull || col("__seq") >= col("__wp")) &&
-        (col("__wc").isNull || col("__seq") >= col("__wc")))
-      .select("parent_fid", "child_fid")
-    baseLive.unionByName(logLive)
+    if (!mergeOnRead) base else edgesFold().overlay(spark, base)
   }
 
   /** current edge-log version, for naming [[parentChildAsOf]] snapshots */
@@ -278,11 +230,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         s"as-of edges seq $seq predates the vacuum horizon $horizon: " +
         "the per-sequence edge history below a vacuumed checkpoint is gone")
     if (!edgesLog.nonEmpty() || seq <= 0L) base
-    else {
-      val source =
-        if (horizon > 0L) edgesLog.records() else edgesLog.readRaw()
-      foldEdges(base, source.filter(col("__seq") <= seq))
-    }
+    else new LogFolds.EdgesFold(asOf(edgesLog, LogFolds.EdgesSpec, seq))
+      .overlay(spark, base)
   }
 
   override def datasetsParentChild: DataFrame =
@@ -294,9 +243,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .drop("metadata_json")
 
   override def namedQuerySource(namespace: String, name: String): Option[String] =
-    retryOnVanish(dimStored("queries")
-      .filter(col("namespace") === namespace && col("name") === name)
-      .select("source").collect()).headOption.map(_.getString(0))
+    dimRow("queries", namespace, name).map(_.getAs[String]("source"))
 
   // ---- write path (catalog maintenance) ----
 
@@ -337,35 +284,17 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // default, as in the reference.
     val defaulted = withDeclareDefaults(rows, FilesDeclareSchema)
     def mkBatch() =
-      (if (ignoreExisting)
+      if (ignoreExisting)
         defaulted.dropDuplicates("fid")
           .join(storedFiles().select("fid"), Seq("fid"), "left_anti")
-      else defaulted).persist()
-    var batch = mkBatch()
+      else defaulted
     // when the batch's own plan reads the delta log (the ignoreExisting
     // anti-join against the merged view), force the pin NOW, retrying if
     // that read raced a vacuum — every later use then hits the cache
     // instead of first materializing inside a write job where no retry
     // can help. Plain declares carry no log read: skip the extra job.
-    // The retry must rebuild the batch from a FRESH plan: a DataFrame's
-    // file listing is captured at plan time, so re-counting the same
-    // frame replays the stale listing and fails identically on every
-    // attempt (observed: an ingest stream dying behind an admin loop's
-    // vacuum cadence despite 5 "retries").
-    if (ignoreExisting && mergeOnRead && logNonEmpty()) {
-      var attempt = 0
-      var pinned = false
-      while (!pinned) {
-        try { batch.count(); pinned = true }
-        catch {
-          case e: Throwable if OccLog.fileVanished(e) && attempt < 5 =>
-            attempt += 1
-            batch.unpersist()
-            Thread.sleep(10L * attempt)
-            batch = mkBatch()
-        }
-      }
-    }
+    val batch = pinRows(() => mkBatch(),
+      eager = ignoreExisting && mergeOnRead && logNonEmpty())
     try {
       // probe the batch's fids ONCE (driver-side, bounded at
       // DeclareGuardMaxFids+1): it powers the small-batch declare guard
@@ -460,22 +389,13 @@ final class ParquetCatalog(spark: SparkSession, root: String,
             s"(or a crashed declare left its marker — see " +
             s"${path("declare_claims")})")
         }
-        // ONE fused probe job replaces the post-claim existence re-check
-        // AND the append path's tombstone pre-check: per claimed fid,
-        // is it LIVE in the merged view (already declared — the
-        // completed-before-we-claimed window) or TOMBSTONED in the log
-        // (must resurrect through the log, not base-append)?
-        val (liveHits, deadHits) = retryOnVanish {
-          val inTaken = col("fid").isin(taken: _*)
-          val live = storedFiles().filter(inTaken)
-            .select(col("fid"), lit(false).as("dead"))
-          val rows = (if (!logNonEmpty()) live
-            else live.unionByName(deletedFids().filter(inTaken)
-              .select(col("fid"), lit(true).as("dead"))))
-            .collect()
-          (rows.filter(!_.getBoolean(1)).map(_.getString(0)).toSet,
-            rows.filter(_.getBoolean(1)).map(_.getString(0)).toSet)
-        }
+        // per claimed fid: is it LIVE in the merged view (already
+        // declared — the completed-before-we-claimed window; one probe
+        // job) or TOMBSTONED in the log (must resurrect through the log,
+        // not base-append; the files fold, on the driver)?
+        val liveHits = retryOnVanish(storedFiles().filter(col("fid").isin(taken: _*))
+          .select("fid").collect().map(_.getString(0)).toSet)
+        val deadHits = deletedFids().intersect(taken.toSet)
         if (!ignoreExisting && liveHits.nonEmpty) {
           releaseDeclareFids(taken)
           claimedFids = Nil
@@ -496,13 +416,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // plain base append — resurrect those through the log instead.
       // The dead set is pinned driver-side (it is mutation-sized) so
       // the base-append/log-commit split stays identical across commit
-      // retries. For small guarded batches it was ALREADY computed by
-      // the guard's fused probe — no extra job here.
-      def deadIn(of: DataFrame): Set[String] =
-        if (!mergeOnRead || !logNonEmpty()) Set.empty // listing-only fast path
-        else retryOnVanish(
-          deletedFids().join(of.select("fid"), Seq("fid"), "left_semi")
-            .collect().map(_.getString(0)).toSet)
+      // retries. For small guarded batches the guard ALREADY computed it
+      // from the files fold; otherwise it costs a probe job only when the
+      // fold holds tombstones.
+      def deadIn(of: DataFrame): Set[String] = fidsIn(of, deletedFids())
 
       if (mergeOnRead && dataset.isDefined) {
         // r13: the file rows and their memberships commit as ONE
@@ -634,80 +551,60 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         java.net.URLEncoder.encode(fid, "UTF-8")), false)
   }
 
-  /** The fused post-append re-validation for [[declareFiles]] (MOR): ONE
-    * probe job re-checks the freshly appended file rows against the files
-    * log (a racing removeFiles tombstone would shadow them) AND the
-    * appended membership rows against the members log (a racing
-    * removeFrom / removeDataset wildcard), then commits whatever repair
-    * records the hits need. Replaces what were two sequential probe jobs
-    * per declare-into-dataset.
+  /** The fused post-append re-validation for [[declareFiles]] (MOR): the
+    * freshly appended file rows are re-checked against the files log (a
+    * racing removeFiles tombstone would shadow them) AND the appended
+    * membership rows against the members log (a racing removeFrom /
+    * removeDataset wildcard), then whatever repair records the hits need
+    * are committed. Both checks read the logs' driver folds; each costs a
+    * probe job over the appended fids only when its log has records that
+    * could shadow them.
     *
     * `member` carries (ds namespace, ds name, pre-shadowed fid set) from
     * the deferred [[appendMemberships]] — the pre-shadowed fids already
     * went through the log with a later seq than their racing remove, so
     * they are excluded here (re-committing them would only amplify the
-    * log). Both probe sides rebuild fresh plans per retry attempt. */
+    * log). */
   private def declareRevalidate(appended: DataFrame, stored: DataFrame,
       mkMemberFids: () => DataFrame,
       member: Option[(String, String, Set[String])]): Unit = {
-    def memberFids(): Option[DataFrame] = member.collect {
-      case (_, _, pre) if membersLog.nonEmpty() =>
-        val of = mkMemberFids().select("fid")
-        if (pre.isEmpty) of else of.filter(!col("fid").isin(pre.toSeq: _*))
-    }
-    val rows = retryOnVanish {
-      var plans = List.empty[DataFrame]
-      if (logNonEmpty())
-        plans ::= deletedFids()
-          .join(appended.select("fid"), Seq("fid"), "left_semi")
-          .select(col("fid"), lit("f").as("src"))
-      member.foreach { case (ns, n, _) =>
-        memberFids().foreach { of =>
-          val dsHit = col("dataset_namespace") === ns && col("dataset_name") === n
-          val all = membersLog.records()
-          val recs = all.filter(dsHit)
-          plans ::= recs.filter(col("__op") === MemberRemoveAll)
-            .select(lit(null).cast("string").as("fid"), lit("w").as("src"))
-            .unionByName(recs.filter(col("__op") === MemberRemove)
-              .select("fid").join(of, Seq("fid"), "left_semi")
-              .select(col("fid"), lit("m").as("src")))
-            .unionByName(all.filter(col("__op") === MemberRemoveFid)
-              .select("fid").join(of, Seq("fid"), "left_semi")
-              .select(col("fid"), lit("m").as("src")))
-        }
-      }
-      if (plans.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else plans.reduce(_.unionByName(_)).collect()
-    }
-    if (rows.isEmpty) return
-    val lateFiles = rows.filter(_.getString(1) == "f").map(_.getString(0)).toSet
-    val wildcarded = rows.exists(_.getString(1) == "w")
-    val memberHits = rows.filter(_.getString(1) == "m").map(_.getString(0)).toSet
+    val lateFiles = fidsIn(appended, deletedFids())
     if (lateFiles.nonEmpty)
       commitFilesLog(
         () => stored.filter(col("fid").isin(lateFiles.toSeq: _*)), LogUpsert,
         keys = Some(lateFiles.toSeq))
     member.foreach { case (ns, n, pre) =>
-      def pairs(of: DataFrame) = of.select(col("fid"))
-        .withColumn("dataset_namespace", lit(ns))
-        .withColumn("dataset_name", lit(n))
-      // fresh plan per commit attempt (reads only the caller-pinned batch)
+      // fresh plan per use (reads only the caller-pinned batch)
       def of0(): DataFrame = {
         val of = mkMemberFids().select("fid")
         if (pre.isEmpty) of else of.filter(!col("fid").isin(pre.toSeq: _*))
       }
+      def pairs(of: DataFrame) = of.select(col("fid"))
+        .withColumn("dataset_namespace", lit(ns))
+        .withColumn("dataset_name", lit(n))
       val dsKeys = Some(Seq(ns + "\u0001" + n))
-      if (wildcarded)
+      val fold = membersFold()
+      if (fold.wildcarded(ns, n))
         // a removeDataset raced the append: EVERY appended row is dead
         // below the wildcard — resurrect the whole set (rare; accepts
         // the one-time log amplification)
         membersLog.commit(() => pairs(of0()), MemberAdd, keys = dsKeys)
-      else if (memberHits.nonEmpty)
-        membersLog.commit(
-          () => pairs(of0().filter(col("fid").isin(memberHits.toSeq: _*))),
-          MemberAdd, keys = dsKeys)
+      else {
+        val hits = fidsIn(of0(), fold.shadowed(ns, n))
+        if (hits.nonEmpty)
+          membersLog.commit(
+            () => pairs(of0().filter(col("fid").isin(hits.toSeq: _*))),
+            MemberAdd, keys = dsKeys)
+      }
     }
   }
+
+  /** the fids of `of` that are in `set`: a probe job over `of` only when
+    * `set` is non-empty */
+  private def fidsIn(of: DataFrame, set: Set[String]): Set[String] =
+    if (set.isEmpty) Set.empty
+    else retryOnVanish(of.select("fid").filter(col("fid").isin(set.toSeq: _*))
+      .collect().map(_.getString(0)).toSet)
 
   /** Update a dataset's metadata / flags / description (`update_dataset`,
     * data_handler.py:287-330): metadata merges top-level keys
@@ -754,11 +651,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // disjoint metadata keys concurrently each see the other's keys
       // (the serializability the reference's row-level transaction gives)
       commitAdmin(LogUpsert) { () =>
-        val cur = dimStored("datasets").filter(hit)
-        if (cur.limit(1).collect().isEmpty)
+        val cur = dimRow("datasets", namespace, name).getOrElse(
           throw new IllegalArgumentException(
-            s"dataset $namespace:$name does not exist")
-        var u = cur
+            s"dataset $namespace:$name does not exist"))
+        import scala.jdk.CollectionConverters._
+        var u = spark.createDataFrame(Seq(cur).asJava, DatasetsSchema)
         metadataJson.foreach(mj =>
           u = u.withColumn("metadata_json", mergedMeta(mj)))
         frozen.foreach(f => u = u.withColumn("frozen", lit(f)))
@@ -780,7 +677,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       description.foreach(d => updated = updated.withColumn("description",
         when(hit, lit(d)).otherwise(col("description"))))
       rewrite(updated, "datasets", DatasetsSchema, partitionCols = Nil)
-      invalidateDatasets()
     }
   }
 
@@ -807,11 +703,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // closure the membership append path uses).
       import spark.implicits._
       datasetRow(namespace, name) // throws if missing, as the reference 404s
-      def edgeTombstones() = retryOnVanish(
-        dimStored("datasets_parent_child").filter(eHit)
-          .select("parent_namespace", "parent_name",
-            "child_namespace", "child_name").collect().toSeq)
+      def edgeTombstones() = dimRows("datasets_parent_child")
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+        .filter { case (pn, p, cn, c) =>
+          (pn == namespace && p == name) || (cn == namespace && c == name) }
       val probed = edgeTombstones()
       def adminLeg() = {
         val ds = asAdminRows("datasets",
@@ -831,8 +726,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           Some(Seq(namespace + "\u0001" + name)),
           () => Seq((Option.empty[String], namespace, name))
             .toDF("fid", "dataset_namespace", "dataset_name"))))
-      invalidateDatasets()
-      catCache = null
       // lost-add closure: a hierarchy edge added between the probe and
       // the transaction's admin seq would dangle on a dead dataset —
       // re-check and tombstone stragglers through a normal admin commit
@@ -845,7 +738,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       datasetRow(namespace, name) // throws if missing
       rewrite(readOr("datasets", DatasetsSchema).filter(!hit),
         "datasets", DatasetsSchema, partitionCols = Nil)
-      invalidateDatasets()
       val mHit = col("dataset_namespace") === namespace && col("dataset_name") === name
       rewrite(readOr("files_datasets", FilesDatasetsSchema).filter(!mHit),
         "files_datasets", FilesDatasetsSchema, partitionCols = Nil)
@@ -920,9 +812,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .withColumn("created_timestamp", current_timestamp())
       .withColumn("file_count", lit(0L))
     def requireAbsent(): Unit = {
-      val exists = dimStored("namespaces")
-        .filter(col("name") === name).limit(1).collect().nonEmpty
-      if (exists)
+      if (dimRow("namespaces", name).nonEmpty)
         throw new IllegalArgumentException(s"namespace $name already exists")
     }
     if (mergeOnRead) {
@@ -957,10 +847,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .withColumn("description", lit(s"dataset $name"))
       .withColumn("file_count", lit(null).cast("long"))
     def requireAbsent(): Unit = {
-      val dup = dimStored("datasets")
-        .filter(col("namespace") === namespace && col("name") === name)
-        .limit(1).collect().nonEmpty
-      if (dup)
+      if (dimRow("datasets", namespace, name).nonEmpty)
         throw new IllegalArgumentException(s"dataset $namespace:$name already exists")
     }
     if (mergeOnRead) {
@@ -972,7 +859,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       requireAbsent() // single-writer contract: check-then-append suffices
       align(row, DatasetsSchema)
         .write.mode(SaveMode.Append).parquet(path("datasets"))
-      invalidateDatasets()
     }
   }
 
@@ -1010,14 +896,26 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // through the log.
     // built per call so the append's pin can rebuild a fresh plan when
     // the existing-members read races a vacuum
-    appendMemberships(() => {
-      val existing = filesDatasets
-        .filter(col("dataset_namespace") === namespace &&
-          col("dataset_name") === name)
-        .select("fid")
-      fileSet.select(col("fid")).dropDuplicates("fid")
-        .join(existing, Seq("fid"), "left_anti") // membership is a set
+    appendMemberships(() => literalFids(fileSet) match {
+      case Some(fids) =>
+        // a literal fid set stays literal: its already-member subset is
+        // one pruned probe, and the add set needs no pin
+        import spark.implicits._
+        val existing = members(namespace, name, Some(fids))
+          .select("fid").collect().map(_.getString(0)).toSet
+        fids.filterNot(existing).toDF("fid")
+      case None =>
+        fileSet.select(col("fid")).dropDuplicates("fid") // membership is a set
+          .join(members(namespace, name).select("fid"), Seq("fid"), "left_anti")
     }, namespace, name)
+  }
+
+  /** the live (fid, dataset) rows of dataset `ns:n`, of the given fids
+    * when `fids` is set (an `InSet` filter pushed into the base scan) */
+  private def members(ns: String, n: String,
+      fids: Option[Seq[String]] = None): DataFrame = {
+    val inDs = col("dataset_namespace") === ns && col("dataset_name") === n
+    filesDatasets.filter(fids.fold(inDs)(fs => inDs && col("fid").isin(fs: _*)))
   }
 
   /** remove files from a dataset (data_handler.py remove endpoint:
@@ -1031,11 +929,13 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (mergeOnRead) {
       // remove records for the pairs that ARE currently members —
       // computed under the claimed seq, O(rows touched), no rewrite
-      def mkRows() = filesDatasets
-        .filter(col("dataset_namespace") === namespace &&
-          col("dataset_name") === name)
-        .join(fileSet.select("fid").dropDuplicates("fid"), Seq("fid"), "left_semi")
-      if (retryOnVanish(mkRows().limit(1).collect().nonEmpty))
+      val literal = literalFids(fileSet)
+      def mkRows() = literal match {
+        case Some(fids) => members(namespace, name, Some(fids))
+        case None => members(namespace, name)
+          .join(fileSet.select("fid").dropDuplicates("fid"), Seq("fid"), "left_semi")
+      }
+      if (!literal.exists(_.isEmpty) && retryOnVanish(hasRows(mkRows())))
         membersLog.commit(() => mkRows(), MemberRemove,
           keys = Some(Seq(namespace + "\u0001" + name)))
     } else {
@@ -1160,23 +1060,28 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       align(row, CategoriesSchema)
         .write.mode(SaveMode.Append).parquet(path("categories"))
     }
-    catCache = null
   }
 
-  /** the category table is dimension-sized config — collected once and
-    * cached per instance, like the reference handler's load_categories
-    * cache (data_handler.py:37-41); [[createCategory]] invalidates */
+  /** the parsed category table, rebuilt when its [[dimRows]] change (the
+    * reference handler's load_categories cache, data_handler.py:37-41,
+    * without its staleness across writers) */
+  @volatile private var catCache: (Seq[org.apache.spark.sql.Row], Seq[Validation.Category]) = null
+
   def loadCategories(): Seq[Validation.Category] = {
-    if (catCache == null)
-      catCache = retryOnVanish(dimStored("categories")
-        .select("path", "restricted", "definitions")
-        .collect())
-        .map { r =>
-          Validation.Category(r.getString(0), r.getBoolean(1),
-            Validation.parseRequirements(
-              Option(r.getString(2)).getOrElse("{}"), keyPrefix = r.getString(0) + "."))
-        }.toSeq
-    catCache
+    val rows = dimRows("categories")
+    val c = catCache
+    if (c != null && (c._1 eq rows)) c._2
+    else {
+      val fi = CategoriesSchema.fieldIndex _
+      val cats = rows.map { r =>
+        val path = r.getString(fi("path"))
+        Validation.Category(path, r.getBoolean(fi("restricted")),
+          Validation.parseRequirements(
+            Option(r.getString(fi("definitions"))).getOrElse("{}"), keyPrefix = path + "."))
+      }
+      catCache = (rows, cats)
+      cats
+    }
   }
 
   /** Recompute the denormalized file counts the reference daemon maintains
@@ -1204,7 +1109,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       commitAdmin(LogUpsert)(() => asAdminRows("datasets", dsUpdated()))
     } else {
       rewrite(dsUpdated(), "datasets", DatasetsSchema, partitionCols = Nil)
-      invalidateDatasets()
     }
     val nsCounts = storedFiles()
       .groupBy(col("namespace"))
@@ -1249,29 +1153,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
     // edges the CURRENT log shadows (a pair record, or a wildcard on
     // either endpoint — base appends carry implicit seq 0), pinned
-    // driver-side as \u0001-joined keys (a bare concat could alias across
-    // the boundary); bounded by the mutation-sized log
-    def shadowKeys(mkOf: () => DataFrame): Set[String] = {
-      if (!edgesLog.nonEmpty()) return Set.empty
-      // BOTH sides rebuilt per retry attempt — a pre-built frame's
-      // file listing goes stale when the read races a vacuum
-      retryOnVanish {
-        val of = mkOf()
-        val recs = edgesLog.records()
-        val pairKeys = recs
-          .filter(col("parent_fid").isNotNull && col("child_fid").isNotNull)
-          .select("parent_fid", "child_fid")
-        of.join(pairKeys, Seq("parent_fid", "child_fid"), "left_semi")
-          .unionByName(of.join(
-            recs.filter(col("child_fid").isNull).select("parent_fid"),
-            Seq("parent_fid"), "left_semi"))
-          .unionByName(of.join(
-            recs.filter(col("parent_fid").isNull).select("child_fid"),
-            Seq("child_fid"), "left_semi"))
-          .distinct().collect()
-          .map(r => r.getString(0) + "\u0001" + r.getString(1)).toSet
-      }
-    }
+    // driver-side as \u0001-joined keys from the edges log's driver fold;
+    // a probe job over the edges runs only when the log has records.
+    // Rebuilt per retry attempt — a pre-built frame's file listing goes
+    // stale when the read races a vacuum
+    def shadowKeys(mkOf: () => DataFrame): Set[String] =
+      retryOnVanish(edgesFold().governed(mkOf()))
     val key = concat_ws("\u0001", col("parent_fid"), col("child_fid"))
     // shadowed edges resurrect through the log; the rest base-append —
     // same split (and same LOST-ADD race closure) as [[appendMemberships]]:
@@ -1279,24 +1166,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // for anything a concurrently committed remove/wildcard now shadows,
     // so every interleave resolves to a valid serial order.
     val shadowed = shadowKeys(() => aligned())
-    def mkPinned() = (if (shadowed.isEmpty) aligned()
-      else aligned().filter(!key.isin(shadowed.toSeq: _*))).persist()
-    // pin the base-append set, rebuilding from a FRESH plan on a vacuum
-    // race -- the mkEdges thunk re-resolves whatever catalog state the
-    // caller's plan reads (mirrors the pin loop in [[appendMemberships]])
-    var pinned = mkPinned()
-    var pinAttempt = 0
-    var pinOk = false
-    while (!pinOk) {
-      try { pinned.count(); pinOk = true }
-      catch {
-        case e: Throwable if OccLog.fileVanished(e) && pinAttempt < 5 =>
-          pinAttempt += 1
-          pinned.unpersist()
-          Thread.sleep(10L * pinAttempt)
-          pinned = mkPinned()
-      }
-    }
+    // pin the base-append set; the mkEdges thunk re-resolves whatever
+    // catalog state the caller's plan reads on a vacuum race
+    val pinned = pinRows(() => if (shadowed.isEmpty) aligned()
+      else aligned().filter(!key.isin(shadowed.toSeq: _*)), eager = true)
     try {
       appendParquet(pinned, "parent_child")
       def endpoints(ks: Set[String]): Seq[String] =
@@ -1331,7 +1204,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // rejected — the check the reference gets from running the ancestor
     // walk inside its transaction (data_handler.py:333-363).
     def alreadyOrCycle(): Boolean = {
-      val edges = retryOnVanish(dimStored("datasets_parent_child").collect())
+      val edges = dimRows("datasets_parent_child")
         .map(r => ((r.getString(2), r.getString(3)), (r.getString(0), r.getString(1))))
       if (edges.contains(((cNs, cName), (pNs, pName)))) return true
       val up: Map[(String, String), Seq[(String, String)]] =
@@ -1516,7 +1389,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         } else {
           def mkRows() =
             add.join(parentChild, Seq("parent_fid", "child_fid"), "left_anti")
-          if (retryOnVanish(mkRows().limit(1).collect().nonEmpty))
+          if (retryOnVanish(hasRows(mkRows())))
             edgesLog.commit(() => mkRows(), EdgeAdd,
               keys = Some(fid +: given.distinct))
         }
@@ -1547,15 +1420,16 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** the files delta log under multi-writer OCC (claim markers + publish
     * renames + checkpoint/vacuum) — protocol in [[OccLog]]; checkpoints
     * fold to latest-per-fid */
-  private val filesLog = new OccLog(spark, root, "files_log", logSchema,
-    OccLog.latestPerKey(Seq("fid")), legacyFlat = true)
+  private[metacat] val filesLog = new OccLog(spark, root, "files_log", logSchema,
+    OccLog.latestPerKey(Seq("fid")), legacyFlat = true,
+    foldSpec = Some(LogFolds.FilesSpec))
 
   /** the MEMBERSHIP delta log (MOR mode): `add`/`remove` records per
     * (fid, dataset) pair, plus `remove_all` wildcard tombstones per
     * dataset. Same OCC protocol as [[filesLog]]; checkpoints fold to
     * latest-per-pair plus the latest wildcard per dataset (wildcards
     * cannot collapse into pair records — they also govern BASE rows). */
-  private val membersLog = new OccLog(spark, root, "members_log",
+  private[metacat] val membersLog = new OccLog(spark, root, "members_log",
     MembersLogSchema, df =>
       OccLog.latestPerKey(Seq("fid", "dataset_namespace", "dataset_name"))(
           df.filter(col("__op") =!= MemberRemoveAll &&
@@ -1563,7 +1437,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         .unionByName(OccLog.latestPerKey(Seq("dataset_namespace", "dataset_name"))(
           df.filter(col("__op") === MemberRemoveAll)))
         .unionByName(OccLog.latestPerKey(Seq("fid"))(
-          df.filter(col("__op") === MemberRemoveFid))))
+          df.filter(col("__op") === MemberRemoveFid))),
+    foldSpec = Some(LogFolds.MembersSpec))
 
   /** the PROVENANCE-EDGE delta log (MOR mode): add/remove records per
     * (parent, child) pair, plus one-side-null wildcard removes (a hard
@@ -1572,7 +1447,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * Checkpoints fold to latest-per-pair plus the latest wildcard per
     * side — wildcards also govern base rows, so they never collapse
     * into pair records. */
-  private val edgesLog = new OccLog(spark, root, "edges_log",
+  private[metacat] val edgesLog = new OccLog(spark, root, "edges_log",
     EdgesLogSchema, df => {
       val pairs = df.filter(col("parent_fid").isNotNull && col("child_fid").isNotNull)
       OccLog.latestPerKey(Seq("parent_fid", "child_fid"))(pairs)
@@ -1580,7 +1455,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           df.filter(col("child_fid").isNull)))
         .unionByName(OccLog.latestPerKey(Seq("child_fid"))(
           df.filter(col("parent_fid").isNull)))
-    })
+    }, foldSpec = Some(LogFolds.EdgesSpec))
 
   /** the ADMIN delta log (MOR mode): ONE shared OCC log for every
     * dimension-table mutation — datasets, namespaces, named queries, the
@@ -1593,8 +1468,35 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * closure against the published predecessors, so racing creates of
     * one name resolve to one winner and one loud rejection (the PK
     * posture of `schema.sql`). */
-  private val adminLog = new OccLog(spark, root, "admin_log", AdminLogSchema,
-    OccLog.latestPerKey(Seq("table", "key")))
+  private[metacat] val adminLog = new OccLog(spark, root, "admin_log", AdminLogSchema,
+    OccLog.latestPerKey(Seq("table", "key")), foldSpec = Some(LogFolds.AdminSpec))
+
+  /** Driver state derived from one log's [[OccLog.folded]], rebuilt only
+    * when the fold's version changes. Every call still refreshes the fold
+    * (a listing, plus one read job if segments were published since). */
+  private final class FoldMemo[T](log: OccLog, build: OccLog.Folded => T) {
+    private var cur: (Long, T) = null
+    def apply(): T = synchronized {
+      val f = log.folded()
+      if (cur == null || cur._1 != f.version) cur = (f.version, build(f))
+      cur._2
+    }
+  }
+
+  private val filesFold = new FoldMemo(filesLog, new LogFolds.FilesFold(_))
+  private val membersFold = new FoldMemo(membersLog, new LogFolds.MembersFold(_))
+  private val edgesFold = new FoldMemo(edgesLog, new LogFolds.EdgesFold(_))
+  private val adminFold = new FoldMemo(adminLog, new LogFolds.AdminFold(_))
+
+  /** time travel: `log`'s records up to `seq`, folded on the driver.
+    * Below the checkpoint (but above any vacuum horizon) the raw segments
+    * are authoritative — the checkpoint's latest-wins collapse would leak
+    * mutations in (seq, ckpt] into the snapshot. */
+  private def asOf(log: OccLog, spec: OccLog.FoldSpec, seq: Long): OccLog.Folded =
+    retryOnVanish {
+      val source = if (log.vacuumHorizon() > 0L) log.records() else log.readRaw()
+      OccLog.foldOf(spec, source.filter(col("__seq") <= seq))
+    }
 
   /** cross-log atomic transactions over the four delta logs (the
     * reference's per-handler Postgres transaction, re-expressed as
@@ -1627,21 +1529,48 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def dimKeyCol(table: String) =
     concat_ws("\u0001", DimKeys(table).map(col): _*)
 
-  /** merged dimension view: base ⊕ admin-log overlay. Latest record per
-    * key wins (upsert replaces, delete kills); everything here is
-    * broadcast-sized, so the overlay is one tiny window + anti-join. */
+  /** merged dimension view: base ⊕ admin-log overlay (latest record per
+    * key wins; upsert replaces, delete kills) — the base scan filtered by
+    * `InSet` on the logged keys plus a `LocalRelation` of the live
+    * upserts, from the admin log's driver fold ([[LogFolds.AdminFold]]). */
   private def dimStored(table: String): DataFrame = {
-    val schema = dimSchema(table)
-    val base = readOr(table, schema)
-    if (!mergeOnRead || !adminLog.nonEmpty()) return base
-    val latest = OccLog.latestPerKey(Seq("key"))(
-      adminLog.records().filter(col("table") === table))
-    val baseLive = base.withColumn("__k", dimKeyCol(table))
-      .join(broadcast(latest.select(col("key").as("__k"))), Seq("__k"), "left_anti")
-      .drop("__k")
-    val live = latest.filter(col("__op") === LogUpsert)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    baseLive.unionByName(live)
+    val base = readOr(table, dimSchema(table))
+    if (!mergeOnRead) base else adminFold().overlay(spark, table, base)
+  }
+
+  /** Collected base rows of each dimension table, keyed by the names of
+    * its data files: every writer of a base table (append, rewrite,
+    * compaction) lands new uniquely named part files, so an unchanged
+    * listing proves unchanged rows. */
+  private val dimBase =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], Seq[org.apache.spark.sql.Row])]()
+
+  /** the row of `table` whose primary key is `key`, on the driver */
+  private def dimRow(table: String, key: String*): Option[org.apache.spark.sql.Row] = {
+    val keyIdx = DimKeys(table).map(dimSchema(table).fieldIndex)
+    dimRows(table).find(r => keyIdx.map(r.getString) == key)
+  }
+
+  /** [[dimStored]] on the driver: the base rows (collected once per base
+    * file set) overlaid with the admin fold. Dimension tables are
+    * config-sized; this serves every existence, duplicate and cycle check
+    * without a Spark job while neither the base nor the log changed. */
+  private def dimRows(table: String): Seq[org.apache.spark.sql.Row] = {
+    val p = hPath(table)
+    val fs = fsOf(p)
+    val files =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
+    val cached = dimBase.get(table)
+    val base =
+      if (cached != null && cached._1 == files) cached._2
+      else {
+        val rows = retryOnVanish(readOr(table, dimSchema(table)).collect().toSeq)
+        dimBase.put(table, (files, rows))
+        rows
+      }
+    if (!mergeOnRead) base else adminFold().overlayRows(table, base)
   }
 
   /** widen a dimension-table-shaped frame to the admin log's union row
@@ -1666,11 +1595,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * existence/duplicate/cycle checks within it are SERIALIZED against
     * concurrent admin writers (a check that throws publishes the seq as
     * an empty no-op and propagates). */
-  private def commitAdmin(op: String)(mkRows: () => DataFrame): Unit = {
+  private def commitAdmin(op: String)(mkRows: () => DataFrame): Unit =
     adminLog.commit(mkRows, op)
-    invalidateDatasets()
-    catCache = null
-  }
 
   /** Output-partition count for MUTATION-SIZED append writes — same knob
     * and rationale as [[OccLog]]'s commit sizing
@@ -1690,6 +1616,57 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * one [[OccLog.commit]] applies to its own snapshot writes). Wraps the
     * catalog's internal collect/probe sites; external callers' lazy
     * DataFrames keep the documented read-vs-vacuum caveat. */
+  /** Pin `mk()`'s rows for repeated use. A driver-resident literal (its
+    * optimized plan is a LocalRelation) is pinned already and costs no
+    * job. Anything else is persisted, and with `eager` materialized now:
+    * rebuilt from a FRESH plan when that read races a vacuum, because a
+    * frame's file listing is captured at plan time and re-counting the
+    * same frame replays the stale listing (observed: an ingest stream
+    * dying behind an admin loop's vacuum cadence despite 5 "retries").
+    * Callers unpersist the result when done. */
+  private def pinRows(mk: () => DataFrame, eager: Boolean): DataFrame = {
+    var attempt = 0
+    while (true) {
+      var df: DataFrame = null
+      try {
+        df = mk()
+        if (isLiteral(df)) return df
+        df.persist()
+        if (!eager) return df
+        df.count()
+        return df
+      } catch {
+        case e: Throwable if OccLog.fileVanished(e) && attempt < 5 =>
+          attempt += 1
+          if (df != null) df.unpersist()
+          Thread.sleep(10L * attempt)
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** true when `df` is a deterministic driver-resident literal: actions
+    * on it run no Spark job and every plan derived from it sees the same
+    * rows */
+  private def isLiteral(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.deterministic &&
+      df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** the distinct fids of `df` when it is a literal ([[isLiteral]]) —
+    * collected without a job, so a caller can turn a join against it
+    * into an `InSet` filter; None for any frame that would scan */
+  private def literalFids(df: DataFrame): Option[Seq[String]] = {
+    val q = df.select("fid")
+    if (isLiteral(q)) Some(q.collect().map(_.getString(0)).distinct.toSeq) else None
+  }
+
+  /** one job: does `df` have any row? (`limit(1)` may launch a job per
+    * widening round of partitions; this asks every partition once) */
+  private def hasRows(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.hasNext))
+      .collect().contains(true)
+
   private def retryOnVanish[T](f: => T): T = {
     var attempt = 0
     while (true) {
@@ -1740,13 +1717,19 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     ()
   }
 
-  /** Declare-path membership append: the common case base-appends (cheap,
-    * append-only, no claim contention between concurrent declares into
-    * different datasets); pairs a logged remove — or a dataset-wide
+  /** Test seam: fires between the membership shadow check and the base
+    * append — the exact window where a concurrently committed
+    * removeFrom/removeDataset used to kill the fresh seq-0 rows silently
+    * (the lost-add race `MembersLogSpec` pins with it). */
+  private[metacat] var onBeforeMembersAppend: () => Unit = () => ()
+
+  /** Append (fid, dataset) membership rows. The common case base-appends
+    * (cheap, append-only, no claim contention between concurrent adds
+    * into different datasets); pairs a logged remove — or a dataset-wide
     * wildcard — would shadow (base rows carry implicit seq 0) resurrect
     * through the log instead, the same split [[declareFiles]] applies to
-    * tombstoned file rows. The shadowed set is pinned driver-side; it is
-    * bounded by the log's remove records for this dataset.
+    * tombstoned file rows. The shadowed set comes from the members log's
+    * driver fold; it is bounded by the log's remove records.
     *
     * The check-then-append split alone has a LOST-ADD race: a
     * removeFrom/removeDataset committing between the shadow check and the
@@ -1761,21 +1744,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * appended rows (killing them = remove-after-add) or produced no
     * record for them (add survives = add-after-remove) — every
     * interleave resolves to a valid serial order. */
-  /** Test seam: fires between the membership shadow check and the base
-    * append — the exact window where a concurrently committed
-    * removeFrom/removeDataset used to kill the fresh seq-0 rows silently
-    * (the lost-add race `MembersLogSpec` pins with it). */
-  private[metacat] var onBeforeMembersAppend: () => Unit = () => ()
-
-  /** Append (fid, dataset) membership rows. Returns the revalidation the
-    * caller must still run when `deferRevalidate` is set: Some(preShadowed
-    * fid set) means a base append happened whose lost-add re-check was
-    * DEFERRED (so the caller can fuse it with its own post-append probes,
-    * as [[declareFiles]] does via [[declareRevalidate]]); None means
-    * nothing is deferred (non-MOR, or the whole set already routed
-    * through the log behind a wildcard and out-sequences any racer). */
   private def appendMemberships(mkFids: () => DataFrame, ns: String,
-      n: String, deferRevalidate: Boolean = false): Option[Set[String]] = {
+      n: String): Unit = {
     def pairs(of: DataFrame) = of.select(col("fid"))
       .withColumn("dataset_namespace", lit(ns))
       .withColumn("dataset_name", lit(n))
@@ -1783,109 +1753,64 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       onBeforeMembersAppend()
       appendParquet(align(pairs(of), FilesDatasetsSchema), "files_datasets")
     }
-    if (!mergeOnRead) { baseAppend(mkFids()); return None }
+    if (!mergeOnRead) { baseAppend(mkFids()); return }
 
-    // pin the add set ONCE, rebuilding from a fresh plan on a vacuum
-    // race (mkFids() may read catalog state — the members log via
-    // addTo's existing-members anti-join — and a pre-built frame's file
-    // listing goes stale); every later use, including the log-commit
-    // closures below, then reads the cache instead of the store
-    var fids = mkFids().select("fid").persist()
-    // eager materialization (with per-attempt fresh plans) only when the
-    // frame can actually read the members log — an empty log means no
-    // vacuum race, and the base append itself fills the cache
-    if (membersLog.nonEmpty()) {
-      var pinAttempt = 0
-      var pinOk = false
-      while (!pinOk) {
-        try { fids.count(); pinOk = true }
-        catch {
-          case e: Throwable if OccLog.fileVanished(e) && pinAttempt < 5 =>
-            pinAttempt += 1
-            fids.unpersist()
-            Thread.sleep(10L * pinAttempt)
-            fids = mkFids().select("fid").persist()
-        }
-      }
-    }
-    try appendMembershipsPinned(fids, ns, n, pairs, baseAppend, deferRevalidate)
-    finally { fids.unpersist(); () }
-  }
-
-  /** ONE membership-log probe returning BOTH shadow signals for an add
-    * set — the dataset wildcard flag and the remove-shadowed fid subset
-    * — so each caller pays one job, not two. Fresh records() plan per
-    * retry attempt (a pre-built frame's file listing goes stale when the
-    * read races a vacuum and would fail identically on every retry).
-    * Fid-wide wildcards (removeFiles) shadow base appends of those fids
-    * in EVERY dataset — they carry null dataset columns, so they are
-    * probed outside the dataset filter. Shared by the membership append
-    * and the r13 declare transaction's member-leg decision. */
-  private def memberShadowState(of: DataFrame, ns: String,
-      n: String): (Boolean, Set[String]) = retryOnVanish {
-    val dsHit = col("dataset_namespace") === ns && col("dataset_name") === n
-    val all = membersLog.records()
-    val recs = all.filter(dsHit)
-    val rows = recs.filter(col("__op") === MemberRemoveAll)
-      .select(lit(null).cast("string").as("fid"))
-      .unionByName(recs.filter(col("__op") === MemberRemove)
-        .select("fid").join(of.select("fid"), Seq("fid"), "left_semi"))
-      .unionByName(all.filter(col("__op") === MemberRemoveFid)
-        .select("fid").join(of.select("fid"), Seq("fid"), "left_semi"))
-      .collect()
-    (rows.exists(_.isNullAt(0)),
-      rows.filter(!_.isNullAt(0)).map(_.getString(0)).toSet)
-  }
-
-  private def appendMembershipsPinned(fids: DataFrame, ns: String, n: String,
-      pairs: DataFrame => DataFrame, baseAppend: DataFrame => Unit,
-      deferRevalidate: Boolean): Option[Set[String]] = {
-
+    // pin the add set ONCE (mkFids() may read catalog state — the
+    // members log via addTo's existing-members anti-join); every later
+    // use, including the log-commit closures below, then reads the pin
+    // instead of the store. Eager only when the frame can actually read
+    // the members log — an empty log means no vacuum race, and the base
+    // append itself fills the cache
+    val fids = pinRows(() => mkFids().select("fid"), eager = membersLog.nonEmpty())
     val dsKeys = Some(Seq(ns + "\u0001" + n))
-    def shadowState(of: DataFrame): (Boolean, Set[String]) =
-      memberShadowState(of, ns, n)
-
-    // re-check the appended set against the CURRENT log; commit repair
-    // add records (serialized after the racing remove) for any row the
-    // log now shadows. `appended` must be a STABLE frame — callers pin it.
-    def revalidate(appended: DataFrame): Unit = {
-      if (!membersLog.nonEmpty()) return
-      val (wildcarded, hit) = shadowState(appended)
-      if (wildcarded) {
-        // a removeDataset raced the append: EVERY appended row is dead
-        // below the wildcard — resurrect the whole set (rare; accepts the
-        // one-time log amplification a corpus-sized repair implies)
-        membersLog.commit(() => pairs(appended), MemberAdd, keys = dsKeys)
-      } else if (hit.nonEmpty) {
+    // commit repair add records (serialized after the racing remove)
+    // for the rows of `of` the CURRENT log shadows; `of` must be a
+    // STABLE frame — it derives from the pin
+    def resurrect(of: DataFrame): Unit = memberShadowState(of, ns, n) match {
+      case (true, _) =>
+        // behind a dataset wildcard EVERY row of `of` is dead — the whole
+        // set routes through the log (rare; accepts the one-time log
+        // amplification a corpus-sized repair implies)
+        membersLog.commit(() => pairs(of), MemberAdd, keys = dsKeys)
+      case (false, hit) if hit.nonEmpty =>
         membersLog.commit(
-          () => pairs(appended.filter(col("fid").isin(hit.toSeq: _*))),
+          () => pairs(of.filter(col("fid").isin(hit.toSeq: _*))),
           MemberAdd, keys = dsKeys)
+      case _ => ()
+    }
+    try {
+      val (wildcarded, shadowed) = memberShadowState(fids, ns, n)
+      if (wildcarded) {
+        // out-sequences any racer — nothing left to revalidate
+        membersLog.commit(() => pairs(fids), MemberAdd, keys = dsKeys)
+        return
       }
-    }
+      val appended =
+        if (shadowed.isEmpty) fids
+        else fids.filter(!col("fid").isin(shadowed.toSeq: _*))
+      // an empty literal add set has nothing to append or revalidate
+      val append = !(isLiteral(appended) && appended.isEmpty)
+      if (append) baseAppend(appended)
+      if (shadowed.nonEmpty)
+        membersLog.commit(
+          () => pairs(fids.filter(col("fid").isin(shadowed.toSeq: _*))),
+          MemberAdd, keys = dsKeys)
+      if (append) resurrect(appended) // the lost-add re-check
+    } finally { fids.unpersist(); () }
+  }
 
-    if (!membersLog.nonEmpty()) {
-      baseAppend(fids)
-      if (deferRevalidate) return Some(Set.empty)
-      revalidate(fids) // the log may have gained its first records
-      return None
-    }
-    val (wildcarded, shadowed) = shadowState(fids)
-    if (wildcarded) {
-      // the whole set routes through the log and out-sequences any racer
-      // — nothing left to revalidate, deferred or not
-      membersLog.commit(() => pairs(fids), MemberAdd, keys = dsKeys)
-      return None
-    }
-    val appended =
-      if (shadowed.isEmpty) fids
-      else fids.filter(!col("fid").isin(shadowed.toSeq: _*))
-    baseAppend(appended)
-    if (shadowed.nonEmpty)
-      membersLog.commit(
-        () => pairs(fids.filter(col("fid").isin(shadowed.toSeq: _*))),
-        MemberAdd, keys = dsKeys)
-    if (deferRevalidate) Some(shadowed)
-    else { revalidate(appended); None }
+  /** BOTH shadow signals for an add set of (fid, ns:n) pairs, from the
+    * members log's driver fold — the dataset wildcard flag and the subset
+    * a base append would leave dead (a latest remove, or a fid-wide
+    * wildcard from removeFiles, which shadows base appends of those fids
+    * in EVERY dataset). A probe job over `of` runs only when the fold
+    * holds such records. Shared by the membership append and the r13
+    * declare transaction's member-leg decision. */
+  private def memberShadowState(of: DataFrame, ns: String,
+      n: String): (Boolean, Set[String]) = {
+    val fold = membersFold()
+    if (fold.wildcarded(ns, n)) (true, Set.empty)
+    else (false, fidsIn(of, fold.shadowed(ns, n)))
   }
 
   private def logNonEmpty(): Boolean = filesLog.nonEmpty()
@@ -1894,36 +1819,30 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   private def logRecords(): DataFrame = filesLog.records()
 
-  /** latest log record per fid (`__op` upsert|delete, highest `__seq`
-    * wins). The log holds mutations-since-compaction only, so the window
-    * runs over a small frame and the fid key set broadcasts. */
-  private def logLatest(): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    logRecords()
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("fid").orderBy(col("__seq").desc)))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** fids whose LATEST log record is a tombstone */
-  private def deletedFids(): DataFrame =
-    if (logNonEmpty()) logLatest().filter(col("__op") === LogDelete).select("fid")
-    else spark.range(0).select(lit("").as("fid"))
+  /** fids whose LATEST log record is a tombstone (driver fold) */
+  private def deletedFids(): Set[String] =
+    if (mergeOnRead) filesFold().dead else Set.empty
 
   /** Raw live files frame (no retired coalesce). COW: the base table.
-    * MOR: base overlaid with latest-log-wins — a broadcast anti-join on
-    * the log's fid set plus a union of live log rows, so the read cost is
-    * the base scan + a mutation-sized overlay, never a second shuffle. */
+    * MOR: base overlaid with latest-log-wins.
+    *
+    * Scale shape: the files log's driver fold ([[OccLog.folded]], see
+    * [[LogFolds.FilesFold]]) keeps only `(fid, __op, __seq)` per logged
+    * fid — the key set the Spark-side overlay used to broadcast — cached
+    * per catalog instance, keyed by the checkpoint and the data-file
+    * names of every folded segment, and advanced by reading only
+    * unfolded segments. The read is the base scan filtered by `InSet` on
+    * the logged fids, unioned with the live upserts' payloads: an
+    * executor-side scan of exactly the files holding their seqs, filtered
+    * to the `(fid, __seq)` pairs the driver picked. No window, join or
+    * shuffle; payload rows never pass through the driver. */
   private def storedFiles(): DataFrame = {
     requireV2Layout()
     val base = readOr("files", storedSchema)
-    if (!mergeOnRead || !logNonEmpty()) return base
-    val latest = logLatest()
-    val live = latest.filter(col("__op") === LogUpsert)
-      .select(storedSchema.fieldNames.map(col).toIndexedSeq: _*)
-    base.join(broadcast(latest.select("fid")), Seq("fid"), "left_anti")
-      .unionByName(live)
+    // the payload scan resolves its pinned files now: a vacuum that
+    // deleted them since the fold was taken is absorbed by re-folding
+    if (!mergeOnRead) base
+    else retryOnVanish(filesFold().overlay(base, storedSchema))
   }
 
   // ---- multi-writer optimistic concurrency for the delta log ----
@@ -2011,23 +1930,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         "VERSION AS OF in a Delta table)")
     val overlaid =
       if (!logNonEmpty() || seq <= 0L) base
-      else {
-        import org.apache.spark.sql.expressions.Window
-        // below the checkpoint (but above any vacuum horizon) the raw
-        // segments are authoritative — the checkpoint's latest-per-fid
-        // collapse would leak mutations in (seq, ckpt] into the snapshot
-        val source = if (horizon > 0L) logRecords() else readLog()
-        val latest = source
-          .filter(col("__seq") <= seq)
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy("fid").orderBy(col("__seq").desc)))
-          .filter(col("__rn") === 1)
-          .drop("__rn")
-        val live = latest.filter(col("__op") === LogUpsert)
-          .select(storedSchema.fieldNames.map(col).toIndexedSeq: _*)
-        base.join(broadcast(latest.select("fid")), Seq("fid"), "left_anti")
-          .unionByName(live)
-      }
+      else new LogFolds.FilesFold(asOf(filesLog, LogFolds.FilesSpec, seq))
+        .overlay(base, storedSchema)
     overlaid.withColumn("retired", coalesce(col("retired"), lit(false)))
   }
 
@@ -2129,8 +2033,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       for (t <- DimKeys.keys.toSeq.sorted)
         rewrite(dimStored(t), t, dimSchema(t), partitionCols = Nil)
       adminLog.truncate()
-      invalidateDatasets()
-      catCache = null
     }
     // a FORCED compaction invalidated every pin (sequences restart at 1):
     // remove them rather than leaving handles that would silently point
@@ -2419,17 +2321,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         s"as-of admin seq $seq predates the vacuum horizon $horizon")
     val merged =
       if (!adminLog.nonEmpty() || seq <= 0L) base
-      else {
-        val source =
-          if (horizon > 0L) adminLog.records() else adminLog.readRaw()
-        val latest = OccLog.latestPerKey(Seq("key"))(
-          source.filter(col("table") === "datasets" && col("__seq") <= seq))
-        base.withColumn("__k", dimKeyCol("datasets"))
-          .join(broadcast(latest.select(col("key").as("__k"))), Seq("__k"), "left_anti")
-          .drop("__k")
-          .unionByName(latest.filter(col("__op") === LogUpsert)
-            .select(DatasetsSchema.fieldNames.map(col).toIndexedSeq: _*))
-      }
+      else new LogFolds.AdminFold(asOf(adminLog, LogFolds.AdminSpec, seq))
+        .overlay(spark, "datasets", base)
     merged.withColumn("metadata", parse_json(col("metadata_json")))
       .drop("metadata_json")
   }
@@ -2645,27 +2538,27 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private case class DsRow(frozen: Boolean, monotonic: Boolean,
       requirements: Seq[Validation.Constraint])
 
-  // Dimension caches: the datasets/categories tables are broadcast-sized
-  // config read once per admin mutation; collecting them per lookup costs
-  // a driver round-trip each (a mutation scenario issues dozens). Cached
-  // per catalog instance — the reference handler's load_categories cache
-  // posture (data_handler.py:37-41) — and invalidated by every writer of
-  // the underlying table in THIS instance. A concurrent external writer
-  // is out of scope for an admin session, exactly as in the reference.
-  @volatile private var dsCache: Map[(String, String), DsRow] = null
-  @volatile private var catCache: Seq[Validation.Category] = null
-  private def invalidateDatasets(): Unit = dsCache = null
+  /** the parsed datasets dimension, rebuilt when [[dimRows]] changes —
+    * so a dataset another instance froze, created or removed is seen by
+    * this one's next check (keyed by the rows themselves: the admin fold
+    * and the base listing both feed them) */
+  @volatile private var dsCache: (Seq[org.apache.spark.sql.Row], Map[(String, String), DsRow]) = null
 
   private def datasetRow(namespace: String, name: String): DsRow = {
-    if (dsCache == null)
-      dsCache = retryOnVanish(dimStored("datasets")
-        .select("namespace", "name", "frozen", "monotonic", "file_metadata_requirements")
-        .collect())
-        .map(r => (r.getString(0), r.getString(1)) -> DsRow(
-          r.getBoolean(2), r.getBoolean(3),
-          Option(r.getString(4)).map(Validation.parseRequirements(_)).getOrElse(Nil)))
-        .toMap
-    dsCache.getOrElse((namespace, name),
+    val rows = dimRows("datasets")
+    val c = dsCache
+    val byName =
+      if (c != null && (c._1 eq rows)) c._2
+      else {
+        val fi = DatasetsSchema.fieldIndex _
+        val m = rows.map(r => (r.getString(fi("namespace")), r.getString(fi("name"))) -> DsRow(
+          r.getBoolean(fi("frozen")), r.getBoolean(fi("monotonic")),
+          Option(r.getString(fi("file_metadata_requirements")))
+            .map(Validation.parseRequirements(_)).getOrElse(Nil))).toMap
+        dsCache = (rows, m)
+        m
+      }
+    byName.getOrElse((namespace, name),
       throw new IllegalArgumentException(s"dataset $namespace:$name does not exist"))
   }
 

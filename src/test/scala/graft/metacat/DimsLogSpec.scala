@@ -291,4 +291,36 @@ class DimsLogSpec extends SparkTestBase {
     assert(audit("mor_admin_seq_gap") == 0L &&
       audit("mor_admin_orphaned_claim") == 0L, s"got $audit")
   }
+
+  test("dataset flags and categories another instance changed bind on this instance's next check") {
+    import spark.implicits._
+    val root = newRoot()
+    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    a.createDataset("dims", "shared")
+    val rows = Seq(("S1", "dims", "s1.dat", """{"core.run":1}""", "t", 10L))
+      .toDF("fid", "namespace", "name", "metadata_json", "creator", "size")
+      .withColumn("created_timestamp", to_timestamp(lit("2026-01-01 00:00:00")))
+    a.declareFiles(rows)
+    // instance a has read the dataset and the (empty) category table
+    a.addTo(Seq("S1").toDF("fid"), "dims", "shared")
+    a.removeFrom(Seq("S1").toDF("fid"), "dims", "shared")
+    // instance b freezes the dataset and restricts a category
+    b.updateDataset("dims", "shared", frozen = Some(true))
+    b.createCategory("core", restricted = true,
+      definitionsJson = """{"run": {"type": "int"}}""")
+    val frozen = intercept[IllegalArgumentException](
+      a.addTo(Seq("S1").toDF("fid"), "dims", "shared"))
+    assert(frozen.getMessage.contains("frozen"), frozen.getMessage)
+    assert(a.filesDatasets.filter(col("dataset_name") === "shared").count() == 0L)
+    val restricted = intercept[IllegalArgumentException](
+      a.updateFileMeta(Seq("S1"), """{"core.other":1}"""))
+    assert(restricted.getMessage.contains("restricted category core"),
+      restricted.getMessage)
+    // and a dataset b removed no longer exists for a
+    b.updateDataset("dims", "shared", frozen = Some(false))
+    b.removeDataset("dims", "shared")
+    intercept[IllegalArgumentException](
+      a.addTo(Seq("S1").toDF("fid"), "dims", "shared"))
+  }
 }

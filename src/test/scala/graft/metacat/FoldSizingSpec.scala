@@ -74,4 +74,17 @@ class FoldSizingSpec extends SparkTestBase with OccFailureCapture {
     // the fold's content is unchanged by its layout
     assert(log.records().count() == 6000L)
   }
+
+  test("foldParts clamps estimates beyond Long.MaxValue instead of wrapping") {
+    val target = 128L * 1024 * 1024
+    // Spark reports unknown plan sizes as huge BigInts: converting the
+    // quotient to Long before clamping wrapped it negative, which fell
+    // back to a single-part write of the largest folds
+    assert(OccLog.foldParts(BigInt(Long.MaxValue) * 4, target) == OccLog.MaxFoldParts)
+    assert(OccLog.foldParts(BigInt(Long.MaxValue) * BigInt(target), target) ==
+      OccLog.MaxFoldParts)
+    assert(OccLog.foldParts(BigInt(0), target) == 1)
+    assert(OccLog.foldParts(BigInt(3) * target, target) == 4)
+    assert(OccLog.foldParts(BigInt(10), 0L) == 11)
+  }
 }

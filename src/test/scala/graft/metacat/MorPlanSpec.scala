@@ -5,18 +5,20 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** PHYSICAL-PLAN assertions for the merge-on-read overlays — the shapes
-  * that must hold at a 100 TB catalog:
+  * that must hold at a 100 TB catalog. Every overlay is the base scan
+  * filtered by `InSet` on the log-governed keys plus the log's live rows
+  * (a `LocalTableScan` for the small logs, a pinned file scan for the
+  * files log's payloads), built from the logs' driver folds:
   *
-  *  - the base (corpus-sized) side of every fold joins the log-derived
-  *    key sets via BROADCAST joins, never a sort-merge join that would
-  *    shuffle the whole base table per read
-  *  - the latest-wins windows run over the MUTATION-sized log frames
-  *    only — no Window over the base scan
+  *  - no Window: latest-wins is resolved on the driver, never per read
+  *  - no Exchange of any kind (shuffle or broadcast): the base is never
+  *    shuffled, and no log-derived key set is broadcast per read
+  *  - no SortMergeJoin (nor any join): the base side is a filtered scan
   *
-  * A regression here (e.g. a fold rewritten so Catalyst picks SMJ)
-  * would still pass every correctness gate at sf0.01 while costing a
-  * corpus-wide shuffle per read at scale — exactly the class of defect
-  * only a plan assertion catches. */
+  * A regression here (e.g. an overlay rewritten as a join Catalyst plans
+  * as SMJ) would still pass every correctness gate at sf0.01 while
+  * costing a corpus-wide shuffle per read at scale — exactly the class
+  * of defect only a plan assertion catches. */
 class MorPlanSpec extends SparkTestBase {
 
   private def seeded(): ParquetCatalog = {
@@ -29,8 +31,8 @@ class MorPlanSpec extends SparkTestBase {
       .withColumn("created_timestamp", to_timestamp(lit("2026-02-01 00:00:00")))
     cat.createDataset("mp", "d")
     cat.declareFiles(rows, dataset = Some(("mp", "d")))
-    // populate every log: file mutations, membership removes + wildcard
-    // (recreate), provenance edges + removes, one admin update
+    // populate every log: file mutations, membership removes + a fid
+    // wildcard, provenance edges + removes, one admin update
     cat.retireFiles(Seq("Q0001"))
     cat.updateFileMeta(Seq("Q0002"), """{"opt.x":1}""")
     cat.removeFrom(rows.filter(col("fid") === "Q0003").select("fid"), "mp", "d")
@@ -38,36 +40,41 @@ class MorPlanSpec extends SparkTestBase {
       .toDF("parent_fid", "child_fid"))
     cat.removeFiles(Seq("Q0004"))
     cat.updateDataset("mp", "d", metadataJson = Some("""{"ds.v":1}"""))
+    // live rows in the small logs too: a remove-shadowed re-add resolves
+    // through the members log, a parent replace through the edges log
+    cat.addTo(Seq("Q0003").toDF("fid"), "mp", "d")
+    cat.updateFile("Q0005", parents = Some(Seq("Q0006")), mode = "replace")
     cat
   }
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("files overlay: broadcast anti-join on the log fid set, no sort-merge join") {
+  /** the overlay shape every MOR view must have */
+  private def assertOverlay(what: String, p: String, logSide: String): Unit = {
+    for (bad <- Seq("Window", "Exchange", "SortMergeJoin", "Join"))
+      assert(!p.contains(bad), s"$what overlay plans a $bad:\n$p")
+    assert(p.contains(logSide), s"$what overlay lost its $logSide log side:\n$p")
+    assert(p.contains("Filter") && p.contains("Union"),
+      s"expected a filtered base scan unioned with the log rows:\n$p")
+  }
+
+  test("files overlay: InSet-filtered base scan plus the pinned payload scan") {
     val p = plan(seeded().files)
-    assert(!p.contains("SortMergeJoin"),
-      s"files overlay fell back to a corpus-shuffling SMJ:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast overlay:\n$p")
+    assertOverlay("files", p, "FileScan")
+    assert(p.split("FileScan").length - 1 == 2,
+      s"expected exactly the base scan and the payload scan:\n$p")
   }
 
-  test("membership fold: base side joins wildcards + pair keys via broadcast only") {
-    val p = plan(seeded().filesDatasets)
-    assert(!p.contains("SortMergeJoin"),
-      s"membership fold fell back to a corpus-shuffling SMJ:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast folds:\n$p")
+  test("membership overlay: InSet-filtered base scan plus the live log pairs") {
+    assertOverlay("membership", plan(seeded().filesDatasets), "LocalTableScan")
   }
 
-  test("edge fold: base side joins pair keys + side wildcards via broadcast only") {
-    val p = plan(seeded().parentChild)
-    assert(!p.contains("SortMergeJoin"),
-      s"edge fold fell back to a corpus-shuffling SMJ:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast folds:\n$p")
+  test("edge overlay: InSet-filtered base scan plus the live log edges") {
+    assertOverlay("edge", plan(seeded().parentChild), "LocalTableScan")
   }
 
-  test("dimension overlay: broadcast anti-join on the admin key set") {
-    val p = plan(seeded().datasets)
-    assert(!p.contains("SortMergeJoin"),
-      s"dimension overlay fell back to SMJ:\n$p")
+  test("dimension overlay: InSet-filtered base scan plus the live admin rows") {
+    assertOverlay("dimension", plan(seeded().datasets), "LocalTableScan")
   }
 }

@@ -50,4 +50,46 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
     assert(recs.select("k").as[String].collect().sorted.toSeq ==
       Seq("k1", "k2", "k3", "k4"))
   }
+
+  test("a segment missing on every attempt fails loudly, with the read failure as cause") {
+    import spark.implicits._
+    val root = registerRoot(
+      Files.createTempDirectory("graft-recmissing-").toString)
+    val schema = Seq(("x", 1L)).toDF("k", "v")
+      .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
+    val log = new OccLog(spark, root, "tlog", schema,
+      OccLog.latestPerKey(Seq("k")),
+      foldSpec = Some(OccLog.FoldSpec(Seq("k", "v", "__seq"), _.getString(0))))
+    log.commit(() => Seq(("k1", 1L)).toDF("k", "v"), "upsert")
+    // more segments than the guard has attempts, none covered by a
+    // checkpoint: the seam deletes the newest one after every listing,
+    // so each attempt finds a just-listed segment gone — a segment lost
+    // outside the protocol, not a vacuum the retry could outrun
+    val logDir = java.nio.file.Paths.get(root, "tlog")
+    val s1 = logDir.resolve(f"s${1L}%020d")
+    for (s <- 2 to 2 * OccLog.MaxReadAttempts + 1) { // two reads' worth
+      val dst = java.nio.file.Files.createDirectory(logDir.resolve(f"s${s.toLong}%020d"))
+      java.nio.file.Files.list(s1).forEach(f =>
+        java.nio.file.Files.copy(f, dst.resolve(f.getFileName)))
+    }
+    def segments(): Seq[java.nio.file.Path] = {
+      val st = java.nio.file.Files.list(logDir)
+      try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).sortBy(_.toString)
+      finally st.close()
+    }
+    log.onRecordsPinned = () => {
+      val newest = segments().last
+      java.nio.file.Files.list(newest).forEach(f => java.nio.file.Files.delete(f))
+      java.nio.file.Files.delete(newest)
+    }
+    for ((what, read) <- Seq[(String, () => Any)](
+        "records()" -> (() => log.records()), "folded()" -> (() => log.folded()))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("deleted outside the commit protocol"),
+        s"$what: ${e.getMessage}")
+      assert(e.getCause != null && OccLog.fileVanished(e.getCause) &&
+        e.getCause.getMessage.contains("PATH_NOT_FOUND"),
+        s"$what: the cause must be the missing-segment read, got ${e.getCause}")
+    }
+  }
 }
