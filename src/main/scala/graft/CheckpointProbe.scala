@@ -37,7 +37,7 @@ object CheckpointProbe {
 
     for (k <- commitCounts) {
       val root = java.nio.file.Files.createTempDirectory("graft_cp_").toString
-      val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val cat = new ParquetCatalog(spark, root)
       val rows = spark.range(nFiles.toLong).select(
         format_string("P%09d", col("id")).as("fid"),
         format_string("ns%d", col("id") % 4).as("namespace"),
@@ -59,7 +59,7 @@ object CheckpointProbe {
       val listingsPerCommit =
         (graft.metacat.OccLog.listings.get() - listings0).toDouble / k
       def readS(): Double = { // fresh instance: no warm caches
-        val c = new ParquetCatalog(spark, root, mergeOnRead = true)
+        val c = new ParquetCatalog(spark, root)
         timeS(assert(c.files.count() == nFiles.toLong))
       }
       val tRawRead = readS()

@@ -62,7 +62,7 @@ object ConcurrencyProbe {
       .appName(s"graft-cc-worker-$idx")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     val l0 = graft.metacat.OccLog.listings.get()
     var maxNs = 0L
     val t0 = System.nanoTime()
@@ -105,7 +105,7 @@ object ConcurrencyProbe {
 
     for (w <- writerCounts) {
       val root = java.nio.file.Files.createTempDirectory("graft_cc_").toString
-      val seed = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val seed = new ParquetCatalog(spark, root)
       seed.declareFiles(spark.range(nFiles.toLong).select(
         format_string("P%09d", col("id")).as("fid"),
         format_string("ns%d", col("id") % 4).as("namespace"),
@@ -144,7 +144,7 @@ object ConcurrencyProbe {
         val wall = stats.map(_.group(2).toDouble).max
         val perCommitListings = stats.map(_.group(3).toLong).sum.toDouble / commits
         val maxCommit = stats.map(_.group(4).toDouble).max
-        val last = new ParquetCatalog(spark, root, mergeOnRead = true)
+        val last = new ParquetCatalog(spark, root)
         assert(last.currentLogSeq() == commits.toLong,
           s"expected $commits dense seqs, got ${last.currentLogSeq()}")
         outs.foreach(o => java.nio.file.Files.deleteIfExists(o))
@@ -157,7 +157,7 @@ object ConcurrencyProbe {
           f"max-commit=$maxCommit%5.2f s  cpus/writer=$cpus")
       } else {
       val writers = (0 until w).map(_ =>
-        new ParquetCatalog(spark, root, mergeOnRead = true))
+        new ParquetCatalog(spark, root))
       val maxCommitNs = new java.util.concurrent.atomic.AtomicLong(0L)
       val listings0 = graft.metacat.OccLog.listings.get()
       val t0 = System.nanoTime()
@@ -182,7 +182,7 @@ object ConcurrencyProbe {
       val perCommitListings =
         (graft.metacat.OccLog.listings.get() - listings0).toDouble / commits
       // protocol sanity: dense seqs, no orphans (a lost commit would gap)
-      val last = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val last = new ParquetCatalog(spark, root)
       assert(last.currentLogSeq() == commits.toLong,
         s"expected $commits dense seqs, got ${last.currentLogSeq()}")
       println(f"CCPROBE writers=$w%2d  commits=$commits%4d  wall=$secs%6.1f s  " +

@@ -38,7 +38,7 @@ object SoakProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = java.nio.file.Files.createTempDirectory("graft_soak_").toString
-    val seed = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val seed = new ParquetCatalog(spark, root)
     seed.declareFiles(spark.range(nFiles.toLong).select(
       format_string("P%09d", col("id")).as("fid"),
       format_string("ns%d", col("id") % 4).as("namespace"),
@@ -51,7 +51,7 @@ object SoakProbe {
     val perWriter = total / writers
     val done = new java.util.concurrent.atomic.AtomicLong(0L)
     val stopMaint = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val maintCat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val maintCat = new ParquetCatalog(spark, root)
     val maintenance = Future {
       var lastCkptAt = 0L
       var cycles = 0
@@ -67,7 +67,7 @@ object SoakProbe {
     }
 
     val window = math.max(1, total / 8)
-    val reader = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val reader = new ParquetCatalog(spark, root)
     @volatile var windowStart = System.nanoTime()
     @volatile var windowListings = graft.metacat.OccLog.listings.get()
     val report = new java.util.concurrent.atomic.AtomicLong(window.toLong)
@@ -91,7 +91,7 @@ object SoakProbe {
 
     val t0 = System.nanoTime()
     val bursts = (0 until writers).map { i =>
-      val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val cat = new ParquetCatalog(spark, root)
       Future {
         for (k <- 0 until perWriter) {
           cat.updateFileMeta(Seq(f"P${(i * perWriter + k) % nFiles}%09d"),
@@ -105,7 +105,7 @@ object SoakProbe {
     val cycles = Await.result(maintenance, 10.minutes)
     val wall = (System.nanoTime() - t0) / 1e9
     val commits = writers * perWriter
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     // protocol sanity: every commit present (dense through checkpoints)
     assert(fresh.currentLogSeq() == commits.toLong,
       s"expected $commits dense seqs, got ${fresh.currentLogSeq()}")

@@ -926,10 +926,10 @@ private[graft] object OccLog {
   }
 
   /** Size-DERIVED output partitioning for O(log)/O(table) writes —
-    * checkpoint folds, full-table rewrites, COW partition rewrites. The
-    * r14 commit sizing (fixed coalesce(1)) leaked onto these paths, and
-    * coalesce has no shuffle barrier: at scale the ENTIRE fold/sort/write
-    * stage collapsed to one task. Parts here = ceil(optimized-plan size
+    * checkpoint folds, full-table rewrites, compaction's partition
+    * rewrites. The r14 commit sizing (fixed coalesce(1)) leaked onto
+    * these paths, and coalesce has no shuffle barrier: at scale the
+    * ENTIRE fold/sort/write stage collapsed to one task. Parts here = ceil(optimized-plan size
     * estimate / `spark.graft.write.targetFileBytes`, default 128 MiB,
     * guide §6's output-file floor), floor 1 — a mutation-sized fold still
     * lands as one file while a 100 GB fold keeps hundreds of write tasks.

@@ -31,54 +31,53 @@ import org.apache.spark.sql.types._
   * tables (`datasets`, `queries`) keep JSON at rest — they are
   * broadcast-sized, so their read-time parse is nil by construction.
   *
-  * Writes are append-only parquet followed by compacting rewrites for
-  * updates — mirroring how a lakehouse table (Delta/Iceberg) would do it,
-  * without requiring those libraries in this environment.
+  * Writes are append-only parquet (base appends and delta-log commits)
+  * followed by compacting rewrites — mirroring how a lakehouse table
+  * (Delta/Iceberg) would do it, without requiring those libraries in this
+  * environment.
   *
-  * Two mutation modes for the files table (the one that is big at scale):
-  *
-  *  - copy-on-write (default): each mutation rewrites the touched
-  *    `namespace=` partitions ([[rewriteFilesScoped]]). Simple reads, but
-  *    a one-file retire still costs a whole-partition rewrite.
-  *  - merge-on-read (`mergeOnRead = true`): each mutation APPENDS the new
-  *    row versions (or tombstones) to a `files_log/` delta log keyed by
-  *    `(fid, __seq)`; reads overlay latest-log-wins on the base from the
-  *    log's driver-side fold ([[storedFiles]], [[LogFolds]]): an `InSet`
-  *    filter on the base scan, no join. A mutation's write cost is
-  *    O(rows touched) regardless of table or partition size — the posture
-  *    of a lakehouse MERGE with deletion vectors. [[compactFilesLog]]
-  *    folds the log back into the base (partition-scoped) and truncates
-  *    it; at 100 TB a deployment compacts on a schedule so the log's key
-  *    set stays driver-sized.
+  * Every mutation is merge-on-read: it APPENDS new row versions (or
+  * tombstones) to a delta log — `files_log/` keyed by `(fid, __seq)` for
+  * the files table (the one that is big at scale), plus the membership,
+  * provenance-edge and admin logs below — and reads overlay
+  * latest-log-wins on the base from the log's driver-side fold
+  * ([[storedFiles]], [[LogFolds]]): an `InSet` filter on the base scan,
+  * no join. A mutation's write cost is O(rows touched) regardless of
+  * table or partition size — the posture of a lakehouse MERGE with
+  * deletion vectors. [[compactFilesLog]] folds the logs back into the
+  * base (the files table partition-scoped, [[rewriteFilesScoped]]) and
+  * truncates them; at 100 TB a deployment compacts on a schedule so the
+  * logs' key sets stay driver-sized. A root holding only base tables is
+  * a catalog with empty logs.
   *
   * Concurrency contract (the reference serializes concurrent clients
   * through Postgres transactions; see the OCC protocol notes at
   * [[commitFilesLog]]):
   *
-  *  - MOR file-row mutations (retire / update-meta / update-file /
+  *  - File-row mutations (retire / update-meta / update-file /
   *    move-namespace / remove) are MULTI-WRITER SAFE across catalog
   *    instances and JVMs sharing one root: each mutation commits exactly
   *    one log sequence via claim-FIRST-by-atomic-create +
   *    publish-by-rename, computing its row versions once against the
   *    published predecessors — serializable optimistic concurrency,
   *    fuzz-proven by `MultiWriterSpec`.
-  *  - MOR MEMBERSHIP mutations are multi-writer safe the same way:
+  *  - MEMBERSHIP mutations are multi-writer safe the same way:
   *    [[addTo]]/[[removeFrom]]/[[removeFiles]] commit add/remove records
   *    to a second OCC log (`members_log`), and [[removeDataset]] retires
   *    a whole dataset's membership with ONE wildcard tombstone instead of
   *    rewriting the table. [[filesDatasets]] serves base ⊕ log.
-  *  - MOR PROVENANCE-EDGE mutations commit to a third OCC log
+  *  - PROVENANCE-EDGE mutations commit to a third OCC log
   *    (`edges_log`): [[removeFiles]] retires every edge touching a fid
   *    with two one-side wildcards, [[updateFile]]'s replace-parents/
   *    children is one wildcard + the new edges in a SINGLE atomic commit,
   *    and [[addProvenance]] base-appends unless shadowed. No fact-table
-  *    mutation (files, memberships, edges) rewrites its table in MOR
-  *    mode — a rewrite can never destroy a concurrent writer's append.
+  *    mutation (files, memberships, edges) rewrites its table — a
+  *    rewrite can never destroy a concurrent writer's append.
   *  - Declares are append-path (no log commit unless resurrecting), so
   *    concurrent declares of DISTINCT fids are safe; racing declares of
   *    the SAME fid — or a declare racing a remove of that fid — are
   *    unsynchronized (the duplicate surfaces in `Fsck.audit`).
-  *  - MOR DIMENSION mutations (datasets, namespaces, named queries,
+  *  - DIMENSION mutations (datasets, namespaces, named queries,
   *    dataset hierarchy, parameter categories) commit to a fourth shared
   *    OCC log (`admin_log`) — create/update/remove across catalog
   *    instances are serializable, duplicate/existence/cycle checks run
@@ -86,19 +85,22 @@ import org.apache.spark.sql.types._
   *    PK posture), and [[removeDataset]]'s dataset row + hierarchy edges
   *    tombstone in ONE atomic commit (its membership wildcard follows on
   *    the members log, dataset-first ordering documented there).
-  *  - COW mode rewrites whole files, so it is SINGLE-WRITER by
-  *    contract — one admin session at a time, as a maintenance window.
-  *  - [[compactFilesLog]] requires an exclusive window in both modes;
+  *  - [[compactFilesLog]] requires an exclusive window;
   *    [[checkpointFilesLog]] + [[vacuumFilesLog]] (and the
   *    `MembersLog` twins) bound the logs' read cost WITHOUT one — the
   *    always-on multi-writer maintenance path.
   */
 final class ParquetCatalog(spark: SparkSession, root: String,
     fileShredding: Map[String, (String, graft.mql.MetaCompiler.ShredType)] = Map.empty,
-    val mergeOnRead: Boolean = false)
+    mergeOnRead: Boolean = true)
   extends MetacatCatalog {
 
   import ParquetCatalog._
+
+  // kept for callers that still name the storage mode; merge-on-read is
+  // the only one
+  require(mergeOnRead,
+    "copy-on-write storage was removed: every ParquetCatalog is merge-on-read")
 
   /** predicates on these keys compile to the typed stored columns */
   override def shredding: Map[String, (String, graft.mql.MetaCompiler.ShredType)] =
@@ -147,8 +149,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // queries (Planner filters on !retired, which is null-out for null)
       .withColumn("retired", coalesce(col("retired"), lit(false)))
 
-  /** Live membership view. COW: the base table. MOR: the base overlaid
-    * with the membership delta log — a pair with any logged record
+  /** Live membership view: the base overlaid with the membership delta
+    * log — a pair with any logged record
     * resolves to its latest add/remove, and a dataset-wide `remove_all`
     * wildcard (from [[removeDataset]]) kills base rows plus every pair
     * record below its seq.
@@ -164,10 +166,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * the Spark-side overlay used to broadcast — plus the live log adds
     * (membership adds base-append unless shadowed, so those stay
     * mutation-sized). */
-  override def filesDatasets: DataFrame = {
-    val base = readOr("files_datasets", FilesDatasetsSchema)
-    if (!mergeOnRead) base else membersFold().overlay(spark, base)
-  }
+  override def filesDatasets: DataFrame =
+    membersFold().overlay(spark, readOr("files_datasets", FilesDatasetsSchema))
 
   /** current membership-log version, for naming [[filesDatasetsAsOf]]
     * snapshots (0 = empty/just-compacted log) */
@@ -183,7 +183,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * members vacuum horizon and resets at compaction, exactly like
     * [[filesAsOf]]. Capture versions with [[currentMembersSeq]]. */
   def filesDatasetsAsOf(seq: Long): DataFrame = {
-    require(mergeOnRead, "filesDatasetsAsOf requires a merge-on-read catalog")
     val base = readOr("files_datasets", FilesDatasetsSchema)
     val horizon = membersLog.vacuumHorizon()
     if (seq > 0L && seq < horizon)
@@ -202,16 +201,14 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .withColumn("metadata", parse_json(col("metadata_json")))
       .drop("metadata_json")
 
-  /** Live provenance-edge view. COW: the base table. MOR: base overlaid
-    * with the edge delta log — pair records latest-wins; one-side-null
+  /** Live provenance-edge view: the base overlaid with the edge delta
+    * log — pair records latest-wins; one-side-null
     * wildcards kill base rows and pair records BELOW them. An add at the
     * SAME seq as a wildcard survives it (`>=`): the two are one mutation
     * (replace = wildcard + new edges), ordered remove-then-add within
     * the commit. Same driver-fold shape as [[filesDatasets]]. */
-  override def parentChild: DataFrame = {
-    val base = readOr("parent_child", ParentChildSchema)
-    if (!mergeOnRead) base else edgesFold().overlay(spark, base)
-  }
+  override def parentChild: DataFrame =
+    edgesFold().overlay(spark, readOr("parent_child", ParentChildSchema))
 
   /** current edge-log version, for naming [[parentChildAsOf]] snapshots */
   def currentEdgesSeq(): Long = edgesLog.currentSeq()
@@ -222,7 +219,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * the logged mutations (hard-delete wildcards, replaces, shadowed
     * re-adds). Bounded below by the edges vacuum horizon. */
   def parentChildAsOf(seq: Long): DataFrame = {
-    require(mergeOnRead, "parentChildAsOf requires a merge-on-read catalog")
     val base = readOr("parent_child", ParentChildSchema)
     val horizon = edgesLog.vacuumHorizon()
     if (seq > 0L && seq < horizon)
@@ -294,15 +290,15 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // instead of first materializing inside a write job where no retry
     // can help. Plain declares carry no log read: skip the extra job.
     val batch = pinRows(() => mkBatch(),
-      eager = ignoreExisting && mergeOnRead && logNonEmpty())
+      eager = ignoreExisting && logNonEmpty())
     try {
       // probe the batch's fids ONCE (driver-side, bounded at
       // DeclareGuardMaxFids+1): it powers the small-batch declare guard
       // below AND lets the duplicate checks run driver-side/fused for
-      // small MOR batches. dryRun keeps the plain job-per-check path —
+      // small batches. dryRun keeps the plain job-per-check path —
       // its contract is "every check ran", with no markers to fold into.
       val guardProbe: Option[Seq[String]] =
-        if (mergeOnRead && !dryRun)
+        if (!dryRun)
           Some(retryOnVanish(batch.select("fid")
             .limit(DeclareGuardMaxFids + 1).collect().map(_.getString(0)).toSeq))
         else None
@@ -312,8 +308,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // one batch — is an error, as in the reference (data_handler.py
       // declare: 'already exists'); silently appending would duplicate
       // rows in both tables
-      // duplicate check against the LIVE view (merged in MOR mode, so a
-      // hard-deleted fid may legally be re-declared)
+      // duplicate check against the LIVE (merged) view, so a hard-deleted
+      // fid may legally be re-declared
       if (!ignoreExisting) {
         if (smallGuard) {
           // the probe holds EVERY batch fid, so the self-duplicate check
@@ -358,7 +354,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // constraints — but nothing is written
       if (dryRun) return
 
-      // ---- same-fid declare guard (MOR, small batches) ----
+      // ---- same-fid declare guard (small batches) ----
       // Racing declares of ONE fid are the check-then-append race the
       // reference's PK rejects at write time (schema.sql:53). For
       // batches up to DeclareGuardMaxFids the fids are CLAIMED as
@@ -376,7 +372,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       var claimedFids: Seq[String] = Nil
       var guarded = batch
       // tombstoned fids among the claimed set, computed by the guard's
-      // fused probe so the MOR append below skips its own dead-check job
+      // fused probe so the append below skips its own dead-check job
       var guardDead: Option[Set[String]] = None
       if (smallGuard) {
         val (taken, contended) = claimDeclareFids(guardProbe.get.distinct.sorted)
@@ -421,7 +417,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // fold holds tombstones.
       def deadIn(of: DataFrame): Set[String] = fidsIn(of, deletedFids())
 
-      if (mergeOnRead && dataset.isDefined) {
+      if (dataset.isDefined) {
         // r13: the file rows and their memberships commit as ONE
         // transaction ([[TxnLog]] with base-append legs) — the crash
         // window that could leave declared files and their target
@@ -487,7 +483,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         // published rows (remove-after-declare) or didn't tombstone them
         declareRevalidate(appended, stored,
           () => guarded.select(col("fid")), memberReval)
-      } else if (mergeOnRead) {
+      } else {
         val dead = guardDead.getOrElse(deadIn(stored))
         val appended =
           if (dead.isEmpty) stored
@@ -499,16 +495,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
             keys = Some(dead.toSeq))
         declareRevalidate(appended, stored,
           () => guarded.select(col("fid")), member = None)
-      } else {
-        // COW: membership rows first — an orphan membership (no file
-        // row) is invisible to every read path, whereas the reverse
-        // order could leave declared files missing from their target
-        // dataset if the second append fails mid-way
-        dataset.foreach { case (ns, n) =>
-          appendMemberships(() => guarded.select(col("fid")), ns, n)
-          ()
-        }
-        appendParquet(stored, "files", Seq("namespace"))
       }
       } finally releaseDeclareFids(claimedFids)
     } finally { batch.unpersist(); () }
@@ -551,7 +537,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         java.net.URLEncoder.encode(fid, "UTF-8")), false)
   }
 
-  /** The fused post-append re-validation for [[declareFiles]] (MOR): the
+  /** The fused post-append re-validation for [[declareFiles]]: the
     * freshly appended file rows are re-checked against the files log (a
     * racing removeFiles tombstone would shadow them) AND the appended
     * membership rows against the members log (a racing removeFrom /
@@ -634,7 +620,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         throw new IllegalArgumentException(
           s"metadata parameter without a category: ${bare.head.getString(0)}")
     }
-    val hit = col("namespace") === namespace && col("name") === name
     def mergedMeta(mj: String) = metadataMode match {
       case "replace" => lit(mj)
       case "update" =>
@@ -645,38 +630,22 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         to_json(map_concat(
           map_filter(orig, (k, _) => !map_contains_key(patch, k)), patch))
     }
-    if (mergeOnRead) {
-      // the new row version computes INSIDE the commit, folding the patch
-      // over whatever the predecessor committed — two writers merging
-      // disjoint metadata keys concurrently each see the other's keys
-      // (the serializability the reference's row-level transaction gives)
-      commitAdmin(LogUpsert) { () =>
-        val cur = dimRow("datasets", namespace, name).getOrElse(
-          throw new IllegalArgumentException(
-            s"dataset $namespace:$name does not exist"))
-        import scala.jdk.CollectionConverters._
-        var u = spark.createDataFrame(Seq(cur).asJava, DatasetsSchema)
-        metadataJson.foreach(mj =>
-          u = u.withColumn("metadata_json", mergedMeta(mj)))
-        frozen.foreach(f => u = u.withColumn("frozen", lit(f)))
-        monotonic.foreach(m => u = u.withColumn("monotonic", lit(m)))
-        description.foreach(d => u = u.withColumn("description", lit(d)))
-        asAdminRows("datasets", u)
-      }
-    } else {
-      datasetRow(namespace, name) // existence check — throws if missing
-      var updated = readOr("datasets", DatasetsSchema)
-      metadataJson.foreach { mj =>
-        updated = updated.withColumn("metadata_json",
-          when(hit, mergedMeta(mj)).otherwise(col("metadata_json")))
-      }
-      frozen.foreach(f => updated = updated.withColumn("frozen",
-        when(hit, lit(f)).otherwise(col("frozen"))))
-      monotonic.foreach(m => updated = updated.withColumn("monotonic",
-        when(hit, lit(m)).otherwise(col("monotonic"))))
-      description.foreach(d => updated = updated.withColumn("description",
-        when(hit, lit(d)).otherwise(col("description"))))
-      rewrite(updated, "datasets", DatasetsSchema, partitionCols = Nil)
+    // the new row version computes INSIDE the commit, folding the patch
+    // over whatever the predecessor committed — two writers merging
+    // disjoint metadata keys concurrently each see the other's keys
+    // (the serializability the reference's row-level transaction gives)
+    commitAdmin(LogUpsert) { () =>
+      val cur = dimRow("datasets", namespace, name).getOrElse(
+        throw new IllegalArgumentException(
+          s"dataset $namespace:$name does not exist"))
+      import scala.jdk.CollectionConverters._
+      var u = spark.createDataFrame(Seq(cur).asJava, DatasetsSchema)
+      metadataJson.foreach(mj =>
+        u = u.withColumn("metadata_json", mergedMeta(mj)))
+      frozen.foreach(f => u = u.withColumn("frozen", lit(f)))
+      monotonic.foreach(m => u = u.withColumn("monotonic", lit(m)))
+      description.foreach(d => u = u.withColumn("description", lit(d)))
+      asAdminRows("datasets", u)
     }
   }
 
@@ -686,64 +655,50 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * membership rows and its edges in the dataset hierarchy. The files
     * themselves are untouched (they may belong to other datasets). */
   def removeDataset(namespace: String, name: String): Unit = {
-    val hit = col("namespace") === namespace && col("name") === name
-    val eHit = (col("parent_namespace") === namespace && col("parent_name") === name) ||
-      (col("child_namespace") === namespace && col("child_name") === name)
-    if (mergeOnRead) {
-      // ONE cross-log transaction carries the admin leg (dataset
-      // tombstone + its hierarchy edges' tombstones, mixed per-row ops
-      // at a single seq — the cascade the reference gets from cascading
-      // foreign keys) AND the membership wildcard, so a snapshot or a
-      // crash never sees a dropped dataset whose members survived or
-      // vice versa. Legs are LITERAL (the TxnLog staging contract): the
-      // existence check and the hierarchy-edge probe run driver-side
-      // against dimension-sized state BEFORE the claims, and a
-      // post-transaction revalidation tombstones any hierarchy edge a
-      // racing addDatasetEdge slipped past the probe (the same lost-add
-      // closure the membership append path uses).
-      import spark.implicits._
-      datasetRow(namespace, name) // throws if missing, as the reference 404s
-      def edgeTombstones() = dimRows("datasets_parent_child")
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        .filter { case (pn, p, cn, c) =>
-          (pn == namespace && p == name) || (cn == namespace && c == name) }
-      val probed = edgeTombstones()
-      def adminLeg() = {
-        val ds = asAdminRows("datasets",
-          Seq((namespace, name)).toDF("namespace", "name"),
-          op = Some(LogDelete))
-        if (probed.isEmpty) ds
-        else ds.unionByName(asAdminRows("datasets_parent_child",
-          probed.toDF("parent_namespace", "parent_name",
-            "child_namespace", "child_name"), op = Some(LogDelete)))
-      }
-      // the membership wildcard is one O(1) tombstone retiring the WHOLE
-      // membership set — dropping a 100M-file dataset costs one log
-      // record instead of a membership-table rewrite
-      txns.run(Seq(
-        TxnLog.Leg("admin_log", LogDelete, None, () => adminLeg()),
-        TxnLog.Leg("members_log", MemberRemoveAll,
-          Some(Seq(namespace + "\u0001" + name)),
-          () => Seq((Option.empty[String], namespace, name))
-            .toDF("fid", "dataset_namespace", "dataset_name"))))
-      // lost-add closure: a hierarchy edge added between the probe and
-      // the transaction's admin seq would dangle on a dead dataset —
-      // re-check and tombstone stragglers through a normal admin commit
-      val late = edgeTombstones().filterNot(probed.toSet)
-      if (late.nonEmpty)
-        commitAdmin(LogDelete)(() => asAdminRows("datasets_parent_child",
-          late.toDF("parent_namespace", "parent_name",
-            "child_namespace", "child_name"), op = Some(LogDelete)))
-    } else {
-      datasetRow(namespace, name) // throws if missing
-      rewrite(readOr("datasets", DatasetsSchema).filter(!hit),
-        "datasets", DatasetsSchema, partitionCols = Nil)
-      val mHit = col("dataset_namespace") === namespace && col("dataset_name") === name
-      rewrite(readOr("files_datasets", FilesDatasetsSchema).filter(!mHit),
-        "files_datasets", FilesDatasetsSchema, partitionCols = Nil)
-      rewrite(readOr("datasets_parent_child", DsParentChildSchema).filter(!eHit),
-        "datasets_parent_child", DsParentChildSchema, partitionCols = Nil)
+    // ONE cross-log transaction carries the admin leg (dataset
+    // tombstone + its hierarchy edges' tombstones, mixed per-row ops
+    // at a single seq — the cascade the reference gets from cascading
+    // foreign keys) AND the membership wildcard, so a snapshot or a
+    // crash never sees a dropped dataset whose members survived or
+    // vice versa. Legs are LITERAL (the TxnLog staging contract): the
+    // existence check and the hierarchy-edge probe run driver-side
+    // against dimension-sized state BEFORE the claims, and a
+    // post-transaction revalidation tombstones any hierarchy edge a
+    // racing addDatasetEdge slipped past the probe (the same lost-add
+    // closure the membership append path uses).
+    import spark.implicits._
+    datasetRow(namespace, name) // throws if missing, as the reference 404s
+    def edgeTombstones() = dimRows("datasets_parent_child")
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+      .filter { case (pn, p, cn, c) =>
+        (pn == namespace && p == name) || (cn == namespace && c == name) }
+    val probed = edgeTombstones()
+    def adminLeg() = {
+      val ds = asAdminRows("datasets",
+        Seq((namespace, name)).toDF("namespace", "name"),
+        op = Some(LogDelete))
+      if (probed.isEmpty) ds
+      else ds.unionByName(asAdminRows("datasets_parent_child",
+        probed.toDF("parent_namespace", "parent_name",
+          "child_namespace", "child_name"), op = Some(LogDelete)))
     }
+    // the membership wildcard is one O(1) tombstone retiring the WHOLE
+    // membership set — dropping a 100M-file dataset costs one log
+    // record instead of a membership-table rewrite
+    txns.run(Seq(
+      TxnLog.Leg("admin_log", LogDelete, None, () => adminLeg()),
+      TxnLog.Leg("members_log", MemberRemoveAll,
+        Some(Seq(namespace + "\u0001" + name)),
+        () => Seq((Option.empty[String], namespace, name))
+          .toDF("fid", "dataset_namespace", "dataset_name"))))
+    // lost-add closure: a hierarchy edge added between the probe and
+    // the transaction's admin seq would dangle on a dead dataset —
+    // re-check and tombstone stragglers through a normal admin commit
+    val late = edgeTombstones().filterNot(probed.toSet)
+    if (late.nonEmpty)
+      commitAdmin(LogDelete)(() => asAdminRows("datasets_parent_child",
+        late.toDF("parent_namespace", "parent_name",
+          "child_namespace", "child_name"), op = Some(LogDelete)))
   }
 
   /** Hard-delete files by id (`DBFile.delete`, dbobjects2.py:493-500 —
@@ -752,51 +707,41 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * partial failure leaves dangling-edge-free state (orphan file rows
     * are still queryable; orphan edges would corrupt provenance hops). */
   def removeFiles(fids: Seq[String]): Unit = {
-    val hit = col("fid").isin(fids: _*)
-    if (mergeOnRead) {
-      import spark.implicits._
-      // ONE cross-log transaction carries all three legs — edge
-      // wildcards, the fid-wide membership wildcards, the file
-      // tombstones — so readers, snapshots and crashes see the removal
-      // all-or-nothing (the reference gets this from one Postgres
-      // transaction, data_handler.py:631-714). Every leg is LITERAL
-      // (O(fids) driver-built wildcard/tombstone rows, store-insensitive
-      // — the TxnLog staging contract): two wildcards per fid retire
-      // every provenance edge touching it, one fid-wide wildcard retires
-      // its membership in EVERY dataset, and the tombstones name the
-      // fids a pre-probe proved live — never an edge/membership table
-      // rewrite, never a corpus-sized job.
-      val existing = retryOnVanish(storedFiles().filter(hit)
-        .select("fid").collect().map(_.getString(0)).toSeq)
-      def tombstones() = {
-        var df = existing.toDF("fid")
-        for (f <- logSchema.fields
-             if f.name != "fid" && f.name != "__op" && f.name != "__seq")
-          df = df.withColumn(f.name, lit(null).cast(f.dataType))
-        df
-      }
-      val legs = Seq(
-        TxnLog.Leg("edges_log", EdgeRemove, Some(fids), () => fids
-          .flatMap(f => Seq((Option(f), Option.empty[String]),
-            (Option.empty[String], Option(f))))
-          .toDF("parent_fid", "child_fid")),
-        // unkeyed: membership successors (dataset-identity keys, a
-        // different key alphabet) must conservatively serialize after it
-        TxnLog.Leg("members_log", MemberRemoveFid, None, () => fids
-          .map(f => (f, Option.empty[String], Option.empty[String]))
-          .toDF("fid", "dataset_namespace", "dataset_name"))) ++
-        (if (existing.isEmpty) Nil
-         else Seq(TxnLog.Leg("files_log", LogDelete, Some(existing),
-           () => tombstones())))
-      txns.run(legs)
-    } else {
-      rewrite(readOr("parent_child", ParentChildSchema)
-        .filter(!col("parent_fid").isin(fids: _*) && !col("child_fid").isin(fids: _*)),
-        "parent_child", ParentChildSchema, partitionCols = Nil)
-      rewrite(readOr("files_datasets", FilesDatasetsSchema).filter(!hit),
-        "files_datasets", FilesDatasetsSchema, partitionCols = Nil)
-      rewriteFilesScoped(storedFiles().filter(!hit), namespacesOf(fids))
+    import spark.implicits._
+    // ONE cross-log transaction carries all three legs — edge
+    // wildcards, the fid-wide membership wildcards, the file
+    // tombstones — so readers, snapshots and crashes see the removal
+    // all-or-nothing (the reference gets this from one Postgres
+    // transaction, data_handler.py:631-714). Every leg is LITERAL
+    // (O(fids) driver-built wildcard/tombstone rows, store-insensitive
+    // — the TxnLog staging contract): two wildcards per fid retire
+    // every provenance edge touching it, one fid-wide wildcard retires
+    // its membership in EVERY dataset, and the tombstones name the
+    // fids a pre-probe proved live — never an edge/membership table
+    // rewrite, never a corpus-sized job.
+    val existing = retryOnVanish(storedFiles().filter(col("fid").isin(fids: _*))
+      .select("fid").collect().map(_.getString(0)).toSeq)
+    def tombstones() = {
+      var df = existing.toDF("fid")
+      for (f <- logSchema.fields
+           if f.name != "fid" && f.name != "__op" && f.name != "__seq")
+        df = df.withColumn(f.name, lit(null).cast(f.dataType))
+      df
     }
+    val legs = Seq(
+      TxnLog.Leg("edges_log", EdgeRemove, Some(fids), () => fids
+        .flatMap(f => Seq((Option(f), Option.empty[String]),
+          (Option.empty[String], Option(f))))
+        .toDF("parent_fid", "child_fid")),
+      // unkeyed: membership successors (dataset-identity keys, a
+      // different key alphabet) must conservatively serialize after it
+      TxnLog.Leg("members_log", MemberRemoveFid, None, () => fids
+        .map(f => (f, Option.empty[String], Option.empty[String]))
+        .toDF("fid", "dataset_namespace", "dataset_name"))) ++
+      (if (existing.isEmpty) Nil
+       else Seq(TxnLog.Leg("files_log", LogDelete, Some(existing),
+         () => tombstones())))
+    txns.run(legs)
   }
 
   /** Create a namespace (`create_namespace`, data_handler.py:119-150;
@@ -811,19 +756,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .toDF("name", "description", "owner_user", "creator")
       .withColumn("created_timestamp", current_timestamp())
       .withColumn("file_count", lit(0L))
-    def requireAbsent(): Unit = {
+    commitAdmin(LogUpsert) { () =>
+      // serialized under the claimed seq (reference PK)
       if (dimRow("namespaces", name).nonEmpty)
         throw new IllegalArgumentException(s"namespace $name already exists")
-    }
-    if (mergeOnRead) {
-      commitAdmin(LogUpsert) { () =>
-        requireAbsent() // serialized under the claimed seq (reference PK)
-        asAdminRows("namespaces", align(row, NamespacesSchema))
-      }
-    } else {
-      requireAbsent()
-      align(row, NamespacesSchema)
-        .write.mode(SaveMode.Append).parquet(path("namespaces"))
+      asAdminRows("namespaces", align(row, NamespacesSchema))
     }
   }
 
@@ -831,9 +768,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   override def namespaces: DataFrame = dimStored("namespaces")
 
   /** Create a dataset. Duplicate names are rejected, as the reference's
-    * primary key does (`schema.sql:101`); in MOR mode the check runs
-    * INSIDE the OCC commit, so two racing creates of one name resolve to
-    * one winner and one loud rejection across writers. */
+    * primary key does (`schema.sql:101`); the check runs INSIDE the OCC
+    * commit, so two racing creates of one name resolve to one winner and
+    * one loud rejection across writers. */
   def createDataset(namespace: String, name: String, frozen: Boolean = false,
       monotonic: Boolean = false, creator: String = "graft",
       metadataJson: String = "{}",
@@ -846,19 +783,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .withColumn("created_timestamp", current_timestamp())
       .withColumn("description", lit(s"dataset $name"))
       .withColumn("file_count", lit(null).cast("long"))
-    def requireAbsent(): Unit = {
+    commitAdmin(LogUpsert) { () =>
+      // serialized: runs under the claimed seq
       if (dimRow("datasets", namespace, name).nonEmpty)
         throw new IllegalArgumentException(s"dataset $namespace:$name already exists")
-    }
-    if (mergeOnRead) {
-      commitAdmin(LogUpsert) { () =>
-        requireAbsent() // serialized: runs under the claimed seq
-        asAdminRows("datasets", align(row, DatasetsSchema))
-      }
-    } else {
-      requireAbsent() // single-writer contract: check-then-append suffices
-      align(row, DatasetsSchema)
-        .write.mode(SaveMode.Append).parquet(path("datasets"))
+      asAdminRows("datasets", align(row, DatasetsSchema))
     }
   }
 
@@ -885,12 +814,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // (data_handler.py:959 re-validates when files join a dataset)
       if (ds.requirements.nonEmpty) failOnViolations(fileSet, ds.requirements)
     }
-    // APPEND path in both modes (via the shadow-aware helper): a bulk
+    // APPEND path (via the shadow-aware helper): a bulk
     // addTo can be corpus-sized, and committing it to the log would make
     // every later fold window and broadcast corpus-sized too (measured:
     // one-member removeFrom 5.3 s behind a 1M-row logged addTo vs 0.5 s
     // behind a base append). Appends are multi-writer safe here because
-    // MOR removes never rewrite the table; racing addTo of the SAME pair
+    // removes never rewrite the table; racing addTo of the SAME pair
     // can duplicate (fsck-flagged — the declare posture, where the
     // reference relies on its PK). Only remove-shadowed pairs route
     // through the log.
@@ -926,26 +855,17 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"dataset $namespace:$name is frozen")
     if (ds.monotonic)
       throw new IllegalArgumentException(s"dataset $namespace:$name is monotonic")
-    if (mergeOnRead) {
-      // remove records for the pairs that ARE currently members —
-      // computed under the claimed seq, O(rows touched), no rewrite
-      val literal = literalFids(fileSet)
-      def mkRows() = literal match {
-        case Some(fids) => members(namespace, name, Some(fids))
-        case None => members(namespace, name)
-          .join(fileSet.select("fid").dropDuplicates("fid"), Seq("fid"), "left_semi")
-      }
-      if (!literal.exists(_.isEmpty) && retryOnVanish(hasRows(mkRows())))
-        membersLog.commit(() => mkRows(), MemberRemove,
-          keys = Some(Seq(namespace + "\u0001" + name)))
-    } else {
-      val all = readOr("files_datasets", FilesDatasetsSchema)
-      val inDs = col("dataset_namespace") === namespace && col("dataset_name") === name
-      val kept = all.filter(!inDs).unionByName(
-        all.filter(inDs).join(fileSet.select("fid"), Seq("fid"), "left_anti")
-          .select("fid", "dataset_namespace", "dataset_name"))
-      rewrite(kept, "files_datasets", FilesDatasetsSchema, partitionCols = Nil)
+    // remove records for the pairs that ARE currently members —
+    // computed under the claimed seq, O(rows touched), no rewrite
+    val literal = literalFids(fileSet)
+    def mkRows() = literal match {
+      case Some(fids) => members(namespace, name, Some(fids))
+      case None => members(namespace, name)
+        .join(fileSet.select("fid").dropDuplicates("fid"), Seq("fid"), "left_semi")
     }
+    if (!literal.exists(_.isEmpty) && retryOnVanish(hasRows(mkRows())))
+      membersLog.commit(() => mkRows(), MemberRemove,
+        keys = Some(Seq(namespace + "\u0001" + name)))
   }
 
   /** retire files by id (data_handler.py retire path; schema.sql:63-65) —
@@ -1004,10 +924,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .withColumn("updated_timestamp",
         when(col("__hit"), current_timestamp()).otherwise(col("updated_timestamp")))
       .drop("__hit")
-    // both sides of the move are touched: source partitions shed rows,
-    // the target partition gains them (MOR: the new-namespace row simply
-    // shadows the old-partition base row via the fid anti-join)
-    applyFilesUpdate(() => mkUpdated(), fids, extraTouched = Seq(toNamespace))
+    // the new-namespace row version shadows the old-partition base row
+    // (the overlay filters logged fids out of the base scan); compaction
+    // later moves it between partitions
+    applyFilesUpdate(() => mkUpdated(), fids)
   }
 
   def saveNamedQuery(namespace: String, name: String, source: String,
@@ -1017,24 +937,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .toDF("namespace", "name", "source", "creator")
       .withColumn("created_timestamp", current_timestamp())
       .withColumn("metadata_json", lit("{}"))
-    if (mergeOnRead) {
-      // upsert: re-saving a name REPLACES its source atomically across
-      // writers (latest commit wins — the reference's save overwrites
-      // the row under its PK)
-      commitAdmin(LogUpsert)(() =>
-        asAdminRows("queries", align(row, QueriesSchema)))
-    } else {
-      // same REPLACE semantics in COW: a re-save rewrites the row (the
-      // blind append left two rows and namedQuerySource picking the
-      // FIRST — the storage mode must not change save semantics)
-      val hit = col("namespace") === namespace && col("name") === name
-      val existing = readOr("queries", QueriesSchema)
-      if (existing.filter(hit).limit(1).collect().nonEmpty)
-        rewrite(existing.filter(!hit).unionByName(align(row, QueriesSchema)),
-          "queries", QueriesSchema, partitionCols = Nil)
-      else
-        align(row, QueriesSchema).write.mode(SaveMode.Append).parquet(path("queries"))
-    }
+    // upsert: re-saving a name REPLACES its source atomically across
+    // writers (latest commit wins — the reference's save overwrites
+    // the row under its PK)
+    commitAdmin(LogUpsert)(() =>
+      asAdminRows("queries", align(row, QueriesSchema)))
   }
 
   /** Declare a parameter category (`schema.sql:162-176`,
@@ -1053,13 +960,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .toDF("path", "restricted", "definitions", "creator")
       .withColumn("created_timestamp", current_timestamp())
       .withColumn("description", lit(s"category $catPath"))
-    if (mergeOnRead) {
-      commitAdmin(LogUpsert)(() =>
-        asAdminRows("categories", align(row, CategoriesSchema)))
-    } else {
-      align(row, CategoriesSchema)
-        .write.mode(SaveMode.Append).parquet(path("categories"))
-    }
+    commitAdmin(LogUpsert)(() =>
+      asAdminRows("categories", align(row, CategoriesSchema)))
   }
 
   /** the parsed category table, rebuilt when its [[dimRows]] change (the
@@ -1101,15 +1003,11 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         Seq("namespace", "name"), "left")
       .withColumn("file_count", coalesce(col("__fc"), lit(0L)))
       .drop("__fc")
-    if (mergeOnRead) {
-      // count write-back is an UPSERT of every dataset row through the
-      // admin log (dimension-sized — one broadcast frame per refresh;
-      // checkpoints fold it away), never a table rewrite that could
-      // destroy a concurrent admin commit
-      commitAdmin(LogUpsert)(() => asAdminRows("datasets", dsUpdated()))
-    } else {
-      rewrite(dsUpdated(), "datasets", DatasetsSchema, partitionCols = Nil)
-    }
+    // count write-back is an UPSERT of every dataset row through the
+    // admin log (dimension-sized — one broadcast frame per refresh;
+    // checkpoints fold it away), never a table rewrite that could
+    // destroy a concurrent admin commit
+    commitAdmin(LogUpsert)(() => asAdminRows("datasets", dsUpdated()))
     val nsCounts = storedFiles()
       .groupBy(col("namespace"))
       .agg(count(lit(1)).as("file_count"))
@@ -1121,12 +1019,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .join(readOr("namespace_counts", NamespaceCountsSchema)
         .select(col("namespace").as("name"), col("file_count")), Seq("name"), "left")
       .withColumn("file_count", coalesce(col("file_count"), lit(0L)))
-    if (!dimStored("namespaces").isEmpty) {
-      if (mergeOnRead)
-        commitAdmin(LogUpsert)(() => asAdminRows("namespaces", nsUpdated()))
-      else
-        rewrite(nsUpdated(), "namespaces", NamespacesSchema, partitionCols = Nil)
-    }
+    if (!dimStored("namespaces").isEmpty)
+      commitAdmin(LogUpsert)(() => asAdminRows("namespaces", nsUpdated()))
   }
 
   /** daemon-materialized per-namespace counts (empty until
@@ -1147,10 +1041,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * already close. */
   def addProvenance(mkEdges: () => DataFrame): Unit = {
     def aligned() = align(mkEdges(), ParentChildSchema)
-    if (!mergeOnRead) {
-      appendParquet(aligned(), "parent_child")
-      return
-    }
     // edges the CURRENT log shadows (a pair record, or a wildcard on
     // either endpoint — base appends carry implicit seq 0), pinned
     // driver-side as \u0001-joined keys from the edges log's driver fold;
@@ -1198,7 +1088,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(
         s"circular connection: $cNs:$cName cannot be its own subset")
     // returns true when the edge already exists (no-op); throws on a
-    // cycle. In MOR mode this runs INSIDE the OCC commit, so two racing
+    // cycle. It runs INSIDE the OCC commit, so two racing
     // adds that are individually acyclic but jointly circular (a→b and
     // b→a) serialize: the second sees the first's committed edge and is
     // rejected — the check the reference gets from running the ancestor
@@ -1222,19 +1112,13 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
     val row = Seq((pNs, pName, cNs, cName))
       .toDF("parent_namespace", "parent_name", "child_namespace", "child_name")
-    if (mergeOnRead) {
-      if (alreadyOrCycle()) return // cheap pre-check (no-op fast path)
-      try {
-        commitAdmin(LogUpsert) { () =>
-          if (alreadyOrCycle()) throw AdminNoOp // duplicate raced in: no-op
-          asAdminRows("datasets_parent_child", align(row, DsParentChildSchema))
-        }
-      } catch { case AdminNoOp => () }
-    } else {
-      if (alreadyOrCycle()) return
-      align(row, DsParentChildSchema)
-        .write.mode(SaveMode.Append).parquet(path("datasets_parent_child"))
-    }
+    if (alreadyOrCycle()) return // cheap pre-check (no-op fast path)
+    try {
+      commitAdmin(LogUpsert) { () =>
+        if (alreadyOrCycle()) throw AdminNoOp // duplicate raced in: no-op
+        asAdminRows("datasets_parent_child", align(row, DsParentChildSchema))
+      }
+    } catch { case AdminNoOp => () }
   }
 
   /** Update ONE file's metadata / checksums / provenance / size
@@ -1322,7 +1206,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           retryOnVanish(failOnViolations(mkUpdated().filter(hit), reqs))
       }
     }
-    // MOR with a provenance change: ONE cross-log transaction carries
+    // A provenance change: ONE cross-log transaction carries
     // the files-row update AND the edge replace/adds, so a crash (or a
     // snapshot captured mid-mutation) can never see new metadata with
     // old provenance — the last multi-log mutation the reference got
@@ -1331,10 +1215,9 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // verdict, What's wrong #3). The files leg is the store-SENSITIVE
     // PRIMARY (its fold merges over predecessor state — [[TxnLog.Leg]]);
     // the edges leg is literal. In add-update mode the edges leg stages
-    // the adds verbatim: the single-log path's not-yet-present anti-join
-    // is an optimization the txn trades away — a re-add of an existing
-    // pair is a no-op under the latest-per-pair fold.
-    if (mergeOnRead && (parents.isDefined || children.isDefined)) {
+    // the adds verbatim — a re-add of an existing pair is a no-op under
+    // the latest-per-pair fold.
+    if (parents.isDefined || children.isDefined) {
       import spark.implicits._
       def sideRows(given: Seq[String], asParents: Boolean): DataFrame = {
         val add = given.distinct
@@ -1365,52 +1248,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
 
     applyFilesUpdate(() => mkUpdated(), Seq(fid))
-
-    def writeEdges(given: Seq[String], asParents: Boolean): Unit = {
-      import spark.implicits._
-      val fixedSide = if (asParents) "child_fid" else "parent_fid"
-      val add = given.distinct
-        .map(p => if (asParents) (p, fid) else (fid, p))
-        .toDF("parent_fid", "child_fid")
-      if (mergeOnRead) {
-        if (mode == "replace") {
-          // ONE commit: the side wildcard plus the replacement edges with
-          // per-row ops — readers see the whole replace atomically at a
-          // single seq (adds survive their own wildcard via the fold's
-          // `>=`, see [[EdgesLogSchema]])
-          val wildcard = (if (asParents)
-              Seq((Option.empty[String], Option(fid)))
-            else Seq((Option(fid), Option.empty[String])))
-            .toDF("parent_fid", "child_fid")
-          edgesLog.commit(() =>
-            wildcard.withColumn("__op", lit(EdgeRemove))
-              .unionByName(add.withColumn("__op", lit(EdgeAdd))), EdgeAdd,
-            keys = Some(fid +: given.distinct))
-        } else {
-          def mkRows() =
-            add.join(parentChild, Seq("parent_fid", "child_fid"), "left_anti")
-          if (retryOnVanish(hasRows(mkRows())))
-            edgesLog.commit(() => mkRows(), EdgeAdd,
-              keys = Some(fid +: given.distinct))
-        }
-      } else {
-        val pc = readOr("parent_child", ParentChildSchema)
-        if (mode == "replace") {
-          val keep = pc.filter(col(fixedSide) =!= fid)
-          rewrite(keep.unionByName(
-              add.join(keep, Seq("parent_fid", "child_fid"), "left_anti")),
-            "parent_child", ParentChildSchema, partitionCols = Nil)
-        } else {
-          // update mode keeps every existing edge — a pure APPEND of the
-          // not-yet-present ones, not a whole-table rewrite
-          appendParquet(
-            add.join(pc, Seq("parent_fid", "child_fid"), "left_anti"),
-            "parent_child")
-        }
-      }
-    }
-    parents.foreach(writeEdges(_, asParents = true))
-    children.foreach(writeEdges(_, asParents = false))
   }
 
   // ---- helpers ----
@@ -1424,7 +1261,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     OccLog.latestPerKey(Seq("fid")), legacyFlat = true,
     foldSpec = Some(LogFolds.FilesSpec))
 
-  /** the MEMBERSHIP delta log (MOR mode): `add`/`remove` records per
+  /** the MEMBERSHIP delta log: `add`/`remove` records per
     * (fid, dataset) pair, plus `remove_all` wildcard tombstones per
     * dataset. Same OCC protocol as [[filesLog]]; checkpoints fold to
     * latest-per-pair plus the latest wildcard per dataset (wildcards
@@ -1440,7 +1277,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           df.filter(col("__op") === MemberRemoveFid))),
     foldSpec = Some(LogFolds.MembersSpec))
 
-  /** the PROVENANCE-EDGE delta log (MOR mode): add/remove records per
+  /** the PROVENANCE-EDGE delta log: add/remove records per
     * (parent, child) pair, plus one-side-null wildcard removes (a hard
     * delete retires every edge touching a fid with two records; a
     * replace-parents is one wildcard + the new edges in ONE commit).
@@ -1457,7 +1294,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
           df.filter(col("parent_fid").isNull)))
     }, foldSpec = Some(LogFolds.EdgesSpec))
 
-  /** the ADMIN delta log (MOR mode): ONE shared OCC log for every
+  /** the ADMIN delta log: ONE shared OCC log for every
     * dimension-table mutation — datasets, namespaces, named queries, the
     * dataset hierarchy, parameter categories. Records carry the union
     * row shape plus (table, key); the fold keeps the latest record per
@@ -1516,7 +1353,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * the admin entry point after a writer crash ([[Fsck.audit]] reports
     * the pending count as `mor_txn_pending`). */
   def recoverTxns(force: Boolean = false): Int = {
-    require(mergeOnRead, "recoverTxns requires a merge-on-read catalog")
     txns.recoverAll(force)
   }
 
@@ -1533,10 +1369,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * key wins; upsert replaces, delete kills) — the base scan filtered by
     * `InSet` on the logged keys plus a `LocalRelation` of the live
     * upserts, from the admin log's driver fold ([[LogFolds.AdminFold]]). */
-  private def dimStored(table: String): DataFrame = {
-    val base = readOr(table, dimSchema(table))
-    if (!mergeOnRead) base else adminFold().overlay(spark, table, base)
-  }
+  private def dimStored(table: String): DataFrame =
+    adminFold().overlay(spark, table, readOr(table, dimSchema(table)))
 
   /** Collected base rows of each dimension table, keyed by the names of
     * its data files: every writer of a base table (append, rewrite,
@@ -1570,7 +1404,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         dimBase.put(table, (files, rows))
         rows
       }
-    if (!mergeOnRead) base else adminFold().overlayRows(table, base)
+    adminFold().overlayRows(table, base)
   }
 
   /** widen a dimension-table-shaped frame to the admin log's union row
@@ -1604,7 +1438,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * appends inherited the session's 32-way partitioning and landed 5-10
     * near-empty part files per write, each a task at write time and a
     * listing+footer read on every later scan (guide §6). Table REWRITES
-    * (COW partition swap, full-table rewrite) are O(table), not
+    * (compaction's partition swap, full-table rewrite) are O(table), not
     * mutation-sized — they size by estimated output bytes
     * ([[OccLog.foldSized]]), never by this conf. */
   private def sized(df: DataFrame): DataFrame = OccLog.commitSized(spark, df)
@@ -1753,8 +1587,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       onBeforeMembersAppend()
       appendParquet(align(pairs(of), FilesDatasetsSchema), "files_datasets")
     }
-    if (!mergeOnRead) { baseAppend(mkFids()); return }
-
     // pin the add set ONCE (mkFids() may read catalog state — the
     // members log via addTo's existing-members anti-join); every later
     // use, including the log-commit closures below, then reads the pin
@@ -1820,11 +1652,10 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def logRecords(): DataFrame = filesLog.records()
 
   /** fids whose LATEST log record is a tombstone (driver fold) */
-  private def deletedFids(): Set[String] =
-    if (mergeOnRead) filesFold().dead else Set.empty
+  private def deletedFids(): Set[String] = filesFold().dead
 
-  /** Raw live files frame (no retired coalesce). COW: the base table.
-    * MOR: base overlaid with latest-log-wins.
+  /** Raw live files frame (no retired coalesce): the base overlaid with
+    * latest-log-wins.
     *
     * Scale shape: the files log's driver fold ([[OccLog.folded]], see
     * [[LogFolds.FilesFold]]) keeps only `(fid, __op, __seq)` per logged
@@ -1841,19 +1672,16 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     val base = readOr("files", storedSchema)
     // the payload scan resolves its pinned files now: a vacuum that
     // deleted them since the fold was taken is absorbed by re-folding
-    if (!mergeOnRead) base
-    else retryOnVanish(filesFold().overlay(base, storedSchema))
+    retryOnVanish(filesFold().overlay(base, storedSchema))
   }
 
   // ---- multi-writer optimistic concurrency for the delta log ----
   //
   // The full claim/publish/checkpoint/vacuum protocol lives in [[OccLog]]
-  // (one instance per log — [[filesLog]] here). COW mode has no commit
-  // protocol: mutations rewrite whole partitions, so COW catalogs are
-  // SINGLE-WRITER by contract (one admin session at a time, the
-  // reference's posture for a maintenance window). Compaction requires an
-  // exclusive window in both modes — it truncates the log that concurrent
-  // commits append to.
+  // (one instance per log — [[filesLog]] here). Every mutation commits
+  // through it, so any number of catalog instances may write one root
+  // concurrently. Compaction alone requires an exclusive window — it
+  // truncates the logs that concurrent commits append to.
 
   /** Commit one files-table mutation's new row versions (or tombstones)
     * to the delta log under multi-writer OCC — O(rows touched). `mkRows`
@@ -1865,20 +1693,14 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     filesLog.commit(() => align(withShredCols(mkRows()), storedSchema), op,
       keys)
 
-  /** mutation dispatch for the files table: MOR commits the touched rows'
-    * new versions to the log (`mkUpdated` evaluated under the claimed
-    * seq, against the published predecessors); COW rewrites the touched
-    * partitions. `namespacesOf` (a table scan) only runs on the COW
-    * branch. */
-  private def applyFilesUpdate(mkUpdated: () => DataFrame, fids: Seq[String],
-      extraTouched: Seq[String] = Nil): Unit = {
-    if (mergeOnRead)
-      // keyed by the touched fids: the files fold is latest-per-fid, so
-      // disjoint-fid mutations commute and their writes overlap
-      commitFilesLog(() => mkUpdated().filter(col("fid").isin(fids: _*)),
-        LogUpsert, keys = Some(fids))
-    else rewriteFilesScoped(mkUpdated(), (namespacesOf(fids) ++ extraTouched).distinct)
-  }
+  /** files-table row update: commits the touched rows' new versions to
+    * the log (`mkUpdated` evaluated under the claimed seq, against the
+    * published predecessors). Keyed by the touched fids: the files fold
+    * is latest-per-fid, so disjoint-fid mutations commute and their
+    * writes overlap. */
+  private def applyFilesUpdate(mkUpdated: () => DataFrame, fids: Seq[String]): Unit =
+    commitFilesLog(() => mkUpdated().filter(col("fid").isin(fids: _*)),
+      LogUpsert, keys = Some(fids))
 
   // ---- merge-on-read time travel (delta-log snapshots) ----
 
@@ -1918,7 +1740,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def vacuumHorizon(): Long = filesLog.vacuumHorizon()
 
   def filesAsOf(seq: Long): DataFrame = {
-    require(mergeOnRead, "filesAsOf requires a merge-on-read catalog")
     requireV2Layout()
     val base = readOr("files", storedSchema)
     val horizon = vacuumHorizon()
@@ -1940,7 +1761,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * ordered by sequence. The log IS the mutation journal, so history
     * costs one narrow projection of it. */
   def logHistory(): DataFrame = {
-    require(mergeOnRead, "logHistory requires a merge-on-read catalog")
     if (!logNonEmpty())
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
@@ -1962,7 +1782,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** Fold the delta log into the base table and truncate it (merge-on-read
     * compaction). Only the `namespace=` partitions holding logged rows —
     * old homes of every logged fid plus new homes of upserts — are
-    * rewritten, via the same scoped swap mutations use in COW mode. Safe
+    * rewritten, via the partition-scoped swap [[rewriteFilesScoped]]. Safe
     * against concurrent readers: after the swap the base already equals
     * the merged view, so re-applying the not-yet-deleted log is a no-op
     * (upserts match the base rows they shadow; tombstoned fids are gone). */
@@ -1977,7 +1797,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private[metacat] var onCompactMidpoint: () => Unit = () => ()
 
   def compactFilesLog(force: Boolean = false): Unit = {
-    if (!mergeOnRead) return
     // compaction truncates every log and restarts sequences at 1 — it
     // destroys EVERY pinned version's as-of reachability, so any live
     // pin refuses it (the vacuum-vs-pin rule's absolute case)
@@ -2073,7 +1892,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * seq (0 = empty log, nothing to do). Safe under concurrent writers;
     * must not race [[compactFilesLog]] (see the protocol notes above). */
   def checkpointFilesLog(): Long = {
-    require(mergeOnRead, "checkpointFilesLog requires a merge-on-read catalog")
     filesLog.checkpoint()
   }
 
@@ -2082,7 +1900,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * with writers; historical reads racing this degrade to the horizon
     * (the Delta `VERSION AS OF` vs VACUUM race, documented above). */
   def vacuumFilesLog(force: Boolean = false): Long = {
-    require(mergeOnRead, "vacuumFilesLog requires a merge-on-read catalog")
     requirePinsAllowVacuum("files", filesLog, _.files, force)
     filesLog.vacuum()
   }
@@ -2090,7 +1907,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** checkpoint the MEMBERSHIP log (latest-per-pair + latest wildcard per
     * dataset); same concurrency contract as [[checkpointFilesLog]] */
   def checkpointMembersLog(): Long = {
-    require(mergeOnRead, "checkpointMembersLog requires a merge-on-read catalog")
     membersLog.checkpoint()
   }
 
@@ -2098,7 +1914,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * [[vacuumFilesLog]] (the membership log has no time-travel surface,
     * so the only loss is per-mutation journal granularity) */
   def vacuumMembersLog(force: Boolean = false): Long = {
-    require(mergeOnRead, "vacuumMembersLog requires a merge-on-read catalog")
     requirePinsAllowVacuum("members", membersLog, _.members, force)
     membersLog.vacuum()
   }
@@ -2106,14 +1921,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** checkpoint the PROVENANCE-EDGE log (latest-per-pair + latest
     * wildcard per side); same contract as [[checkpointFilesLog]] */
   def checkpointEdgesLog(): Long = {
-    require(mergeOnRead, "checkpointEdgesLog requires a merge-on-read catalog")
     edgesLog.checkpoint()
   }
 
   /** vacuum the edge log's checkpointed prefix; same contract as
     * [[vacuumMembersLog]] */
   def vacuumEdgesLog(force: Boolean = false): Long = {
-    require(mergeOnRead, "vacuumEdgesLog requires a merge-on-read catalog")
     requirePinsAllowVacuum("edges", edgesLog, _.edges, force)
     edgesLog.vacuum()
   }
@@ -2121,14 +1934,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** checkpoint the ADMIN (dimension) log — latest record per
     * (table, key); same concurrency contract as [[checkpointFilesLog]] */
   def checkpointAdminLog(): Long = {
-    require(mergeOnRead, "checkpointAdminLog requires a merge-on-read catalog")
     adminLog.checkpoint()
   }
 
   /** vacuum the admin log's checkpointed prefix; same contract as
     * [[vacuumMembersLog]] */
   def vacuumAdminLog(force: Boolean = false): Long = {
-    require(mergeOnRead, "vacuumAdminLog requires a merge-on-read catalog")
     requirePinsAllowVacuum("admin", adminLog, _.admin, force)
     adminLog.vacuum()
   }
@@ -2153,7 +1964,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** Register `name` as a pin on version `v` (from [[snapshot]]); the
     * version must still be readable (no leg below its vacuum horizon). */
   def pin(name: String, v: CatalogVersion): Unit = {
-    require(mergeOnRead, "pin requires a merge-on-read catalog")
     require(name.nonEmpty && name.matches("[A-Za-z0-9._-]+"),
       s"invalid pin name: $name")
     pinLegs.foreach { case (leg, log, get) =>
@@ -2174,7 +1984,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** drop a pin; returns false when it did not exist */
   def unpin(name: String): Boolean = {
-    require(mergeOnRead, "unpin requires a merge-on-read catalog")
     fsOf(pinsDir).delete(new org.apache.hadoop.fs.Path(pinsDir, name), false)
   }
 
@@ -2222,14 +2031,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** count of pins whose history a forced maintenance already destroyed
     * (any leg below its log's current vacuum horizon) — fsck surface */
-  private[metacat] def stalePinCount(): Long =
-    if (!mergeOnRead) 0L
-    else {
-      val horizons = pinLegs.map { case (_, log, get) =>
-        (log.vacuumHorizon(), get) }
-      pins().count { case (_, v) =>
-        horizons.exists { case (h, get) => get(v) > 0L && get(v) < h } }.toLong
-    }
+  private[metacat] def stalePinCount(): Long = {
+    val horizons = pinLegs.map { case (_, log, get) =>
+      (log.vacuumHorizon(), get) }
+    pins().count { case (_, v) =>
+      horizons.exists { case (h, get) => get(v) > 0L && get(v) < h } }.toLong
+  }
 
   // ---- one catalog version across all four logs ----
 
@@ -2250,7 +2057,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * `maxAttempts` passes instead of returning a cut it could not
     * validate. */
   def snapshot(maxAttempts: Int = 64): CatalogVersion = {
-    require(mergeOnRead, "snapshot requires a merge-on-read catalog")
     var prev: CatalogVersion = null
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -2312,7 +2118,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   /** the dataset dimension at a captured [[snapshot]] — admin-log time
     * travel, same vacuum-horizon bound as the other logs */
   def datasetsAsOf(v: CatalogVersion): DataFrame = {
-    require(mergeOnRead, "datasetsAsOf requires a merge-on-read catalog")
     val seq = v.admin
     val base = readOr("datasets", DatasetsSchema)
     val horizon = adminLog.vacuumHorizon()
@@ -2327,7 +2132,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       .drop("metadata_json")
   }
 
-  /** Delta-log integrity rows for [[Fsck.audit]] (merge-on-read only):
+  /** Delta-log integrity rows for [[Fsck.audit]]:
     *
     *  - `mor_tombstone_unknown_fid` — delete records whose fid is neither
     *    in the base table nor upserted anywhere in the log (a tombstone
@@ -2442,24 +2247,14 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"metadata is not a JSON object: $mj")
   }
 
-  /** the namespaces holding any of `fids` — one column-pruned scan, used
-    * to scope a mutation's rewrite to the partitions it touches */
-  private def namespacesOf(fids: Seq[String]): Seq[String] =
-    storedFiles().filter(col("fid").isin(fids: _*))
-      .select("namespace").distinct()
-      .collect().map(_.getString(0)).toSeq
-
-  /** Partition-scoped copy-on-write: stage ONLY the touched `namespace=`
-    * partitions of the updated frame and swap them individually, leaving
-    * every other partition's files untouched on disk.
-    *
-    * This is the scale fix for mutation amplification: retiring one file
-    * used to rewrite the entire files table (at a 100× catalog that is a
-    * 15M-row rewrite per admin action); scoped, the write cost — and the
-    * read feeding it, via partition pruning on the namespace filter —
-    * scales with the touched partitions only. Same posture as a
-    * lakehouse engine's partition-level replaceWhere/merge-on-read
-    * compaction, without requiring those libraries here.
+  /** Partition-scoped rewrite of the files base table (compaction):
+    * stage ONLY the touched `namespace=` partitions of the updated frame
+    * and swap them individually, leaving every other partition's files
+    * untouched on disk — the write cost, and the read feeding it via
+    * partition pruning on the namespace filter, scale with the touched
+    * partitions only. Same posture as a lakehouse engine's
+    * partition-level replaceWhere/merge-on-read compaction, without
+    * requiring those libraries here.
     *
     * A touched namespace whose updated frame has no rows (all its files
     * removed/moved away) has its partition directory deleted. Backups are
@@ -2477,8 +2272,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     if (fs.exists(old)) fs.delete(old, true)
     // every base rewrite restores the SORTED shred layout (r14): declare
     // appends land in arrival order (mutation-sized, not worth a sort
-    // stage per commit), and compaction/COW — the operations that rewrite
-    // whole partitions anyway — re-sort them on the hot shred keys so
+    // stage per commit), and compaction — which rewrites whole
+    // partitions anyway — re-sorts them on the hot shred keys so
     // selective typed predicates prune row groups by min/max instead of
     // reading every group (the Delta OPTIMIZE-ZORDER posture; measured
     // 7.2× by ShredProbe, flat under 4× growth). sortWithinPartitions:

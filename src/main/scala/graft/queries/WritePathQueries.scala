@@ -43,12 +43,12 @@ object WritePathQueries {
         k.as("k"))
   }
 
-  /** The 10-step mutation scenario, parameterized by catalog so the SAME
-    * DuckDB oracle checks both storage modes: copy-on-write (partition
-    * swaps) and merge-on-read (delta-log + compaction). `compactMidway`
-    * folds the MOR log back into the base between the row mutations and
-    * the hard deletes, so the gate exercises log-only reads, compaction,
-    * and post-compaction logging in one pass. */
+  /** The 10-step mutation scenario, parameterized by maintenance so the
+    * SAME DuckDB oracle checks the catalog's delta logs with no
+    * maintenance, with compaction and with checkpoint + vacuum.
+    * `compactMidway` folds the logs back into the base between the row
+    * mutations and the hard deletes, so the gate exercises log-only
+    * reads, compaction, and post-compaction logging in one pass. */
   private def writePathScenario(s: SparkSession, dir: String,
       cat: ParquetCatalog, compactMidway: Boolean,
       ckptMidway: Boolean = false): DataFrame = {
@@ -90,7 +90,7 @@ object WritePathQueries {
         parents = Some(Seq(fidOf(8))))
       cat.moveNamespace((140 until 150).map(fidOf), "wmoved")
 
-      // MOR gate: fold the delta log into the base here — everything
+      // compaction gate: fold the delta log into the base here — everything
       // below then runs against a freshly compacted table + new log
       if (compactMidway) cat.compactFilesLog()
       // CKPT gate: checkpoint + vacuum instead — the raw commit dirs the
@@ -132,14 +132,14 @@ object WritePathQueries {
         compactMidway = false)
     }),
 
-    // same scenario, same oracle, merge-on-read storage: every files-table
-    // mutation is an O(touched-rows) log append, with one mid-scenario
-    // compaction — the mutation path that stays cheap at a 100 TB catalog
+    // same scenario, same oracle, with one mid-scenario compaction: every
+    // files-table mutation is an O(touched-rows) log append, and the
+    // compaction folds the logs back into the base partitions
     "mql_write_path_mor" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpm_")
       graft.TempDirs.register(rootPath)
       writePathScenario(s, dir,
-        new ParquetCatalog(s, rootPath.toString, mergeOnRead = true),
+        new ParquetCatalog(s, rootPath.toString),
         compactMidway = true)
     }),
 
@@ -152,7 +152,7 @@ object WritePathQueries {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpc_")
       graft.TempDirs.register(rootPath)
       writePathScenario(s, dir,
-        new ParquetCatalog(s, rootPath.toString, mergeOnRead = true),
+        new ParquetCatalog(s, rootPath.toString),
         compactMidway = false, ckptMidway = true)
     }),
 
@@ -167,7 +167,7 @@ object WritePathQueries {
     "mql_write_path_members" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpme_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.createDataset("wds", "base")
       cat.declareFiles(seedRows(s, dir), dataset = Some(("wds", "base")))
       cat.createDataset("wds", "even")
@@ -197,7 +197,7 @@ object WritePathQueries {
     "mql_write_path_members_asof" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpma_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.createDataset("wds", "base")
       cat.declareFiles(seedRows(s, dir), dataset = Some(("wds", "base")))
       cat.createDataset("wds", "even")
@@ -228,12 +228,12 @@ object WritePathQueries {
     "mql_write_path_edges" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpe_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.declareFiles(seedRows(s, dir))
       def k(c: String) = expr(s"CAST(substring($c, 2) AS INT)")
       def edges(mult: Int) = {
         // k > 0: orderkey 0 would make 0→0 a self-edge BOTH multipliers
-        // append (addProvenance appends blind, as the COW path always has)
+        // append (addProvenance does not deduplicate edges)
         val f = cat.files.select(col("fid"))
         f.as("a").join(f.as("b"),
             k("a.fid") * mult === k("b.fid") && k("a.fid") > 0, "inner")
@@ -266,8 +266,8 @@ object WritePathQueries {
     "mql_write_path_multi" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpx_")
       graft.TempDirs.register(rootPath)
-      val a = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
-      val b = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val a = new ParquetCatalog(s, rootPath.toString)
+      val b = new ParquetCatalog(s, rootPath.toString)
       val rows = seedRows(s, dir)
       a.createDataset("wds", "base")
       a.declareFiles(rows, dataset = Some(("wds", "base")))
@@ -281,7 +281,7 @@ object WritePathQueries {
       b.compactFilesLog() // fold both writers' commits into the base
       a.updateFile(fidOf(7), size = Some(7777L)) // post-compaction seq 1 (a)
       // a THIRD fresh instance reads the converged state back
-      val c = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val c = new ParquetCatalog(s, rootPath.toString)
       c.files.select(col("fid"), col("namespace"), col("size"), col("retired"),
         expr("try_variant_get(metadata, \"$['core.run']\", 'long')").as("run"),
         expr("try_variant_get(metadata, \"$['opt.b1']\", 'string')").as("b1"),
@@ -297,7 +297,7 @@ object WritePathQueries {
     "stream_catalog_ingest" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_sci_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.createDataset("wds", "base")
       val rows = seedRows(s, dir).drop("k")
       graft.streaming.CatalogIngestStream.runDeclareToCatalog(
@@ -321,7 +321,7 @@ object WritePathQueries {
     "stream_catalog_ingest_dedup" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_scid_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.createDataset("wds", "base")
       val rows = seedRows(s, dir).drop("k")
       graft.streaming.CatalogIngestStream.runDedupedDeclareToCatalog(
@@ -346,7 +346,7 @@ object WritePathQueries {
     "mql_write_path_asof" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpt_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       val rows = seedRows(s, dir)
       cat.createDataset("wds", "base")
       cat.declareFiles(rows, dataset = Some(("wds", "base")))
@@ -385,7 +385,7 @@ object WritePathQueries {
       import s.implicits._
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpp_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       val rows = seedRows(s, dir)
       cat.createDataset("wds", "base")
       cat.declareFiles(rows, dataset = Some(("wds", "base")))
@@ -428,7 +428,7 @@ object WritePathQueries {
     "mql_write_path_snapshot" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wps_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       val rows = seedRows(s, dir)
       cat.createDataset("wds", "base")
       cat.declareFiles(rows, dataset = Some(("wds", "base")))
@@ -488,7 +488,7 @@ object WritePathQueries {
     "mql_write_path_txn" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpt_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       val rows = seedRows(s, dir)
       cat.createDataset("wds", "base")
       cat.declareFiles(rows, dataset = Some(("wds", "base")))
@@ -592,7 +592,7 @@ object WritePathQueries {
     "mql_write_path_dims" -> ((s, dir) => {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_wpd_")
       graft.TempDirs.register(rootPath)
-      val cat = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val cat = new ParquetCatalog(s, rootPath.toString)
       cat.createNamespace("adm", owner = "alice", description = "admin ns")
       cat.createNamespace("adm2", owner = "bob")
       val dupNs =
@@ -622,7 +622,7 @@ object WritePathQueries {
       cat.updateDataset("adm", "c",
         metadataJson = Some("""{"ds.only":"x"}"""), metadataMode = "replace")
       cat.removeDataset("adm", "b") // one commit: dataset + edge a->b
-      val c2 = new ParquetCatalog(s, rootPath.toString, mergeOnRead = true)
+      val c2 = new ParquetCatalog(s, rootPath.toString)
       val ds = c2.datasets.select(
         lit("dataset").as("entity"), col("namespace"), col("name"),
         concat(col("frozen").cast("string"), lit(":"),

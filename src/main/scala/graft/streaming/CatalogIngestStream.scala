@@ -22,9 +22,9 @@ import graft.metacat.ParquetCatalog
   *
   * Scale shape: per batch the work is one broadcast-sized anti-join
   * against the live fid set plus the appends the batch itself requires —
-  * O(batch) writes under merge-on-read or plain COW appends, never a
-  * table rewrite; the streaming state is the checkpoint's file ledger
-  * only (no Spark state store is involved).
+  * O(batch) appends and delta-log commits, never a table rewrite; the
+  * streaming state is the checkpoint's file ledger only (no Spark state
+  * store is involved).
   */
 object CatalogIngestStream {
 

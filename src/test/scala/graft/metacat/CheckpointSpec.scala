@@ -55,7 +55,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
 
   test("checkpoint + vacuum preserve the live view and bound the raw log") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 8)
     for (k <- 0 until 6)
       cat.updateFileMeta(Seq(s"W${k % 8}"), s"""{"opt.m$k":$k}""", mode = "update")
@@ -68,21 +68,21 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     assert(c == 8L)
     // pre-vacuum: raw segments still present, live view unchanged
     assert(seqDirs(root, "files_log").sorted == (1L to 8L))
-    assert(liveState(new ParquetCatalog(spark, root, mergeOnRead = true)) == before)
+    assert(liveState(new ParquetCatalog(spark, root)) == before)
 
     assert(cat.vacuumFilesLog() == 8L)
     // raw prefix + its claims gone; the checkpoint carries the state
     assert(seqDirs(root, "files_log").isEmpty)
     assert(seqDirs(root, "files_log_claims").isEmpty)
     assert(seqDirs(root, "files_log_ckpt") == Seq(8L))
-    assert(liveState(new ParquetCatalog(spark, root, mergeOnRead = true)) == before)
+    assert(liveState(new ParquetCatalog(spark, root)) == before)
 
     // allocation continues densely past the vacuumed prefix, and a fresh
     // instance folds checkpoint + new segments correctly
     cat.updateFileMeta(Seq("W0"), """{"opt.post":1}""", mode = "update")
     assert(cat.currentLogSeq() == 9L)
     assert(seqDirs(root, "files_log") == Seq(9L))
-    val after = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val after = new ParquetCatalog(spark, root)
     val w0 = after.files.filter(col("fid") === "W0")
       .select(to_json(col("metadata"))).collect().head.getString(0)
     assert(w0.contains("\"opt.post\":1") && w0.contains("\"opt.m0\":0"))
@@ -90,7 +90,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
 
   test("time travel: full history pre-vacuum, horizon-bounded after") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 4)
     cat.updateFileMeta(Seq("W1"), """{"opt.v":1}""", mode = "update") // seq 1
     val mid = cat.currentLogSeq()
@@ -122,7 +122,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
 
   test("checkpoint is idempotent; vacuum keeps only the newest checkpoint") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 3)
     cat.updateFileMeta(Seq("W0"), """{"opt.a":1}""", mode = "update")
     assert(cat.checkpointFilesLog() == 1L)
@@ -132,15 +132,15 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     assert(seqDirs(root, "files_log_ckpt").sorted == Seq(1L, 2L))
     cat.vacuumFilesLog()
     assert(seqDirs(root, "files_log_ckpt") == Seq(2L))
-    val live = new ParquetCatalog(spark, root, mergeOnRead = true).files
+    val live = new ParquetCatalog(spark, root).files
       .select(to_json(col("metadata"))).collect().map(_.getString(0)).mkString
     assert(live.contains("\"opt.a\":1") && live.contains("\"opt.b\":2"))
   }
 
   test("commits keep flowing during checkpoint+vacuum maintenance (no exclusive window)") {
     val root = newRoot()
-    val writer = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val maint = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val writer = new ParquetCatalog(spark, root)
+    val maint = new ParquetCatalog(spark, root)
     declare(writer, 4)
     val nPatches = 10
     val burst = Future {
@@ -156,7 +156,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     maint.checkpointFilesLog(); maint.vacuumFilesLog()
 
     // serializability witness: every writer patch survives maintenance
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val meta = fresh.files.select(to_json(col("metadata")))
       .collect().map(_.getString(0)).mkString
     for (k <- 0 until nPatches)
@@ -172,7 +172,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
 
   test("compaction clears checkpoints and restarts the sequence space") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 3)
     cat.updateFileMeta(Seq("W0"), """{"opt.x":1}""", mode = "update")
     cat.checkpointFilesLog()
@@ -182,14 +182,14 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     assert(cat.currentLogSeq() == 0L)
     cat.updateFileMeta(Seq("W1"), """{"opt.y":2}""", mode = "update")
     assert(cat.currentLogSeq() == 1L) // restarted, no poison frontier
-    val live = new ParquetCatalog(spark, root, mergeOnRead = true).files
+    val live = new ParquetCatalog(spark, root).files
       .select(to_json(col("metadata"))).collect().map(_.getString(0)).mkString
     assert(live.contains("\"opt.x\":1") && live.contains("\"opt.y\":2"))
   }
 
   test("fsck: vacuumed log is green; real gaps and partial vacuums still flag") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 4)
     for (k <- 0 until 4)
       cat.updateFileMeta(Seq(s"W$k"), s"""{"opt.f$k":$k}""", mode = "update")
@@ -199,7 +199,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     cat.updateFileMeta(Seq("W1"), """{"opt.h":9}""", mode = "update") // seq 6
     def issues(c: ParquetCatalog): Map[String, Long] =
       Fsck.audit(c).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val clean = issues(new ParquetCatalog(spark, root, mergeOnRead = true))
+    val clean = issues(new ParquetCatalog(spark, root))
     assert(clean("mor_seq_gap") == 0L, s"vacuumed prefix misread as a gap: $clean")
     assert(clean("mor_orphaned_claim") == 0L && clean("mor_unclaimed_publish") == 0L)
 
@@ -212,7 +212,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     s5.listFiles().foreach(_.delete()); s5.delete()
     assert(new java.io.File(s"$root/files_log_claims/" + f"s${5L}%020d")
       .setLastModified(System.currentTimeMillis() - 200000L))
-    val gapped = issues(new ParquetCatalog(spark, root, mergeOnRead = true))
+    val gapped = issues(new ParquetCatalog(spark, root))
     assert(gapped("mor_seq_gap") == 1L)
 
     // PARTIAL vacuum (crashed mid-delete): rebuild, checkpoint, then
@@ -220,7 +220,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     // does not engage (raw still reaches below the ckpt) and every
     // missing seq flags
     val root2 = newRoot()
-    val cat2 = new ParquetCatalog(spark, root2, mergeOnRead = true)
+    val cat2 = new ParquetCatalog(spark, root2)
     declare(cat2, 3)
     for (k <- 0 until 3)
       cat2.updateFileMeta(Seq(s"W$k"), s"""{"opt.p$k":$k}""", mode = "update")
@@ -229,7 +229,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     s2.listFiles().foreach(_.delete()); s2.delete()
     assert(new java.io.File(s"$root2/files_log_claims/" + f"s${2L}%020d")
       .setLastModified(System.currentTimeMillis() - 200000L))
-    val partial = issues(new ParquetCatalog(spark, root2, mergeOnRead = true))
+    val partial = issues(new ParquetCatalog(spark, root2))
     assert(partial("mor_seq_gap") == 1L, s"partial vacuum not flagged: $partial")
   }
 

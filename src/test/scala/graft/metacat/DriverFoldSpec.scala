@@ -89,8 +89,8 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
     import spark.implicits._
     val rnd = new scala.util.Random(registerSeed(seed))
     val root = registerRoot(Files.createTempDirectory("graft-driverfold-").toString)
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val other = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
+    val other = new ParquetCatalog(spark, root)
     val fids = (0 until 24).map(i => f"D$i%03d")
     val dss = Seq("d0", "d1", "d2")
     dss.foreach(cat.createDataset("fold", _))
@@ -215,7 +215,7 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
   test("addTo and removeFrom on a non-empty members log stay within a fixed job budget") {
     import spark.implicits._
     val root = registerRoot(Files.createTempDirectory("graft-foldjobs-").toString)
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     val fids = (0 until 200).map(i => f"J$i%04d")
     cat.createDataset("fold", "jobs")
     cat.declareFiles(declareRows(fids), dataset = Some(("fold", "jobs")))

@@ -8,16 +8,17 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-/** The PROVENANCE-EDGE delta log (`ParquetCatalog.edgesLog`): in MOR
-  * mode addProvenance / updateFile(parents/children) / removeFiles
-  * commit edge records under the shared OCC protocol — hard deletes
+/** The PROVENANCE-EDGE delta log (`ParquetCatalog.edgesLog`):
+  * addProvenance / updateFile(parents/children) / removeFiles commit
+  * edge records under the shared OCC protocol — hard deletes
   * retire every touching edge with two one-side wildcards, and a
   * replace-parents is ONE atomic commit (wildcard + new edges at a
   * single seq, adds surviving their own wildcard via the fold's `>=`).
   *
   * Invariants proven here:
-  *  - MOR folded view == COW rewrites across a seeded mutation storm,
-  *    before and after compaction
+  *  - folded view == an in-memory copy-on-write model (an edge multiset
+  *    each mutation rewrites) across a seeded mutation storm, before and
+  *    after compaction
   *  - replace atomicity: the re-added edge that the wildcard also covers
   *    survives (same-seq semantics), older edges die, later adds live
   *  - two concurrent writers' disjoint edge adds all survive
@@ -48,43 +49,47 @@ class EdgesLogSpec extends SparkTestBase {
       .collect().map(_.getString(0)).sorted.toSeq
 
   test("differential storm: MOR folded edges == COW rewrites, pre and post compaction") {
-    val cow = new ParquetCatalog(spark, newRoot())
     val morRoot = newRoot()
-    val mor = new ParquetCatalog(spark, morRoot, mergeOnRead = true)
-    for (cat <- Seq(cow, mor)) {
-      declare(cat, 0 until 30)
-      cat.addProvenance(edgeDf((1 until 15).map(i => (i - 1, i))))
+    val mor = new ParquetCatalog(spark, morRoot)
+    declare(mor, 0 until 30)
+    mor.addProvenance(edgeDf((1 until 15).map(i => (i - 1, i))))
+    // the model: the live (parent, child) edges as a multiset —
+    // addProvenance appends without deduplicating
+    var model: Seq[(Int, Int)] = (1 until 15).map(i => (i - 1, i))
+    val r = new scala.util.Random(11L)
+    for (_ <- 0 until 25) r.nextInt(4) match {
+      case 0 =>
+        val e = (r.nextInt(30), r.nextInt(30))
+        mor.addProvenance(edgeDf(Seq(e)))
+        model :+= e
+      case 1 => // distinct endpoints: updateFile rejects self-edges
+        val i = r.nextInt(30)
+        val p = (i + 1 + r.nextInt(29)) % 30
+        mor.updateFile(f"E$i%04d", parents = Some(Seq(f"E$p%04d")),
+          mode = "replace")
+        model = model.filterNot(_._2 == i) :+ ((p, i))
+      case 2 => // add-update: adds the edge unless it is already live
+        val i = r.nextInt(30)
+        val c = (i + 1 + r.nextInt(29)) % 30
+        mor.updateFile(f"E$i%04d", children = Some(Seq(f"E$c%04d")))
+        if (!model.contains((i, c))) model :+= ((i, c))
+      case 3 => // hard delete + re-declare keeps the fid space stable
+        val i = r.nextInt(30)
+        mor.removeFiles(Seq(f"E$i%04d"))
+        declare(mor, Seq(i))
+        model = model.filterNot { case (p, c) => p == i || c == i }
     }
-    def storm(cat: ParquetCatalog, r: scala.util.Random): Unit =
-      for (_ <- 0 until 25) r.nextInt(4) match {
-        case 0 => cat.addProvenance(edgeDf(Seq((r.nextInt(30), r.nextInt(30)))))
-        case 1 => // distinct endpoints: updateFile rejects self-edges
-          val i = r.nextInt(30)
-          cat.updateFile(f"E$i%04d",
-            parents = Some(Seq(f"E${(i + 1 + r.nextInt(29)) % 30}%04d")),
-            mode = "replace")
-        case 2 =>
-          val i = r.nextInt(30)
-          cat.updateFile(f"E$i%04d",
-            children = Some(Seq(f"E${(i + 1 + r.nextInt(29)) % 30}%04d")))
-        case 3 => // hard delete + re-declare keeps the fid space stable
-          val i = r.nextInt(30)
-          cat.removeFiles(Seq(f"E$i%04d"))
-          declare(cat, Seq(i))
-      }
-    storm(cow, new scala.util.Random(11L))
-    storm(mor, new scala.util.Random(11L))
-    val expect = edges(cow)
-    assert(edges(mor) == expect, "MOR edge view diverged from the COW oracle")
+    val expect = model.map { case (p, c) => f"E$p%04d>E$c%04d" }.sorted
+    assert(edges(mor) == expect, "MOR edge view diverged from the model")
     mor.compactFilesLog()
     assert(edges(mor) == expect, "compaction changed the edge view")
     assert(!new java.io.File(s"$morRoot/edges_log").exists())
-    assert(edges(new ParquetCatalog(spark, morRoot, mergeOnRead = true)) == expect)
+    assert(edges(new ParquetCatalog(spark, morRoot)) == expect)
   }
 
   test("replace-parents is atomic: same-seq re-add survives its own wildcard") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 0 until 8)
     cat.addProvenance(edgeDf(Seq((1, 4), (2, 4), (3, 4), (4, 5))))
     // parents of 4 := {2, 6}: the wildcard retires 1→4/2→4/3→4, the adds
@@ -96,13 +101,13 @@ class EdgesLogSpec extends SparkTestBase {
     cat.updateFile("E0004", parents = Some(Seq("E0007"))) // update mode
     assert(edges(cat).contains("E0007>E0004"))
     // and the whole thing replays identically from a fresh instance
-    assert(edges(new ParquetCatalog(spark, root, mergeOnRead = true)) ==
+    assert(edges(new ParquetCatalog(spark, root)) ==
       Seq("E0002>E0004", "E0004>E0005", "E0006>E0004", "E0007>E0004"))
   }
 
   test("hard-delete wildcards retire both directions; re-declare resurrects adds") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 0 until 6)
     cat.addProvenance(edgeDf(Seq((0, 3), (3, 1), (2, 3), (4, 5))))
     cat.removeFiles(Seq("E0003"))
@@ -116,7 +121,7 @@ class EdgesLogSpec extends SparkTestBase {
 
   test("edge time travel: lineage snapshots by seq") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declare(cat, 0 until 6)
     cat.addProvenance(edgeDf(Seq((0, 1), (1, 2), (2, 3)))) // base appends
     cat.removeFiles(Seq("E0002")) // seq 1+2 (wildcards) + files tombstone
@@ -136,8 +141,8 @@ class EdgesLogSpec extends SparkTestBase {
 
   test("two concurrent writers: disjoint edge adds all survive; fsck protocol green") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     declare(a, 0 until 24)
     // seed the log so both writers take the commit path (not base appends)
     a.removeFiles(Seq("E0023"))
@@ -148,7 +153,7 @@ class EdgesLogSpec extends SparkTestBase {
       for (k <- 12 until 22) b.updateFile(f"E$k%04d", children = Some(Seq("E0011")))
     }
     Await.result(Future.sequence(Seq(burstA, burstB)), 10.minutes)
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val got = edges(fresh)
     for (k <- 1 until 11)
       assert(got.contains(f"E0000>E$k%04d"), s"writer A's edge to $k lost")
@@ -163,8 +168,8 @@ class EdgesLogSpec extends SparkTestBase {
 
   test("commits keep flowing during edges-log checkpoint+vacuum maintenance") {
     val root = newRoot()
-    val writer = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val maint = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val writer = new ParquetCatalog(spark, root)
+    val maint = new ParquetCatalog(spark, root)
     declare(writer, 0 until 14)
     writer.removeFiles(Seq("E0013")) // seed the log
     val burst = Future {
@@ -175,7 +180,7 @@ class EdgesLogSpec extends SparkTestBase {
     }
     Await.result(Future.sequence(Seq(burst, maintenance)), 10.minutes)
     maint.checkpointEdgesLog(); maint.vacuumEdgesLog()
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val got = edges(fresh)
     for (k <- 1 until 13)
       assert(got.contains(f"E0000>E$k%04d"), s"edge to $k lost during maintenance")

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The audit must actually DETECT corruption — the gate corpus is
   * consistent (all-zero counts), so this spec plants one violation of
   * every invariant in an in-memory catalog and asserts the exact
-  * per-check counts, plus delta-log corruption in a real MOR store. */
+  * per-check counts, plus an all-green audit of a real catalog after
+  * mutations and delta-log corruption planted in it. */
 class FsckSpec extends SparkTestBase {
 
   test("fsck counts each planted violation exactly once") {
@@ -99,18 +100,18 @@ class FsckSpec extends SparkTestBase {
     declareInto(cat)
     val got = Fsck.audit(cat).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.values.forall(_ == 0L), s"consistent catalog flagged: $got")
-    assert(got.size == 9)
+    assert(got.size == 25)
   }
 
   test("MOR delta-log audit: green when consistent, exact counts when corrupted") {
     val root = java.nio.file.Files.createTempDirectory("graft-fsck-mor-").toString
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     declareInto(cat) // seq 1 = retire, seq 2 = remove (tombstone)
     cat.updateFileMeta(Seq("Z00000003"), """{"opt.x":1}""") // seq 3
     val green = Fsck.audit(cat).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(green.size == 25,
-      s"expected 9 + 4 files-log + 3x3 members/edges/admin-log + declare-claims + txn + pins MOR checks, got $green")
-    assert(green.values.forall(_ == 0L), s"consistent MOR catalog flagged: $green")
+      s"expected 9 + 4 files-log + 3x3 members/edges/admin-log + declare-claims + txn + pins checks, got $green")
+    assert(green.values.forall(_ == 0L), s"consistent catalog flagged: $green")
 
     def seqName(s: Int) = "s" + ("0" * 18) + f"$s%02d"
     // corrupt 1: rewrite seq 2's tombstone to a fid that never existed

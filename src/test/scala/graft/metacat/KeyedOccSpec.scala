@@ -96,8 +96,8 @@ class KeyedOccSpec extends SparkTestBase with OccFailureCapture {
   test("catalog: disjoint-dataset membership storms from two writers all land; sidecars vacuumed") {
     import spark.implicits._
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     a.createDataset("kds", "da")
     a.createDataset("kds", "db")
     val rows = (0 until 12).map { i =>
@@ -118,7 +118,7 @@ class KeyedOccSpec extends SparkTestBase with OccFailureCapture {
       }
     }
     Await.result(Future.sequence(Seq(burst(a, "da"), burst(b, "db"))), 10.minutes)
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val got = fresh.filesDatasets
       .select(concat_ws("|", col("fid"), col("dataset_name")))
       .collect().map(_.getString(0)).sorted.toSeq

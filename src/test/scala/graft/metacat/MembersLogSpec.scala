@@ -8,7 +8,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-/** The MEMBERSHIP delta log (`ParquetCatalog.membersLog`): in MOR mode
+/** The MEMBERSHIP delta log (`ParquetCatalog.membersLog`):
   * addTo/removeFrom/removeFiles commit add/remove records under the same
   * OCC protocol as file-row mutations, and removeDataset retires a whole
   * dataset's membership with ONE wildcard tombstone — no membership-table
@@ -16,8 +16,9 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * a concurrent writer's append.
   *
   * Invariants proven here:
-  *  - MOR's folded view is IDENTICAL to COW's rewrites across a seeded
-  *    random mutation storm (the differential oracle), before and after
+  *  - the folded view is IDENTICAL to an in-memory copy-on-write model
+  *    (a pair set each mutation rewrites) across a seeded random
+  *    mutation storm (the differential oracle), before and after
   *    compaction
   *  - wildcard precedence: remove_all kills base rows AND pair records
   *    below it; later adds out-sequence it
@@ -54,42 +55,46 @@ class MembersLogSpec extends SparkTestBase {
       .collect().map(_.getString(0)).sorted.toSeq
 
   test("differential storm: MOR folded view == COW rewrites, pre and post compaction") {
-    val cow = new ParquetCatalog(spark, newRoot())
     val morRoot = newRoot()
-    val mor = new ParquetCatalog(spark, morRoot, mergeOnRead = true)
+    val mor = new ParquetCatalog(spark, morRoot)
     val dss = Seq("d0", "d1", "d2")
-    for (cat <- Seq(cow, mor)) {
-      dss.foreach(cat.createDataset("wds", _))
-      declare(cat, 0 until 40, ds = Some(("wds", "d0")))
+    dss.foreach(mor.createDataset("wds", _))
+    declare(mor, 0 until 40, ds = Some(("wds", "d0")))
+    // the model: the live (fid index, dataset) pairs, rewritten per mutation
+    var model: Set[(Int, String)] = (0 until 40).map(i => (i, "d0")).toSet
+    val r = new scala.util.Random(7L)
+    for (_ <- 0 until 30) r.nextInt(4) match {
+      case 0 =>
+        val fids = Seq.fill(4)(r.nextInt(40)); val d = dss(r.nextInt(3))
+        mor.addTo(fidSet(mor, fids), "wds", d)
+        model ++= fids.map((_, d))
+      case 1 =>
+        val fids = Seq.fill(3)(r.nextInt(40)); val d = dss(r.nextInt(3))
+        mor.removeFrom(fidSet(mor, fids), "wds", d)
+        model --= fids.map((_, d))
+      case 2 =>
+        val d = dss(r.nextInt(3))
+        mor.removeDataset("wds", d); mor.createDataset("wds", d)
+        model = model.filterNot(_._2 == d)
+      case 3 => // hard delete + re-declare keeps the fid space stable
+        val i = r.nextInt(40)
+        mor.removeFiles(Seq(f"M$i%04d"))
+        declare(mor, Seq(i), ds = Some(("wds", "d0")))
+        model = model.filterNot(_._1 == i) + ((i, "d0"))
     }
-    // one RNG per catalog, same seed: identical mutation schedules
-    def storm(cat: ParquetCatalog, r: scala.util.Random): Unit =
-      for (_ <- 0 until 30) r.nextInt(4) match {
-        case 0 => cat.addTo(fidSet(cat, Seq.fill(4)(r.nextInt(40))), "wds", dss(r.nextInt(3)))
-        case 1 => cat.removeFrom(fidSet(cat, Seq.fill(3)(r.nextInt(40))), "wds", dss(r.nextInt(3)))
-        case 2 =>
-          val d = dss(r.nextInt(3))
-          cat.removeDataset("wds", d); cat.createDataset("wds", d)
-        case 3 => // hard delete + re-declare keeps the fid space stable
-          val i = r.nextInt(40)
-          cat.removeFiles(Seq(f"M$i%04d"))
-          declare(cat, Seq(i), ds = Some(("wds", "d0")))
-      }
-    storm(cow, new scala.util.Random(7L))
-    storm(mor, new scala.util.Random(7L))
-    val expect = members(cow)
-    assert(members(mor) == expect, "MOR view diverged from the COW oracle")
+    val expect = model.toSeq.map { case (i, d) => f"M$i%04d|wds|$d" }.sorted
+    assert(members(mor) == expect, "MOR view diverged from the model")
     // fold everything into the base: view unchanged, log gone, and a
     // FRESH instance (no caches) agrees
     mor.compactFilesLog()
     assert(members(mor) == expect, "compaction changed the membership view")
     assert(!new java.io.File(s"$morRoot/members_log").exists())
-    assert(members(new ParquetCatalog(spark, morRoot, mergeOnRead = true)) == expect)
+    assert(members(new ParquetCatalog(spark, morRoot)) == expect)
   }
 
   test("wildcard precedence and resurrect-by-declare") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("wds", "a")
     declare(cat, 0 until 10, ds = Some(("wds", "a")))
     // logged remove shadows the base pair; re-declare resurrects it
@@ -112,8 +117,8 @@ class MembersLogSpec extends SparkTestBase {
 
   test("two concurrent writers: disjoint addTo bursts all survive") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     a.createDataset("wds", "da")
     a.createDataset("wds", "db")
     declare(a, 0 until 24)
@@ -124,7 +129,7 @@ class MembersLogSpec extends SparkTestBase {
       for (k <- 12 until 24) b.addTo(fidSet(b, Seq(k)), "wds", "db")
     }
     Await.result(Future.sequence(Seq(burstA, burstB)), 10.minutes)
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val got = members(fresh)
     for (k <- 0 until 12)
       assert(got.contains(f"M$k%04d|wds|da"), s"writer A's add of $k lost")
@@ -140,8 +145,8 @@ class MembersLogSpec extends SparkTestBase {
 
   test("commits keep flowing during members-log checkpoint+vacuum maintenance") {
     val root = newRoot()
-    val writer = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val maint = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val writer = new ParquetCatalog(spark, root)
+    val maint = new ParquetCatalog(spark, root)
     writer.createDataset("wds", "da")
     declare(writer, 0 until 16)
     val burst = Future {
@@ -152,7 +157,7 @@ class MembersLogSpec extends SparkTestBase {
     }
     Await.result(Future.sequence(Seq(burst, maintenance)), 10.minutes)
     maint.checkpointMembersLog(); maint.vacuumMembersLog()
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     val got = members(fresh)
     for (k <- 0 until 16)
       assert(got.contains(f"M$k%04d|wds|da"), s"add of $k lost during maintenance")
@@ -164,7 +169,7 @@ class MembersLogSpec extends SparkTestBase {
 
   test("membership time travel: snapshots by seq, horizon-bounded after vacuum") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("wds", "a")
     declare(cat, 0 until 10, ds = Some(("wds", "a")))
     cat.removeFrom(fidSet(cat, Seq(1, 2)), "wds", "a") // seq 1
@@ -188,7 +193,7 @@ class MembersLogSpec extends SparkTestBase {
 
   test("compaction reclaims wildcard-tombstoned rows and restarts the seq space") {
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("wds", "a")
     cat.createDataset("wds", "keep")
     declare(cat, 0 until 20, ds = Some(("wds", "a")))
@@ -216,8 +221,8 @@ class MembersLogSpec extends SparkTestBase {
     // overlap in real time). Injected deterministically via the seam.
     for (logAlreadyNonEmpty <- Seq(false, true)) {
       val root = newRoot()
-      val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-      val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val a = new ParquetCatalog(spark, root)
+      val b = new ParquetCatalog(spark, root)
       a.createDataset("wds", "d")
       declare(a, 0 until 6)
       if (logAlreadyNonEmpty) { // prod the log so addTo takes the non-empty path
@@ -234,7 +239,7 @@ class MembersLogSpec extends SparkTestBase {
       }
       try a.addTo(fidSet(a, Seq(0, 1, 2)), "wds", "d")
       finally a.onBeforeMembersAppend = () => ()
-      val got = members(new ParquetCatalog(spark, root, mergeOnRead = true))
+      val got = members(new ParquetCatalog(spark, root))
         .filter(_.endsWith("|wds|d"))
       assert(got == Seq("M0000|wds|d", "M0001|wds|d", "M0002|wds|d"),
         s"adds lost to the racing wildcard (logAlreadyNonEmpty=$logAlreadyNonEmpty): $got")
@@ -247,8 +252,8 @@ class MembersLogSpec extends SparkTestBase {
     // check ran when the remove record did not exist yet, so the fresh
     // base row would silently lose to it; the re-validation repairs it.
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     a.createDataset("wds", "d")
     declare(a, 0 until 4)
     a.addTo(fidSet(a, Seq(1)), "wds", "d")
@@ -267,7 +272,7 @@ class MembersLogSpec extends SparkTestBase {
     }
     try a.addTo(fidSet(a, Seq(0)), "wds", "d")
     finally a.onBeforeMembersAppend = () => ()
-    val got = members(new ParquetCatalog(spark, root, mergeOnRead = true))
+    val got = members(new ParquetCatalog(spark, root))
       .filter(_.endsWith("|wds|d"))
     assert(got.contains("M0000|wds|d"),
       s"re-add lost to the racing pair remove: $got")

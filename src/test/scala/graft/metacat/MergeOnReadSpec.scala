@@ -8,16 +8,48 @@ import java.nio.file.Files
 /** Merge-on-read files-table storage: mutations append row versions /
   * tombstones to `files_log/` (O(rows touched), no base rewrite); reads
   * overlay latest-log-wins; [[ParquetCatalog.compactFilesLog]] folds the
-  * log back into the base. Storage mode must be invisible to readers —
-  * pinned here by driving the SAME mutation sequence through a COW and a
-  * MOR catalog and asserting identical live state at every checkpoint,
-  * plus the physical no-base-write guarantee COW cannot give. */
+  * log back into the base. The log must be invisible to readers — pinned
+  * here by driving the SAME mutation sequence through the catalog and an
+  * in-memory copy-on-write model (each mutation rewrites the model's row
+  * map) and asserting identical live state at every checkpoint, plus the
+  * physical no-base-write guarantee. */
 class MergeOnReadSpec extends SparkTestBase {
 
-  private def newCat(mor: Boolean): (ParquetCatalog, String) = {
-    val root = Files.createTempDirectory(s"graft-mor-$mor-").toString
-    (new ParquetCatalog(spark, root, mergeOnRead = mor), root)
+  private def newCat(): (ParquetCatalog, String) = {
+    val root = Files.createTempDirectory("graft-mor-").toString
+    (new ParquetCatalog(spark, root), root)
   }
+
+  /** one live file row of the model: metadata as key -> JSON value */
+  private case class MRow(namespace: String, name: String, size: Long,
+      retired: Boolean, meta: Map[String, String])
+
+  /** the model's rows after [[declare]]: the same rows it writes */
+  private def modelDeclare(ns: String, n: Int, tag: String): Map[String, MRow] =
+    (0 until n).map { i =>
+      s"$tag$i" -> MRow(ns, s"f_$tag$i.dat", 100L + i, retired = false,
+        Map("core.run" -> i.toString))
+    }.toMap
+
+  /** [[mutate]] applied to the model */
+  private def modelMutate(m: Map[String, MRow]): Map[String, MRow] = {
+    var out = m
+    for (f <- Seq("M1", "M3")) out = out.updated(f, out(f).copy(retired = true))
+    for (f <- Seq("M2", "M4")) out = out.updated(f, out(f).copy(
+      meta = out(f).meta ++ Map("core.run" -> "999", "opt.tag" -> "\"x\"")))
+    out = out.updated("M5", out("M5").copy(namespace = "moved"))
+    out = out.updated("M6", out("M6").copy(size = 4242L))
+    out - "M7"
+  }
+
+  /** the model's rows in the shape of [[state]] */
+  private def modelState(m: Map[String, MRow]): Seq[String] =
+    m.toSeq.map { case (fid, r) =>
+      val meta = r.meta.toSeq.sorted
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      Seq(fid, r.namespace, r.name, r.size.toString, r.retired.toString, meta)
+        .mkString("|")
+    }.sorted
 
   private def declare(cat: ParquetCatalog, ns: String, n: Int, tag: String): Unit = {
     import spark.implicits._
@@ -45,24 +77,24 @@ class MergeOnReadSpec extends SparkTestBase {
   }
 
   test("merge-on-read state matches copy-on-write at every checkpoint") {
-    val (cow, _) = newCat(mor = false)
-    val (mor, morRoot) = newCat(mor = true)
-    for (c <- Seq(cow, mor)) { declare(c, "alpha", 10, "M"); declare(c, "beta", 5, "B") }
-    assert(state(mor) == state(cow))
-    mutate(cow); mutate(mor)
-    assert(state(mor) == state(cow))
+    val (mor, morRoot) = newCat()
+    declare(mor, "alpha", 10, "M"); declare(mor, "beta", 5, "B")
+    var model = modelDeclare("alpha", 10, "M") ++ modelDeclare("beta", 5, "B")
+    assert(state(mor) == modelState(model))
+    mutate(mor); model = modelMutate(model)
+    assert(state(mor) == modelState(model))
     // shredded predicate pushdown columns stay in sync with mutated metadata
     assert(mor.files.filter(col("fid") === "M2")
       .select(expr("try_variant_get(metadata, \"$['core.run']\", 'long')"))
       .head().getLong(0) == 999L)
     // compaction folds the log and preserves state exactly
     mor.compactFilesLog()
-    assert(state(mor) == state(cow))
+    assert(state(mor) == modelState(model))
     assert(!new java.io.File(s"$morRoot/files_log").exists())
   }
 
   test("MOR mutations never touch base partition files; compaction is scoped") {
-    val (cat, root) = newCat(mor = true)
+    val (cat, root) = newCat()
     declare(cat, "hot", 20, "H")
     declare(cat, "cold", 20, "C")
     def snap(ns: String): Set[(String, Long, Long)] = {
@@ -95,7 +127,7 @@ class MergeOnReadSpec extends SparkTestBase {
 
   test("hard-deleted fid can be re-declared through the log") {
     import spark.implicits._
-    val (cat, _) = newCat(mor = true)
+    val (cat, _) = newCat()
     declare(cat, "res", 3, "R")
     cat.removeFiles(Seq("R1"))
     assert(cat.files.filter(col("fid") === "R1").count() == 0)
@@ -117,12 +149,12 @@ class MergeOnReadSpec extends SparkTestBase {
   }
 
   test("reopened MOR catalog continues the log sequence") {
-    val (cat, root) = newCat(mor = true)
+    val (cat, root) = newCat()
     declare(cat, "seq", 4, "S")
     cat.retireFiles(Seq("S0"))
     // a NEW catalog instance over the same root must not reuse seq numbers
     // (a reused seq could let an older version win the latest-wins merge)
-    val reopened = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val reopened = new ParquetCatalog(spark, root)
     reopened.updateFileMeta(Seq("S0"), """{"core.run":500}""")
     assert(reopened.files.filter(col("fid") === "S0")
       .select(expr("try_variant_get(metadata, \"$['core.run']\", 'long')"))
@@ -136,7 +168,7 @@ class MergeOnReadSpec extends SparkTestBase {
   // ---- time travel (filesAsOf / logHistory / currentLogSeq) ----
 
   test("filesAsOf names every log sequence; latest-of-<=seq wins") {
-    val (cat, _) = newCat(mor = true)
+    val (cat, _) = newCat()
     declare(cat, "tt", 5, "T")
     assert(cat.currentLogSeq() == 0L)
     val declared = state(cat)
@@ -172,7 +204,7 @@ class MergeOnReadSpec extends SparkTestBase {
   }
 
   test("logHistory journals every mutation; compaction bounds time travel") {
-    val (cat, _) = newCat(mor = true)
+    val (cat, _) = newCat()
     declare(cat, "tt", 4, "J")
     cat.retireFiles(Seq("J0", "J1")) // seq 1 (one batch, one seq)
     cat.removeFiles(Seq("J3")) // seq 2
@@ -197,13 +229,6 @@ class MergeOnReadSpec extends SparkTestBase {
       .collect().map(_.getString(0)).toSeq.sorted == live)
   }
 
-  test("time travel requires merge-on-read storage") {
-    val (cow, _) = newCat(mor = false)
-    declare(cow, "tt", 2, "C")
-    intercept[IllegalArgumentException](cow.filesAsOf(0L))
-    intercept[IllegalArgumentException](cow.logHistory())
-  }
-
   test("mutation-sized commits land as single part files (commit sizing)") {
     // r14 optimization: commit/append writes coalesce to
     // spark.graft.commit.partitions (default 1) instead of inheriting the
@@ -211,7 +236,7 @@ class MergeOnReadSpec extends SparkTestBase {
     // near-empty part files, each listed + footer-read by every later
     // records() fold. Layout only; the state-equality tests above pin
     // that semantics are unchanged.
-    val (mor, morRoot) = newCat(mor = true)
+    val (mor, morRoot) = newCat()
     declare(mor, "alpha", 10, "M")
     mutate(mor)
     val logDir = new java.io.File(s"$morRoot/files_log")

@@ -23,7 +23,7 @@ class MorPlanSpec extends SparkTestBase {
 
   private def seeded(): ParquetCatalog = {
     val root = Files.createTempDirectory("graft-morplan-").toString
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     import spark.implicits._
     val rows = (0 until 500).map { i =>
       (f"Q$i%04d", "alpha", s"q_$i.dat", s"""{"core.run":$i}""", "t", 100L + i)

@@ -46,8 +46,8 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
 
   test("two concurrent writers: every merge-mode patch survives (serializable OCC)") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     declare(a, 6)
     val fids = (0 until 6).map(i => s"W$i")
 
@@ -93,15 +93,15 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
     }
 
     // a reopened third instance sees the same converged state
-    val c = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val c = new ParquetCatalog(spark, root)
     assert(c.currentLogSeq() == claims.size.toLong)
     assert(c.files.count() == fids.size.toLong)
   }
 
   test("cross-instance sequence allocation never collides (interleaved, no threads)") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     declare(a, 4)
     // the pre-OCC design kept a per-instance counter: this exact
     // interleave made b reuse a's sequence and silently shadow its commit
@@ -121,7 +121,7 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
 
   test("orphaned claim (crashed writer) fails loudly and names the marker") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
     declare(a, 2)
     a.retireFiles(Seq("W0")) // seq 1, published
     // simulate a writer that died between claim and publish
@@ -162,8 +162,8 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
     // markers, so the check-then-append race has a serialization point
     import spark.implicits._
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     def batch(extra: String) =
       Seq(("SAME0", "alpha", "same.dat", """{"core.run":1}""", "t", 1L),
         (extra, "alpha", s"$extra.dat", """{"core.run":2}""", "t", 2L))
@@ -181,7 +181,7 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
     // winner unless one also saw the other's finished row first
     assert(results.count(_ == "won") == 1 && results.count(_ == "rejected") == 1,
       s"same-fid declare race not serialized: $results")
-    val rows = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val rows = new ParquetCatalog(spark, root)
       .files.filter(col("fid") === "SAME0").count()
     assert(rows == 1L, s"expected exactly one SAME0 row, got $rows")
     // markers released: nothing pending
@@ -197,7 +197,7 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
         regexp_replace(col("fid"), "SAME0", "SAME1")), ignoreExisting = true) })),
       10.minutes)
     assert(results2.size == 2) // both returned without error
-    assert(new ParquetCatalog(spark, root, mergeOnRead = true)
+    assert(new ParquetCatalog(spark, root)
       .files.filter(col("fid") === "SAME1").count() == 1L)
 
     // a crashed declare's stale marker blocks loudly and names the dir
@@ -223,8 +223,8 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
     // keep every batch from every writer.
     import spark.implicits._
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     def batch(tag: String, i: Int) =
       Seq((s"D$tag$i", "alpha", s"d_$tag$i.dat", s"""{"core.run":$i}""", "tester", 1L))
         .toDF("fid", "namespace", "name", "metadata_json", "creator", "size")
@@ -232,7 +232,7 @@ class MultiWriterSpec extends SparkTestBase with OccFailureCapture {
     val burstA = Future { for (i <- 0 until 10) a.declareFiles(batch("A", i)) }
     val burstB = Future { for (i <- 0 until 10) b.declareFiles(batch("B", i)) }
     Await.result(Future.sequence(Seq(burstA, burstB)), 10.minutes)
-    val fids = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fids = new ParquetCatalog(spark, root)
       .files.select("fid").collect().map(_.getString(0)).toSet
     for (t <- Seq("A", "B"); i <- 0 until 10)
       assert(fids(s"D$t$i"), s"declare D$t$i lost to a concurrent append")

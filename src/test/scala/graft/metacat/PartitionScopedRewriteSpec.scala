@@ -4,12 +4,15 @@ import graft.mql.SparkTestBase
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Mutation amplification guard: a files-table mutation must rewrite ONLY
-  * the `namespace=` partitions it touches (r6 postmortem: every one-file
-  * metadata update rewrote the whole table — at a 100× catalog, a 15M-row
-  * rewrite per admin action). Asserted physically: the untouched
-  * partition's parquet files must be byte-identical (same paths, sizes,
-  * modification times) across the mutation.
+/** Mutation amplification guard: folding a files-table mutation into the
+  * base must rewrite ONLY the `namespace=` partitions it touches (r6
+  * postmortem: every one-file metadata update rewrote the whole table — at
+  * a 100× catalog, a 15M-row rewrite per admin action). Mutations commit
+  * to the files log; [[ParquetCatalog.compactFilesLog]] is the one
+  * partition-scoped rewrite, so each physical assertion follows a
+  * compaction. Asserted physically: the untouched partition's parquet
+  * files must be byte-identical (same paths, sizes, modification times)
+  * across the mutation and its compaction.
   */
 class PartitionScopedRewriteSpec extends SparkTestBase {
 
@@ -43,6 +46,7 @@ class PartitionScopedRewriteSpec extends SparkTestBase {
     cat.retireFiles(Seq("S1"))
     cat.updateFileMeta(Seq("S2"), """{"core.extra":1}""", "update")
     cat.updateFile("S3", size = Some(999L))
+    cat.compactFilesLog()
     assert(snapshot("big") == bigBefore,
       "mutation in `small` rewrote the `big` partition")
 
@@ -54,6 +58,7 @@ class PartitionScopedRewriteSpec extends SparkTestBase {
     declare("third", 5, "T")
     val bigBefore2 = snapshot("big")
     cat.moveNamespace(Seq("T0"), "small")
+    cat.compactFilesLog()
     assert(snapshot("big") == bigBefore2,
       "moveNamespace small<-third rewrote the `big` partition")
     assert(cat.files.filter(col("fid") === "T0")
@@ -62,6 +67,7 @@ class PartitionScopedRewriteSpec extends SparkTestBase {
     // removeFiles scopes too, and fully-emptied partitions disappear
     val bigBefore3 = snapshot("big")
     cat.removeFiles(Seq("T1", "T2", "T3", "T4"))
+    cat.compactFilesLog()
     assert(snapshot("big") == bigBefore3)
     assert(cat.files.filter(col("namespace") === "third").count() == 0)
     assert(!new java.io.File(s"$root/files/namespace=third").exists,
@@ -71,6 +77,7 @@ class PartitionScopedRewriteSpec extends SparkTestBase {
   test("escaped partition values round-trip through scoped rewrites") {
     declare("odd ns", 3, "E")
     cat.retireFiles(Seq("E0"))
+    cat.compactFilesLog()
     val ns = cat.files.filter(col("fid") === "E0")
       .select("namespace", "retired").head()
     assert(ns.getString(0) == "odd ns" && ns.getBoolean(1))

@@ -69,7 +69,7 @@ class ShredLayoutSpec extends SparkTestBase {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-shredlayout-").toString
     val shred = Map("core.run" -> (("_s_run", graft.mql.MetaCompiler.ShredNum)))
-    val c = new ParquetCatalog(spark, root, shred, mergeOnRead = true)
+    val c = new ParquetCatalog(spark, root, shred)
     // declare with run values deliberately SCRAMBLED in arrival order
     val n = 500
     val rows = (0 until n).map { i =>

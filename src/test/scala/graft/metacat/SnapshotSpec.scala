@@ -70,7 +70,7 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
   test("as-of views at a captured version replay the capture-time state exactly") {
     import spark.implicits._
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("sds", "d")
     declare(cat, 6, ds = Some(("sds", "d")))
     cat.addProvenance(Seq(("S0", "S1"), ("S1", "S2")).toDF("parent_fid", "child_fid"))
@@ -99,8 +99,8 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
 
   test("snapshot during a concurrent commit burst returns a validated consistent cut") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val b = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
+    val b = new ParquetCatalog(spark, root)
     declare(a, 4)
     val stop = new AtomicBoolean(false)
     val writer = Future {
@@ -134,7 +134,7 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
     // exactly one of the two is visible is a straddle.
     import spark.implicits._
     val n = 16
-    val cat = new ParquetCatalog(spark, newRoot(), mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, newRoot())
     cat.createDataset("sds", "d")
     declare(cat, n, ds = Some(("sds", "d")))
     cat.addProvenance((0 until n - 1).map(i => (s"S$i", s"S${i + 1}"))
@@ -175,7 +175,7 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
   test("a pinned version survives maintenance: vacuum refuses, unpin releases") {
     import spark.implicits._
     val root = newRoot()
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("sds", "d")
     declare(cat, 6, ds = Some(("sds", "d")))
     cat.retireFiles(Seq("S4"))          // files seq 1
@@ -211,7 +211,7 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
     assert(cat.filesAsOf(cat.pins().toMap.apply("head")).count() == 6L)
 
     // a FORCED vacuum past a live pin leaves a stale pin fsck reports
-    val cat2 = new ParquetCatalog(spark, newRoot(), mergeOnRead = true)
+    val cat2 = new ParquetCatalog(spark, newRoot())
     declare(cat2, 3)
     cat2.retireFiles(Seq("S0"))
     cat2.pin("doomed", cat2.snapshot())
@@ -228,7 +228,7 @@ class SnapshotSpec extends SparkTestBase with OccFailureCapture {
 
   test("an unvalidated cut is never returned: the pass budget fails loudly") {
     val root = newRoot()
-    val a = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val a = new ParquetCatalog(spark, root)
     declare(a, 2)
     // one pass can never validate (validation IS two agreeing passes) —
     // the budget path must throw rather than hand back an unchecked cut

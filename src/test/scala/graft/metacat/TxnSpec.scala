@@ -34,7 +34,7 @@ class TxnSpec extends SparkTestBase with OccFailureCapture {
   /** n files F0..F(n-1), all members of ds:d, edges Fi -> F(i+1) */
   private def seeded(n: Int): ParquetCatalog = {
     import spark.implicits._
-    val cat = new ParquetCatalog(spark, newRoot(), mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, newRoot())
     cat.createNamespace("ns")
     cat.createDataset("ds", "d")
     val rows = (0 until n).map { i =>

@@ -155,7 +155,7 @@ class WritePathFuzzSpec extends SparkTestBase with OccFailureCapture {
 
     for (round <- 0 until rounds) {
       val root = registerRoot(Files.createTempDirectory("graft-fuzz-tt-").toString)
-      val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val cat = new ParquetCatalog(spark, root)
       // declare-time attrs per fid (the base row MOR never rewrites
       // between compactions) + the mutation journal the engine's log
       // must mirror
@@ -253,7 +253,7 @@ class WritePathFuzzSpec extends SparkTestBase with OccFailureCapture {
 
     for (round <- 0 until rounds) {
       val root = registerRoot(Files.createTempDirectory("graft-fuzz-mc-").toString)
-      val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+      val cat = new ParquetCatalog(spark, root)
       val model = scala.collection.mutable.LinkedHashMap.empty[String, State]
       var nextId = 0
 

@@ -44,7 +44,7 @@ class CatalogIngestStreamSpec extends SparkTestBase with OccFailureCapture {
 
   test("streamed overlapping micro-batches converge to the clean batch state") {
     val root = registerRoot(Files.createTempDirectory("graft-ing-stream-").toString)
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("ing", "ds")
     val rows = declareRows(40, "S")
     CatalogIngestStream.runDeclareToCatalog(
@@ -65,7 +65,7 @@ class CatalogIngestStreamSpec extends SparkTestBase with OccFailureCapture {
     // redelivery, subset again within the admission window) converge to
     // one clean declare of every distinct row
     val root = registerRoot(Files.createTempDirectory("graft-ing-dedup-").toString)
-    val cat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val cat = new ParquetCatalog(spark, root)
     cat.createDataset("ing", "ds")
     val rows = declareRows(30, "D")
     CatalogIngestStream.runDedupedDeclareToCatalog(
@@ -89,8 +89,8 @@ class CatalogIngestStreamSpec extends SparkTestBase with OccFailureCapture {
     import scala.concurrent.ExecutionContext.Implicits.global
     import spark.implicits._
     val root = registerRoot(Files.createTempDirectory("graft-ing-conc-").toString)
-    val streamCat = new ParquetCatalog(spark, root, mergeOnRead = true)
-    val adminCat = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val streamCat = new ParquetCatalog(spark, root)
+    val adminCat = new ParquetCatalog(spark, root)
     streamCat.createDataset("ing", "live")
     streamCat.declareFiles(declareRows(10, "S"), dataset = Some(("ing", "live")))
 
@@ -123,7 +123,7 @@ class CatalogIngestStreamSpec extends SparkTestBase with OccFailureCapture {
     q.awaitTermination()
     Await.result(admin, 10.minutes)
 
-    val fresh = new ParquetCatalog(spark, root, mergeOnRead = true)
+    val fresh = new ParquetCatalog(spark, root)
     // every streamed declare landed exactly once (files AND membership)
     assert(fresh.files.count() == 40) // 10 seeded + 30 streamed
     assert(fresh.files.groupBy("fid").count().filter(col("count") > 1).count() == 0)
