@@ -3,6 +3,7 @@ package graft.metacat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.pipeline.Dedup
 
 /** MULTI-WRITER incremental cross-batch dedup, governed by the catalog's
@@ -20,8 +21,8 @@ import graft.pipeline.Dedup
   *  - a MinHash-LSH near-dup pair by construction shares at least one
   *    (band, bkey) bucket, and a re-arriving doc shares its `d:` key — so
   *    two batches whose footprints are DISJOINT cannot influence each
-  *    other's admission verdicts (their probe joins meet no shared bucket,
-  *    their corpus anti-joins no shared id). Disjoint commits therefore
+  *    other's admission verdicts (their probes meet no shared bucket,
+  *    their re-arrival checks no shared id). Disjoint commits therefore
   *    commute and [[OccLog.commit]] runs them concurrently; intersecting
   *    commits serialize in claim order, and the LATER one computes its
   *    admissions inside the commit closure, after the earlier's publish —
@@ -52,13 +53,20 @@ import graft.pipeline.Dedup
   * ([[graft.pipeline.DedupStore.compact]]) is the log's standard
   * fold-the-prefix maintenance here, safe under concurrent writers.
   *
-  * Scale shape per batch: O(batch) shingling + the narrow bucket-keyed
-  * probe (never a corpus rescan; text fetched only for verified
-  * candidates — [[Dedup.incrementalDedupPairs]]'s contract). The declared
-  * footprint is collected to the driver to stamp the claim's `.keys`
-  * sidecar — ≤ (bands+1)·|batch| short strings, megabytes for a 100k-doc
-  * micro-batch, the same driver-sized protocol metadata every claim
-  * marker and transaction intent already is.
+  * Scale shape per batch: O(batch) shingling, then a handful of Spark
+  * jobs. Before the claim, one job collects the batch's signature rows
+  * `(doc_id, band, bkey)` and doc ids; the declared footprint is built
+  * from them on the driver — ≤ (bands+1)·|batch| short strings,
+  * megabytes for a 100k-doc micro-batch, the same driver-sized protocol
+  * metadata every claim marker and transaction intent already is. Inside
+  * the commit, ONE narrow scan collects the stored rows in the batch's
+  * buckets or under its ids plus every tombstone; liveness, re-arrivals
+  * and candidate pairs are worked out from them on the driver (never a
+  * corpus rescan, never a driver copy of the index); one verify query
+  * reads text only for candidates ([[Dedup.incrementalDedupPairs]]'s
+  * contract); one write publishes the admitted rows. The driver holds
+  * the batch keys, the probe hits, the tombstones and the candidate
+  * pairs.
   *
   * The reference has no multi-writer dedup (its dedup is Postgres-side
   * uniqueness); this extends the LLM-pipeline scope the same way the
@@ -99,55 +107,123 @@ final class DedupLog(spark: SparkSession, root: String,
   }
 
   /** Admit one ingest batch of `(doc_id, text)` rows under OCC: probe the
-    * published corpus/index, admit near-dup survivors
-    * ([[Dedup.incrementalAdmit]] — chain policy, intra-batch earliest
-    * wins), publish their corpus + index rows as one commit. Safe to call
-    * concurrently from any number of writers (threads or JVMs sharing the
-    * store root); `batchId` is provenance stamped on the admitted rows. */
+    * published index for the batch's buckets, admit near-dup survivors
+    * (the [[Dedup.incrementalAdmit]] rule — chain policy, intra-batch
+    * earliest wins), publish their corpus + index rows as one commit. Safe
+    * to call concurrently from any number of writers (threads or JVMs
+    * sharing the store root); `batchId` is provenance stamped on the
+    * admitted rows. */
   def ingest(batch: DataFrame, batchId: Long): Unit = {
-    val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-      col("text").cast("string").as("text")).dropDuplicates("doc_id").persist()
+    val deduped = batch.select(col("doc_id").cast("long").as("doc_id"),
+      col("text").cast("string").as("text")).dropDuplicates("doc_id")
+    // the deduplicated batch as a persisted RDD: `.rdd` runs the dedup
+    // shuffle once, and each query's first scan fills the cache in that
+    // query's own job — a persisted Dataset would add a cache-building
+    // job for every scan of it in a plan
+    val rows = deduped.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    val b = spark.createDataFrame(rows, deduped.schema)
     try {
-      // the signature is a pure function of the batch text — computed
-      // ONCE here, it both declares the key footprint and (filtered to
-      // the admitted docs) provides the index rows, so the commit closure
-      // never re-shingles
-      val sig = Dedup.signatureIndex(b, numHashes, bands)
+      // the signature is a pure function of the batch text — collected
+      // ONCE here (with the batch ids, in one job), it declares the key
+      // footprint, drives the probe and, filtered to the admitted docs,
+      // is the index rows, so the commit closure never re-shingles
+      val (idRows, sig) = Dedup.bandedKeys(
+          Dedup.shinglesUncached(b).select("doc_id", "shingles"), numHashes, bands)
         .select(col("doc_id"), col("band").cast("int").as("band"), col("bkey"))
-        .persist()
-      try {
-      val keys = sig
-        .select(concat_ws(":", lit("b"), col("band"), col("bkey")).as("k"))
-        .unionByName(b.select(concat_ws(":", lit("d"), col("doc_id")).as("k")))
-        .distinct().collect().map(_.getString(0)).toIndexedSeq
+        .unionByName(b.select(col("doc_id"), lit(CorpusBand).as("band"),
+          lit(null).cast("string").as("bkey")))
+        .collect().toSeq.map(r => Sig(r.getLong(0), r.getInt(1), r.getString(2)))
+        .partition(_.band == CorpusBand)
+      val ids = idRows.map(_.doc)
+      val keys = (sig.map(s => s"b:${s.band}:${s.bkey}") ++ ids.map(d => s"d:$d"))
+        .distinct.toIndexedSeq
       log.commit(() => {
         // published state of every conflicting predecessor (commit has
-        // awaited them), through the tombstone-aware fold — a retired
-        // doc must neither block a new near-dup nor count as a corpus
-        // member; disjoint concurrent commits may or may not appear —
-        // they commute with this one (scaladoc above)
-        val rec = folded()
-        val corpus = rec.filter(col("band") === CorpusBand)
-          .select("doc_id", "text")
-        val idx = rec.filter(col("band") >= 0).select("doc_id", "band", "bkey")
+        // awaited them); disjoint concurrent commits may or may not
+        // appear — they commute with this one (scaladoc above)
+        val rec = log.records()
+        val live = liveRows(rec, sig.map(_.bkey).toSet, ids.toSet)
         // at-least-once / re-arrival: an id already admitted is the same
         // doc, not a near-dup — drop before the probe
-        val fresh = b.join(corpus.select("doc_id"), Seq("doc_id"), "left_anti")
-        val admitted = fresh.join(
-          Dedup.incrementalAdmit(corpus, fresh, Some(idx),
-            numHashes, bands, threshold),
-          Seq("doc_id"), "left_semi")
-        admitted.select(col("doc_id"), lit(CorpusBand).as("band"),
+        val stored = live.filter(_.band == CorpusBand).map(_.doc).toSet
+        val fresh = sig.filterNot(s => stored(s.doc))
+        val hits = live.filter(_.band >= 0).groupBy(h => (h.band, h.bkey))
+        // cross candidates meet a live index row in a bucket; intra
+        // candidates an EARLIER fresh batch doc (doc_b < doc_a)
+        val cross = for {
+          s <- fresh
+          h <- hits.getOrElse((s.band, s.bkey), Nil)
+        } yield (s.doc, h.doc, h.seq)
+        val intra = fresh.groupBy(s => (s.band, s.bkey)).values.flatMap { g =>
+          val docs = g.map(_.doc).distinct
+          for (a <- docs; d <- docs if d < a) yield (a, d, BatchSeq)
+        }
+        val admitted = ids.filterNot(stored).toSet --
+          rejected(b, rec, (cross ++ intra).distinct)
+        import spark.implicits._
+        b.filter(col("doc_id").isInCollection(admitted))
+          .select(col("doc_id"), lit(CorpusBand).as("band"),
             lit(null).cast("string").as("bkey"), col("text"),
             lit(batchId).as("batch"))
-          .unionByName(sig
-            .join(admitted.select("doc_id"), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("band"), col("bkey"),
-              lit(null).cast("string").as("text"), lit(batchId).as("batch")))
+          .unionByName(sig.filter(s => admitted(s.doc))
+            .map(s => (s.doc, s.band, s.bkey, null: String, batchId))
+            .toDF("doc_id", "band", "bkey", "text", "batch"))
       }, OpAdmit, Some(keys))
-      } finally { sig.unpersist(); () }
       ()
-    } finally { b.unpersist(); () }
+    } finally { rows.unpersist(); () }
+  }
+
+  /** The live `(doc_id, band, bkey, __seq)` rows of `rec` whose `bkey` is
+    * in `bkeys` or whose doc is in `ids`, from ONE narrow scan collected
+    * to the driver. The scan also returns every tombstone (curation-sized,
+    * as [[folded]] assumes), and the fold is [[folded]]'s rule applied on
+    * the driver: a row is live iff no tombstone for its doc has a HIGHER
+    * seq. */
+  private def liveRows(rec: DataFrame, bkeys: Set[String],
+      ids: Set[Long]): Seq[Hit] = {
+    val rows = rec
+      .filter(col("__op") === OpRemove || col("bkey").isInCollection(bkeys) ||
+        col("doc_id").isInCollection(ids))
+      .select("doc_id", "band", "bkey", "__op", "__seq").collect()
+    val (tombs, recs) = rows.toSeq.partition(_.getString(3) == OpRemove)
+    val retiredAt = tombs.groupMapReduce(_.getLong(0))(_.getLong(4))(math.max)
+    recs.collect {
+      case r if retiredAt.get(r.getLong(0)).forall(r.getLong(4) > _) =>
+        Hit(r.getLong(0), r.getInt(1), r.getString(2), r.getLong(4))
+    }
+  }
+
+  /** The `doc_a`s of candidate pairs `(doc_a, doc_b, seq_b)` whose exact
+    * shingle Jaccard reaches the threshold, in one verify query. `doc_a`
+    * is a batch doc; `doc_b` is a batch doc when `seq_b` is [[BatchSeq]],
+    * else a corpus doc whose live text is its corpus row AT `seq_b` — the
+    * seq of its live index hit, since an admission writes a doc's corpus
+    * and index rows in one seq. The candidates' shingle sets are one
+    * broadcast, probed twice by the pairs (a local relation). */
+  private def rejected(b: DataFrame, rec: DataFrame,
+      cand: Seq[(Long, Long, Long)]): Set[Long] = {
+    if (cand.isEmpty) return Set.empty
+    import spark.implicits._
+    val batchDocs = cand.flatMap { case (a, d, s) => if (s == BatchSeq) Seq(a, d) else Seq(a) }
+    val corpusDocs = cand.collect { case (_, d, s) if s != BatchSeq => (d, s) }
+    val texts = b.filter(col("doc_id").isInCollection(batchDocs.toSet))
+      .select(col("doc_id"), lit(BatchSeq).as("seq"), col("text"))
+      .unionByName(rec
+        // the id filter is the one parquet can push down; the id:seq key
+        // picks each doc's live generation
+        .filter(col("band") === CorpusBand &&
+          col("doc_id").isInCollection(corpusDocs.map(_._1).toSet) &&
+          concat_ws(":", col("doc_id"), col("__seq"))
+            .isInCollection(corpusDocs.map { case (d, s) => s"$d:$s" }.toSet))
+        .select(col("doc_id"), col("__seq").as("seq"), col("text")))
+    val side = broadcast(Dedup.shinglesUncached(texts)
+      .select("doc_id", "seq", "shingles"))
+    cand.map { case (a, d, s) => (a, BatchSeq, d, s) }
+      .toDF("doc_a", "seq_a", "doc_b", "seq_b")
+      .join(side.as("a"), col("doc_a") === col("a.doc_id") && col("seq_a") === col("a.seq"))
+      .join(side.as("b"), col("doc_b") === col("b.doc_id") && col("seq_b") === col("b.seq"))
+      .filter(Dedup.jaccard(col("a.shingles"), col("b.shingles")) >= threshold)
+      .select("doc_a").collect().map(_.getLong(0)).toSet
   }
 
   /** Retire admitted docs from the store (corpus curation / removal
@@ -160,42 +236,39 @@ final class DedupLog(spark: SparkSession, root: String,
     * keys plus the doc identities — an admission probing any of those
     * buckets intersects and serializes, so its verdict is always
     * computed with the tombstones visible (admit-after-retire admits).
-    * The retired row set is read (and collected — retire batches are
-    * curation-sized) BEFORE the claim: admitted rows are immutable, so
-    * the tombstones are identical whenever computed, and a doc NOT yet
-    * visible to this session is simply not retired (retire what you
-    * read; re-run for docs that raced in — their `d:` key serializes
-    * this commit against the racing admission either way). */
+    * The retired row set is read (one narrow probe of the named docs,
+    * folded on the driver) BEFORE the claim: admitted rows are
+    * immutable, so the tombstones are identical whenever computed, and a
+    * doc NOT yet visible to this session is simply not retired (retire
+    * what you read; re-run for docs that raced in — their `d:` key
+    * serializes this commit against the racing admission either way). */
   def retire(docIds: Seq[Long], batchId: Long = -1L): Unit = {
     val ids = docIds.distinct
     if (ids.isEmpty) return
     import spark.implicits._
-    val live = folded()
-      .join(ids.toDF("doc_id"), Seq("doc_id"), "left_semi")
-      .select("doc_id", "band", "bkey").collect()
+    val live = liveRows(log.records(), Set.empty, ids.toSet)
     if (live.isEmpty) return
-    val keys = live.flatMap { r =>
-      val d = s"d:${r.getLong(0)}"
-      if (r.getInt(1) >= 0) Seq(d, s"b:${r.getInt(1)}:${r.getString(2)}")
-      else Seq(d)
+    val keys = live.flatMap { h =>
+      val d = s"d:${h.doc}"
+      if (h.band >= 0) Seq(d, s"b:${h.band}:${h.bkey}") else Seq(d)
     }.distinct.toIndexedSeq
-    val rows = live.map(r => (r.getLong(0), r.getInt(1),
-      Option(r.getString(2)).orNull, null: String, batchId))
+    val rows = live.map(h => (h.doc, h.band, h.bkey, null: String, batchId))
     log.commit(() =>
-      rows.toSeq.toDF("doc_id", "band", "bkey", "text", "batch")
+      rows.toDF("doc_id", "band", "bkey", "text", "batch")
         .withColumn("__op", lit(OpRemove)),
       OpRemove, Some(keys))
   }
 
-  /** Live rows with tombstones folded out. NOT the generic
-    * latest-per-key window — that would shuffle the WHOLE index on every
-    * probe and break the O(batch) ingest shape. Admit rows are
-    * append-once per doc generation and [[retire]] removes whole docs,
-    * so the fold reduces to a seq-aware anti-join: a row is live iff no
-    * tombstone for its doc has a HIGHER seq (a re-admission after retire
-    * writes fresh rows above the tombstone and comes back live). The
-    * tombstone side is curation-sized — AQE broadcasts it, the index
-    * scan stays map-side. Checkpoints still apply the full
+  /** Live rows with tombstones folded out, as a Spark plan — the read
+    * side of [[corpus]], [[index]] and [[fsck]] (the commit paths fold
+    * their narrow probe on the driver, [[liveRows]]). NOT the generic
+    * latest-per-key window — that would shuffle the WHOLE index. Admit
+    * rows are append-once per doc generation and [[retire]] removes
+    * whole docs, so the fold reduces to a seq-aware anti-join: a row is
+    * live iff no tombstone for its doc has a HIGHER seq (a re-admission
+    * after retire writes fresh rows above the tombstone and comes back
+    * live). The tombstone side is curation-sized — AQE broadcasts it, the
+    * index scan stays map-side. Checkpoints still apply the full
     * latest-per-key collapse, which physically shadows removed rows
     * under exactly these semantics. */
   private def folded(): DataFrame = {
@@ -233,6 +306,15 @@ final class DedupLog(spark: SparkSession, root: String,
 }
 
 object DedupLog {
+
+  /** one signature row of an ingest batch */
+  private final case class Sig(doc: Long, band: Int, bkey: String)
+
+  /** one live stored row the probe found */
+  private final case class Hit(doc: Long, band: Int, bkey: String, seq: Long)
+
+  /** `seq_b` of a verify candidate whose `doc_b` is in the batch */
+  private val BatchSeq = -1L
 
   /** band value of the corpus (text-carrying) row — real bands are ≥ 0 */
   val CorpusBand: Int = -1

@@ -64,7 +64,7 @@ object Dedup {
     * LRU cache would survive the churn, but caching a plan that is never
     * read twice still pins a persist slot and evicts an entry that might
     * be — one-shot plans simply don't belong in the cache. */
-  private[pipeline] def shinglesUncached(docs: DataFrame): DataFrame =
+  private[graft] def shinglesUncached(docs: DataFrame): DataFrame =
     docs.withColumn("__t", toks)
       .filter(size(col("__t")) >= 3)
       .withColumn("shingles", expr(shingleExpr))
@@ -101,6 +101,16 @@ object Dedup {
     }
   }
 
+  /** the session cache's current keys, in LRU order */
+  private[graft] def shingleCacheKeys: Seq[Any] = shingleCache.synchronized {
+    import scala.jdk.CollectionConverters._
+    shingleCache.keySet().asScala.toList
+  }
+
+  /** exact Jaccard of two distinct-shingle arrays */
+  private[graft] def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
   /** exact duplicate detection: md5 fingerprint of the raw text; the first
     * doc_id in each group is canonical, the rest are flagged. */
   def exact(docs: DataFrame): DataFrame = {
@@ -125,7 +135,7 @@ object Dedup {
     * the bucket join downstream never shuffles shingle arrays. Shared by
     * same-corpus pair mining ([[minhashPairs]]) and cross-corpus fuzzy
     * decontamination ([[Decontam.fuzzyOverlap]]). */
-  private[pipeline] def bandedKeys(sh: DataFrame, numHashes: Int,
+  private[graft] def bandedKeys(sh: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
     val r = numHashes / bands
     sh.select(
@@ -761,9 +771,7 @@ object Dedup {
         Seq("doc_a"))
       .join(side.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
         col("src")), Seq("doc_b"))
-      .withColumn("jac",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+      .withColumn("jac", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jac"),
         col("src"))

@@ -6,6 +6,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 import graft.mql.SparkTestBase
+import graft.pipeline.Dedup
 import graft.streaming.IncrementalDedupStream
 
 /** The OCC-governed multi-writer dedup store ([[DedupLog]]): admission
@@ -173,5 +174,194 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     // post-vacuum writers keep working against the checkpointed store
     dl.ingest(toDf(Seq(doc(9999L, "post-vacuum"))), 99L)
     assert(corpusId(dl)._1 == before._1 + 1)
+  }
+
+  /** a `n`-token text whose tokens no other `tag` shares */
+  private def words(tag: String, n: Int): IndexedSeq[String] =
+    (0 until n).map(i => s"$tag-$i")
+
+  /** `toks` with the tokens at `at` replaced (by tokens no other text has) */
+  private def edit(toks: IndexedSeq[String], tag: String, at: Range): IndexedSeq[String] =
+    toks.indices.map(i => if (at.contains(i)) s"$tag-$i" else toks(i))
+
+  private def text(toks: IndexedSeq[String]): String = toks.mkString(" ")
+
+  private def seqDirs(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.matches("s\\d{20}"))
+
+  /** the newest published segment of the store's log */
+  private def newestSegment(root: String): java.io.File =
+    seqDirs(s"$root/dedup_log").maxBy(_.getName)
+
+  /** the highest seq the log has published, whether or not a vacuum
+    * has since folded its segment into a checkpoint */
+  private def frontier(root: String): Long =
+    (seqDirs(s"$root/dedup_log") ++ seqDirs(s"$root/dedup_log_ckpt"))
+      .map(_.getName.drop(1).toLong).maxOption.getOrElse(0L)
+
+  /** the rows and `.keys` sidecar of the segment the last commit published */
+  private def lastCommit(root: String): (Set[Seq[Any]], String) = {
+    val dir = newestSegment(root)
+    val seq = dir.getName.drop(1).toLong
+    val rows = spark.read.parquet(dir.toString)
+      .select("doc_id", "band", "bkey", "text", "batch", "__op", "__seq")
+      .collect().map(_.toSeq).toSet
+    val keys = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      f"$root/dedup_log_claims/s$seq%020d.keys")), java.nio.charset.StandardCharsets.UTF_8)
+    (rows, keys)
+  }
+
+  /** Ingest `batch` and check its commit against the Spark-side rule over
+    * the store as it stood before: re-arrivals dropped by an anti-join
+    * with `corpus()`, then [[Dedup.incrementalAdmit]] with the persisted
+    * `index()`. The published segment must hold exactly the admitted
+    * docs' corpus and signature rows, and the claim's `.keys` sidecar
+    * every batch doc's bucket and identity keys. Returns the admitted ids. */
+  private def checkIngest(dl: DedupLog, root: String,
+      batch: Seq[(Long, String)], batchId: Long, step: String): Set[Long] = {
+    val b = toDf(batch)
+    val corpus = dl.corpus().select("doc_id", "text")
+    val fresh = b.join(corpus.select("doc_id"), Seq("doc_id"), "left_anti")
+    val want = Dedup.incrementalAdmit(corpus, fresh, Some(dl.index()))
+      .collect().map(_.getLong(0)).toSet
+    val sig = Dedup.signatureIndex(b).select("doc_id", "band", "bkey")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    val texts = batch.toMap
+    val seq = frontier(root) + 1
+    dl.ingest(b, batchId)
+    assert(frontier(root) == seq, s"$step: expected one new segment")
+    val (rows, keys) = lastCommit(root)
+    val got = rows.collect { case r if r(1) == DedupLog.CorpusBand => r.head.asInstanceOf[Long] }
+    assert(got == want, s"$step: admitted ${got.toSeq.sorted}, the Spark rule " +
+      s"admits ${want.toSeq.sorted}")
+    val wantRows = want.map(d => Seq[Any](d, DedupLog.CorpusBand, null, texts(d),
+        batchId, DedupLog.OpAdmit, seq)) ++
+      sig.collect { case (d, band, bkey) if want(d) =>
+        Seq[Any](d, band, bkey, null, batchId, DedupLog.OpAdmit, seq) }
+    assert(rows == wantRows, s"$step: segment rows differ: missing " +
+      s"${wantRows -- rows}, extra ${rows -- wantRows}")
+    val wantKeys = (sig.map { case (_, band, bkey) => s"b:$band:$bkey" } ++
+      batch.map(d => s"d:${d._1}")).distinct.sorted.mkString("\n")
+    assert(keys == wantKeys, s"$step: .keys sidecar differs")
+    got
+  }
+
+  /** retire `ids` and check the tombstones and `.keys` sidecar against
+    * the live rows the Spark-side fold (`corpus()`, `index()`) holds */
+  private def checkRetire(dl: DedupLog, root: String, ids: Seq[Long],
+      step: String): Unit = {
+    val live = dl.corpus().filter(col("doc_id").isin(ids: _*))
+      .select(col("doc_id"), lit(DedupLog.CorpusBand).as("band"),
+        lit(null).cast("string").as("bkey"))
+      .unionByName(dl.index().filter(col("doc_id").isin(ids: _*)))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    val seq = frontier(root) + 1
+    dl.retire(ids, -7L)
+    assert(frontier(root) == seq, s"$step: expected one new segment")
+    val (rows, keys) = lastCommit(root)
+    assert(rows == live.map { case (d, band, bkey) =>
+      Seq[Any](d, band, bkey, null, -7L, DedupLog.OpRemove, seq) }.toSet,
+      s"$step: tombstones differ")
+    val wantKeys = live.flatMap { case (d, band, bkey) =>
+      Seq(s"d:$d") ++ (if (band >= 0) Seq(s"b:$band:$bkey") else Nil)
+    }.distinct.sorted.mkString("\n")
+    assert(keys == wantKeys, s"$step: retire .keys sidecar differs")
+  }
+
+  /** One seeded script through every admission case, checked step by
+    * step against the Spark rule; `maintain` checkpoints and vacuums the
+    * store before every step, so every probe reads a checkpoint. */
+  private def differential(seed: Long, maintain: Boolean): Unit = {
+    val rnd = new scala.util.Random(registerSeed(seed))
+    val root = tmpRoot(s"diff-$seed")
+    val dl = new DedupLog(spark, root)
+    var next = 1000L
+    def id(): Long = { next += 1 + rnd.nextInt(3); next }
+    def fresh(n: Int): Seq[(Long, String)] =
+      Seq.fill(n)(id()).map(i => (i, text(words(s"w$seed-$i", 20 + rnd.nextInt(20)))))
+    var stored = Map.empty[Long, String]
+    def step(name: String, batch: Seq[(Long, String)], batchId: Long): Set[Long] = {
+      if (maintain) { dl.checkpoint(); dl.vacuum() }
+      val got = checkIngest(dl, root, batch, batchId, s"seed $seed: $name")
+      stored ++= batch.filter(d => got(d._1))
+      got
+    }
+    // short docs (no signature rows) and exact copies, in one batch
+    val base = fresh(12)
+    val short = Seq((id(), "tiny"), (id(), "two words"), (id(), ""))
+    val copies = base.take(2).map { case (_, t) => (id(), t) }
+    val b0 = step("short docs and intra-batch copies", base ++ short ++ copies, 0L)
+    assert(short.forall(d => b0(d._1)) && copies.forall(d => !b0(d._1)))
+    // an intra-batch chain: y is a near-dup of x, z of y but not of x —
+    // z matches only a rejected doc and is still rejected
+    val x = words(s"x$seed", 30)
+    val y = edit(x, s"y$seed", 0 until 6)
+    val z = edit(y, s"z$seed", 24 until 30)
+    val chain = Seq((id(), text(x)), (id(), text(y)), (id(), text(z)))
+    val b1 = step("intra-batch chain", fresh(4) ++ chain, 1L)
+    assert(b1(chain(0)._1) && !b1(chain(1)._1) && !b1(chain(2)._1))
+    // cross-batch near-duplicates and exact copies of stored docs
+    val stor = stored.toSeq.sortBy(_._1)
+    val near = stor.take(3).map { case (_, t) =>
+      (id(), text(edit(t.split(" ").toIndexedSeq, s"n$seed", 0 until 1))) }
+    val clones = stor.slice(3, 5).map { case (_, t) => (id(), t) }
+    val b2 = step("cross-batch near-dups", fresh(5) ++ near ++ clones, 2L)
+    assert(clones.forall(d => !b2(d._1)) && near.exists(d => !b2(d._1)))
+    // a redelivery mixed with fresh docs
+    step("redelivery mixed with fresh docs", stor.take(4) ++ fresh(3), 3L)
+    // retire, then a clone of the retired doc admits; a retired id is
+    // admitted again under its own id
+    val (gone, keep) = (stor.head, stor(1))
+    if (maintain) { dl.checkpoint(); dl.vacuum() }
+    checkRetire(dl, root, Seq(gone._1, keep._1), s"seed $seed: retire")
+    val clone = (id(), gone._2)
+    val b4 = step("clone of a retired doc", Seq(clone, keep) ++ fresh(2), 4L)
+    assert(b4(clone._1) && b4(keep._1))
+    step("verbatim redelivery", Seq(clone, keep), 5L)
+  }
+
+  test("ingest admits exactly what the Spark-side rule admits") {
+    for (seed <- Seq(11L, 12L)) differential(seed, maintain = false)
+  }
+
+  test("ingest matches the Spark-side rule on a checkpointed, vacuumed store") {
+    differential(13L, maintain = true)
+  }
+
+  test("ingest leaves the session shingle cache untouched") {
+    val root = tmpRoot("cache")
+    val dl = new DedupLog(spark, root)
+    // a hot corpus entry, as the dedup gates leave it
+    Dedup.withShingles(toDf((0L until 6L).map(i => doc(i, s"hot-$i")))).count()
+    val before = Dedup.shingleCacheKeys
+    dl.ingest(toDf((0L until 6L).map(i => doc(i, s"cache-$i"))), 0L)
+    dl.ingest(toDf((0L until 6L).map(i => doc(i + 10, s"cache-$i"))), 1L)
+    assert(Dedup.shingleCacheKeys == before)
+  }
+
+  test("ingest, redelivery and retire stay within a fixed job budget") {
+    val root = tmpRoot("jobs")
+    val dl = new DedupLog(spark, root)
+    def batch(from: Long): Seq[(Long, String)] =
+      (from until from + 60L).map(i => doc(i, s"jobs-$i"))
+    dl.ingest(toDf(batch(0L)), 0L)
+    dl.checkpoint()
+    dl.vacuum()
+    dl.ingest(toDf(batch(100L)), 1L)
+    dl.retire(Seq(100L, 101L))
+    // the measured batch: fresh docs, clones of stored docs and an
+    // intra-batch clone pair, so the probe, the verify and the write run
+    val measured = batch(200L).take(50) ++ (0L until 8L).map(i => doc(300L + i, s"jobs-$i")) ++
+      Seq(doc(310L, "jobs-250"), doc(311L, "jobs-250"))
+    def jobs(f: => Unit): Int = JobBudget.jobs(spark.sparkContext)(f)
+    val ingest = jobs(dl.ingest(toDf(measured), 2L))
+    val redeliver = jobs(dl.ingest(toDf(measured), 2L))
+    val retire = jobs(dl.retire(Seq(200L, 201L)))
+    assert(ingest <= 8, s"ingest ran $ingest jobs")
+    assert(redeliver <= 6, s"redelivery ran $redeliver jobs")
+    assert(retire <= 3, s"retire ran $retire jobs")
+    val ids = dl.corpus().select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids == (0L until 60L).toSet ++ (102L until 160L) ++ (202L until 250L) + 310L)
   }
 }

@@ -3,7 +3,6 @@ package graft.metacat
 import graft.mql.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.nio.file.Files
 
 import ParquetCatalog._
@@ -222,31 +221,13 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
     cat.removeFrom(fids.take(5).toDF("fid"), "fold", "jobs") // log non-empty
     cat.addTo(fids.take(2).toDF("fid"), "fold", "jobs")
 
-    val sc = spark.sparkContext
-    val tag = "graft.test.jobBudget"
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null))
-          started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    def jobs(f: => Unit): Int = {
-      org.apache.spark.TestBus.drain(sc)
-      started.set(0)
-      sc.setLocalProperty(tag, "on")
-      try f finally sc.setLocalProperty(tag, null)
-      org.apache.spark.TestBus.drain(sc)
-      started.get()
-    }
-    try {
-      // each op reads the segment the previous one published, probes the
-      // base once and writes once; the Spark-side overlays cost ~20 each
-      val removeJobs = jobs(cat.removeFrom(fids.slice(10, 14).toDF("fid"), "fold", "jobs"))
-      val addJobs = jobs(cat.addTo(fids.slice(2, 12).toDF("fid"), "fold", "jobs"))
-      assert(removeJobs <= 3, s"removeFrom ran $removeJobs jobs")
-      assert(addJobs <= 4, s"addTo ran $addJobs jobs")
-    } finally sc.removeSparkListener(listener)
+    def jobs(f: => Unit): Int = JobBudget.jobs(spark.sparkContext)(f)
+    // each op reads the segment the previous one published, probes the
+    // base once and writes once; the Spark-side overlays cost ~20 each
+    val removeJobs = jobs(cat.removeFrom(fids.slice(10, 14).toDF("fid"), "fold", "jobs"))
+    val addJobs = jobs(cat.addTo(fids.slice(2, 12).toDF("fid"), "fold", "jobs"))
+    assert(removeJobs <= 3, s"removeFrom ran $removeJobs jobs")
+    assert(addJobs <= 4, s"addTo ran $addJobs jobs")
     val members = cat.filesDatasets.filter(col("dataset_name") === "jobs")
       .select("fid").as[String].collect().toSet
     assert(members == fids.toSet -- fids.slice(12, 14))
