@@ -22,8 +22,10 @@ import org.apache.hadoop.fs.Path
   * claimed + 1) and taken FIRST: the winner of seq s waits for every
   * predecessor's publish and then computes its row versions against
   * exactly the published state of seqs < s — the state they serialize
-  * after. Serializable, with one Spark write per mutation; a lost claim
-  * race costs a failed file-create, never a recompute (see [[commit]]).
+  * after. Serializable, with one segment write per mutation — on the
+  * driver for mutation-sized commits, a Spark write for bulk ones
+  * ([[SegmentIO]]); a lost claim race costs a failed file-create, never
+  * a recompute (see [[commit]]).
   *
   * Atomicity of the claim: `java.nio.Files.createFile` (O_CREAT|O_EXCL)
   * on local filesystems — Hadoop's RawLocalFileSystem.create is
@@ -83,26 +85,14 @@ private[metacat] final class OccLog(
 
   /** Test seam: fires in [[records]] and [[folded]] between the pinned
     * segment listing (already re-validated against the checkpoint
-    * pointer) and the EAGER `spark.read` file-index resolution — the
+    * pointer) and the read of the listed files — `records`' EAGER
+    * `spark.read` file-index resolution, `folded`'s driver read — the
     * exact window where a concurrent checkpoint+vacuum deletes
-    * just-listed segments and the read throws PATH_NOT_FOUND out of plan
-    * CONSTRUCTION. */
+    * just-listed segments and the read throws PATH_NOT_FOUND. */
   private[metacat] var onRecordsPinned: () => Unit = () => ()
 
   private def align(df: DataFrame): DataFrame =
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-
-  /** Output-partition count for COMMIT writes. Mutation-sized commits
-    * inherit the session's shuffle/scan partitioning (32 local), so each
-    * tiny segment landed as 5-10 near-empty part files — written by as
-    * many tasks, then listed and footer-read by EVERY later [[records]]
-    * fold (guide §6: small files hurt twice). Local default 1 part file
-    * per commit; a deployment doing bulk commits (millions of rows per
-    * mutation) raises `spark.graft.commit.partitions` — the value is a
-    * WRITE LAYOUT choice, never a semantics change. Checkpoint folds are
-    * O(log state), not mutation-sized — they size by estimated bytes
-    * ([[OccLog.foldSized]]), never by this conf. */
-  private def sized(df: DataFrame): DataFrame = OccLog.commitSized(spark, df)
 
   private val SeqDirName = "s(\\d{20})".r
 
@@ -288,7 +278,7 @@ private[metacat] final class OccLog(
           onRecordsPinned()
           val rows =
             if (toRead.isEmpty) Array.empty[Row]
-            else spark.read.schema(schema).parquet(toRead: _*).select(cols: _*).collect()
+            else SegmentIO.readRows(spark, schema, toRead, spec.cols)
           val next = cached match {
             case Some(k) if rows.isEmpty => k.copy(segs = segs)
             case _ => OccLog.FoldCache(c, ckptFiles, segs,
@@ -526,8 +516,8 @@ private[metacat] final class OccLog(
     *
     * CLAIM-FIRST: own the next dense seq before computing, await the
     * predecessors' publishes, then compute the mutation against exactly
-    * the state of seqs < s and publish — each mutation runs its Spark
-    * write exactly ONCE. (The original write-first variant computed
+    * the state of seqs < s and publish — each mutation writes its
+    * segment exactly ONCE. (The original write-first variant computed
     * speculatively and re-computed on every lost claim; at 4 concurrent
     * writers a slow writer burned a full write per collision and starved
     * past the retry cap. Losing a claim-first race costs one failed
@@ -676,31 +666,19 @@ private[metacat] final class OccLog(
   }
 
   /** Compute and write claimed seq `s`'s records to `tmp` (not yet
-    * published). Retries the write when its file listing raced a
-    * concurrent vacuum — the checkpoint now carries the deleted
-    * segments, so a FRESH plan from `mkRows` is correct (the same remedy
-    * Delta prescribes for reads racing VACUUM). */
+    * published), through [[SegmentIO.stage]]: on the driver when the
+    * mutation is small, by a Spark write otherwise. Retries the write when
+    * its file listing raced a concurrent vacuum — the checkpoint now
+    * carries the deleted segments, so a FRESH plan from `mkRows` is
+    * correct (the same remedy Delta prescribes for reads racing VACUUM). */
   private[metacat] def stageRows(s: Long, mkRows: () => DataFrame,
-      op: String, tmp: Path): Unit = {
-    val fs = fsOf(tmp)
-    var wrote = false
-    var writeAttempt = 0
-    while (!wrote) {
-      try {
-        val rows = mkRows()
-        sized(align((if (rows.columns.contains("__op")) rows
-            else rows.withColumn("__op", lit(op)))
-            .withColumn("__seq", lit(s))))
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        wrote = true
-      } catch {
-        case e: Throwable if OccLog.fileVanished(e) && writeAttempt < 5 =>
-          writeAttempt += 1
-          fs.delete(tmp, true)
-          Thread.sleep(10L * writeAttempt)
-      }
-    }
-  }
+      op: String, tmp: Path): Unit =
+    SegmentIO.stage(spark, { () =>
+      val rows = mkRows()
+      align((if (rows.columns.contains("__op")) rows
+          else rows.withColumn("__op", lit(op)))
+          .withColumn("__seq", lit(s)))
+    }, tmp)
 
   /** Publish claimed seq `s` by renaming `tmp` into the log. `strict`
     * (single-log commits) throws when the rename fails; lenient callers
@@ -907,17 +885,20 @@ private[graft] object OccLog {
     * probes read it to report listings-per-commit on the claim path */
   private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Output-partition count for MUTATION-SIZED commit/append writes
-    * (`spark.graft.commit.partitions`, default 1; < 1 disables the
-    * coalesce). One shared parse replaces four copy-pasted try/catch
-    * blocks that caught Throwable — swallowing fatal errors and silently
-    * coercing a typo'd conf value to 1; an unparseable value now fails
-    * loudly (NumberFormatException names the bad setting). */
+  /** Output-partition count for MUTATION-SIZED commit/append writes that
+    * take the Spark path (`spark.graft.commit.partitions`, default 1; < 1
+    * disables the coalesce). Small commits are written on the driver as
+    * one part file and never read it ([[SegmentIO]]). One shared parse
+    * replaces four copy-pasted try/catch blocks that caught Throwable —
+    * swallowing fatal errors and silently coercing a typo'd conf value to
+    * 1; an unparseable value now fails loudly (NumberFormatException
+    * names the bad setting). */
   private[graft] def commitParts(spark: SparkSession): Int =
     spark.conf.get("spark.graft.commit.partitions", "1").toInt
 
-  /** [[commitParts]]-sized view of a mutation-sized frame — a WRITE
-    * LAYOUT choice (guide §6 small files), never a semantics change.
+  /** [[commitParts]]-sized view of a mutation-sized frame bound for a
+    * Spark write ([[SegmentIO.stage]]'s bulk path) — a WRITE LAYOUT
+    * choice (guide §6 small files), never a semantics change.
     * O(log)/O(table) writes (checkpoint folds, rewrites) must NOT use
     * this: they size by estimated output bytes instead ([[foldSized]]). */
   private[graft] def commitSized(spark: SparkSession, df: DataFrame): DataFrame = {

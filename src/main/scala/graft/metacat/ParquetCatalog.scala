@@ -612,13 +612,12 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       // the handler rejects any post-merge key without a '.' category
       // prefix (data_handler.py:317-319); pre-existing keys were already
       // checked when they were written, so checking the patch suffices
-      val bare = spark.range(1)
-        .select(explode(map_keys(try_variant_get(
-          parse_json(lit(mj)), "$", "map<string,variant>"))).as("key"))
-        .filter(!col("key").contains(".")).limit(1).collect()
-      if (bare.nonEmpty)
+      val bare = firstError(patchRow("patch", mj), filter(map_keys(try_variant_get(
+        parse_json(col("metadata_json")), "$", "map<string,variant>")), !_.contains(".")))
+      bare.foreach { case (_, key) =>
         throw new IllegalArgumentException(
-          s"metadata parameter without a category: ${bare.head.getString(0)}")
+          s"metadata parameter without a category: $key")
+      }
     }
     def mergedMeta(mj: String) = metadataMode match {
       case "replace" => lit(mj)
@@ -892,8 +891,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     requireJsonObject(patchJson)
     // the incoming metadata dict validates against the category closure,
     // as in the reference's update path (data_handler.py:932)
-    failOnCategoryViolations(
-      spark.range(1).select(lit("patch").as("fid"), lit(patchJson).as("metadata_json")))
+    failOnCategoryViolations(patchRow("patch", patchJson))
     val merged = mode match {
       case "replace" => parse_json(lit(patchJson))
       case "update" => mergedVariant(col("metadata"), patchJson)
@@ -1142,8 +1140,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(s"file $fid not found")
     metadataJson.foreach { mj =>
       requireJsonObject(mj)
-      failOnCategoryViolations(spark.range(1)
-        .select(lit(fid).as("fid"), lit(mj).as("metadata_json")))
+      failOnCategoryViolations(patchRow(fid, mj))
     }
     // a file cannot be its own parent or child — a self-edge would read
     // back as a provenance cycle of length 1
@@ -1432,24 +1429,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def commitAdmin(op: String)(mkRows: () => DataFrame): Unit =
     adminLog.commit(mkRows, op)
 
-  /** Output-partition count for MUTATION-SIZED append writes — same knob
-    * and rationale as [[OccLog]]'s commit sizing
-    * (`spark.graft.commit.partitions`, local default 1): mutation-sized
-    * appends inherited the session's 32-way partitioning and landed 5-10
-    * near-empty part files per write, each a task at write time and a
-    * listing+footer read on every later scan (guide §6). Table REWRITES
-    * (compaction's partition swap, full-table rewrite) are O(table), not
-    * mutation-sized — they size by estimated output bytes
-    * ([[OccLog.foldSized]]), never by this conf. */
-  private def sized(df: DataFrame): DataFrame = OccLog.commitSized(spark, df)
-
-  /** Retry a driver-side read action that raced a concurrent vacuum: the
-    * plan's file listing saw raw log segments a vacuum then deleted — the
-    * checkpoint carries them, so a FRESH snapshot read is correct (the
-    * same remedy Delta prescribes for reads racing VACUUM, and the same
-    * one [[OccLog.commit]] applies to its own snapshot writes). Wraps the
-    * catalog's internal collect/probe sites; external callers' lazy
-    * DataFrames keep the documented read-vs-vacuum caveat. */
   /** Pin `mk()`'s rows for repeated use. A driver-resident literal (its
     * optimized plan is a LocalRelation) is pinned already and costs no
     * job. Anything else is persisted, and with `eager` materialized now:
@@ -1501,6 +1480,13 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     df.queryExecution.toRdd.mapPartitions(it => Iterator.single(it.hasNext))
       .collect().contains(true)
 
+  /** Retry a driver-side read action that raced a concurrent vacuum: the
+    * plan's file listing saw raw log segments a vacuum then deleted — the
+    * checkpoint carries them, so a FRESH snapshot read is correct (the
+    * same remedy Delta prescribes for reads racing VACUUM, and the same
+    * one [[OccLog.commit]] applies to its own snapshot writes). Wraps the
+    * catalog's internal collect/probe sites; external callers' lazy
+    * DataFrames keep the documented read-vs-vacuum caveat. */
   private def retryOnVanish[T](f: => T): T = {
     var attempt = 0
     while (true) {
@@ -1526,9 +1512,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       partitionCols: Seq[String] = Nil): Unit = {
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new org.apache.hadoop.fs.Path(path("_tmp"), s"append-$uuid")
-    val w = sized(df).write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
+    SegmentIO.stage(spark, () => df, tmp, partitionCols)
     val fs = fsOf(tmp)
     def move(srcDir: org.apache.hadoop.fs.Path,
         dstDir: org.apache.hadoop.fs.Path): Unit = {
@@ -2360,21 +2344,42 @@ final class ParquetCatalog(spark: SparkSession, root: String,
   private def failOnViolations(rows: DataFrame,
       constraints: Seq[Validation.Constraint]): Unit = {
     if (constraints.isEmpty) return
-    val bad = Validation.validate(rows, constraints).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"metadata validation failed: ${bad.head.mkString(", ")}")
+    firstError(rows, Validation.constraintErrors(rows, constraints)).foreach {
+      case (fid, err) =>
+        throw new IllegalArgumentException(s"metadata validation failed: $fid, $err")
+    }
   }
 
   /** every metadata key needs a category prefix, restricted categories
     * close their parameter set, and declared category parameters validate
-    * against their definitions (data_handler.py:603-627,683) */
+    * against their definitions (data_handler.py:603-627,683). Key errors
+    * take precedence over constraint errors, as in
+    * [[Validation.categoryViolations]]; over a literal `rows` neither
+    * check runs a Spark job. */
   private def failOnCategoryViolations(rows: DataFrame): Unit = {
-    val bad = Validation.categoryViolations(rows, loadCategories())
-      .limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"metadata validation failed: ${bad.head.getString(1)} (file ${bad.head.getString(0)})")
+    val cats = loadCategories()
+    (firstError(rows, Validation.keyErrors(rows, cats)) orElse
+      firstError(rows, Validation.constraintErrors(rows, cats.flatMap(_.constraints))))
+      .foreach { case (fid, err) =>
+        throw new IllegalArgumentException(
+          s"metadata validation failed: $err (file $fid)")
+      }
+  }
+
+  /** (fid, first error) of the first row of `rows` whose `errors` array
+    * is non-empty. One projection, a filter and a limit: Catalyst folds
+    * all three into the relation when `rows` is a driver literal. */
+  private def firstError(rows: DataFrame,
+      errors: org.apache.spark.sql.Column): Option[(String, String)] =
+    rows.select(col("fid"), errors.as("errors"))
+      .filter(size(col("errors")) > 0).limit(1).collect().headOption
+      .map(r => (r.getString(0), r.getSeq[String](1).head))
+
+  /** a one-row literal (fid, metadata_json): the validation input for a
+    * patch, checked without a Spark job */
+  private def patchRow(fid: String, metadataJson: String): DataFrame = {
+    import spark.implicits._
+    Seq((fid, metadataJson)).toDF("fid", "metadata_json")
   }
 
   private def align(df: DataFrame, schema: StructType): DataFrame =

@@ -183,28 +183,11 @@ private[metacat] final class TxnLog(spark: org.apache.spark.sql.SparkSession,
         boom(s"after-stage:${l.log}")
       }
       for (b <- baseLegs) {
-        // same commit sizing as OccLog.stageRows: a mutation-sized base
-        // leg lands as one part file, not 32-way session partitioning —
-        // and the same vacuum-race retry (fresh mkRows plan per attempt;
-        // pre-commit-point, so a partial stage is simply overwritten)
-        val stage = legStage(id, s"base-${b.table}")
-        var staged = false
-        var stageAttempt = 0
-        while (!staged) {
-          try {
-            val rows = OccLog.commitSized(spark, b.mkRows())
-            val w = rows.write.mode(
-              org.apache.spark.sql.SaveMode.Overwrite)
-            (if (b.partitionCols.nonEmpty) w.partitionBy(b.partitionCols: _*)
-             else w).parquet(stage.toString)
-            staged = true
-          } catch {
-            case e: Throwable if OccLog.fileVanished(e) && stageAttempt < 5 =>
-              stageAttempt += 1
-              fs.delete(stage, true)
-              Thread.sleep(10L * stageAttempt)
-          }
-        }
+        // the same staging as OccLog.stageRows — small legs on the
+        // driver, bulk ones by a Spark write — with the same vacuum-race
+        // retry (pre-commit-point, so a partial stage is simply replaced)
+        SegmentIO.stage(spark, b.mkRows, legStage(id, s"base-${b.table}"),
+          b.partitionCols)
         boom(s"after-stage:base-${b.table}")
       }
       for ((l, s) <- seqs if l.primary) {

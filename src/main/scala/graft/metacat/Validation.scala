@@ -181,15 +181,21 @@ object Validation {
     }
   }
 
+  /** per row of `rows`, the array of its violations of `constraints`, in
+    * constraint order (empty when the row is valid) */
+  def constraintErrors(rows: DataFrame, constraints: Seq[Constraint]): Column = {
+    val meta = metaCol(rows)
+    if (constraints.isEmpty) array().cast("array<string>")
+    else filter(array(constraints.map(c => violation(meta, c)): _*), _.isNotNull)
+  }
+
   /** validate rows carrying a `metadata_json` (or Variant `metadata`)
     * column; returns (fid, error) rows — empty means all valid */
   def validate(rows: DataFrame, constraints: Seq[Constraint]): DataFrame = {
     if (constraints.isEmpty)
       return rows.sparkSession.emptyDataFrame
         .withColumn("fid", lit("")).withColumn("error", lit("")).limit(0)
-    val meta = metaCol(rows)
-    val errs = array(constraints.map(c => violation(meta, c)): _*)
-    rows.select(col("fid"), explode(filter(errs, _.isNotNull)).as("error"))
+    rows.select(col("fid"), explode(constraintErrors(rows, constraints)).as("error"))
   }
 
   /** Category-closure validation — the server-side flow used by declare /
@@ -204,43 +210,48 @@ object Validation {
     * param_category.py:163-168).
     *
     * Categories are dimension-sized (a config table), so the closure
-    * compiles to a literal when-chain over the exploded key column —
-    * fully distributed, no driver loop over rows. */
+    * compiles to a literal when-chain over each row's keys — fully
+    * distributed, no driver loop over rows. Returns (fid, error) rows:
+    * every row's key errors, then every row's constraint errors. */
   def categoryViolations(rows: DataFrame, categories: Seq[Category]): DataFrame = {
-    val meta = metaCol(rows)
-    val k = col("__k")
-    // category path = everything before the last dot ("" when dot-less)
-    val cp = regexp_extract(k, "^(.*)\\.[^.]*$", 1)
-    // longest path first = nearest category wins the prefix walk
-    val sorted = categories.sortBy(-_.path.length)
-    val catVerdict = sorted.foldRight(lit(null).cast("string")) { (c, rest) =>
-      val exactErr: Column =
-        if (!c.restricted) lit(null).cast("string")
-        else {
-          val allowed = c.constraints.map(_.key)
-          val outside =
-            if (allowed.isEmpty) lit(true) else !k.isin(allowed: _*)
-          when(outside,
-            lit(s"parameter not allowed in restricted category ${c.path}"))
-        }
-      val ancestorErr: Column =
-        if (c.restricted) lit(s"category ${c.path} is restricted")
-        else lit(null).cast("string")
-      when(cp === c.path, exactErr)
-        .when(cp.startsWith(c.path + "."), ancestorErr)
-        .otherwise(rest)
-    }
-    val verdict =
-      when(cp === "", lit("metadata parameter without a category"))
-        .otherwise(catVerdict)
-    val keyErrs = rows
-      .select(col("fid"),
-        explode(map_keys(try_variant_get(meta, "$", "map<string,variant>"))).as("__k"))
-      .select(col("fid"), col("__k"), verdict.as("error"))
-      .filter(col("error").isNotNull)
-      .select(col("fid"), concat(col("__k"), lit(": "), col("error")).as("error"))
+    val keyErrs = rows.select(col("fid"), explode(keyErrors(rows, categories)).as("error"))
     val constraintErrs = validate(rows, categories.flatMap(_.constraints))
     keyErrs.unionByName(constraintErrs)
+  }
+
+  /** per row of `rows`, the array of `"<key>: <error>"` for each metadata
+    * key the category closure rejects, in key order (empty when none) —
+    * the key half of [[categoryViolations]], as one projection */
+  def keyErrors(rows: DataFrame, categories: Seq[Category]): Column = {
+    def verdict(k: Column): Column = {
+      // category path = everything before the last dot ("" when dot-less)
+      val cp = regexp_extract(k, "^(.*)\\.[^.]*$", 1)
+      // longest path first = nearest category wins the prefix walk
+      val sorted = categories.sortBy(-_.path.length)
+      val catVerdict = sorted.foldRight(lit(null).cast("string")) { (c, rest) =>
+        val exactErr: Column =
+          if (!c.restricted) lit(null).cast("string")
+          else {
+            val allowed = c.constraints.map(_.key)
+            val outside =
+              if (allowed.isEmpty) lit(true) else !k.isin(allowed: _*)
+            when(outside,
+              lit(s"parameter not allowed in restricted category ${c.path}"))
+          }
+        val ancestorErr: Column =
+          if (c.restricted) lit(s"category ${c.path} is restricted")
+          else lit(null).cast("string")
+        when(cp === c.path, exactErr)
+          .when(cp.startsWith(c.path + "."), ancestorErr)
+          .otherwise(rest)
+      }
+      when(cp === "", lit("metadata parameter without a category"))
+        .otherwise(catVerdict)
+    }
+    val keys = map_keys(try_variant_get(metaCol(rows), "$", "map<string,variant>"))
+    coalesce(
+      filter(transform(keys, k => concat(k, lit(": "), verdict(k))), _.isNotNull),
+      array().cast("array<string>"))
   }
 
   private def metaCol(rows: DataFrame): Column =

@@ -51,6 +51,38 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
       Seq("k1", "k2", "k3", "k4"))
   }
 
+  test("folded() retries when a vacuum deletes segments between its listing and the driver read") {
+    import spark.implicits._
+    val root = registerRoot(
+      Files.createTempDirectory("graft-foldrace-").toString)
+    val schema = Seq(("x", 1L)).toDF("k", "v")
+      .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
+    val spec = OccLog.FoldSpec(Seq("k", "v", "__seq"), _.getString(0))
+    def open() = new OccLog(spark, root, "tlog", schema,
+      OccLog.latestPerKey(Seq("k")), foldSpec = Some(spec))
+    val log = open()
+    for (i <- 1 to 4)
+      log.commit(() => Seq((s"k${i % 3}", i.toLong)).toDF("k", "v"), "upsert")
+    // folded() lists s1..s4 and their part files, then the seam
+    // checkpoints and vacuums them before the driver reads a byte
+    var fired = 0
+    log.onRecordsPinned = () => {
+      if (fired == 0) {
+        fired += 1
+        log.onRecordsPinned = () => ()
+        assert(log.checkpoint() == 4L)
+        assert(log.vacuum() == 4L)
+      }
+    }
+    val raced = log.folded().latest
+    assert(fired == 1, "the seam must have raced the listing")
+    val fresh = open().folded().latest
+    def view(m: Map[Any, org.apache.spark.sql.Row]) = m.view.mapValues(_.toSeq).toMap
+    assert(view(raced) == view(fresh))
+    assert(view(raced) == Map("k0" -> Seq("k0", 3L, 3L), "k1" -> Seq("k1", 4L, 4L),
+      "k2" -> Seq("k2", 2L, 2L)))
+  }
+
   test("a segment missing on every attempt fails loudly, with the read failure as cause") {
     import spark.implicits._
     val root = registerRoot(

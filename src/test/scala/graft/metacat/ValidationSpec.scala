@@ -108,4 +108,87 @@ class ValidationSpec extends SparkTestBase {
     assert(catErrors("""{"nocat":1}""", cats).exists(_.contains("without a category")))
     assert(catErrors("""{"nocat":1}""", Nil).exists(_.contains("without a category")))
   }
+
+  // ---- the catalog's rejections, message for message ----
+
+  private lazy val cat = {
+    val root = java.nio.file.Files.createTempDirectory("graft-validation-").toString
+    val c = new ParquetCatalog(spark, root)
+    c.createCategory("c", restricted = true, definitionsJson =
+      """{"n":{"type":"int","min":0,"max":10},"e":{"values":["x","y"]},""" +
+        """"p":{"type":"text","pattern":"t[0-9]"},"t":{"type":"int"}}""")
+    c.createDataset("v", "ds")
+    c
+  }
+
+  private lazy val requiring = {
+    val root = java.nio.file.Files.createTempDirectory("graft-validation-req-").toString
+    val c = new ParquetCatalog(spark, root)
+    c.createCategory("q", definitionsJson = """{"r":{"type":"text","required":true}}""")
+    c
+  }
+
+  /** a literal declare batch of (fid, metadata_json) rows */
+  private def batch(rows: (String, String)*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    rows.toDF("fid", "metadata_json")
+      .withColumn("namespace", lit("v"))
+      .withColumn("name", concat(col("fid"), lit(".dat")))
+      .withColumn("creator", lit("t"))
+      .withColumn("size", lit(1L))
+      .withColumn("created_timestamp", to_timestamp(lit("2026-01-01 00:00:00")))
+  }
+
+  private def rejection(f: => Unit): String =
+    intercept[IllegalArgumentException](f).getMessage
+
+  // (case, catalog, metadata JSON, the error the catalog must report)
+  private lazy val badMetadata = Seq(
+    ("bare key", cat, """{"nodot":1}""", "nodot: metadata parameter without a category"),
+    ("restricted category", cat, """{"c.zz":1}""",
+      "c.zz: parameter not allowed in restricted category c"),
+    ("restricted ancestor", cat, """{"c.sub.k":1}""", "c.sub.k: category c is restricted"),
+    ("type", cat, """{"c.t":"str"}""", "c.t: value does not conform to declared type int"),
+    ("enum", cat, """{"c.e":"z"}""", "c.e: value not in enumeration"),
+    ("pattern", cat, """{"c.p":"nope"}""", "c.p: value does not match pattern t[0-9]"),
+    ("min", cat, """{"c.n":-1}""", "c.n: value below min 0.0"),
+    ("max", cat, """{"c.n":11}""", "c.n: value above max 10.0"),
+    ("required", requiring, """{"q.other":"x"}""", "q.r: required parameter missing"))
+
+  test("declareFiles and updateFileMeta reject each bad metadata with its exact message") {
+    for ((what, c, meta, err) <- badMetadata) {
+      assert(rejection(c.declareFiles(batch("f1" -> meta))) ==
+        s"metadata validation failed: $err (file f1)", what)
+      assert(rejection(c.updateFileMeta(Seq("f1"), meta)) ==
+        s"metadata validation failed: $err (file patch)", what)
+    }
+  }
+
+  test("a multi-row batch reports key errors before constraint errors, then the first bad row") {
+    // f1 breaks a constraint, f2 a key rule: the key error wins
+    assert(rejection(cat.declareFiles(batch("f0" -> """{"c.n":1}""",
+        "f1" -> """{"c.n":11}""", "f2" -> """{"nodot":1}"""))) ==
+      "metadata validation failed: nodot: metadata parameter without a category (file f2)")
+    // two constraint errors: the first bad row's first error
+    assert(rejection(cat.declareFiles(batch("f0" -> """{"c.n":1}""",
+        "f1" -> """{"c.e":"z","c.n":11}""", "f2" -> """{"c.t":"s"}"""))) ==
+      "metadata validation failed: c.n: value above max 10.0 (file f1)")
+  }
+
+  test("updateDataset rejects a bare metadata key with its exact message") {
+    assert(rejection(cat.updateDataset("v", "ds", Some("""{"ds.ok":1,"bare":2}"""))) ==
+      "metadata parameter without a category: bare")
+  }
+
+  test("checks of literal batches and patches run no Spark job") {
+    def jobs(f: => Unit): Int = JobBudget.jobs(spark.sparkContext)(f)
+    val (_, c, meta, _) = badMetadata.find(_._1 == "max").get
+    rejection(c.updateFileMeta(Seq("f1"), meta)) // warm the category cache
+    val rows = batch("f0" -> """{"c.n":1}""", "f1" -> meta)
+    assert(jobs(rejection(c.declareFiles(rows))) == 0)
+    assert(jobs(rejection(c.updateFileMeta(Seq("f1"), meta))) == 0)
+    assert(jobs(rejection(cat.updateDataset("v", "ds", Some("""{"bare":2}""")))) == 0)
+    assert(jobs(cat.updateDataset("v", "ds", Some("""{"ds.ok":3}"""))) == 0)
+  }
 }
