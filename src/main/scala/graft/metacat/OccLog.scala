@@ -885,30 +885,10 @@ private[graft] object OccLog {
     * probes read it to report listings-per-commit on the claim path */
   private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Output-partition count for MUTATION-SIZED commit/append writes that
-    * take the Spark path (`spark.graft.commit.partitions`, default 1; < 1
-    * disables the coalesce). Small commits are written on the driver as
-    * one part file and never read it ([[SegmentIO]]). One shared parse
-    * replaces four copy-pasted try/catch blocks that caught Throwable —
-    * swallowing fatal errors and silently coercing a typo'd conf value to
-    * 1; an unparseable value now fails loudly (NumberFormatException
-    * names the bad setting). */
-  private[graft] def commitParts(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.commit.partitions", "1").toInt
-
-  /** [[commitParts]]-sized view of a mutation-sized frame bound for a
-    * Spark write ([[SegmentIO.stage]]'s bulk path) — a WRITE LAYOUT
-    * choice (guide §6 small files), never a semantics change.
-    * O(log)/O(table) writes (checkpoint folds, rewrites) must NOT use
-    * this: they size by estimated output bytes instead ([[foldSized]]). */
-  private[graft] def commitSized(spark: SparkSession, df: DataFrame): DataFrame = {
-    val n = commitParts(spark)
-    if (n >= 1) df.coalesce(n) else df
-  }
-
   /** Size-DERIVED output partitioning for O(log)/O(table) writes —
     * checkpoint folds, full-table rewrites, compaction's partition
-    * rewrites. The r14 commit sizing (fixed coalesce(1)) leaked onto
+    * rewrites, and commits too large for the driver ([[SegmentIO]]'s
+    * bulk path). The r14 commit sizing (fixed coalesce(1)) leaked onto
     * these paths, and coalesce has no shuffle barrier: at scale the
     * ENTIRE fold/sort/write stage collapsed to one task. Parts here = ceil(optimized-plan size
     * estimate / `spark.graft.write.targetFileBytes`, default 128 MiB,

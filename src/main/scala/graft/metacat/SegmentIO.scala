@@ -4,15 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftShim, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet I/O for mutation-sized frames, on the driver when they are
   * small. A one-row commit written by a Spark job costs a job, its
@@ -34,10 +35,6 @@ private[metacat] object SegmentIO {
   /** most rows a stage writes on the driver; a larger frame takes the
     * Spark write */
   val MaxDriverRows = 10000
-
-  /** most listed bytes [[readRows]] reads on the driver; larger reads
-    * take `spark.read` */
-  val MaxDriverReadBytes: Long = 8L << 20
 
   /** Write `mk()`'s rows to the fresh directory `dest` (partitioned by
     * `partitionCols`, Spark's `key=value` layout), replacing whatever a
@@ -65,41 +62,68 @@ private[metacat] object SegmentIO {
       partitionCols: Seq[String]): Unit = {
     // partition directories are named on the driver for string columns
     val driverSide = partitionCols.forall(c => df.schema(c).dataType == StringType)
-    (if (driverSide) driverRows(spark, df) else None) match {
-      case Some(rows) => writeOnDriver(spark, df.schema, rows, dest, partitionCols)
-      case None =>
-        // the bulk path: `spark.graft.commit.partitions` sizes its output
-        val w = OccLog.commitSized(spark, df).write.mode(SaveMode.Overwrite)
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(dest.toString)
+    val qe = df.queryExecution
+    qe.optimizedPlan match {
+      case _ if !driverSide => sparkWrite(OccLog.foldSized(spark, df), dest, partitionCols)
+      case l: LocalRelation if qe.analyzed.deterministic =>
+        if (l.data.size <= MaxDriverRows)
+          writeOnDriver(spark, df.schema, l.data, dest, partitionCols)
+        else sparkWrite(OccLog.foldSized(spark, df), dest, partitionCols)
+      case p if p.stats.rowCount.exists(_ > MaxDriverRows) =>
+        sparkWrite(OccLog.foldSized(spark, df), dest, partitionCols)
+      case _ =>
+        // one evaluation of the plan: its rows are kept until the write
+        // is done, so the bulk fallback writes them instead of running
+        // the plan a second time
+        val rows = qe.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+        try collectBounded(spark, rows) match {
+          case Right(small) => writeOnDriver(spark, df.schema, small, dest, partitionCols)
+          case Left(bytes) => sparkWrite(OccLog.foldSized(spark,
+            GraftShim.dataFrame(spark, rows, df.schema, bytes)), dest, partitionCols)
+        } finally rows.unpersist(blocking = false)
     }
   }
 
-  /** `df`'s rows when there are at most [[MaxDriverRows]]: taken from
-    * the plan when it optimizes to a `LocalRelation` (no job), collected
-    * by one job otherwise. None for a larger frame. */
-  private def driverRows(spark: SparkSession, df: DataFrame): Option[Seq[InternalRow]] = {
-    val qe = df.queryExecution
-    qe.optimizedPlan match {
-      case l: LocalRelation if qe.analyzed.deterministic =>
-        Some(l.data).filter(_.size <= MaxDriverRows)
-      case p if p.stats.rowCount.exists(_ > MaxDriverRows) => None
-      case _ =>
-        // each task sends at most MaxDriverRows + 1 rows, and the driver
-        // keeps them only while the running total stays within the bound
-        val cap = MaxDriverRows + 1
-        val rdd = qe.toRdd
-        val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
-        var total = 0L
-        spark.sparkContext.runJob(rdd,
-          (it: Iterator[InternalRow]) => it.take(cap).map(_.copy()).toArray,
-          (i: Int, rows: Array[InternalRow]) => {
-            total += rows.length
-            if (total <= MaxDriverRows) parts(i) = rows
-            else parts.indices.foreach(parts(_) = null)
+  /** the bulk path, laid out by [[OccLog.foldSized]] (parts from the
+    * frame's size) */
+  private def sparkWrite(df: DataFrame, dest: Path, partitionCols: Seq[String]): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+      .parquet(dest.toString)
+  }
+
+  /** `rows` on the driver when there are at most [[MaxDriverRows]] of
+    * them, else their in-memory size in bytes — in one job. A task whose
+    * partition holds more than the bound sends only its size, so no task
+    * sends more than [[MaxDriverRows]] rows; the driver keeps rows only
+    * while the running total stays within the bound. */
+  private def collectBounded(spark: SparkSession,
+      rows: RDD[InternalRow]): Either[BigInt, Seq[InternalRow]] = {
+    val parts = new Array[Array[InternalRow]](rows.getNumPartitions)
+    var total = 0L
+    var bytes = BigInt(0)
+    spark.sparkContext.runJob(rows,
+      (it: Iterator[InternalRow]) => {
+        val kept = Array.newBuilder[InternalRow]
+        var n = 0L
+        var size = 0L
+        it.foreach { r =>
+          n += 1
+          size += (r match {
+            case u: UnsafeRow => u.getSizeInBytes.toLong
+            case _ => 8L * r.numFields
           })
-        if (total > MaxDriverRows) None else Some(parts.toSeq.flatMap(_.toSeq))
-    }
+          if (n <= MaxDriverRows) kept += r
+        }
+        (n, size, if (n > MaxDriverRows) null else kept.result())
+      },
+      (i: Int, res: (Long, Long, Array[InternalRow])) => {
+        total += res._1
+        bytes += res._2
+        if (total <= MaxDriverRows) parts(i) = res._3
+        else parts.indices.foreach(parts(_) = null)
+      })
+    if (total > MaxDriverRows) Left(bytes) else Right(parts.toSeq.flatMap(_.toSeq))
   }
 
   /** `t` with every field, element and value nullable — the file schema
@@ -150,10 +174,9 @@ private[metacat] object SegmentIO {
   }
 
   /** The rows of the unpartitioned parquet `files`, read with `schema`
-    * and projected to `cols`: on the driver when the files' listed sizes
-    * total at most [[MaxDriverReadBytes]], through `spark.read…collect()`
-    * otherwise. A file that is gone fails with `spark.read`'s
-    * PATH_NOT_FOUND, which [[OccLog.fileVanished]] accepts. */
+    * and projected to `cols`, on the driver with the format's own reader.
+    * A file that is gone fails with `spark.read`'s PATH_NOT_FOUND, which
+    * [[OccLog.fileVanished]] accepts. */
   def readRows(spark: SparkSession, schema: StructType, files: Seq[String],
       cols: Seq[String]): Array[Row] = {
     val hconf = spark.sessionState.newHadoopConf()
@@ -166,8 +189,6 @@ private[metacat] object SegmentIO {
           throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> f), Some(e))
       }
     }
-    if (statuses.map(_.getLen).sum > MaxDriverReadBytes)
-      return spark.read.schema(schema).parquet(files: _*).select(cols.map(col): _*).collect()
     val required = StructType(cols.map(schema(_)))
     val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),

@@ -80,12 +80,12 @@ object IncrementalDedupStream {
       // reaches the write (observed: static overwrite truncated the
       // other batches' partitions)
       // batch-sized store writes land as `spark.graft.commit.partitions`
-      // part files (local default 1) instead of the session's 32-way
-      // partitioning — each batch partition was 32 near-empty files that
-      // every later probe re-listed (guide §6); deployments with large
-      // micro-batches raise the conf
-      def sized(df: DataFrame): DataFrame =
-        graft.metacat.OccLog.commitSized(spark, df)
+      // part files (local default 1; < 1 disables the coalesce) instead of
+      // the session's 32-way partitioning — each batch partition was 32
+      // near-empty files that every later probe re-listed (guide §6);
+      // deployments with large micro-batches raise the conf
+      val parts = spark.conf.get("spark.graft.commit.partitions", "1").toInt
+      def sized(df: DataFrame): DataFrame = if (parts >= 1) df.coalesce(parts) else df
       sized(admitted.withColumn("batch", lit(bid)))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")

@@ -230,12 +230,11 @@ class MergeOnReadSpec extends SparkTestBase {
   }
 
   test("mutation-sized commits land as single part files (commit sizing)") {
-    // r14 optimization: commit/append writes coalesce to
-    // spark.graft.commit.partitions (default 1) instead of inheriting the
-    // session's shuffle/scan partitioning — a tiny segment was 5-10
-    // near-empty part files, each listed + footer-read by every later
-    // records() fold. Layout only; the state-equality tests above pin
-    // that semantics are unchanged.
+    // a mutation-sized commit is written on the driver as one part file
+    // (SegmentIO) instead of inheriting the session's shuffle/scan
+    // partitioning — a tiny segment was 5-10 near-empty part files, each
+    // listed + footer-read by every later records() fold. Layout only;
+    // the state-equality tests above pin that semantics are unchanged.
     val (mor, morRoot) = newCat()
     declare(mor, "alpha", 10, "M")
     mutate(mor)

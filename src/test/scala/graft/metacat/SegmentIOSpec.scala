@@ -168,4 +168,20 @@ class SegmentIOSpec extends SparkTestBase {
         overBound -> (SegmentIO.MaxDriverRows + 1), scanned -> (SegmentIO.MaxDriverRows + 1)))
       assert(spark.read.parquet(d.toString).count() == n.toLong)
   }
+
+  test("a bulk frame's plan runs once, and its write is sized by the rows' bytes") {
+    val evaluated = spark.sparkContext.longAccumulator("segio-evaluated")
+    val tap = udf { (x: Long) => evaluated.add(1L); x }
+    val n = SegmentIO.MaxDriverRows + 1
+    val d = fresh("bulk")
+    SegmentIO.stage(spark, () => spark.range(0, n, 1, 4)
+      .select(tap(col("id")).as("k"), lit(1L).as("__seq")), d)
+    // the bounded collect's rows are written, not computed again
+    assert(evaluated.value == n.toLong)
+    // a few hundred KB over four partitions: one part file at the
+    // default 128 MiB target
+    assert(dataFiles(d).size == 1)
+    assert(rowsOf(spark.read.parquet(d.toString)) ==
+      rowsOf(spark.range(n).select(col("id").as("k"), lit(1L).as("__seq"))))
+  }
 }
