@@ -77,7 +77,7 @@ final class DedupLog(spark: SparkSession, root: String,
   import DedupLog._
 
   private val log = new OccLog(spark, root, "dedup_log", Schema,
-    OccLog.latestPerKey(Seq("doc_id", "band")))
+    Some(OccLog.latestPerKey(Seq("doc_id", "band"))))
 
   // Pin the LSH configuration to the store: signatures written under one
   // (numHashes, bands) banding are meaningless to a probe using another,

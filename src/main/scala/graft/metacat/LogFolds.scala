@@ -40,7 +40,10 @@ private[metacat] object LogFolds {
   private def seqOf(r: Row): Long = r.getAs[Long]("__seq")
   private def opOf(r: Row): String = r.getAs[String]("__op")
 
-  // ---- fold specs: the same keys each log's checkpoint `fold` uses ----
+  // ---- fold specs: each log's latest-wins keys. The members, edges and
+  // admin specs keep every column, so they are also those logs'
+  // checkpoints (OccLog.checkpoint); the files log's checkpoint collapses
+  // by the same `fid` in Spark ----
 
   val FilesSpec: OccLog.FoldSpec =
     OccLog.FoldSpec(Seq("fid", "__op", "__seq"), r => r.getString(0))

@@ -41,7 +41,7 @@ import org.apache.hadoop.fs.Path
   * clearing a stale lock.
   *
   * Checkpoint + vacuum bound the log's read cost WITHOUT an exclusive
-  * window: [[checkpoint]] materializes `fold` over the published prefix
+  * window: [[checkpoint]] materializes the fold of the published prefix
   * ≤ n into `<name>_ckpt/s<n>/` (tmp write + atomic rename, idempotent —
   * a PURE FUNCTION of already-published commits, so no coordination with
   * writers is needed); [[records]] then reads one checkpoint dir + only
@@ -51,9 +51,20 @@ import org.apache.hadoop.fs.Path
   * callers), which folds the log into its base table and deletes all
   * three directories — it needs an EXCLUSIVE window in every mode.
   *
+  * Where the driver fold ([[folded]]) keeps every column of the schema —
+  * the catalog's members, edges and admin logs — it already IS the
+  * checkpoint's content, so the checkpoint is written from it on the
+  * driver ([[SegmentIO.stage]]): no Spark job, and no re-read of the new
+  * checkpoint afterwards. The files log's driver fold keeps only
+  * `fid`/`__op`/`__seq` (its payloads stay on the executors, and its
+  * checkpoint can reach table size), so it and the dedup log checkpoint
+  * through their Spark `fold`.
+  *
   * @param schema    full at-rest record shape INCLUDING `__op`/`__seq`
-  * @param fold      pure latest-wins collapse used by checkpoints; must
-  *                  preserve the read semantics of the prefix it replaces
+  * @param fold      pure latest-wins collapse a Spark checkpoint runs;
+  *                  must preserve the read semantics of the prefix it
+  *                  replaces. None when `foldSpec` keeps every column:
+  *                  the checkpoint is then the driver fold itself
   * @param legacyFlat when true, parquet part files directly under
   *                  `<name>/` (a pre-OCC flat layout) are honored: their
   *                  max `__seq` joins the allocation frontier and they are
@@ -65,8 +76,15 @@ import org.apache.hadoop.fs.Path
   */
 private[metacat] final class OccLog(
     spark: SparkSession, root: String, name: String, schema: StructType,
-    fold: DataFrame => DataFrame, legacyFlat: Boolean = false,
+    fold: Option[DataFrame => DataFrame], legacyFlat: Boolean = false,
     foldSpec: Option[OccLog.FoldSpec] = None) {
+
+  /** true when the driver fold keeps whole records: [[checkpoint]] then
+    * writes the fold instead of running `fold` */
+  private val driverCheckpoint =
+    !legacyFlat && foldSpec.exists(_.cols.toSet == schema.fieldNames.toSet)
+  require(driverCheckpoint || fold.nonEmpty,
+    s"log $name needs a checkpoint fold: its driver fold does not keep every column")
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def path(t: String) = s"$root/$t"
@@ -83,12 +101,13 @@ private[metacat] final class OccLog(
   private[metacat] var stuckClaimRecovery: (String, Long) => Boolean =
     (_, _) => false
 
-  /** Test seam: fires in [[records]] and [[folded]] between the pinned
-    * segment listing (already re-validated against the checkpoint
-    * pointer) and the read of the listed files — `records`' EAGER
-    * `spark.read` file-index resolution, `folded`'s driver read — the
-    * exact window where a concurrent checkpoint+vacuum deletes
-    * just-listed segments and the read throws PATH_NOT_FOUND. */
+  /** Test seam: fires in [[records]], [[folded]] and a driver-written
+    * [[checkpoint]] between the pinned segment listing (already
+    * re-validated against the checkpoint pointer) and the read of the
+    * listed files — `records`' EAGER `spark.read` file-index resolution,
+    * the driver reads of the other two — the exact window where a
+    * concurrent checkpoint+vacuum deletes just-listed segments and the
+    * read throws PATH_NOT_FOUND. */
   private[metacat] var onRecordsPinned: () => Unit = () => ()
 
   private def align(df: DataFrame): DataFrame =
@@ -233,6 +252,10 @@ private[metacat] final class OccLog(
 
   private var foldCache: OccLog.FoldCache = null
 
+  /** the driver reader of the fold's columns, built on first use */
+  private lazy val reader =
+    new SegmentIO.Reader(spark, schema, foldSpec.get.cols)
+
   /** The driver-resident fold of this log: the latest record per
     * `foldSpec` key over the checkpoint and every segment above it,
     * projected to `foldSpec.cols` — the collected equivalent of
@@ -240,14 +263,15 @@ private[metacat] final class OccLog(
     *
     * Incremental: each call lists the log once (under the same
     * [[stableRead]] guard as [[records]]) and reads only the segments it
-    * has not folded yet — at most one Spark job, none when nothing was
+    * has not folded yet, on the driver — nothing when nothing was
     * published since the last call. Published segments are immutable, so
-    * a folded segment never needs re-reading. The cache is dropped when
-    * the checkpoint pointer moves, when the checkpoint's data files differ
-    * from the cached ones, or when any cached segment is gone or lists
-    * different data files: a compaction by another instance (after which
-    * seqs restart at 1, see [[truncate]]) can never pass for the segments
-    * it replaced. A legacy flat layout above the checkpoint is folded from
+    * a folded segment never needs re-reading. A checkpoint this instance
+    * publishes re-keys the cache to itself ([[checkpoint]]); otherwise the
+    * cache is dropped when the checkpoint pointer moves, when the
+    * checkpoint's data files differ from the cached ones, or when any
+    * cached segment is gone or lists different data files: a compaction
+    * by another instance (after which seqs restart at 1, see
+    * [[truncate]]) can never pass for the segments it replaced. A legacy flat layout above the checkpoint is folded from
     * a full raw read on every call (it exists only until the first
     * covering vacuum). */
   private[metacat] def folded(): OccLog.Folded = synchronized {
@@ -278,7 +302,7 @@ private[metacat] final class OccLog(
           onRecordsPinned()
           val rows =
             if (toRead.isEmpty) Array.empty[Row]
-            else SegmentIO.readRows(spark, schema, toRead, spec.cols)
+            else reader(toRead)
           val next = cached match {
             case Some(k) if rows.isEmpty => k.copy(segs = segs)
             case _ => OccLog.FoldCache(c, ckptFiles, segs,
@@ -754,33 +778,51 @@ private[metacat] final class OccLog(
     * (0 = empty log, nothing to do). Safe under concurrent writers; must
     * not race compaction (it truncates what the checkpoint reads). The
     * fold is bounded at the DENSE published prefix ([[densePublishedSeq]])
-    * — never past a hole a slow predecessor may still fill — and the
-    * read+write retries when its file listing races a concurrent
-    * [[vacuum]] (same remedy as [[commit]]'s snapshot writes; the two are
-    * advertised concurrent-safe and run together by maintenance CLIs). */
+    * — never past a hole a slow predecessor may still fill — and its read
+    * retries when its file listing races a concurrent [[vacuum]] (same
+    * remedy as [[commit]]'s snapshot writes; the two are advertised
+    * concurrent-safe and run together by maintenance CLIs).
+    *
+    * A driver fold is brought up to date before n is picked (so its view
+    * usually ends at n) and re-keyed to the new checkpoint afterwards, so
+    * the next [[folded]] reads only segments published since — never the
+    * checkpoint it already holds. */
   def checkpoint(): Long = {
+    // a log checkpointed in Spark refreshes only a fold this instance
+    // already keeps: a maintenance-only process never builds one
+    if (driverCheckpoint || synchronized(foldCache) != null) folded()
     val n = densePublishedSeq()
     if (n <= 0L) return 0L
     if (ckptSeq() >= n) return ckptSeq() // already covered
     val fs = fsOf(hPath(ckptT))
     val tmp = new Path(path("_tmp"), s"ckpt-${java.util.UUID.randomUUID()}")
-    var wrote = false
-    var attempt = 0
-    while (!wrote) {
-      try {
-        val merged = fold(records()
-          .filter(col("__seq") <= n)) // guard: a commit may publish mid-write
-        // the fold covers the ENTIRE published log state — size its write
-        // by estimated bytes, not the mutation-commit conf (a fixed
-        // coalesce(1) here is a single-task write of the whole log at scale)
-        OccLog.foldSized(spark, align(merged))
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        wrote = true
-      } catch {
-        case e: Throwable if OccLog.fileVanished(e) && attempt < 5 =>
-          attempt += 1
-          fs.delete(tmp, true)
-          Thread.sleep(10L * attempt)
+    if (driverCheckpoint) {
+      val latest = latestThrough(n) match {
+        case Some(rows) => rows
+        case None => return ckptSeq()
+      }
+      import scala.jdk.CollectionConverters._
+      SegmentIO.stage(spark, () => align(spark.createDataFrame(
+        latest.toSeq.asJava, StructType(foldSpec.get.cols.map(schema(_))))), tmp)
+    } else {
+      var wrote = false
+      var attempt = 0
+      while (!wrote) {
+        try {
+          val merged = fold.get(records()
+            .filter(col("__seq") <= n)) // guard: a commit may publish mid-write
+          // the fold covers the ENTIRE published log state — size its
+          // write by estimated bytes, not the mutation-commit conf (a fixed
+          // coalesce(1) here is a single-task write of the whole log at scale)
+          OccLog.foldSized(spark, align(merged))
+            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          wrote = true
+        } catch {
+          case e: Throwable if OccLog.fileVanished(e) && attempt < 5 =>
+            attempt += 1
+            fs.delete(tmp, true)
+            Thread.sleep(10L * attempt)
+        }
       }
     }
     val dst = new Path(path(ckptT), seqDirName(n))
@@ -791,7 +833,53 @@ private[metacat] final class OccLog(
       if (!fs.exists(dst))
         throw new IllegalStateException(s"checkpoint publish failed: $tmp -> $dst")
     }
+    rekey(n)
     n
+  }
+
+  /** The latest record per fold key over every record with seq ≤ `n`:
+    * the cached fold when its view ends at `n`, else a driver read of the
+    * checkpoint and the segments ≤ `n` under the [[stableRead]] guard.
+    * None when a concurrent checkpoint already covers `n`. A segment ≤ `n`
+    * missing from the listing while the pointer stands still was deleted
+    * outside the protocol; it fails the attempt as a vanished file, so the
+    * checkpoint is never written from a partial prefix. */
+  private def latestThrough(n: Long): Option[Iterable[Row]] = {
+    val k = synchronized(foldCache)
+    if (k != null && k.covers(n) && k.segs.keys.forall(_ <= n)) Some(k.latest.values)
+    else stableRead { c =>
+      if (c >= n) Some(None)
+      else {
+        val segs = listSeqNames(name).filter(s => s > c && s <= n).toSet
+        if (ckptSeq() != c) None
+        else {
+          (c + 1L to n).find(!segs(_)).foreach { s =>
+            throw new java.io.FileNotFoundException(
+              s"published segment ${segPath(s)} is missing from its listing")
+          }
+          val files = (if (c > 0L) dataFiles(ckptPath(c)) else Nil) ++
+            segs.toSeq.sorted.flatMap(s => dataFiles(segPath(s)))
+          onRecordsPinned()
+          Some(Some(OccLog.foldInto(foldSpec.get, Map.empty, reader(files).iterator).values))
+        }
+      }
+    }
+  }
+
+  /** After checkpoint `n` is published: a cached fold covering every seq
+    * ≤ `n` is the fold of that checkpoint plus its cached segments above
+    * `n` (latest-per-key is associative), so it is kept under the new
+    * checkpoint's files instead of being dropped. Its version still
+    * changes: [[Folded.payload]] pins file names the next vacuum deletes. */
+  private def rekey(n: Long): Unit = synchronized {
+    val k = foldCache
+    if (k != null && k.covers(n)) {
+      val files =
+        try Some(dataFiles(ckptPath(n)))
+        catch { case e: Throwable if OccLog.fileVanished(e) => None }
+      foldCache = files.map(OccLog.FoldCache(n, _, k.segs.filter(_._1 > n),
+        k.latest, OccLog.versions.incrementAndGet())).orNull
+    }
   }
 
   /** Drop the raw log prefix the newest checkpoint covers; returns the
@@ -955,7 +1043,11 @@ private[graft] object OccLog {
     * fold key over checkpoint `ckpt` (its data files `ckptFiles`) plus
     * the segments in `segs` (seq -> data files) */
   private final case class FoldCache(ckpt: Long, ckptFiles: Seq[String],
-      segs: Map[Long, Seq[String]], latest: Map[Any, Row], version: Long)
+      segs: Map[Long, Seq[String]], latest: Map[Any, Row], version: Long) {
+    /** true when this fold holds every seq ≤ `n` and `n` is above its
+      * checkpoint */
+    def covers(n: Long): Boolean = ckpt < n && (ckpt + 1L to n).forall(segs.contains)
+  }
 
   /** What a log's driver fold keeps: `cols` (must include `__seq`) of
     * each record, latest per `key`. */

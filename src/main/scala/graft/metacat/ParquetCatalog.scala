@@ -1253,57 +1253,45 @@ final class ParquetCatalog(spark: SparkSession, root: String,
 
   /** the files delta log under multi-writer OCC (claim markers + publish
     * renames + checkpoint/vacuum) — protocol in [[OccLog]]; checkpoints
-    * fold to latest-per-fid */
+    * fold to latest-per-fid in Spark (the driver fold keeps only the
+    * keys) */
   private[metacat] val filesLog = new OccLog(spark, root, "files_log", logSchema,
-    OccLog.latestPerKey(Seq("fid")), legacyFlat = true,
+    Some(OccLog.latestPerKey(Seq("fid"))), legacyFlat = true,
     foldSpec = Some(LogFolds.FilesSpec))
 
   /** the MEMBERSHIP delta log: `add`/`remove` records per
     * (fid, dataset) pair, plus `remove_all` wildcard tombstones per
-    * dataset. Same OCC protocol as [[filesLog]]; checkpoints fold to
-    * latest-per-pair plus the latest wildcard per dataset (wildcards
-    * cannot collapse into pair records — they also govern BASE rows). */
+    * dataset and `remove_fid` ones per fid. Same OCC protocol as
+    * [[filesLog]]; checkpoints are its driver fold (latest-per-pair plus
+    * the latest wildcard of each kind — wildcards cannot collapse into
+    * pair records, they also govern BASE rows; [[LogFolds.MembersSpec]]). */
   private[metacat] val membersLog = new OccLog(spark, root, "members_log",
-    MembersLogSchema, df =>
-      OccLog.latestPerKey(Seq("fid", "dataset_namespace", "dataset_name"))(
-          df.filter(col("__op") =!= MemberRemoveAll &&
-            col("__op") =!= MemberRemoveFid))
-        .unionByName(OccLog.latestPerKey(Seq("dataset_namespace", "dataset_name"))(
-          df.filter(col("__op") === MemberRemoveAll)))
-        .unionByName(OccLog.latestPerKey(Seq("fid"))(
-          df.filter(col("__op") === MemberRemoveFid))),
-    foldSpec = Some(LogFolds.MembersSpec))
+    MembersLogSchema, None, foldSpec = Some(LogFolds.MembersSpec))
 
   /** the PROVENANCE-EDGE delta log: add/remove records per
     * (parent, child) pair, plus one-side-null wildcard removes (a hard
     * delete retires every edge touching a fid with two records; a
     * replace-parents is one wildcard + the new edges in ONE commit).
-    * Checkpoints fold to latest-per-pair plus the latest wildcard per
-    * side — wildcards also govern base rows, so they never collapse
-    * into pair records. */
+    * Checkpoints are its driver fold: latest-per-pair plus the latest
+    * wildcard per side — wildcards also govern base rows, so they never
+    * collapse into pair records ([[LogFolds.EdgesSpec]]). */
   private[metacat] val edgesLog = new OccLog(spark, root, "edges_log",
-    EdgesLogSchema, df => {
-      val pairs = df.filter(col("parent_fid").isNotNull && col("child_fid").isNotNull)
-      OccLog.latestPerKey(Seq("parent_fid", "child_fid"))(pairs)
-        .unionByName(OccLog.latestPerKey(Seq("parent_fid"))(
-          df.filter(col("child_fid").isNull)))
-        .unionByName(OccLog.latestPerKey(Seq("child_fid"))(
-          df.filter(col("parent_fid").isNull)))
-    }, foldSpec = Some(LogFolds.EdgesSpec))
+    EdgesLogSchema, None, foldSpec = Some(LogFolds.EdgesSpec))
 
   /** the ADMIN delta log: ONE shared OCC log for every
     * dimension-table mutation — datasets, namespaces, named queries, the
     * dataset hierarchy, parameter categories. Records carry the union
     * row shape plus (table, key); the fold keeps the latest record per
-    * (table, key). A single seq space serializes all admin mutations
-    * across writers (they are rare, broadcast-sized actions — the same
-    * serialization the reference's Postgres transactions give the same
-    * tables), and duplicate/existence checks run INSIDE the commit
+    * (table, key), and checkpoints are that driver fold. A single seq
+    * space serializes all admin mutations across writers (they are rare,
+    * broadcast-sized actions — the same serialization the reference's
+    * Postgres transactions give the same tables), and
+    * duplicate/existence checks run INSIDE the commit
     * closure against the published predecessors, so racing creates of
     * one name resolve to one winner and one loud rejection (the PK
     * posture of `schema.sql`). */
   private[metacat] val adminLog = new OccLog(spark, root, "admin_log", AdminLogSchema,
-    OccLog.latestPerKey(Seq("table", "key")), foldSpec = Some(LogFolds.AdminSpec))
+    None, foldSpec = Some(LogFolds.AdminSpec))
 
   /** Driver state derived from one log's [[OccLog.folded]], rebuilt only
     * when the fold's version changes. Every call still refreshes the fold

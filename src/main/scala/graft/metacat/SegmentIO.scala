@@ -36,6 +36,10 @@ private[metacat] object SegmentIO {
     * Spark write */
   val MaxDriverRows = 10000
 
+  /** process-wide count of the files [[Reader]]s have read — tests read
+    * it to check that a fold refresh read nothing */
+  private[graft] val filesRead = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Write `mk()`'s rows to the fresh directory `dest` (partitioned by
     * `partitionCols`, Spark's `key=value` layout), replacing whatever a
     * failed attempt left there. A failure whose cause is a vanished file
@@ -173,35 +177,41 @@ private[metacat] object SegmentIO {
     }
   }
 
-  /** The rows of the unpartitioned parquet `files`, read with `schema`
-    * and projected to `cols`, on the driver with the format's own reader.
-    * A file that is gone fails with `spark.read`'s PATH_NOT_FOUND, which
-    * [[OccLog.fileVanished]] accepts. */
-  def readRows(spark: SparkSession, schema: StructType, files: Seq[String],
-      cols: Seq[String]): Array[Row] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    // a listed file that is gone fails as `spark.read` fails on it
-    val statuses = files.map { f =>
-      val p = new Path(f)
-      try p.getFileSystem(hconf).getFileStatus(p)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> f), Some(e))
-      }
-    }
-    val required = StructType(cols.map(schema(_)))
-    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+  /** A driver-side reader of unpartitioned parquet files with `schema`,
+    * returning their rows projected to `cols`, through the format's own
+    * reader. Building it broadcasts the session's whole Hadoop
+    * configuration, so a log keeps one reader for its lifetime
+    * ([[OccLog]]) instead of paying a broadcast per read; the session's
+    * SQL and Hadoop settings are the ones in force when it is built. */
+  final class Reader(spark: SparkSession, schema: StructType, cols: Seq[String]) {
+    private val hconf = spark.sessionState.newHadoopConf()
+    private val required = StructType(cols.map(schema(_)))
+    private val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       hconf)
-    val toRow = CatalystTypeConverters.createToScalaConverter(required)
-    statuses.iterator.flatMap { st =>
-      val it = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
-        0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
-      try it.map(r => toRow(r).asInstanceOf[Row]).toVector
-      finally it match {
-        case c: java.io.Closeable => c.close()
-        case _ => ()
+    private val toRow = CatalystTypeConverters.createToScalaConverter(required)
+
+    /** the rows of `files`; a file that is gone fails with `spark.read`'s
+      * PATH_NOT_FOUND, which [[OccLog.fileVanished]] accepts */
+    def apply(files: Seq[String]): Array[Row] = {
+      filesRead.addAndGet(files.size.toLong)
+      val statuses = files.map { f =>
+        val p = new Path(f)
+        try p.getFileSystem(hconf).getFileStatus(p)
+        catch {
+          case e: java.io.FileNotFoundException =>
+            throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> f), Some(e))
+        }
       }
-    }.toArray
+      statuses.iterator.flatMap { st =>
+        val it = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
+          0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+        try it.map(r => toRow(r).asInstanceOf[Row]).toVector
+        finally it match {
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
+      }.toArray
+    }
   }
 }

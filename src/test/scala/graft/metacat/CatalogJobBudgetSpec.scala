@@ -5,13 +5,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Per-op Spark job budgets of the catalog's small mutations, on a
-  * catalog whose four logs each hold a checkpoint and live segments
-  * above it. Small commits stage and fold on the driver ([[SegmentIO]])
-  * and literal checks fold into their relation, so an admin mutation
-  * runs no job and a files or members mutation only the query that
-  * computes its rows. A regression here fails a test before it shows
-  * in a benchmark. */
+/** Per-op Spark job budgets of the catalog's small mutations and of its
+  * maintenance, on a catalog whose four logs each hold a checkpoint and
+  * live segments above it. Small commits stage and fold on the driver
+  * ([[SegmentIO]]) and literal checks fold into their relation, so an
+  * admin mutation runs no job and a files or members mutation only the
+  * query that computes its rows; the members, edges and admin logs
+  * checkpoint from their driver folds. A regression here fails a test
+  * before it shows in a benchmark. */
 class CatalogJobBudgetSpec extends SparkTestBase with OccFailureCapture {
 
   private def declareRows(fids: Seq[String]): DataFrame = {
@@ -81,6 +82,28 @@ class CatalogJobBudgetSpec extends SparkTestBase with OccFailureCapture {
         val m = jobs(log.folded())
         assert(m == 0, s"folding ${log.logName} after $op ran $m Spark jobs")
       }
+    }
+    // maintain: the members, edges and admin checkpoints are written from
+    // their driver folds, the files log's by its Spark fold; every
+    // checkpoint re-keys its log's fold, so the next read folds nothing
+    val maintain = Seq[(OccLog, Int, () => Long, () => Long)](
+      (cat.filesLog, 2, () => cat.checkpointFilesLog(), () => cat.vacuumFilesLog()),
+      (cat.membersLog, 0, () => cat.checkpointMembersLog(), () => cat.vacuumMembersLog()),
+      (cat.edgesLog, 0, () => cat.checkpointEdgesLog(), () => cat.vacuumEdgesLog()),
+      (cat.adminLog, 0, () => cat.checkpointAdminLog(), () => cat.vacuumAdminLog()))
+    for ((log, budget, checkpoint, vacuum) <- maintain) {
+      val name = log.logName
+      assert(log.currentSeq() > log.ckptSeq(), s"$name needs segments above its checkpoint")
+      val n = jobs(checkpoint())
+      assert(n <= budget, s"checkpoint of $name ran $n Spark jobs (budget $budget)")
+      assert(log.ckptSeq() == log.currentSeq())
+      val v = jobs(vacuum())
+      assert(v == 0, s"vacuum of $name ran $v Spark jobs")
+      val read = SegmentIO.filesRead.get
+      val m = jobs(log.folded())
+      val files = SegmentIO.filesRead.get - read
+      assert(m == 0 && files == 0L,
+        s"folding $name after its checkpoint ran $m Spark jobs and read $files files")
     }
     // and the ops did what they say
     assert(cat.datasets.filter(col("name") === "fresh").count() == 1L)

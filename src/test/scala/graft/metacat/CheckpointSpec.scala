@@ -247,7 +247,7 @@ class CheckpointSpec extends SparkTestBase with OccFailureCapture {
     val schema = StructType(Seq(
       StructField("k", StringType), StructField("v", LongType),
       StructField("__op", StringType), StructField("__seq", LongType)))
-    val log = new OccLog(spark, root, "tlog", schema, OccLog.latestPerKey(Seq("k")))
+    val log = new OccLog(spark, root, "tlog", schema, Some(OccLog.latestPerKey(Seq("k"))))
     import spark.implicits._
     log.commit(() => Seq(("a", 1L)).toDF("k", "v"), "upsert") // seq 1
     def seqName(s: Long) = f"s$s%020d"

@@ -12,10 +12,13 @@ import ParquetCatalog._
   * script — including checkpoints, vacuums, keyed out-of-order publishes
   * and a compaction by a second catalog instance — each log's
   * incrementally maintained fold must equal latest-per-key over
-  * `records()`, the same keys the log's checkpoint fold collapses by. */
+  * `records()`. The members, edges and admin logs checkpoint from their
+  * driver folds, so each of their checkpoints must also read back equal
+  * to latest-per-key over the records it covers, and a fresh catalog on
+  * the same root must see what the checkpointing one sees. */
 class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
 
-  /** latest-per-key over `recs`, per log (the checkpoint folds, restated) */
+  /** latest-per-key over `recs`, per log, on the Spark side */
   private def expected(log: String, recs: DataFrame): DataFrame = {
     def latest(keys: String*)(df: DataFrame) = OccLog.latestPerKey(keys)(df)
     log match {
@@ -50,6 +53,23 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
         s"$step: the $name driver fold differs from latest-per-key over " +
         s"records(): missing ${want.toSet -- got.toSet}, extra ${got.toSet -- want.toSet}")
     }
+
+  private def ckptDir(root: String, log: String, n: Long): String =
+    f"$root/${log}_ckpt/s$n%020d"
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** the catalog views a fresh instance on `root` rebuilds from the
+    * checkpoints and segments on disk */
+  private def assertSameAsFresh(cat: ParquetCatalog, root: String, step: String): Unit = {
+    val fresh = new ParquetCatalog(spark, root)
+    for ((what, view) <- Seq[(String, ParquetCatalog => DataFrame)](
+        "filesDatasets" -> (_.filesDatasets), "parentChild" -> (_.parentChild),
+        "datasets" -> (_.datasets), "queries" -> (_.queries)))
+      assert(rowsOf(view(cat)) == rowsOf(view(fresh)),
+        s"$step: $what differs between the checkpointing catalog and a fresh one")
+  }
 
   private def declareRows(fids: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -99,6 +119,39 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
     def ds(): String = dss(rnd.nextInt(dss.size))
     var step = 0
     def check(what: String): Unit = assertFolds(cat, s"seed $seed step $step ($what)")
+    // record kinds the checked checkpoints carried
+    val covered = scala.collection.mutable.Set.empty[String]
+
+    /** checkpoint every log; each driver-written checkpoint must read
+      * back equal, row for row, to latest-per-key over the records it
+      * covers (collected before it was written) */
+    def checkpointAll(): Unit = {
+      cat.checkpointFilesLog()
+      for ((name, log, checkpoint) <- Seq[(String, OccLog, () => Long)](
+          ("members_log", cat.membersLog, () => cat.checkpointMembersLog()),
+          ("edges_log", cat.edgesLog, () => cat.checkpointEdgesLog()),
+          ("admin_log", cat.adminLog, () => cat.checkpointAdminLog()))) {
+        import scala.jdk.CollectionConverters._
+        val schema = log.records().schema
+        val prefix = log.records().collect().toList.asJava
+        val n = checkpoint()
+        if (n > 0L) {
+          val cols = schema.fieldNames.map(col).toIndexedSeq
+          val got = spark.read.parquet(ckptDir(root, name, n)).select(cols: _*)
+          val want = expected(name, spark.createDataFrame(prefix, schema)
+            .filter(col("__seq") <= n)).select(cols: _*)
+          assert(rowsOf(got) == rowsOf(want), s"seed $seed step $step: checkpoint $n " +
+            s"of $name differs from latest-per-key over its records")
+          got.collect().foreach { r =>
+            val op = r.getAs[String]("__op")
+            if (op == MemberRemoveAll || op == MemberRemoveFid) covered += op
+            if (name == "edges_log" && r.isNullAt(0)) covered += "edge wildcard to a child"
+            if (name == "edges_log" && r.isNullAt(1)) covered += "edge wildcard from a parent"
+          }
+        }
+      }
+      assertSameAsFresh(cat, root, s"seed $seed step $step")
+    }
 
     val ops: IndexedSeq[(String, () => Unit)] = IndexedSeq(
       "addTo" -> (() => cat.addTo(some(3).toDF("fid"), "fold", ds())),
@@ -146,10 +199,7 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
       }),
       "keyed out-of-order publish" -> (() =>
         outOfOrder(cat, root, ds(), some(2), check)),
-      "checkpoint" -> (() => {
-        cat.checkpointFilesLog(); cat.checkpointMembersLog()
-        cat.checkpointEdgesLog(); cat.checkpointAdminLog()
-      }),
+      "checkpoint" -> (() => checkpointAll()),
       "vacuum" -> (() => {
         cat.vacuumFilesLog(); cat.vacuumMembersLog()
         cat.vacuumEdgesLog(); cat.vacuumAdminLog()
@@ -164,6 +214,11 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
       val (name, op) = ops(rnd.nextInt(ops.size))
       run(name, op)
     }
+    // every wildcard kind lands in a checked checkpoint at least once
+    for (name <- Seq("removeDataset + recreate", "removeFiles", "replace parents", "checkpoint"))
+      run(name, ops.find(_._1 == name).get._2)
+    assert(covered == Set(MemberRemoveAll, MemberRemoveFid,
+      "edge wildcard to a child", "edge wildcard from a parent"), s"seed $seed covered $covered")
     // a second instance compacts every log (seqs restart at 1), then as
     // many members-log commits land again as the fold had seen: the
     // cached segments must never pass for the new ones
@@ -186,7 +241,7 @@ class DriverFoldSpec extends SparkTestBase with OccFailureCapture {
       .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
     val spec = OccLog.FoldSpec(Seq("k", "v", "__seq"), _.getString(0))
     def open() = new OccLog(spark, root, "tlog", schema,
-      OccLog.latestPerKey(Seq("k")), foldSpec = Some(spec))
+      Some(OccLog.latestPerKey(Seq("k"))), foldSpec = Some(spec))
     val mine = open()
     val theirs = open()
     def fold(): Map[String, Long] =

@@ -47,7 +47,7 @@ class FoldSizingSpec extends SparkTestBase with OccFailureCapture {
     val schema = Seq(("x", 1L)).toDF("k", "v")
       .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
     val log = new OccLog(spark, root, "tlog", schema,
-      OccLog.latestPerKey(Seq("k")))
+      Some(OccLog.latestPerKey(Seq("k"))))
     for (i <- 1 to 3)
       log.commit(() => (1 to 2000)
         .map(j => (s"k${i}_$j", j.toLong)).toDF("k", "v"), "upsert")

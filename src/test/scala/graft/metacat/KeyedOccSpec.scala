@@ -39,7 +39,7 @@ class KeyedOccSpec extends SparkTestBase with OccFailureCapture {
   test("disjoint keyed commit proceeds over an unpublished predecessor; intersecting blocks") {
     import spark.implicits._
     val root = newRoot()
-    val log = new OccLog(spark, root, "tlog", schema, OccLog.latestPerKey(Seq("k")))
+    val log = new OccLog(spark, root, "tlog", schema, Some(OccLog.latestPerKey(Seq("k"))))
     log.commit(() => Seq(("a", 1L)).toDF("k", "v"), "upsert", Some(Seq("a")))
     // simulate a slow writer holding seq 2 with footprint {b}
     val claims = new java.io.File(s"$root/tlog_claims")

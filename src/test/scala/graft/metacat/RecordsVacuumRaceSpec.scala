@@ -23,7 +23,7 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
     val schema = Seq(("x", 1L)).toDF("k", "v")
       .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
     val log = new OccLog(spark, root, "tlog", schema,
-      OccLog.latestPerKey(Seq("k")))
+      Some(OccLog.latestPerKey(Seq("k"))))
     for (i <- 1 to 4)
       log.commit(() => Seq((s"k$i", i.toLong)).toDF("k", "v"), "upsert",
         Some(Seq(s"k$i")))
@@ -59,7 +59,7 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
       .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
     val spec = OccLog.FoldSpec(Seq("k", "v", "__seq"), _.getString(0))
     def open() = new OccLog(spark, root, "tlog", schema,
-      OccLog.latestPerKey(Seq("k")), foldSpec = Some(spec))
+      Some(OccLog.latestPerKey(Seq("k"))), foldSpec = Some(spec))
     val log = open()
     for (i <- 1 to 4)
       log.commit(() => Seq((s"k${i % 3}", i.toLong)).toDF("k", "v"), "upsert")
@@ -90,7 +90,7 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
     val schema = Seq(("x", 1L)).toDF("k", "v")
       .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
     val log = new OccLog(spark, root, "tlog", schema,
-      OccLog.latestPerKey(Seq("k")),
+      Some(OccLog.latestPerKey(Seq("k"))),
       foldSpec = Some(OccLog.FoldSpec(Seq("k", "v", "__seq"), _.getString(0))))
     log.commit(() => Seq(("k1", 1L)).toDF("k", "v"), "upsert")
     // more segments than the guard has attempts, none covered by a
@@ -123,5 +123,87 @@ class RecordsVacuumRaceSpec extends SparkTestBase with OccFailureCapture {
         e.getCause.getMessage.contains("PATH_NOT_FOUND"),
         s"$what: the cause must be the missing-segment read, got ${e.getCause}")
     }
+  }
+
+  /** a log whose driver fold keeps every column — it checkpoints from
+    * that fold — holding seqs 1..3 and 5, with 4 claimed but unpublished:
+    * the dense prefix is 3, so a checkpoint's fold view (which also holds
+    * seq 5) ends past it and the checkpoint reads seqs ≤ 3 itself */
+  private def holedLog(tag: String): (String, () => OccLog, OccLog) = {
+    import spark.implicits._
+    val root = registerRoot(Files.createTempDirectory(s"graft-$tag-").toString)
+    val schema = Seq(("x", 1L)).toDF("k", "v")
+      .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
+    def open() = new OccLog(spark, root, "tlog", schema, None,
+      foldSpec = Some(OccLog.FoldSpec(schema.fieldNames.toSeq, _.getString(0))))
+    val writer = open()
+    for (i <- 1 to 3)
+      writer.commit(() => Seq((s"k${i % 2}", i.toLong)).toDF("k", "v"), "upsert",
+        Some(Seq(s"k${i % 2}")))
+    assert(writer.claimNext(Some(Seq("k9"))) == 4L)
+    writer.commit(() => Seq(("k5", 5L)).toDF("k", "v"), "upsert", Some(Seq("k5")))
+    assert(writer.densePublishedSeq() == 3L)
+    (root, () => open(), writer)
+  }
+
+  private def ckptDirs(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/tlog_ckpt").list()).toSeq.flatten.sorted
+
+  private def stagedLeftovers(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/_tmp").list()).toSeq.flatten.filter(_.startsWith("ckpt-"))
+
+  test("checkpoint() from the driver fold retries when a second instance checkpoints and vacuums under its read") {
+    val (root, open, theirs) = holedLog("ckptrace")
+    val mine = open()
+    // the first pinned window is the fold refresh, the second the
+    // checkpoint's own read of seqs ≤ 3: the second instance checkpoints
+    // and vacuums there, deleting the segments just listed
+    var pinned = 0
+    mine.onRecordsPinned = () => {
+      pinned += 1
+      if (pinned == 2) {
+        assert(theirs.checkpoint() == 3L)
+        assert(theirs.vacuum() == 3L)
+      }
+    }
+    assert(mine.checkpoint() == 3L)
+    // the raced read failed on the vacuumed segments; its retry found
+    // seq 3 covered by the second instance's checkpoint
+    assert(pinned == 2, "the seam must have raced the checkpoint's read")
+    mine.onRecordsPinned = () => ()
+    // one checkpoint, theirs: nothing partial or empty staged or
+    // published by the raced attempt
+    assert(ckptDirs(root) == Seq(f"s${3L}%020d"))
+    assert(stagedLeftovers(root).isEmpty)
+    import spark.implicits._
+    val ckpt = spark.read.parquet(s"$root/tlog_ckpt/${ckptDirs(root).head}")
+      .select("k", "v", "__seq").as[(String, Long, Long)].collect().toSet
+    assert(ckpt == Set(("k1", 3L, 3L), ("k0", 2L, 2L)))
+    def view(l: OccLog) = l.folded().latest.view.mapValues(_.toSeq).toMap
+    assert(view(mine) == view(open()))
+    assert(view(mine).keySet == Set("k0", "k1", "k5"))
+  }
+
+  test("a checkpoint whose prefix loses a segment on every attempt publishes nothing and fails loudly") {
+    val (root, open, _) = holedLog("ckptmissing")
+    val log = open()
+    // seq 1 is deleted outside the protocol inside the checkpoint's read
+    // window; every later listing lacks it while the pointer stands still
+    var pinned = 0
+    log.onRecordsPinned = () => {
+      pinned += 1
+      if (pinned == 2) {
+        val seg = new java.io.File(root, f"tlog/s${1L}%020d")
+        seg.listFiles().foreach(_.delete())
+        seg.delete()
+      }
+    }
+    val e = intercept[IllegalStateException](log.checkpoint())
+    assert(e.getMessage.contains("no stable view") &&
+      e.getMessage.contains("deleted outside the commit protocol"), e.getMessage)
+    assert(e.getCause != null && OccLog.fileVanished(e.getCause),
+      s"the cause must be the missing segment, got ${e.getCause}")
+    assert(ckptDirs(root).isEmpty, s"published ${ckptDirs(root)}")
+    assert(stagedLeftovers(root).isEmpty)
   }
 }

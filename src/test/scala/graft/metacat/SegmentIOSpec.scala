@@ -115,7 +115,7 @@ class SegmentIOSpec extends SparkTestBase {
         val want = spark.read.schema(schema).parquet(files: _*)
           .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
         var got: Array[Row] = null
-        assert(jobs { got = SegmentIO.readRows(spark, schema, files, cols) } == 0)
+        assert(jobs { got = new SegmentIO.Reader(spark, schema, cols)(files) } == 0)
         assert(got.map(_.toString).sorted.toSeq == want, s"$what: driver read of $cols")
         assert(got.forall(_.schema == StructType(cols.map(schema(_)))))
       }
@@ -183,5 +183,28 @@ class SegmentIOSpec extends SparkTestBase {
     assert(dataFiles(d).size == 1)
     assert(rowsOf(spark.read.parquet(d.toString)) ==
       rowsOf(spark.range(n).select(col("id").as("k"), lit(1L).as("__seq"))))
+  }
+
+  test("fold refreshes of new segments reuse the log's reader: no broadcast per read") {
+    import spark.implicits._
+    val schema = Seq(("x", 1L)).toDF("k", "v")
+      .withColumn("__op", lit("upsert")).withColumn("__seq", lit(1L)).schema
+    val log = new OccLog(spark, fresh("bcast").toString, "tlog", schema, None,
+      foldSpec = Some(OccLog.FoldSpec(schema.fieldNames.toSeq, _.getString(0))))
+    def commit(i: Int): Unit = log.commit(() => Seq((s"k$i", i.toLong)).toDF("k", "v"), "upsert")
+    commit(0)
+    log.folded() // the first read builds the reader
+    // building a reader broadcasts the session's Hadoop configuration;
+    // one built per read left one broadcast block per fold refresh
+    val created = (1 to 10).flatMap { i =>
+      commit(i)
+      val before = org.apache.spark.TestBroadcasts.ids(spark.sparkContext)
+      val read = SegmentIO.filesRead.get
+      log.folded()
+      assert(SegmentIO.filesRead.get - read == 1L, s"refresh $i reads the new segment only")
+      org.apache.spark.TestBroadcasts.ids(spark.sparkContext) -- before
+    }
+    assert(created.isEmpty, s"10 fold refreshes created broadcasts ${created.sorted}")
+    assert(log.folded().latest.size == 11)
   }
 }

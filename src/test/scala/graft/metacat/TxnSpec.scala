@@ -60,7 +60,7 @@ class TxnSpec extends SparkTestBase with OccFailureCapture {
     import org.apache.spark.sql.types._
     val root = newRoot()
     val schema = StructType(Seq(StructField("k", StringType)))
-    def mkLog(n: String) = new OccLog(spark, root, n, schema, df => df)
+    def mkLog(n: String) = new OccLog(spark, root, n, schema, Some(df => df))
     val txns = new TxnLog(spark, root,
       Map("files_log" -> mkLog("files_log"), "members_log" -> mkLog("members_log")),
       primaryLog = "files_log")
