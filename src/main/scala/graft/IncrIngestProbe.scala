@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Day-N incremental-ingest curve (r14; r13 verdict Next-round #5): the
-  * central scale claim of [[graft.streaming.IncrementalDedupStream]] is
-  * that per-batch cost is O(batch) — independent of how big the persisted
-  * corpus has grown — because the corpus is probed through its NARROW
-  * signature index and its text is fetched only for verified candidates.
-  * r13 proved that shape at sf0.01; this probe measures it: K sequential
-  * batches ingest into one persisted corpus+index, and the per-batch wall
+  * central scale claim of the incremental-dedup store
+  * ([[graft.metacat.DedupLog]]) is that per-batch cost is O(batch) —
+  * independent of how big the persisted corpus has grown — because the
+  * corpus is probed through its NARROW signature index and its text is
+  * fetched only for verified candidates. This probe measures it: K
+  * sequential batches ingest into one fresh store, and the per-batch wall
   * must stay flat while the corpus grows K-fold.
   *
   * Batches split by doc_id stride so every batch is the same size and
@@ -36,14 +36,13 @@ object IncrIngestProbe {
 
     val docs = spark.read.parquet(docsFile).select("doc_id", "text")
     val out = java.nio.file.Files.createTempDirectory("graft_incringest_")
-    val (corpusDir, indexDir) = (s"$out/corpus", s"$out/index")
+    val dl = new graft.metacat.DedupLog(spark, s"$out/store")
     val walls = (0 until k).map { b =>
       val batch = docs.filter(pmod(col("doc_id"), lit(k)) === b)
       val t0 = System.nanoTime()
-      graft.streaming.IncrementalDedupStream.ingestBatch(
-        spark, batch, b.toLong, corpusDir, indexDir)
+      dl.ingest(batch, b.toLong)
       val wall = (System.nanoTime() - t0) / 1e9
-      val rows = spark.read.parquet(corpusDir).count()
+      val rows = dl.corpus().count()
       println(f"INCRINGEST batch=$b%2d wall=$wall%.2f corpus_rows=$rows")
       wall
     }

@@ -7,13 +7,12 @@ import org.apache.spark.storage.StorageLevel
 import graft.pipeline.Dedup
 
 /** MULTI-WRITER incremental cross-batch dedup, governed by the catalog's
-  * OCC log protocol ([[OccLog]]) — the upgrade the r13 verdict flagged for
-  * the bare-parquet store ("two concurrent streams would race"; What's
-  * missing #2): [[graft.streaming.IncrementalDedupStream]]'s
-  * partition-overwrite layout is single-writer BY CONTRACT, while real
-  * ingest fleets run many streams (per source, per shard) against one
-  * logical corpus. This store makes concurrent admission SERIALIZABLE with
-  * the exact per-key conflict rule the dedup semantics induce:
+  * OCC log protocol ([[OccLog]]) — the one store behind
+  * [[graft.streaming.IncrementalDedupStream]] and the incremental-dedup
+  * gates. Real ingest fleets run many streams (per source, per shard)
+  * against one logical corpus, so this store makes concurrent admission
+  * SERIALIZABLE with the exact per-key conflict rule the dedup semantics
+  * induce:
   *
   *  - each ingest batch commits ONE log seq whose declared key footprint
   *    is its docs' LSH bucket keys (`b:<band>:<bkey>`) plus its doc
@@ -39,9 +38,10 @@ import graft.pipeline.Dedup
   * AT-LEAST-ONCE delivery converges without partition tricks: a
   * redelivered batch's docs are already corpus members, the re-arrival
   * anti-join empties the batch, and the commit publishes zero rows — the
-  * store is append-once per doc no matter how often a batch retries
-  * (cf. the partition-overwrite idempotence argument the single-writer
-  * stream needs, `IncrementalDedupStream.scala`).
+  * store is append-once per doc no matter how often a batch retries, and
+  * a doc redelivered under a new batch id keeps its original `batch`.
+  * Each admission is one atomic segment, so there is no window in which
+  * a doc's corpus row landed without its index rows.
   *
   * Storage shape: ONE log, rows `(doc_id, band, bkey, text, batch)` —
   * band `-1` is the corpus row (carries text, null bkey), bands `0..b-1`
@@ -49,9 +49,8 @@ import graft.pipeline.Dedup
   * doc and the narrow index stays index-sized. `batch` is caller
   * provenance (the micro-batch id), not protocol state. Checkpoint +
   * vacuum come FREE from the log ([[checkpoint]]/[[vacuum]] delegate):
-  * the lifecycle the bare store needed bespoke compaction for
-  * ([[graft.pipeline.DedupStore.compact]]) is the log's standard
-  * fold-the-prefix maintenance here, safe under concurrent writers.
+  * the standard fold-the-prefix maintenance, safe under concurrent
+  * writers, and it keeps every row's `batch`.
   *
   * Scale shape per batch: O(batch) shingling, then a handful of Spark
   * jobs. Before the claim, one job collects the batch's signature rows
@@ -76,7 +75,7 @@ final class DedupLog(spark: SparkSession, root: String,
 
   import DedupLog._
 
-  private val log = new OccLog(spark, root, "dedup_log", Schema,
+  private[metacat] val log = new OccLog(spark, root, "dedup_log", Schema,
     Some(OccLog.latestPerKey(Seq("doc_id", "band"))))
 
   // Pin the LSH configuration to the store: signatures written under one
@@ -176,9 +175,7 @@ final class DedupLog(spark: SparkSession, root: String,
   /** The live `(doc_id, band, bkey, __seq)` rows of `rec` whose `bkey` is
     * in `bkeys` or whose doc is in `ids`, from ONE narrow scan collected
     * to the driver. The scan also returns every tombstone (curation-sized,
-    * as [[folded]] assumes), and the fold is [[folded]]'s rule applied on
-    * the driver: a row is live iff no tombstone for its doc has a HIGHER
-    * seq. */
+    * as [[live]] assumes), folded by [[retiredAt]]. */
   private def liveRows(rec: DataFrame, bkeys: Set[String],
       ids: Set[Long]): Seq[Hit] = {
     val rows = rec
@@ -186,9 +183,9 @@ final class DedupLog(spark: SparkSession, root: String,
         col("doc_id").isInCollection(ids))
       .select("doc_id", "band", "bkey", "__op", "__seq").collect()
     val (tombs, recs) = rows.toSeq.partition(_.getString(3) == OpRemove)
-    val retiredAt = tombs.groupMapReduce(_.getLong(0))(_.getLong(4))(math.max)
+    val retired = retiredAt(tombs.map(r => (r.getLong(0), r.getLong(4))))
     recs.collect {
-      case r if retiredAt.get(r.getLong(0)).forall(r.getLong(4) > _) =>
+      case r if isLive(retired, r.getLong(0), r.getLong(4)) =>
         Hit(r.getLong(0), r.getInt(1), r.getString(2), r.getLong(4))
     }
   }
@@ -259,36 +256,34 @@ final class DedupLog(spark: SparkSession, root: String,
       OpRemove, Some(keys))
   }
 
-  /** Live rows with tombstones folded out, as a Spark plan — the read
-    * side of [[corpus]], [[index]] and [[fsck]] (the commit paths fold
-    * their narrow probe on the driver, [[liveRows]]). NOT the generic
-    * latest-per-key window — that would shuffle the WHOLE index. Admit
-    * rows are append-once per doc generation and [[retire]] removes
-    * whole docs, so the fold reduces to a seq-aware anti-join: a row is
-    * live iff no tombstone for its doc has a HIGHER seq (a re-admission
-    * after retire writes fresh rows above the tombstone and comes back
-    * live). The tombstone side is curation-sized — AQE broadcasts it, the
-    * index scan stays map-side. Checkpoints still apply the full
-    * latest-per-key collapse, which physically shadows removed rows
-    * under exactly these semantics. */
-  private def folded(): DataFrame = {
+  /** Live records as a Spark plan — the read side of [[corpus]],
+    * [[index]] and [[fsck]]. The tombstones (curation-sized) are
+    * collected in one narrow scan and folded on the driver by the rule
+    * [[liveRows]] applies ([[retiredAt]], [[isLive]]); the records are
+    * then filtered map-side, with no shuffle and no join. Checkpoints
+    * apply the full latest-per-key collapse, which physically shadows
+    * removed rows under exactly these semantics. */
+  private def live(): DataFrame = {
     val rec = log.records()
-    val tomb = rec.filter(col("__op") === OpRemove)
-      .groupBy("doc_id").agg(max("__seq").as("__rseq"))
-    rec.filter(col("__op") =!= OpRemove)
-      .join(tomb, Seq("doc_id"), "left")
-      .filter(col("__rseq").isNull || col("__seq") > col("__rseq"))
-      .drop("__rseq")
+    val retired = retiredAt(rec.filter(col("__op") === OpRemove)
+      .select("doc_id", "__seq").collect().map(r => (r.getLong(0), r.getLong(1))))
+    val admitted = rec.filter(col("__op") =!= OpRemove)
+    if (retired.isEmpty) admitted
+    else admitted.filter(udf((d: Long, s: Long) => isLive(retired, d, s))
+      .apply(col("doc_id"), col("__seq")))
   }
 
+  private def corpusOf(rows: DataFrame): DataFrame =
+    rows.filter(col("band") === CorpusBand).select("doc_id", "text", "batch")
+
+  private def indexOf(rows: DataFrame): DataFrame =
+    rows.filter(col("band") >= 0).select("doc_id", "band", "bkey")
+
   /** the admitted corpus: one `(doc_id, text, batch)` row per live doc */
-  def corpus(): DataFrame =
-    folded().filter(col("band") === CorpusBand)
-      .select("doc_id", "text", "batch")
+  def corpus(): DataFrame = corpusOf(live())
 
   /** the persisted signature index: `(doc_id, band, bkey)` per band */
-  def index(): DataFrame =
-    folded().filter(col("band") >= 0).select("doc_id", "band", "bkey")
+  def index(): DataFrame = indexOf(live())
 
   /** fold the published prefix into one checkpoint dir (read-cost bound;
     * no exclusive window needed — [[OccLog.checkpoint]]) */
@@ -297,12 +292,44 @@ final class DedupLog(spark: SparkSession, root: String,
   /** drop raw segments + claims the checkpoint covers ([[OccLog.vacuum]]) */
   def vacuum(): Long = log.vacuum()
 
-  /** corpus↔index invariants audit (shares the bare store's checks —
-    * [[graft.pipeline.DedupStore.fsckFrames]], including the full
-    * recompute of the index from the corpus text) */
-  def fsck(): DataFrame =
-    graft.pipeline.DedupStore.fsckFrames(spark,
-      corpus().drop("batch"), index(), numHashes, bands)
+  /** Audit the corpus↔index invariants; one row per check
+    * (`check`, `violations`, `ok`). All-green is the store's healthy
+    * state: unique live corpus doc_ids, exactly `bands` index rows per
+    * corpus doc, no orphan index rows, unique (doc_id, band), and — the
+    * full-strength check — the stored index must EQUAL the index
+    * recomputed from the corpus text (O(corpus) shingling; fsck is an
+    * audit, not a hot path). */
+  def fsck(): DataFrame = {
+    import spark.implicits._
+    val rows = live()
+    val corpus = corpusOf(rows).drop("batch")
+    val idx = indexOf(rows)
+    val corpusIds = corpus.select("doc_id").persist()
+    val nCorpus = corpusIds.count()
+    val corpusDup = nCorpus - corpusIds.distinct().count()
+    // exactly `bands` index rows per corpus doc (a doc with zero rows is
+    // invisible to every future probe; more than `bands` double-counts)
+    val perDoc = idx.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val cardinality = corpusIds.distinct()
+      .join(perDoc, Seq("doc_id"), "left")
+      .filter(coalesce(col("n"), lit(0L)) =!= bands).count()
+    // index rows for docs the corpus does not hold (phantom candidates)
+    val orphans = idx.select("doc_id").distinct()
+      .join(corpusIds.distinct(), Seq("doc_id"), "left_anti").count()
+    val bandDup = idx.count() - idx.select("doc_id", "band").distinct().count()
+    // full-strength: stored index == index recomputed from corpus text
+    val recomputed = Dedup.signatureIndex(corpus, numHashes, bands)
+      .select(col("doc_id"), col("band").cast("int").as("band"), col("bkey"))
+    val sigDiff = recomputed.exceptAll(idx).count() + idx.exceptAll(recomputed).count()
+    corpusIds.unpersist()
+    Seq(
+      ("corpus_doc_unique", corpusDup),
+      ("index_cardinality", cardinality),
+      ("index_orphans", orphans),
+      ("index_band_unique", bandDup),
+      ("index_signature_match", sigDiff)
+    ).toDF("check", "violations").withColumn("ok", col("violations") === 0L)
+  }
 }
 
 object DedupLog {
@@ -312,6 +339,19 @@ object DedupLog {
 
   /** one live stored row the probe found */
   private final case class Hit(doc: Long, band: Int, bkey: String, seq: Long)
+
+  /** Each retired doc's highest tombstone seq, from its `(doc_id, __seq)`
+    * tombstones. */
+  private def retiredAt(tombs: Iterable[(Long, Long)]): Map[Long, Long] =
+    tombs.groupMapReduce(_._1)(_._2)(math.max)
+
+  /** THE liveness rule of the store: a record of `doc` at `seq` is live
+    * iff no tombstone for its doc has a HIGHER seq. Admit rows are
+    * append-once per doc generation and [[DedupLog.retire]] removes
+    * whole docs, so a re-admission after retire writes fresh rows above
+    * the tombstone and comes back live. */
+  private def isLive(retired: Map[Long, Long], doc: Long, seq: Long): Boolean =
+    retired.get(doc).forall(seq > _)
 
   /** `seq_b` of a verify candidate whose `doc_b` is in the batch */
   private val BatchSeq = -1L

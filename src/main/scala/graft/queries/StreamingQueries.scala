@@ -66,17 +66,15 @@ object StreamingQueries {
     "stream_bm25" -> ((s, d) =>
       RetrievalStream.runToBatch(s, s"$d/documents.parquet", "v_stream_bm25")),
     // day-2 incremental dedup ingest (r13): batch 0 bootstraps the
-    // persisted corpus + signature index, batch 1 probes them, and the
-    // runner REDELIVERS batch 1 verbatim (at-least-once) — the output
-    // must still be the exactly-once corpus
+    // persisted corpus + signature index of a DedupLog store, batch 1
+    // probes them, and the runner REDELIVERS batch 1 verbatim
+    // (at-least-once) — the output must still be the exactly-once corpus
     "stream_dedup_incremental" -> ((s, d) =>
       IncrementalDedupStream.runToBatch(s, s"$d/documents.parquet")),
-    // the MULTI-WRITER store (r14): the same two-batch + redelivery
-    // scenario through the OCC-governed DedupLog — admissions commit to
-    // one catalog-protocol log with LSH-bucket key footprints, then the
-    // log's own checkpoint+vacuum lifecycle and fsck run before the
-    // corpus is served. Same oracle as stream_dedup_incremental: the
-    // governance changes who may write, never what is admitted.
+    // the same two-batch + redelivery scenario, then the log's own
+    // checkpoint+vacuum lifecycle and fsck run before the corpus is
+    // served. Same oracle as stream_dedup_incremental: maintenance never
+    // changes what is admitted.
     "stream_dedup_occ" -> ((s, d) =>
       IncrementalDedupStream.runOccToBatch(s, s"$d/documents.parquet")),
     // RETIREMENT through the OCC store (r14): admitted evens %4==0 are
@@ -86,29 +84,19 @@ object StreamingQueries {
     // runs against the folded store before serving
     "stream_dedup_occ_retire" -> ((s, d) =>
       IncrementalDedupStream.runOccRetireToBatch(s, s"$d/documents.parquet")),
-    // store LIFECYCLE (r14): compact the partition-per-batch corpus+index
-    // into the reserved batch=-1 partition (identity-checked swap), fsck
-    // the corpus↔index invariants (any violation throws → red gate), and
-    // serve the corpus from the compacted store — same admitted set as
-    // stream_dedup_incremental, batch provenance folded to -1. The
-    // two-batch ingest is staged once per corpus dir (maintenance runs
-    // against an EXISTING store; re-staging per run would time the
-    // ingest, the pipe_bpe_encode lesson); compaction is idempotent, so
-    // repeat runs re-fold the compacted store and must emit the same rows.
-    "stream_dedup_store_maint" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val (corpusDir, indexDir) = maintStore.computeIfAbsent(d, dir =>
-        IncrementalDedupStream.stageStore(s, s"$dir/documents.parquet"))
-      graft.pipeline.DedupStore.compact(s, corpusDir, indexDir)
-      val bad = graft.pipeline.DedupStore.fsck(s, corpusDir, indexDir)
-        .filter(!col("ok")).collect()
-      require(bad.isEmpty, s"dedup-store fsck violations: ${bad.mkString("; ")}")
-      s.read.parquet(corpusDir)
-        .select(col("doc_id"), col("batch").cast("long").as("batch"))
-    }))
+    // store LIFECYCLE against an EXISTING store: checkpoint + vacuum,
+    // fsck the corpus↔index invariants (any violation throws → red
+    // gate), and serve the corpus — same rows as stream_dedup_incremental
+    // (a checkpoint keeps batch provenance). The two-batch ingest is
+    // staged once per corpus dir (re-staging per run would time the
+    // ingest, the pipe_bpe_encode lesson); maintenance is idempotent, so
+    // repeat runs re-fold the checkpointed store and emit the same rows.
+    "stream_dedup_store_maint" -> ((s, d) =>
+      IncrementalDedupStream.maintain(maintStore.computeIfAbsent(d, dir =>
+        IncrementalDedupStream.stage(s, s"$dir/documents.parquet")))))
 
   private val maintStore =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    new java.util.concurrent.ConcurrentHashMap[String, graft.metacat.DedupLog]()
 
   private def jacGE(thr: String) =
     "len(list_intersect(s_a, s_b))::DOUBLE / " +
@@ -118,13 +106,11 @@ object StreamingQueries {
     * intra-batch dedup only; batch 1 = odds probed against batch 0's
     * ADMITTED corpus (the index holds admitted docs only) plus earlier
     * odds (chain policy: matching a rejected earlier doc still rejects).
-    * The redelivered batch 1 adds nothing — exactly this. `b0`/`b1` are
-    * the emitted batch tags (0/1 live; -1/-1 after compaction folds the
-    * provenance). `retain` narrows the post-batch-0 corpus (TRUE = keep
-    * all): the retirement gate retires admitted evens failing it, so
-    * batch 1 probes — and the output keeps — only the retained evens. */
-  private def incrIngestOracle(b0: Int, b1: Int,
-      retain: String = "TRUE"): String =
+    * The redelivered batch 1 adds nothing — exactly this. `retain`
+    * narrows the post-batch-0 corpus (TRUE = keep all): the retirement
+    * gate retires admitted evens failing it, so batch 1 probes — and
+    * the output keeps — only the retained evens. */
+  private def incrIngestOracle(retain: String = "TRUE"): String =
     s"WITH ${PipelineQueries.Sig}, bands AS (SELECT doc_id, s, b.range AS band, " +
       "CAST(g[2*b.range + 1] AS VARCHAR) || ',' || CAST(g[2*b.range + 2] AS VARCHAR) AS bkey " +
       "FROM sig, range(4) b), " +
@@ -140,19 +126,19 @@ object StreamingQueries {
       "WHERE a.doc_id % 2 = 1 AND (b.doc_id IN (SELECT doc_id FROM r0) " +
       "OR (b.doc_id % 2 = 1 AND b.doc_id < a.doc_id))), " +
       s"dup1 AS (SELECT DISTINCT doc_a FROM cand1 WHERE ${jacGE("0.5")}) " +
-      s"SELECT doc_id, CAST($b0 AS BIGINT) AS batch FROM r0 " +
-      s"UNION ALL SELECT doc_id, CAST($b1 AS BIGINT) FROM documents " +
+      "SELECT doc_id, CAST(0 AS BIGINT) AS batch FROM r0 " +
+      "UNION ALL SELECT doc_id, CAST(1 AS BIGINT) FROM documents " +
       "WHERE doc_id % 2 = 1 AND doc_id NOT IN (SELECT doc_a FROM dup1)"
 
   val oracles: Map[String, String] = Map(
-    "stream_dedup_incremental" -> incrIngestOracle(0, 1),
+    "stream_dedup_incremental" -> incrIngestOracle(),
     // OCC-governed store: identical admitted set and batch provenance
-    "stream_dedup_occ" -> incrIngestOracle(0, 1),
+    "stream_dedup_occ" -> incrIngestOracle(),
     // retirement: batch 1 probes (and the output keeps) only the
     // retained evens — doc_id % 4 != 0 of the admitted batch-0 set
-    "stream_dedup_occ_retire" -> incrIngestOracle(0, 1, "doc_id % 4 != 0"),
-    // compacted store: same admitted set, provenance folded to batch=-1
-    "stream_dedup_store_maint" -> incrIngestOracle(-1, -1),
+    "stream_dedup_occ_retire" -> incrIngestOracle("doc_id % 4 != 0"),
+    // maintained store: a checkpoint keeps batch provenance
+    "stream_dedup_store_maint" -> incrIngestOracle(),
 
     "stream_events_hourly" ->
       """SELECT (floor(epoch(ts) / 3600) * 3600)::BIGINT AS hour_epoch, event_type,

@@ -7,13 +7,13 @@ import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 import graft.mql.SparkTestBase
 import graft.pipeline.Dedup
-import graft.streaming.IncrementalDedupStream
 
 /** The OCC-governed multi-writer dedup store ([[DedupLog]]): admission
-  * parity with the single-writer store, serializable concurrent admission
-  * (one winner per clone group no matter how batches interleave),
-  * redelivery convergence without partition tricks, and the log's own
-  * lifecycle preserving the corpus. */
+  * parity with the [[Dedup.incrementalAdmit]] rule, serializable
+  * concurrent admission (one winner per clone group no matter how batches
+  * interleave), redelivery convergence without partition tricks, the
+  * log's own lifecycle preserving the corpus, and an fsck that flags each
+  * invariant violation. */
 class DedupLogSpec extends SparkTestBase with OccFailureCapture {
 
   // r14: the clone-storm test failed ONCE in a 7-suite group soak (10
@@ -45,7 +45,48 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     (r.getLong(0), r.getLong(1))
   }
 
-  test("sequential ingest matches the single-writer store's admissions") {
+  /** The tombstone fold as a Spark plan — latest tombstone seq per doc,
+    * a left join, and the seq comparison — kept as the reference the
+    * store's driver-side fold ([[DedupLog.corpus]], [[DedupLog.index]])
+    * must equal. */
+  private def sparkFolded(dl: DedupLog): DataFrame = {
+    val rec = dl.log.records()
+    val tomb = rec.filter(col("__op") === DedupLog.OpRemove)
+      .groupBy("doc_id").agg(max("__seq").as("__rseq"))
+    rec.filter(col("__op") =!= DedupLog.OpRemove)
+      .join(tomb, Seq("doc_id"), "left")
+      .filter(col("__rseq").isNull || col("__seq") > col("__rseq"))
+      .drop("__rseq")
+  }
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** `corpus()` and `index()` against the Spark reference fold */
+  private def checkFold(dl: DedupLog, step: String): Unit = {
+    val ref = sparkFolded(dl)
+    val wantCorpus = rowSet(ref.filter(col("band") === DedupLog.CorpusBand)
+      .select("doc_id", "text", "batch"))
+    val wantIndex = rowSet(ref.filter(col("band") >= 0).select("doc_id", "band", "bkey"))
+    assert(rowSet(dl.corpus()) == wantCorpus, s"$step: corpus() differs from the Spark fold")
+    assert(rowSet(dl.index()) == wantIndex, s"$step: index() differs from the Spark fold")
+  }
+
+  /** the store's admissions replayed through [[Dedup.incrementalAdmit]]:
+    * per batch, re-arrivals of admitted ids dropped, then the rule run
+    * against the docs admitted so far; returns (doc_id, batch) */
+  private def replay(batches: Seq[(Seq[(Long, String)], Long)]): Set[(Long, Long)] = {
+    import spark.implicits._
+    batches.foldLeft(Seq.empty[(Long, String, Long)]) { case (acc, (batch, bid)) =>
+      val stored = acc.map(_._1).toSet
+      val fresh = batch.filterNot(d => stored(d._1))
+      val corpus = acc.map(d => (d._1, d._2)).toDF("doc_id", "text")
+      val admitted = Dedup.incrementalAdmit(corpus, toDf(fresh))
+        .collect().map(_.getLong(0)).toSet
+      acc ++ fresh.filter(d => admitted(d._1)).map(d => (d._1, d._2, bid))
+    }.map(d => (d._1, d._3)).toSet
+  }
+
+  test("sequential ingest matches an incrementalAdmit replay") {
     val docs = (0L until 40L).map { i =>
       // %7 == 1 docs clone their predecessor's text — cross-parity
       // near-dups (evens/odds split puts clone pairs in both batches)
@@ -60,19 +101,11 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     dl.ingest(toDf(evens), 0L)
     dl.ingest(toDf(odds), 1L)
 
-    // the bare partition-overwrite store on the identical batch sequence
-    val out = java.nio.file.Files.createTempDirectory("graft-deduplog-bare-")
-    graft.TempDirs.register(out)
-    val (corpusDir, indexDir) = (s"$out/corpus", s"$out/index")
-    IncrementalDedupStream.ingestBatch(spark, toDf(evens), 0L, corpusDir, indexDir)
-    IncrementalDedupStream.ingestBatch(spark, toDf(odds), 1L, corpusDir, indexDir)
-
     val got = dl.corpus().select("doc_id", "batch").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = spark.read.parquet(corpusDir)
-      .select(col("doc_id"), col("batch").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = replay(Seq(evens -> 0L, odds -> 1L))
     assert(got == want)
+    assert(got.exists(_._2 == 1L) && want.size < docs.size)
     assert(dl.fsck().filter(!col("ok")).count() == 0)
   }
 
@@ -118,10 +151,95 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     val before = corpusId(dl)
     dl.ingest(toDf(batch), 0L) // verbatim redelivery
     assert(corpusId(dl) == before)
-    // and a LATER-batch re-arrival of a subset converges the same way
+    // a LATER-batch re-arrival of a subset converges the same way: the
+    // redelivered docs keep their original batch
     dl.ingest(toDf(batch.take(3)), 1L)
     assert(corpusId(dl) == before)
+    assert(dl.corpus().select("batch").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
     assert(dl.fsck().filter(!col("ok")).count() == 0)
+  }
+
+  private val b0 = Seq(
+    1L -> "alpha beta gamma delta epsilon zeta eta theta",
+    2L -> "one two three four five six seven eight nine",
+    3L -> "red orange yellow green blue indigo violet colors")
+  private val b1 = Seq(
+    10L -> "alpha beta gamma delta epsilon zeta eta iota", // near-dup of 1
+    11L -> "completely different words about storage engines here")
+
+  /** a store holding `b0` (batch 0) and `b1` (batch 1) */
+  private def twoBatchStore(tag: String): DedupLog = {
+    val dl = new DedupLog(spark, tmpRoot(tag))
+    dl.ingest(toDf(b0), 0L)
+    dl.ingest(toDf(b1), 1L)
+    dl
+  }
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("redelivery after checkpoint + vacuum publishes zero rows") {
+    val dl = twoBatchStore("ckpt-redeliver")
+    // batch 1 probed batch 0's persisted index: the clone is rejected
+    assert(ids(dl.corpus()) == Set(1L, 2L, 3L, 11L))
+    assert(ids(dl.index()) == Set(1L, 2L, 3L, 11L))
+    assert(dl.checkpoint() > 0L)
+    dl.vacuum()
+    val before = corpusId(dl)
+    val records = dl.log.records().count()
+    // the stream resumes from a checkpoint that never committed batch 1:
+    // its docs are already in the log checkpoint, so the redelivery adds
+    // nothing and un-admits nothing
+    dl.ingest(toDf(b1), 1L)
+    assert(dl.log.records().count() == records)
+    assert(corpusId(dl) == before)
+    assert(dl.fsck().filter(!col("ok")).count() == 0)
+  }
+
+  test("fsck detects each invariant violation") {
+    import spark.implicits._
+    def bad(dl: DedupLog): Set[String] = dl.fsck()
+      .filter(!col("ok")).select("check").collect().map(_.getString(0)).toSet
+    /** commit raw `(doc_id, band, bkey, text, batch)` rows through the
+      * store's own log, bypassing admission */
+    def plant(dl: DedupLog, rows: Seq[(Long, Int, String, String, Long)]): Unit =
+      dl.log.commit(() => rows.toDF("doc_id", "band", "bkey", "text", "batch"),
+        DedupLog.OpAdmit)
+    // 1. orphan index rows: a doc the corpus never admitted
+    val dl1 = twoBatchStore("fsck-orphan")
+    assert(bad(dl1).isEmpty)
+    plant(dl1, Seq((99L, 0, "x,y", null, 7L)))
+    val afterOrphan = bad(dl1)
+    assert(afterOrphan.contains("index_orphans"), s"got $afterOrphan")
+    assert(afterOrphan.contains("index_signature_match"))
+    // maintenance never masks corruption: the checkpoint keeps the row
+    assert(dl1.checkpoint() > 0L)
+    dl1.vacuum()
+    assert(bad(dl1).contains("index_orphans"))
+    // 2. under-indexed corpus doc: admitted text with no index rows
+    val dl2 = twoBatchStore("fsck-cardinality")
+    plant(dl2, Seq((50L, DedupLog.CorpusBand, null,
+      "some entirely new admitted doc text without index rows", 7L)))
+    val bad2 = bad(dl2)
+    assert(bad2.contains("index_cardinality"), s"got $bad2")
+    // 3. duplicate live corpus doc_id (a non-idempotent writer)
+    val dl3 = twoBatchStore("fsck-dup")
+    plant(dl3, Seq((1L, DedupLog.CorpusBand, null, b0.head._2, 8L)))
+    val bad3 = bad(dl3)
+    assert(bad3.contains("corpus_doc_unique"), s"got $bad3")
+    // 4. corrupted signature content: right cardinality, wrong bkey —
+    // doc 1 retired, then re-committed above its tombstones with band 0
+    // carrying a wrong bkey
+    val dl4 = twoBatchStore("fsck-sig")
+    val idx1 = dl4.index().filter(col("doc_id") === 1L).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    assert(idx1.length == 4)
+    dl4.retire(Seq(1L))
+    plant(dl4, (1L, DedupLog.CorpusBand, null: String, b0.head._2, 0L) +:
+      idx1.toSeq.map { case (d, band, bkey) =>
+        (d, band, if (band == 0) "corrupted" else bkey, null: String, 0L) })
+    val bad4 = bad(dl4)
+    assert(bad4 == Set("index_signature_match"), s"got $bad4")
   }
 
   test("retire frees the bucket: a later clone of a retired doc admits") {
@@ -284,6 +402,7 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     def step(name: String, batch: Seq[(Long, String)], batchId: Long): Set[Long] = {
       if (maintain) { dl.checkpoint(); dl.vacuum() }
       val got = checkIngest(dl, root, batch, batchId, s"seed $seed: $name")
+      checkFold(dl, s"seed $seed: $name")
       stored ++= batch.filter(d => got(d._1))
       got
     }
@@ -315,6 +434,7 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     val (gone, keep) = (stor.head, stor(1))
     if (maintain) { dl.checkpoint(); dl.vacuum() }
     checkRetire(dl, root, Seq(gone._1, keep._1), s"seed $seed: retire")
+    checkFold(dl, s"seed $seed: retire")
     val clone = (id(), gone._2)
     val b4 = step("clone of a retired doc", Seq(clone, keep) ++ fresh(2), 4L)
     assert(b4(clone._1) && b4(keep._1))
@@ -358,9 +478,11 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     val ingest = jobs(dl.ingest(toDf(measured), 2L))
     val redeliver = jobs(dl.ingest(toDf(measured), 2L))
     val retire = jobs(dl.retire(Seq(200L, 201L)))
+    val corpus = jobs(dl.corpus().collect())
     assert(ingest <= 8, s"ingest ran $ingest jobs")
     assert(redeliver <= 6, s"redelivery ran $redeliver jobs")
     assert(retire <= 3, s"retire ran $retire jobs")
+    assert(corpus <= 2, s"a corpus read ran $corpus jobs")
     val ids = dl.corpus().select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == (0L until 60L).toSet ++ (102L until 160L) ++ (202L until 250L) + 310L)
   }

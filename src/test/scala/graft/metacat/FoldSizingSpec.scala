@@ -4,9 +4,8 @@ import graft.mql.SparkTestBase
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Size-aware write partitioning for O(log)/O(table) writes (r15): the
-  * r14 commit sizing (fixed coalesce(1) behind
-  * `spark.graft.commit.partitions`) had leaked onto checkpoint folds and
+/** Size-aware write partitioning for O(log)/O(table) writes (r15): a
+  * fixed single-file commit coalesce had leaked onto checkpoint folds and
   * table rewrites — at scale a single task wrote the entire folded log /
   * sorted table. Those paths now size by estimated output bytes
   * ([[OccLog.foldSized]]): mutation-sized folds still land as one file,

@@ -1,83 +1,34 @@
 package graft.streaming
 
 import graft.mql.SparkTestBase
-import graft.pipeline.Dedup
-import org.apache.spark.sql.functions._
 
-/** [[IncrementalDedupStream]]: the persisted corpus+index ingest loop
-  * must converge under at-least-once delivery — including the CRASH
-  * WINDOW redelivery where the first attempt landed only one of its two
-  * partition writes (corpus but not index) before dying. */
+/** [[IncrementalDedupStream]]: the streaming evens/odds ingest into a
+  * [[graft.metacat.DedupLog]] store, with a verbatim redelivery of batch
+  * 1, serves the exactly-once corpus — before and after the store's
+  * maintenance. */
 class IncrementalDedupStreamSpec extends SparkTestBase {
 
-  private def docs(rows: (Long, String)*) = {
-    import spark.implicits._
-    rows.toSeq.toDF("doc_id", "text")
-  }
-
-  private val corpusTexts = Seq(
-    1L -> "alpha beta gamma delta epsilon zeta eta theta",
-    2L -> "one two three four five six seven eight nine",
-    3L -> "red orange yellow green blue indigo violet colors")
-
   test("batch N+1 probes batch N's persisted index; clones rejected, fresh admitted") {
+    import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft-incrspec-")
-    try {
-      val (c, i) = (s"$out/corpus", s"$out/index")
-      IncrementalDedupStream.ingestBatch(spark, docs(corpusTexts: _*), 0L, c, i)
-      // batch 1: a near-clone of doc 1 (one token changed) + a fresh doc
-      IncrementalDedupStream.ingestBatch(spark, docs(
-        10L -> "alpha beta gamma delta epsilon zeta eta iota",
-        11L -> "completely different words about storage engines here"), 1L, c, i)
-      val admitted = spark.read.parquet(c).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(admitted == Set(1L, 2L, 3L, 11L),
-        s"clone must be rejected via the index probe, got $admitted")
-      // the index covers exactly the admitted docs
-      assert(spark.read.parquet(i).select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 11L))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-  }
-
-  test("crash-window redelivery: corpus landed, index didn't — replay converges") {
-    val out = java.nio.file.Files.createTempDirectory("graft-incrspec-")
-    try {
-      val (c, i) = (s"$out/corpus", s"$out/index")
-      IncrementalDedupStream.ingestBatch(spark, docs(corpusTexts: _*), 0L, c, i)
-      val b1 = docs(
-        10L -> "alpha beta gamma delta epsilon zeta eta iota",
-        11L -> "completely different words about storage engines here")
-      IncrementalDedupStream.ingestBatch(spark, b1, 1L, c, i)
-      // simulate the crash: batch 1's INDEX partition never landed
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$i/batch=1"))
-      IncrementalDedupStream.ingestBatch(spark, b1, 1L, c, i)
-      assert(spark.read.parquet(c).select("doc_id")
-        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 11L))
-      assert(spark.read.parquet(i).select("doc_id").distinct()
-        .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 11L),
-        "the replayed batch must restore its index partition")
-      // and a batch-2 clone of the batch-1 doc is now rejected through it
-      IncrementalDedupStream.ingestBatch(spark, docs(
-        20L -> "completely different words about storage engines there"), 2L, c, i)
-      assert(!spark.read.parquet(c).select("doc_id")
-        .collect().map(_.getLong(0)).contains(20L))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-  }
-
-  test("cross-batch redelivery of an already-admitted doc is dropped, not re-admitted") {
-    val out = java.nio.file.Files.createTempDirectory("graft-incrspec-")
-    try {
-      val (c, i) = (s"$out/corpus", s"$out/index")
-      IncrementalDedupStream.ingestBatch(spark, docs(corpusTexts: _*), 0L, c, i)
-      // doc 2 arrives AGAIN in a later batch (at-least-once, new batch id)
-      IncrementalDedupStream.ingestBatch(spark,
-        docs(2L -> "one two three four five six seven eight nine"), 5L, c, i)
-      val rows = spark.read.parquet(c)
-        .select(col("doc_id"), col("batch").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows == Set((1L, 0L), (2L, 0L), (3L, 0L)),
-        s"redelivered doc must stay in its original batch only, got $rows")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    graft.TempDirs.register(out)
+    val file = s"$out/documents.parquet"
+    Seq(
+      0L -> "alpha beta gamma delta epsilon zeta eta theta",
+      2L -> "one two three four five six seven eight nine",
+      4L -> "red orange yellow green blue indigo violet colors",
+      // batch 1: a near-clone of doc 0 (one token changed) + a fresh doc
+      1L -> "alpha beta gamma delta epsilon zeta eta iota",
+      3L -> "completely different words about storage engines here")
+      .toDF("doc_id", "text").write.parquet(file)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = Set((0L, 0L), (2L, 0L), (4L, 0L), (3L, 1L))
+    val dl = IncrementalDedupStream.stage(spark, file)
+    assert(rows(dl.corpus().select("doc_id", "batch")) == want)
+    // the index covers exactly the admitted docs
+    assert(dl.index().select("doc_id").distinct().collect().map(_.getLong(0)).toSet ==
+      want.map(_._1))
+    assert(rows(IncrementalDedupStream.maintain(dl)) == want)
   }
 }

@@ -66,7 +66,7 @@ PY
 done
 
 # Phase 3 (r14): day-N incremental-ingest curve — K sequential batches
-# into one persisted corpus+index; per-batch wall must stay flat while
+# into one DedupLog store; per-batch wall must stay flat while
 # the corpus grows K-fold (the operator's central O(batch) claim).
 echo "== phase 3: incremental-ingest curve (8 batches)"
 scripts/run.sh graft.IncrIngestProbe "$DIR/documents.parquet" 8 \
