@@ -71,8 +71,8 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     assert(rowSet(dl.index()) == wantIndex, s"$step: index() differs from the Spark fold")
   }
 
-  /** the store's admissions replayed through [[Dedup.incrementalAdmit]]:
-    * per batch, re-arrivals of admitted ids dropped, then the rule run
+  /** the single-writer store's admissions, replayed on the driver through
+    * [[Dedup.incrementalAdmit]] (the rule a single writer applies): per batch, re-arrivals of admitted ids dropped, then the rule run
     * against the docs admitted so far; returns (doc_id, batch) */
   private def replay(batches: Seq[(Seq[(Long, String)], Long)]): Set[(Long, Long)] = {
     import spark.implicits._
@@ -86,7 +86,7 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     }.map(d => (d._1, d._3)).toSet
   }
 
-  test("sequential ingest matches an incrementalAdmit replay") {
+  test("sequential ingest matches the single-writer store's admissions") {
     val docs = (0L until 40L).map { i =>
       // %7 == 1 docs clone their predecessor's text — cross-parity
       // near-dups (evens/odds split puts clone pairs in both batches)
