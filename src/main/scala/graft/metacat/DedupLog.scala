@@ -1,9 +1,9 @@
 package graft.metacat
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import graft.pipeline.Dedup
 
 /** MULTI-WRITER incremental cross-batch dedup, governed by the catalog's
@@ -52,20 +52,24 @@ import graft.pipeline.Dedup
   * the standard fold-the-prefix maintenance, safe under concurrent
   * writers, and it keeps every row's `batch`.
   *
-  * Scale shape per batch: O(batch) shingling, then a handful of Spark
-  * jobs. Before the claim, one job collects the batch's signature rows
-  * `(doc_id, band, bkey)` and doc ids; the declared footprint is built
-  * from them on the driver — ≤ (bands+1)·|batch| short strings,
-  * megabytes for a 100k-doc micro-batch, the same driver-sized protocol
-  * metadata every claim marker and transaction intent already is. Inside
-  * the commit, ONE narrow scan collects the stored rows in the batch's
-  * buckets or under its ids plus every tombstone; liveness, re-arrivals
-  * and candidate pairs are worked out from them on the driver (never a
-  * corpus rescan, never a driver copy of the index); one verify query
-  * reads text only for candidates ([[Dedup.incrementalDedupPairs]]'s
-  * contract); one write publishes the admitted rows. The driver holds
-  * the batch keys, the probe hits, the tombstones and the candidate
-  * pairs.
+  * Scale shape per batch: Spark runs the batch query and the log scans;
+  * every batch-sized step runs on the driver. Before the claim, ONE
+  * batch query (the `doc_id` dedup shuffle, shingling and one MinHash
+  * per doc on the executors) collects each doc's text, shingle set and
+  * band keys; the declared footprint is built from them on the driver.
+  * Inside the commit, ONE narrow scan collects the stored rows in the
+  * batch's buckets or under its ids plus every tombstone; liveness,
+  * re-arrivals and candidate pairs are worked out from them on the
+  * driver (never a corpus rescan, never a driver copy of the index). The
+  * verify reads corpus text only for candidates that are stored docs
+  * ([[Dedup.incrementalDedupPairs]]'s contract) — one more narrow scan,
+  * skipped when there are none — and computes Jaccard on the driver. The
+  * admitted rows are staged from the driver's copy ([[SegmentIO.stage]]:
+  * on the driver up to its row bound). So the driver holds the batch:
+  * its text, shingle sets and band keys (measured at 60, 625 and 2,500
+  * docs a batch: the catalog benchmark, [[graft.IncrIngestProbe]] on the
+  * 5,000-doc sf0.1 corpus and the incremental-dedup gates), plus the
+  * probe hits, the tombstones and the candidate pairs.
   *
   * The reference has no multi-writer dedup (its dedup is Postgres-side
   * uniqueness); this extends the LLM-pipeline scope the same way the
@@ -113,64 +117,60 @@ final class DedupLog(spark: SparkSession, root: String,
     * sharing the store root); `batchId` is provenance stamped on the
     * admitted rows. */
   def ingest(batch: DataFrame, batchId: Long): Unit = {
-    val deduped = batch.select(col("doc_id").cast("long").as("doc_id"),
-      col("text").cast("string").as("text")).dropDuplicates("doc_id")
-    // the deduplicated batch as a persisted RDD: `.rdd` runs the dedup
-    // shuffle once, and each query's first scan fills the cache in that
-    // query's own job — a persisted Dataset would add a cache-building
-    // job for every scan of it in a plan
-    val rows = deduped.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val b = spark.createDataFrame(rows, deduped.schema)
-    try {
-      // the signature is a pure function of the batch text — collected
-      // ONCE here (with the batch ids, in one job), it declares the key
-      // footprint, drives the probe and, filtered to the admitted docs,
-      // is the index rows, so the commit closure never re-shingles
-      val (idRows, sig) = Dedup.bandedKeys(
-          Dedup.shinglesUncached(b).select("doc_id", "shingles"), numHashes, bands)
-        .select(col("doc_id"), col("band").cast("int").as("band"), col("bkey"))
-        .unionByName(b.select(col("doc_id"), lit(CorpusBand).as("band"),
-          lit(null).cast("string").as("bkey")))
-        .collect().toSeq.map(r => Sig(r.getLong(0), r.getInt(1), r.getString(2)))
-        .partition(_.band == CorpusBand)
-      val ids = idRows.map(_.doc)
-      val keys = (sig.map(s => s"b:${s.band}:${s.bkey}") ++ ids.map(d => s"d:$d"))
-        .distinct.toIndexedSeq
-      log.commit(() => {
-        // published state of every conflicting predecessor (commit has
-        // awaited them); disjoint concurrent commits may or may not
-        // appear — they commute with this one (scaladoc above)
-        val rec = log.records()
-        val live = liveRows(rec, sig.map(_.bkey).toSet, ids.toSet)
-        // at-least-once / re-arrival: an id already admitted is the same
-        // doc, not a near-dup — drop before the probe
-        val stored = live.filter(_.band == CorpusBand).map(_.doc).toSet
-        val fresh = sig.filterNot(s => stored(s.doc))
-        val hits = live.filter(_.band >= 0).groupBy(h => (h.band, h.bkey))
-        // cross candidates meet a live index row in a bucket; intra
-        // candidates an EARLIER fresh batch doc (doc_b < doc_a)
-        val cross = for {
-          s <- fresh
-          h <- hits.getOrElse((s.band, s.bkey), Nil)
-        } yield (s.doc, h.doc, h.seq)
-        val intra = fresh.groupBy(s => (s.band, s.bkey)).values.flatMap { g =>
-          val docs = g.map(_.doc).distinct
-          for (a <- docs; d <- docs if d < a) yield (a, d, BatchSeq)
-        }
-        val admitted = ids.filterNot(stored).toSet --
-          rejected(b, rec, (cross ++ intra).distinct)
-        import spark.implicits._
-        b.filter(col("doc_id").isInCollection(admitted))
-          .select(col("doc_id"), lit(CorpusBand).as("band"),
-            lit(null).cast("string").as("bkey"), col("text"),
-            lit(batchId).as("batch"))
-          .unionByName(sig.filter(s => admitted(s.doc))
-            .map(s => (s.doc, s.band, s.bkey, null: String, batchId))
-            .toDF("doc_id", "band", "bkey", "text", "batch"))
-      }, OpAdmit, Some(keys))
-      ()
-    } finally { rows.unpersist(); () }
+    // the batch's signature is a pure function of its text — collected
+    // ONCE here with the text and shingle sets, it declares the key
+    // footprint, drives the probe, is the batch side of the verify and,
+    // kept for the admitted docs, is the index rows, so the commit
+    // closure never re-reads the batch
+    val docs = batchDocs(batch).collect().toSeq.map(r => Doc(r.getLong(0),
+      r.getString(1), Option(r.getSeq[String](2)),
+      Option(r.getSeq[String](3)).getOrElse(Nil)))
+    val sig = for (d <- docs; (bkey, band) <- d.bkeys.zipWithIndex)
+      yield Sig(d.doc, band, bkey)
+    val ids = docs.map(_.doc)
+    val keys = (sig.map(s => s"b:${s.band}:${s.bkey}") ++ ids.map(d => s"d:$d"))
+      .distinct.toIndexedSeq
+    log.commit(() => {
+      // published state of every conflicting predecessor (commit has
+      // awaited them); disjoint concurrent commits may or may not
+      // appear — they commute with this one (scaladoc above)
+      val rec = log.records()
+      val live = liveRows(rec, sig.map(_.bkey).toSet, ids.toSet)
+      // at-least-once / re-arrival: an id already admitted is the same
+      // doc, not a near-dup — drop before the probe
+      val stored = live.filter(_.band == CorpusBand).map(_.doc).toSet
+      val fresh = sig.filterNot(s => stored(s.doc))
+      val hits = live.filter(_.band >= 0).groupBy(h => (h.band, h.bkey))
+      // cross candidates meet a live index row in a bucket; intra
+      // candidates an EARLIER fresh batch doc (doc_b < doc_a)
+      val cross = for {
+        s <- fresh
+        h <- hits.getOrElse((s.band, s.bkey), Nil)
+      } yield (s.doc, h.doc, h.seq)
+      val intra = fresh.groupBy(s => (s.band, s.bkey)).values.flatMap { g =>
+        val docs = g.map(_.doc).distinct
+        for (a <- docs; d <- docs if d < a) yield (a, d, BatchSeq)
+      }
+      val admitted = ids.filterNot(stored).toSet --
+        rejected(docs.flatMap(d => d.shingles.map(d.doc -> _)).toMap, rec,
+          (cross ++ intra).distinct)
+      local(docs.filter(d => admitted(d.doc)).flatMap { d =>
+        Row(d.doc, CorpusBand, null, d.text, batchId) +:
+          d.bkeys.zipWithIndex.map { case (bkey, band) =>
+            Row(d.doc, band, bkey, null, batchId) }
+      })
+    }, OpAdmit, Some(keys))
   }
+
+  /** The batch query of [[ingest]]: per distinct `doc_id`, its `text`,
+    * shingle set and band keys (both null for a doc too short to
+    * shingle), from ONE MinHash per doc. The `doc_id` shuffle of the
+    * dedup also spreads the shingling across the cores. */
+  private[metacat] def batchDocs(batch: DataFrame): DataFrame =
+    Dedup.withBandKeys(batch.select(col("doc_id").cast("long").as("doc_id"),
+        col("text").cast("string").as("text")).dropDuplicates("doc_id"),
+      numHashes, bands)
+      .select("doc_id", "text", "shingles", "bkeys")
 
   /** The live `(doc_id, band, bkey, __seq)` rows of `rec` whose `bkey` is
     * in `bkeys` or whose doc is in `ids`, from ONE narrow scan collected
@@ -191,35 +191,40 @@ final class DedupLog(spark: SparkSession, root: String,
   }
 
   /** The `doc_a`s of candidate pairs `(doc_a, doc_b, seq_b)` whose exact
-    * shingle Jaccard reaches the threshold, in one verify query. `doc_a`
-    * is a batch doc; `doc_b` is a batch doc when `seq_b` is [[BatchSeq]],
-    * else a corpus doc whose live text is its corpus row AT `seq_b` — the
-    * seq of its live index hit, since an admission writes a doc's corpus
-    * and index rows in one seq. The candidates' shingle sets are one
-    * broadcast, probed twice by the pairs (a local relation). */
-  private def rejected(b: DataFrame, rec: DataFrame,
+    * shingle Jaccard reaches the threshold. `doc_a` is a batch doc;
+    * `doc_b` is a batch doc when `seq_b` is [[BatchSeq]], else a corpus
+    * doc whose live text is its corpus row AT `seq_b` — the seq of its
+    * live index hit, since an admission writes a doc's corpus and index
+    * rows in one seq. Batch-side shingle sets are `shingles`, already on
+    * the driver from the ingest's batch query (batch-sized, like its text
+    * and band keys); the corpus side is one narrow scan, run only when a
+    * candidate is a stored doc, that shingles those rows on the executors
+    * and collects them. [[Dedup.jaccard]] then filters a local relation
+    * of the pairs, which Catalyst evaluates on the driver (no job). A pair
+    * with a side missing is never a rejection. */
+  private def rejected(shingles: Map[Long, Seq[String]], rec: DataFrame,
       cand: Seq[(Long, Long, Long)]): Set[Long] = {
-    if (cand.isEmpty) return Set.empty
-    import spark.implicits._
-    val batchDocs = cand.flatMap { case (a, d, s) => if (s == BatchSeq) Seq(a, d) else Seq(a) }
-    val corpusDocs = cand.collect { case (_, d, s) if s != BatchSeq => (d, s) }
-    val texts = b.filter(col("doc_id").isInCollection(batchDocs.toSet))
-      .select(col("doc_id"), lit(BatchSeq).as("seq"), col("text"))
-      .unionByName(rec
-        // the id filter is the one parquet can push down; the id:seq key
-        // picks each doc's live generation
-        .filter(col("band") === CorpusBand &&
-          col("doc_id").isInCollection(corpusDocs.map(_._1).toSet) &&
-          concat_ws(":", col("doc_id"), col("__seq"))
-            .isInCollection(corpusDocs.map { case (d, s) => s"$d:$s" }.toSet))
-        .select(col("doc_id"), col("__seq").as("seq"), col("text")))
-    val side = broadcast(Dedup.shinglesUncached(texts)
-      .select("doc_id", "seq", "shingles"))
-    cand.map { case (a, d, s) => (a, BatchSeq, d, s) }
-      .toDF("doc_a", "seq_a", "doc_b", "seq_b")
-      .join(side.as("a"), col("doc_a") === col("a.doc_id") && col("seq_a") === col("a.seq"))
-      .join(side.as("b"), col("doc_b") === col("b.doc_id") && col("seq_b") === col("b.seq"))
-      .filter(Dedup.jaccard(col("a.shingles"), col("b.shingles")) >= threshold)
+    val corpusDocs = cand.collect { case (_, d, s) if s != BatchSeq => (d, s) }.distinct
+    val stored: Map[(Long, Long), Seq[String]] =
+      if (corpusDocs.isEmpty) Map.empty
+      else Dedup.shinglesUncached(rec
+          // the id filter is the one parquet can push down; the id:seq
+          // key picks each doc's live generation
+          .filter(col("band") === CorpusBand &&
+            col("doc_id").isInCollection(corpusDocs.map(_._1).toSet) &&
+            concat_ws(":", col("doc_id"), col("__seq"))
+              .isInCollection(corpusDocs.map { case (d, s) => s"$d:$s" }.toSet))
+          .select("doc_id", "__seq", "text"))
+        .select("doc_id", "__seq", "shingles").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[String](2)).toMap
+    val pairs = for {
+      (a, d, s) <- cand
+      sa <- shingles.get(a)
+      sb <- if (s == BatchSeq) shingles.get(d) else stored.get((d, s))
+    } yield (a, sa, sb)
+    if (pairs.isEmpty) return Set.empty
+    spark.createDataFrame(pairs.map { case (a, sa, sb) => Row(a, sa, sb) }.asJava, Pairs)
+      .filter(Dedup.jaccard(col("a"), col("b")) >= threshold)
       .select("doc_a").collect().map(_.getLong(0)).toSet
   }
 
@@ -242,19 +247,23 @@ final class DedupLog(spark: SparkSession, root: String,
   def retire(docIds: Seq[Long], batchId: Long = -1L): Unit = {
     val ids = docIds.distinct
     if (ids.isEmpty) return
-    import spark.implicits._
     val live = liveRows(log.records(), Set.empty, ids.toSet)
     if (live.isEmpty) return
     val keys = live.flatMap { h =>
       val d = s"d:${h.doc}"
       if (h.band >= 0) Seq(d, s"b:${h.band}:${h.bkey}") else Seq(d)
     }.distinct.toIndexedSeq
-    val rows = live.map(h => (h.doc, h.band, h.bkey, null: String, batchId))
-    log.commit(() =>
-      rows.toDF("doc_id", "band", "bkey", "text", "batch")
-        .withColumn("__op", lit(OpRemove)),
+    val rows = live.map(h => Row(h.doc, h.band, h.bkey, null, batchId))
+    log.commit(() => local(rows).withColumn("__op", lit(OpRemove)),
       OpRemove, Some(keys))
   }
+
+  /** `(doc_id, band, bkey, text, batch)` rows to commit, as a local
+    * relation: [[SegmentIO.stage]] writes it on the driver up to its row
+    * bound, by a Spark write above it. Built from [[Row]]s, so no
+    * reflection-derived encoder is made per commit. */
+  private def local(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, Committed)
 
   /** Live records as a Spark plan — the read side of [[corpus]],
     * [[index]] and [[fsck]]. The tombstones (curation-sized) are
@@ -334,6 +343,11 @@ final class DedupLog(spark: SparkSession, root: String,
 
 object DedupLog {
 
+  /** one doc of an ingest batch: its text, shingle set (None when too
+    * short to shingle) and band keys (empty then), indexed by band */
+  private final case class Doc(doc: Long, text: String,
+      shingles: Option[Seq[String]], bkeys: Seq[String])
+
   /** one signature row of an ingest batch */
   private final case class Sig(doc: Long, band: Int, bkey: String)
 
@@ -352,6 +366,10 @@ object DedupLog {
     * the tombstone and comes back live. */
   private def isLive(retired: Map[Long, Long], doc: Long, seq: Long): Boolean =
     retired.get(doc).forall(seq > _)
+
+  /** a verify candidate pair with both shingle sets */
+  private val Pairs = StructType(Seq(StructField("doc_a", LongType),
+    StructField("a", ArrayType(StringType)), StructField("b", ArrayType(StringType))))
 
   /** `seq_b` of a verify candidate whose `doc_b` is in the batch */
   private val BatchSeq = -1L
@@ -376,4 +394,7 @@ object DedupLog {
     StructField("batch", LongType, nullable = false),
     StructField("__op", StringType, nullable = false),
     StructField("__seq", LongType, nullable = false)))
+
+  /** the columns a commit supplies; the log adds `__op` and `__seq` */
+  private val Committed = StructType(Schema.take(5))
 }

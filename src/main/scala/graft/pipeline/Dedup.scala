@@ -136,18 +136,39 @@ object Dedup {
     * same-corpus pair mining ([[minhashPairs]]) and cross-corpus fuzzy
     * decontamination ([[Decontam.fuzzyOverlap]]). */
   private[graft] def bandedKeys(sh: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    val r = numHashes / bands
+      bands: Int): DataFrame =
     sh.select(
       col("doc_id"),
       graft.functions.MinHashExpr.minhash(col("shingles"), numHashes).as("sig"))
-      .select(
-        col("doc_id"),
-        posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> " +
-            s"concat_ws(',', transform(sequence(${r} * b, ${r} * b + ${r - 1}), i -> cast(sig[i] as string))))")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
+      .select(col("doc_id"),
+        posexplode(bandKeys(col("sig"), numHashes, bands)).as(Seq("band", "bkey")))
+
+  /** The LSH band keys of a MinHash signature, as an array indexed by
+    * band: band b joins slots r·b … r·b+r−1 (r = numHashes/bands) with
+    * ','. Spelled out slot by slot, with no lambda over `sig`: a
+    * signature projected beneath this is referenced once per slot, so
+    * Catalyst keeps its MinHash in its own projection, one evaluation per
+    * row. (A `transform` lambda references it once, and CollapseProject
+    * then inlines the MinHash into the lambda body — one evaluation per
+    * band.) */
+  private[graft] def bandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
+    val r = numHashes / bands
+    array((0 until bands).map(b =>
+      concat_ws(",", (b * r until b * r + r).map(i => sig(i).cast("string")): _*)): _*)
   }
+
+  /** `docs` plus each doc's distinct shingle set (`shingles`) and LSH
+    * band keys (`bkeys`, [[bandKeys]]) — both null for a doc too short to
+    * shingle, which stays in the frame. One MinHash per doc. */
+  private[graft] def withBandKeys(docs: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    docs.withColumn("__t", toks)
+      .withColumn("shingles", when(size(col("__t")) >= 3, expr(shingleExpr)))
+      .drop("__t")
+      .withColumn("__sig", graft.functions.MinHashExpr.minhash(col("shingles"), numHashes))
+      .withColumn("bkeys", when(col("shingles").isNotNull,
+        bandKeys(col("__sig"), numHashes, bands)))
+      .drop("__sig")
 
   /** Threshold-driven (numHashes, bands) sizing for MinHash banding — the
     * AND-OR identity specialized to MinHash, where one signature row

@@ -6,6 +6,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 import graft.mql.SparkTestBase
+import graft.functions.MinHashExpr
 import graft.pipeline.Dedup
 
 /** The OCC-governed multi-writer dedup store ([[DedupLog]]): admission
@@ -318,13 +319,14 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     (seqDirs(s"$root/dedup_log") ++ seqDirs(s"$root/dedup_log_ckpt"))
       .map(_.getName.drop(1).toLong).maxOption.getOrElse(0L)
 
-  /** the rows and `.keys` sidecar of the segment the last commit published */
-  private def lastCommit(root: String): (Set[Seq[Any]], String) = {
+  /** the rows (every one, duplicates kept) and `.keys` sidecar of the
+    * segment the last commit published */
+  private def lastCommit(root: String): (Seq[Seq[Any]], String) = {
     val dir = newestSegment(root)
     val seq = dir.getName.drop(1).toLong
     val rows = spark.read.parquet(dir.toString)
       .select("doc_id", "band", "bkey", "text", "batch", "__op", "__seq")
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSeq
     val keys = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
       f"$root/dedup_log_claims/s$seq%020d.keys")), java.nio.charset.StandardCharsets.UTF_8)
     (rows, keys)
@@ -334,8 +336,9 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     * the store as it stood before: re-arrivals dropped by an anti-join
     * with `corpus()`, then [[Dedup.incrementalAdmit]] with the persisted
     * `index()`. The published segment must hold exactly the admitted
-    * docs' corpus and signature rows, and the claim's `.keys` sidecar
-    * every batch doc's bucket and identity keys. Returns the admitted ids. */
+    * docs' corpus and signature rows, each once, and the claim's `.keys`
+    * sidecar every batch doc's bucket and identity keys. Returns the
+    * admitted ids. */
   private def checkIngest(dl: DedupLog, root: String,
       batch: Seq[(Long, String)], batchId: Long, step: String): Set[Long] = {
     val b = toDf(batch)
@@ -349,7 +352,8 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     val seq = frontier(root) + 1
     dl.ingest(b, batchId)
     assert(frontier(root) == seq, s"$step: expected one new segment")
-    val (rows, keys) = lastCommit(root)
+    val (segment, keys) = lastCommit(root)
+    val rows = segment.toSet
     val got = rows.collect { case r if r(1) == DedupLog.CorpusBand => r.head.asInstanceOf[Long] }
     assert(got == want, s"$step: admitted ${got.toSeq.sorted}, the Spark rule " +
       s"admits ${want.toSeq.sorted}")
@@ -359,6 +363,8 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
         Seq[Any](d, band, bkey, null, batchId, DedupLog.OpAdmit, seq) }
     assert(rows == wantRows, s"$step: segment rows differ: missing " +
       s"${wantRows -- rows}, extra ${rows -- wantRows}")
+    assert(segment.size == wantRows.size, s"$step: the segment holds " +
+      s"${segment.size} rows for ${wantRows.size} distinct ones")
     val wantKeys = (sig.map { case (_, band, bkey) => s"b:$band:$bkey" } ++
       batch.map(d => s"d:${d._1}")).distinct.sorted.mkString("\n")
     assert(keys == wantKeys, s"$step: .keys sidecar differs")
@@ -378,8 +384,8 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     dl.retire(ids, -7L)
     assert(frontier(root) == seq, s"$step: expected one new segment")
     val (rows, keys) = lastCommit(root)
-    assert(rows == live.map { case (d, band, bkey) =>
-      Seq[Any](d, band, bkey, null, -7L, DedupLog.OpRemove, seq) }.toSet,
+    assert(rows.sortBy(_.toString) == live.toSeq.map { case (d, band, bkey) =>
+      Seq[Any](d, band, bkey, null, -7L, DedupLog.OpRemove, seq) }.sortBy(_.toString),
       s"$step: tombstones differ")
     val wantKeys = live.flatMap { case (d, band, bkey) =>
       Seq(s"d:$d") ++ (if (band >= 0) Seq(s"b:$band:$bkey") else Nil)
@@ -406,12 +412,18 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
       stored ++= batch.filter(d => got(d._1))
       got
     }
-    // short docs (no signature rows) and exact copies, in one batch
+    // short docs and a null text (no signature rows), exact copies and
+    // one doc delivered twice, in one batch
     val base = fresh(12)
-    val short = Seq((id(), "tiny"), (id(), "two words"), (id(), ""))
+    val short = Seq((id(), "tiny"), (id(), "two words"), (id(), ""), (id(), null: String))
     val copies = base.take(2).map { case (_, t) => (id(), t) }
-    val b0 = step("short docs and intra-batch copies", base ++ short ++ copies, 0L)
-    assert(short.forall(d => b0(d._1)) && copies.forall(d => !b0(d._1)))
+    val twice = fresh(1)
+    val b0 = step("short docs and intra-batch copies", base ++ short ++ copies ++ twice ++ twice, 0L)
+    assert(short.forall(d => b0(d._1)) && copies.forall(d => !b0(d._1)) && b0(twice.head._1))
+    val nullText = short.last._1
+    assert(dl.corpus().filter(col("doc_id") === nullText).select("text").collect()
+      .map(r => Option(r.getString(0))).toSeq == Seq(None))
+    assert(dl.index().filter(col("doc_id") === nullText).isEmpty)
     // an intra-batch chain: y is a near-dup of x, z of y but not of x —
     // z matches only a rejected doc and is still rejected
     val x = words(s"x$seed", 30)
@@ -474,16 +486,64 @@ class DedupLogSpec extends SparkTestBase with OccFailureCapture {
     // intra-batch clone pair, so the probe, the verify and the write run
     val measured = batch(200L).take(50) ++ (0L until 8L).map(i => doc(300L + i, s"jobs-$i")) ++
       Seq(doc(310L, "jobs-250"), doc(311L, "jobs-250"))
+    // fresh docs and an intra-batch clone pair: no candidate is a stored
+    // doc, so the verify reads no corpus text
+    val noStored = (400L until 420L).map(i => doc(i, s"jobs-$i")) ++
+      Seq(doc(430L, "jobs-430"), doc(431L, "jobs-430"))
     def jobs(f: => Unit): Int = JobBudget.jobs(spark.sparkContext)(f)
     val ingest = jobs(dl.ingest(toDf(measured), 2L))
     val redeliver = jobs(dl.ingest(toDf(measured), 2L))
+    val local = jobs(dl.ingest(toDf(noStored), 3L))
     val retire = jobs(dl.retire(Seq(200L, 201L)))
     val corpus = jobs(dl.corpus().collect())
-    assert(ingest <= 8, s"ingest ran $ingest jobs")
-    assert(redeliver <= 6, s"redelivery ran $redeliver jobs")
+    // the batch query (its dedup shuffle and the collect), the probe and
+    // the corpus side of the verify; the Jaccard and the write run on
+    // the driver
+    assert(ingest <= 4, s"ingest ran $ingest jobs")
+    assert(redeliver <= 4, s"redelivery ran $redeliver jobs")
+    assert(local <= 3, s"an ingest with no stored-doc candidates ran $local jobs")
     assert(retire <= 3, s"retire ran $retire jobs")
     assert(corpus <= 2, s"a corpus read ran $corpus jobs")
     val ids = dl.corpus().select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids == (0L until 60L).toSet ++ (102L until 160L) ++ (202L until 250L) + 310L)
+    assert(ids == (0L until 60L).toSet ++ (102L until 160L) ++ (202L until 250L) + 310L ++
+      (400L until 420L) + 430L)
+  }
+
+  /** `(MinHash nodes, MinHash nodes inside a lambda body)` in `df`'s
+    * optimized plan — a lambda body runs once per array element */
+  private def minhashes(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    def walk(e: Expression, inLambda: Boolean): Seq[Boolean] = e match {
+      case m: MinHashExpr => inLambda +: walk(m.child, inLambda)
+      case l: LambdaFunction => l.children.flatMap(walk(_, inLambda = true))
+      case _ => e.children.flatMap(walk(_, inLambda))
+    }
+    val found = df.queryExecution.optimizedPlan.collect { case p => p.expressions }
+      .flatten.flatMap(walk(_, inLambda = false))
+    (found.size, found.count(identity))
+  }
+
+  test("the ingest batch query MinHashes each doc once") {
+    val dl = new DedupLog(spark, tmpRoot("minhash"))
+    val b = toDf((0L until 6L).map(i => doc(i, s"mh-$i")) :+ (9L, "short"))
+    assert(minhashes(dl.batchDocs(b)) == (1, 0))
+    // control: band keys built by a lambda over the signature pull the
+    // MinHash into the lambda body, which the check above refuses (over a
+    // shuffle, as in the batch query: a plan over a bare local relation
+    // is evaluated by the optimizer and keeps no MinHash at all)
+    val lambdaForm = Dedup.shinglesUncached(b.dropDuplicates("doc_id"))
+      .select(col("doc_id"), MinHashExpr.minhash(col("shingles"), 8).as("sig"))
+      .select(col("doc_id"), expr("transform(sequence(0, 3), b -> concat_ws(',', " +
+        "transform(sequence(2 * b, 2 * b + 1), i -> cast(sig[i] as string))))").as("bkeys"))
+    assert(minhashes(lambdaForm) == (1, 1))
+    // the collected rows: short docs keep a row with null shingles and keys
+    val rows = dl.batchDocs(b).collect().map(r => r.getLong(0) -> r).toMap
+    assert(rows.keySet == (0L until 6L).toSet + 9L)
+    assert(rows(9L).isNullAt(2) && rows(9L).isNullAt(3))
+    val idx = Dedup.signatureIndex(b).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    assert(rows.values.filterNot(_.isNullAt(3)).flatMap(r =>
+      r.getSeq[String](3).zipWithIndex.map { case (k, band) => (r.getLong(0), band, k) })
+      .toSet == idx)
   }
 }

@@ -27,6 +27,32 @@ class PipelineSpec extends SparkTestBase {
     assert(nExact > 0 && nMh >= nExact / 2, s"recall too low: $nMh of $nExact")
   }
 
+  test("bandedKeys rows equal the slot-by-slot banding of the signature") {
+    import spark.implicits._
+    val fixed = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "the quick brown fox jumps over the lazy cat",
+      3L -> "a completely different sentence with its own words",
+      4L -> "too short").toDF("doc_id", "text")
+    val sh = Dedup.shinglesUncached(fixed).select("doc_id", "shingles")
+    for ((numHashes, bands) <- Seq((8, 4), (16, 8), (9, 3))) {
+      val r = numHashes / bands
+      val got = Dedup.bandedKeys(sh, numHashes, bands)
+        .select(col("doc_id"), col("band"), col("bkey")).collect()
+        .map(x => (x.getLong(0), x.getInt(1), x.getString(2))).toSeq.sorted
+      // the lambda formulation bandedKeys used before band keys became
+      // one column function
+      val want = sh.select(col("doc_id"),
+          graft.functions.MinHashExpr.minhash(col("shingles"), numHashes).as("sig"))
+        .select(col("doc_id"), posexplode(expr(
+          s"transform(sequence(0, ${bands - 1}), b -> concat_ws(',', " +
+            s"transform(sequence($r * b, $r * b + ${r - 1}), i -> cast(sig[i] as string))))")))
+        .collect().map(x => (x.getLong(0), x.getInt(1), x.getString(2))).toSeq.sorted
+      assert(got == want, s"($numHashes, $bands)")
+      assert(got.map(_._1).distinct == Seq(1L, 2L, 3L) && got.size == 3 * bands)
+    }
+  }
+
   test("jaccard prefix filtering loses no pairs vs brute force") {
     val smart = Dedup.jaccardPairs(docs, 0.5)
     val sh = Dedup.withShingles(docs).select(col("doc_id"), col("shingles"))
