@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * query loop, so per-query timings measure the queries themselves.
   *
   * The stdout line carries only the totals — a log-tail capture holds it
-  * whole; the full per-query map lives in `bench_last.json` on disk.
+  * whole; the full per-query map lives in `bench_last.json` on disk,
+  * together with each gate's Spark jobs and driver gap per timed run.
+  * Gate names as arguments run only those gates.
   * `SPARK_GRAFT_BENCH_N` (default 3) repeats each query n times and
   * reports the per-query MEDIAN (middle-pair average for even n), making
   * small deltas measurable against run-to-run noise; since the cold
@@ -93,6 +95,30 @@ object Bench {
       return Some(f"calib_io_after $calibIoAfter%.3f > ${factor}%.1fx pre-run $calibIoBefore%.3f")
     None
   }
+
+  /** One finished Spark job: the gate named by its local property (null
+    * when untagged) and its start→end wall in ms. */
+  private[graft] final case class Job(gate: String, wallMs: Long)
+
+  /** A gate's timed runs: Spark jobs per run, and driver gap per run —
+    * the run's wall minus its jobs' summed wall, i.e. the driver-side
+    * planning and scheduling between (sequential) jobs. */
+  private[graft] final case class GateJobs(jobs: Seq[Int], gapSec: Seq[Double])
+
+  /** `runs` holds each timed run's wall (s) and the jobs that ended during
+    * it; a job counts for `gate` only when tagged with its name, so
+    * untagged jobs (warmups, calibration) and a straggler of another
+    * gate are ignored. */
+  private[graft] def gateJobs(gate: String, runs: Seq[(Double, Seq[Job])]): GateJobs = {
+    val mine = runs.map { case (wall, js) => (wall, js.filter(_.gate == gate)) }
+    GateJobs(mine.map(_._2.size),
+      mine.map { case (wall, js) => math.rint((wall - js.map(_.wallMs).sum / 1e3) * 1e3) / 1e3 })
+  }
+
+  /** Each family's timed-run jobs: the sum over its gates' runs. */
+  private[graft] def familyJobs(gates: Map[String, GateJobs],
+      familyOf: String => String): Map[String, Int] =
+    gates.toSeq.groupMapReduce { case (g, _) => familyOf(g) } (_._2.jobs.sum)(_ + _)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -218,9 +244,7 @@ object Bench {
     val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").flatMap(_.toIntOption)
       .filter(_ >= 0).getOrElse(1)
     var failedRuns = 0
-    // Spark jobs of the timed runs, per query family (the module that
-    // registers the query): tagged through a local property, which the
-    // threads a query starts (stream executions) inherit
+    // query family = the module that registers the query
     val familyOf: Map[String, String] =
       Seq("relational" -> graft.queries.RelationalQueries.all,
         "mql" -> graft.queries.MqlQueries.all,
@@ -228,13 +252,25 @@ object Bench {
         "streaming" -> graft.queries.StreamingQueries.all,
         "write_path" -> graft.queries.WritePathQueries.all)
         .flatMap { case (f, qs) => qs.keys.map(_ -> f) }.toMap
-    val FamilyKey = "graft.bench.family"
-    val jobsPerFamily = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    // Spark jobs of the timed runs, tagged with the gate through a local
+    // property, which the threads a query starts (stream executions)
+    // inherit. Each run drains the listener bus before taking the jobs
+    // that ended, so the counts do not depend on event delivery timing.
+    val GateKey = "graft.bench.gate"
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(FamilyKey)))
-          .foreach(f => jobsPerFamily.merge(f, 1L, (a: Long, b: Long) => a + b))
+        started.put(e.jobId, (Option(e.properties).map(_.getProperty(GateKey)).orNull, e.time))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        Option(started.remove(e.jobId)).foreach { case (g, t0) => ended.add(Job(g, e.time - t0)) }
     })
+    def endedJobs(): Seq[Job] = {
+      try org.apache.spark.sql.GraftShim.drainListenerBus(spark, 60000L)
+      catch { case _: java.util.concurrent.TimeoutException => () } // counts what arrived
+      Iterator.continually(ended.poll()).takeWhile(_ != null).toSeq
+    }
+    val gates = scala.collection.mutable.Map[String, GateJobs]()
     // per-query loadavg samples: informational forensics (a mid-run
     // contention window shows WHICH queries it hit), never a gate — the
     // bench's own 32-thread bursts keep the 1-min average elevated, so
@@ -244,13 +280,17 @@ object Bench {
       (1 to warmup).foreach { _ =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
-      spark.sparkContext.setLocalProperty(FamilyKey, familyOf.getOrElse(name, "other"))
-      val runs =
+      spark.sparkContext.setLocalProperty(GateKey, name)
+      val timed =
         try (1 to n).map { _ =>
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); secs(t0) } catch { case _: Throwable => -1.0 }
+          val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+          val wall = secs(t0)
+          (if (ok) wall else -1.0, wall, endedJobs())
         }
-        finally spark.sparkContext.setLocalProperty(FamilyKey, null)
+        finally spark.sparkContext.setLocalProperty(GateKey, null)
+      gates(name) = gateJobs(name, timed.map { case (_, wall, js) => (wall, js) })
+      val runs = timed.map(_._1)
       loadPerQuery(name) = loadAvg()
       val ok = runs.filter(_ >= 0).sorted
       failedRuns += runs.size - ok.size
@@ -284,12 +324,16 @@ object Bench {
     def r3(x: Double) = math.rint(x * 1e3) / 1e3
     // per-family subtotals (median and min-of-runs seconds, query count)
     // and timed-run job counts: the compact view of the per-query maps
+    val jobsOf = familyJobs(gates.toMap, familyOf.getOrElse(_, "other"))
     val families = results.toSeq.groupBy { case (k, _) => familyOf.getOrElse(k, "other") }
       .toSeq.sortBy(_._1).map { case (f, rs) =>
         val ok = rs.map(_._2).filter(_._1 >= 0)
         s""""$f":{"sec":${r3(ok.map(_._1).sum)},"min_sec":${r3(ok.map(_._2).sum)},""" +
-          s""""n":${rs.size},"failed":${rs.size - ok.size},"jobs":${jobsPerFamily.getOrDefault(f, 0L)}}"""
+          s""""n":${rs.size},"failed":${rs.size - ok.size},"jobs":${jobsOf.getOrElse(f, 0)}}"""
       }.mkString("{", ",", "}")
+    val gatesJson = gates.toSeq.sortBy(_._1).map { case (g, j) =>
+      s""""$g":{"jobs":${j.jobs.mkString("[", ",", "]")},"gap_sec":${j.gapSec.mkString("[", ",", "]")}}"""
+    }.mkString("{", ",", "}")
     val loadAfter = loadAvg()
     val contamJson = s""""contaminated":$contaminated,"contaminated_reason":${
       contaminatedReason.map("\"" + _ + "\"").getOrElse("null")},"waited_sec":${math.rint(waitedSec)}"""
@@ -301,7 +345,7 @@ object Bench {
     // bench_last.json (overwritten per run) and bench_history.jsonl
     // (append-only, git-retained — r6 postmortem: when the round total
     // tripled there was no committed per-query map to diff against)
-    val full = s"""$head,"queries":$qs,"queries_min":$qsMin,"load_per_query":$loadQs,"sf":"$sfDir"}"""
+    val full = s"""$head,"queries":$qs,"queries_min":$qsMin,"gates":$gatesJson,"load_per_query":$loadQs,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"), full + "\n")
     catch { case _: Throwable => () }
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_history.jsonl"),

@@ -122,10 +122,11 @@ class DerivedCatalog(spark: SparkSession, dir: String) extends MetacatCatalog {
   private def loadOrIngest: Either[DataFrame, DataFrame] = {
     val store = sys.env.getOrElse("SPARK_GRAFT_CATALOG_STORE", "/tmp/graft-catalog-store")
     if (store == "off") return Left(buildFiles)
-    // the store is written SORTED on the hot shred keys (r14): ShredProbe
-    // measured selective shred scans FLAT under growth only when row
+    // the store is written SORTED on the hot shred keys (r14): selective
+    // shred scans measured FLAT under growth only when row
     // groups carry narrow min/max ranges (sorted-shred 0.23→0.25 s vs
-    // linear 0.63→1.79 s for unsorted Variant at 4× rows) — without the
+    // linear 0.63→1.79 s for unsorted Variant at 4× rows; PERFORMANCE.md
+    // "Shredding-aware metadata pushdown, measured") — without the
     // sort the typed columns save the decode but every row group still
     // reads. sortWithinPartitions: no global shuffle (at 100 TB a total
     // sort would be the most expensive stage of ingest); each output

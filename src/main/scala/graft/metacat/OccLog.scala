@@ -119,7 +119,6 @@ private[metacat] final class OccLog(
 
   /** seq numbers present as `s<20 digits>` children of `t` */
   private def listSeqNames(t: String): Seq[Long] = {
-    OccLog.listings.incrementAndGet()
     val p = hPath(t)
     val fs = fsOf(p)
     if (!fs.exists(p)) Nil
@@ -969,10 +968,6 @@ private[metacat] final class OccLog(
 }
 
 private[graft] object OccLog {
-  /** process-wide directory-listing counter (every [[listSeqNames]]) —
-    * probes read it to report listings-per-commit on the claim path */
-  private[graft] val listings = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Size-DERIVED output partitioning for O(log)/O(table) writes —
     * checkpoint folds, full-table rewrites, compaction's partition
     * rewrites, and commits too large for the driver ([[SegmentIO]]'s

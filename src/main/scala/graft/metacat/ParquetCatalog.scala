@@ -2248,7 +2248,8 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     // partitions anyway — re-sorts them on the hot shred keys so
     // selective typed predicates prune row groups by min/max instead of
     // reading every group (the Delta OPTIMIZE-ZORDER posture; measured
-    // 7.2× by ShredProbe, flat under 4× growth). sortWithinPartitions:
+    // 7.2×, flat under 4× growth: PERFORMANCE.md "Shredding-aware
+    // metadata pushdown, measured"). sortWithinPartitions:
     // no extra shuffle on top of the rewrite.
     // `namespace` leads the sort so the partitioned write's required
     // ordering (partition columns) is already satisfied — otherwise

@@ -92,7 +92,8 @@ object MetaCompiler {
       // of the generic `coalesce(raw, false)` wrapper: coalesce blocks
       // both predicate pushdown and the optimizer's cast-unwrapping, so
       // the old form read EVERY row group — measured through the catalog
-      // read path by CatalogShredProbe (r14), the shred columns saved the
+      // read path (r14, PERFORMANCE.md "Shred pushdown reached the real
+      // read path"), the shred columns saved the
       // Variant decode but never reached parquet min/max stats. The
       // missing-key⇒false XOR neg truth table is unchanged: a null column
       // makes the conjunct false, and negation flips it to true.

@@ -77,10 +77,10 @@ object Similarity {
     * must track corpus size: buckets-per-band is 2^rowsPerBand, so at a
     * fixed r the expected bucket occupancy (and with it the within-bucket
     * candidate join) grows quadratically with n. Pick r so that
-    * 2^r ≈ n / targetPerBucket; `graft.ScaleProbe` on the real 10×
-    * corpus measures the effect (r=4: 22-25 s; r=8: ~3 s at 20k vectors,
-    * candidate-driven — the cost stands even when the verified pair
-    * output is EMPTY). Raising r tightens per-band precision, so recall
+    * 2^r ≈ n / targetPerBucket. Measured on the real 10× corpus
+    * (PERFORMANCE.md, Round 5, "Real 10× corpus"): r=4 22-25 s, r=8
+    * ~3 s at 20k vectors, candidate-driven — the cost stands even when
+    * the verified pair output is EMPTY. Raising r tightens per-band precision, so recall
     * at a given threshold is restored by raising `bands` alongside
     * (the standard AND-OR tradeoff); the correctness gates pin (r=4, b=8)
     * for the 2k-vector base corpus. */

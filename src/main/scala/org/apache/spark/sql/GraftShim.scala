@@ -8,10 +8,11 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
-/** Bridge to `private[sql]` Spark APIs: the Column ↔ Expression
-  * converters, so custom Catalyst expressions (graft.functions._) can be
-  * exposed as Columns, and a frame over already-computed rows. Lives in
-  * the spark.sql package purely for access; no Spark internals are
+/** Bridge to `private[sql]` / `private[spark]` Spark APIs: the Column ↔
+  * Expression converters, so custom Catalyst expressions
+  * (graft.functions._) can be exposed as Columns, a frame over
+  * already-computed rows, and a listener-bus drain. Lives in the
+  * spark.sql package purely for access; no Spark internals are
   * modified. */
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -26,4 +27,10 @@ object GraftShim {
     classic.Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(
       session, Some(Statistics(sizeInBytes)), None))
   }
+
+  /** Blocks until every event posted so far has reached every listener
+    * (or throws `TimeoutException` after `timeoutMs`), so a listener's
+    * counters cover all jobs that have ended */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

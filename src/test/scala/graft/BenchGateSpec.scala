@@ -81,6 +81,26 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.postRunDrift(0.17, -1.0, 0.89, -1.0, 1.4).isEmpty)
   }
 
+  test("per-gate jobs: attributed by tag, untagged ignored, families sum their gates") {
+    import Bench.{Job, GateJobs}
+    val runs = Seq(
+      // run 1: two jobs of this gate, one untagged (a warmup's straggler),
+      // one of another gate's stream thread ending late
+      (2.5, Seq(Job("g1", 400), Job(null, 900), Job("g1", 600), Job("g0", 700))),
+      // run 2: the same two jobs, nothing else
+      (1.75, Seq(Job("g1", 250), Job("g1", 500))),
+      // run 3: a failed run that ended before any job
+      (0.2, Nil))
+    val g1 = Bench.gateJobs("g1", runs)
+    assert(g1.jobs == Seq(2, 2, 0))
+    // gap = wall − summed job wall of this gate's jobs only
+    assert(g1.gapSec == Seq(1.5, 1.0, 0.2))
+    val gates = Map("g1" -> g1, "g2" -> GateJobs(Seq(5, 5, 6), Seq(0.0, 0.0, 0.0)),
+      "g3" -> GateJobs(Seq(1), Seq(0.1)))
+    val family = Map("g1" -> "mql", "g2" -> "mql", "g3" -> "streaming")
+    assert(Bench.familyJobs(gates, family) == Map("mql" -> 20, "streaming" -> 1))
+  }
+
   test("median: odd, even, empty") {
     assert(Bench.median(Seq(3, 1, 2).map(_.toDouble)) == 2.0)
     assert(Bench.median(Seq(1.0, 2.0, 3.0, 4.0)) == 2.5)

@@ -2,7 +2,9 @@
 """Bench comparison.
 
   tools/bench_diff.py OLD.json NEW.json
-      per-query deltas NEW vs a single OLD run
+      per-query deltas NEW vs a single OLD run, plus each gate's change in
+      Spark jobs per timed run when both artifacts carry "gates" (the
+      bench_last.json form) — a deterministic count, unlike the timings
 
   tools/bench_diff.py --history bench_history.jsonl NEW.json
       per-query deltas NEW vs the HISTORICAL per-query median across all
@@ -183,6 +185,19 @@ def diff(oq, nq, new, n_runs=None):
         print(f"  gone   {name}: was {oq[name]:.2f} s")
 
 
+def jobs_diff(og, ng):
+    """Each shared gate whose Spark jobs per timed run changed; silent
+    when either artifact has no per-gate jobs."""
+    if not og or not ng:
+        return
+    shared = sorted(set(og) & set(ng))
+    changed = [g for g in shared if og[g].get("jobs") != ng[g].get("jobs")]
+    for g in changed:
+        print(f"  jobs   {g}: {og[g].get('jobs')} -> {ng[g].get('jobs')} per run")
+    if not changed:
+        print(f"jobs per run: unchanged on all {len(shared)} shared gates")
+
+
 def main_pair(old_path, new_path):
     old, new = load(old_path), load(new_path)
     oq, nq = old.get("queries", {}), new.get("queries", {})
@@ -190,6 +205,7 @@ def main_pair(old_path, new_path):
           f"({len(oq)} -> {len(nq)} queries, catalog_init "
           f"{old.get('catalog_init')} -> {new.get('catalog_init')})")
     diff(oq, nq, new)
+    jobs_diff(old.get("gates"), new.get("gates"))
 
 
 def main_history(hist_path, new_path):
@@ -274,7 +290,20 @@ def selftest():
                 loaded_run({"load_before": 3.94})
                 and not loaded_run({"load_before": 0.19})
                 and not loaded_run({}))
-    # 5. the real r11 contaminated artifact is flagged; the clean
+    # 5. per-gate jobs: silent when either side lacks them, else one
+    #    line per changed gate
+    out = io.StringIO()
+    with redirect_stdout(out):
+        jobs_diff(None, {"g": {"jobs": [62, 62, 62]}})
+        jobs_diff({"g": {"jobs": [62, 62, 62]}}, {})
+    ok &= check("jobs diff silent without per-gate jobs", out.getvalue() == "")
+    out = io.StringIO()
+    with redirect_stdout(out):
+        jobs_diff({"a": {"jobs": [62, 62, 62]}, "b": {"jobs": [5]}},
+                  {"a": {"jobs": [60, 60, 61]}, "b": {"jobs": [5]}})
+    ok &= check("jobs diff names the changed gate only",
+                out.getvalue() == "  jobs   a: [62, 62, 62] -> [60, 60, 61] per run\n")
+    # 6. the real r11 contaminated artifact is flagged; the clean
     #    same-code run is not (the exact misfire this gate exists for)
     here = os.path.dirname(os.path.abspath(__file__))
     r11 = os.path.join(here, "..", "BENCH_r11.json")
